@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Intra-JVM A/B/A/B profiling for ONE session conf: the only layout
   * that separates a conf effect from this box's co-tenant noise and
   * JIT drift (cross-JVM comparisons swing 2-3× between invocations;
@@ -19,24 +17,15 @@ import org.apache.spark.sql.SparkSession
 object AbBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "1").toInt
     val stageFiles = sys.env.getOrElse("SPARK_GRAFT_STAGE_FILES", "8").toInt
-    val ab = sys.env.getOrElse("SPARK_GRAFT_AB",
-      sys.error("SPARK_GRAFT_AB=key=value required"))
-    val Array(abKey, abVal) = ab.split("=", 2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (abKey, abVal) =
+      Session.parseConf(sys.env.getOrElse("SPARK_GRAFT_AB", "")) match {
+        case Seq(kv) => kv
+        case _ => sys.error("SPARK_GRAFT_AB=key=value required")
+      }
+    val spark = Session.harness(Session.cpus)
     val staged = if (stageFiles > 0) Bench.stage(spark, sfDir, stageFiles) else sfDir
     val runDir = if (mult > 1) ScaleBench.multiply(staged, mult) else staged
     val default = spark.conf.getOption(abKey)

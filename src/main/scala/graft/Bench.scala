@@ -14,8 +14,7 @@ object Bench {
     * which Spark cannot split — every scan (and the partial
     * aggregation fused into it) runs on a single thread, an SF
     * artifact that does not exist at 100 TB (millions of files).
-    * ScaleProbe demonstrates the same effect by multiplying paths;
-    * this stages it once so all queries read a realistic layout.
+    * This stages it once so all queries read a realistic layout.
     * Values are bit-identical to the source (events is read with its
     * PHYSICAL schema — raw nanos longs on the legacy layout, native
     * micros on the current one — so the copy preserves exact values
@@ -49,45 +48,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 8 files measured best across query shapes: enough to engage
     // all scan threads on the heavy tables without drowning tiny
     // queries in per-task scheduling (32 files regressed the
     // shuffle-dominated queries ~2x).
     val stageFiles =
       sys.env.getOrElse("SPARK_GRAFT_STAGE_FILES", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT64 micros, not the deprecated INT96: the modern parquet
-      // timestamp layout every table format defaults to, and 25-40%
-      // cheaper to scan (no 12-byte julian decode + rebase check)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition coalescing ON: at the sf0.1 floor most shuffles
-      // are tiny and merging them saves per-task overhead
-      // (dedup_components' iterative rounds run 3x faster coalesced),
-      // and the x100 A/B over the INT64-micros staged layout shows it
-      // winning most scale shapes too (only scd2's window sort
-      // prefers OFF). SPARK_GRAFT_AQE_COALESCE overrides for
-      // per-query studies.
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The repo's deliberate single-partition windows (top-k reranks,
-    // |blocks|-row offset tables, calendar series) are all
-    // partitionBy(lit(0)) — documented bounded at every site — but
-    // Catalyst folds the literal key away, so WindowExec still logs
-    // its generic "No Partition Defined" warning PER EXECUTION:
-    // 1200+ lines per suite run that bury the tail the driver
-    // captures (and any real warning in it). Quiet exactly that one
-    // logger in the bench harness; ERROR-level signals still pass.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.harness(Session.cpus)
     val tStage = System.nanoTime()
     val runDir = if (stageFiles > 0) stage(spark, sfDir, stageFiles) else sfDir
     val stageSec = (System.nanoTime() - tStage) / 1e9

@@ -1,72 +1,78 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.status.api.v1.{JobData, StageData}
 
 /** Profiling harness for a single query (or a few): repeats each named
-  * SparkEntry query after a warmup and prints per-iteration wall
-  * times, so a Bench outlier can be separated into plan cost vs
-  * co-tenant noise. Usage:
+  * SparkEntry query after a warmup and prints per-rep wall times, so a
+  * Bench outlier can be separated into plan cost vs co-tenant noise.
+  * Then it runs ONE more rep and prints that rep's job/stage breakdown
+  * (per-job wall, per-stage task time, input and shuffle bytes), jobs
+  * slowest-first, so the dominant action — a localCheckpoint
+  * materialization, a broadcast build, the final collect — is
+  * identifiable without the UI. The breakdown is read from Spark's own
+  * status store, which every session keeps, so no rep carries an extra
+  * listener. Usage:
   *   SPARK_GRAFT_SF_DIR=... runMain graft.BenchOne <query> [query ...]
-  * Extras for config sweeps at scale:
+  * Knobs:
+  *   SPARK_GRAFT_BENCH_REPS=5    timed reps per query
+  *   SPARK_GRAFT_STAGE_FILES=8   staged layout (0 = the raw SF files)
   *   SPARK_GRAFT_SCALE_MULT=50   profile on the hardlink-multiplied
   *                               corpus (ScaleBench's layout)
-  *   SPARK_GRAFT_CONF="k=v;k=v"  arbitrary session confs under test
+  *   SPARK_GRAFT_COLD=1          clear the artifact caches before
+  *                               every rep (Bench's cold mode)
+  *   SPARK_GRAFT_CONF="k=v;k=v"  session confs under test
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     val stageFiles =
       sys.env.getOrElse("SPARK_GRAFT_STAGE_FILES", "8").toInt
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "1").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT64 micros, not the deprecated INT96: the modern parquet
-      // timestamp layout every table format defaults to, and 25-40%
-      // cheaper to scan (no 12-byte julian decode + rebase check)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", aqe)
-      // ON in both tiers (see Bench/ScaleBench scaladocs for the
-      // measured A/B); SPARK_GRAFT_AQE_COALESCE for per-query studies
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "true"))
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // deliberate bounded single-partition windows log a generic
-    // WindowExec warning per execution (see Bench.scala) — quiet it
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val cold = sys.env.get("SPARK_GRAFT_COLD").contains("1")
+    val spark = Session.harness(Session.cpus)
     // same staged layout as Bench, so numbers stay comparable
-    // (SPARK_GRAFT_STAGE_FILES=0 to profile the raw single-file SF)
     val staged = if (stageFiles > 0) Bench.stage(spark, sfDir, stageFiles) else sfDir
     val runDir = if (mult > 1) ScaleBench.multiply(staged, mult) else staged
-    // SPARK_GRAFT_COLD=1: clear all corpus-keyed artifact caches
-    // before each rep, so every rep pays its build-once probes (the
-    // Bench cold-mode contract, per-query)
-    val cold = sys.env.get("SPARK_GRAFT_COLD").contains("1")
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
-      fn(spark, runDir).collect() // warmup
-      val times = (1 to reps).map { _ =>
+      def rep(): Double = {
         if (cold) graft.CorpusCache.clearAll()
         val t0 = System.nanoTime()
         fn(spark, runDir).collect() // full result, like Bench and the DuckDB fetchall
         (System.nanoTime() - t0) / 1e9
       }
+      fn(spark, runDir).collect() // warmup
+      val times = (1 to reps).map(_ => rep())
       println(f"[benchone] $name reps=${times.map(t => f"$t%.3f").mkString(",")} min=${times.min}%.3f")
+      profile(spark, name)(rep())
     }
     spark.stop()
+  }
+
+  /** Runs `timedRep` once and prints the jobs it ran, slowest first,
+    * each with its three costliest stages. */
+  private def profile(spark: SparkSession, name: String)(
+      timedRep: => Double): Unit = {
+    val sc = spark.sparkContext
+    val before = GraftSqlBridge.jobsWithStages(sc).lastOption
+      .fold(-1)(_._1.jobId)
+    val wall = timedRep
+    val jobs = GraftSqlBridge.jobsWithStages(sc).filter(_._1.jobId > before)
+    println(f"[benchone] $name profiled rep wall=$wall%.3f s, jobs=${jobs.size}")
+    def ms(j: JobData): Long = (for (t0 <- j.submissionTime;
+      t1 <- j.completionTime) yield t1.getTime - t0.getTime).getOrElse(-1L)
+    jobs.sortBy { case (j, _) => -ms(j) }.foreach { case (j, st) =>
+      val kb = (f: StageData => Long) => st.map(f).sum / 1024
+      println(f"  job ${j.jobId}%3d ${ms(j)}%6d ms  " +
+        f"taskMs=${st.map(_.executorRunTime).sum}%7d  in=${kb(_.inputBytes)}K " +
+        f"shufR=${kb(_.shuffleReadBytes)}K shufW=${kb(_.shuffleWriteBytes)}K  " +
+        j.description.getOrElse("").take(50))
+      st.sortBy(-_.executorRunTime).take(3).foreach { s =>
+        println(f"      stage taskMs=${s.executorRunTime}%7d tasks=${s.numTasks}%4d " +
+          s.name.takeWhile(_ != '\n').take(60))
+      }
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-audit dump: `explain("formatted")` for every SparkEntry query
@@ -11,13 +10,7 @@ import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outPath) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.harness(Session.cpus)
     val sb = new StringBuilder
     sb.append("# PLANS — physical plan audit (generated by graft.Plans)\n\n")
     sb.append("AQE re-plans joins/partitions at runtime; these are the\n")

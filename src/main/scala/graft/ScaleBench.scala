@@ -358,32 +358,13 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
     val mode = sys.env.getOrElse("SPARK_GRAFT_SCALE_MODE", "linear")
-    // AQE on by default (the at-scale posture); SPARK_GRAFT_AQE=false
-    // isolates its per-stage re-planning cost, which on sub-second
+    // Bench's session, AQE and its coalescing on (the at-scale
+    // posture); SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false"
+    // isolates AQE's per-stage re-planning cost, which on sub-second
     // local queries is a measurable fraction (see BASELINE.md r10)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT64 micros, not the deprecated INT96: the modern parquet
-      // timestamp layout every table format defaults to, and 25-40%
-      // cheaper to scan (no 12-byte julian decode + rebase check)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", aqe)
-      // ON, like Bench: the x100 A/B over the INT64-micros staged
-      // layout shows coalescing wins most shapes (vwap 0.79 vs 0.97,
-      // dedup_exact 0.75 vs 1.05, retention 0.94 vs 1.24) and only
-      // scd2's window sort prefers OFF (1.23 vs 1.55) — the knob
-      // stays for per-query studies
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.harness(Session.cpus)
     if (mode == "skew") {
       val staged = stage(spark, sfDir)
       val uniform = multiply(staged, mult)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import graft.functions.expressions.{BloomAgg, BloomMightContain, FreqSketchAgg, KeywordTopKAgg, TopKAgg, VecMomentsAgg}
+import graft.functions.expressions.{BloomAgg, BloomMightContain, FreqSketchAgg, TopKAgg, VecMomentsAgg}
 
 /** Column API over the custom Catalyst aggregates. */
 object AggFunctions {
@@ -15,17 +15,6 @@ object AggFunctions {
   def topK(value: Column, id: Column, k: Int): Column =
     GraftSqlBridge.column(TopKAgg(GraftSqlBridge.expression(value),
       GraftSqlBridge.expression(id), k).toAggregateExpression())
-
-  /** Top-k tokens per group under the exact (scoreL desc, tok asc)
-    * order, payload (tf, df, display score) riding along — the
-    * keyword-extraction aggregate (see KeywordTopKAgg scaladoc).
-    * Result: array<struct<tok, tf, df, score>> in rank order. */
-  def keywordTopK(scoreL: Column, tok: Column, tf: Column, df: Column,
-      score6: Column, k: Int): Column =
-    GraftSqlBridge.column(KeywordTopKAgg(
-      GraftSqlBridge.expression(scoreL), GraftSqlBridge.expression(tok),
-      GraftSqlBridge.expression(tf), GraftSqlBridge.expression(df),
-      GraftSqlBridge.expression(score6), k).toAggregateExpression())
 
   /** Distributed Bloom-filter build over a bigint hash column:
     * partial bitsets OR-merge map-side (no driver-side construction);

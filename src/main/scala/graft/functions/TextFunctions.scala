@@ -185,6 +185,12 @@ object TextFunctions {
     GraftSqlBridge.column(expressions.SortedLongIntersect(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
+  /** `a` declared without null elements, each row checked — for code
+    * arrays read back from a table (see AssertNonNullElements). */
+  def assertNonNullElements(a: Column): Column =
+    GraftSqlBridge.column(expressions.AssertNonNullElements(
+      GraftSqlBridge.expression(a)))
+
   /** [[jaccard]] over sorted code arrays — same exact int/int double
     * division, merge-count numerator. */
   def jaccardCodes(a: Column, b: Column): Column = {

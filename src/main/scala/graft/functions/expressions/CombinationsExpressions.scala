@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * once — C(n,3) structs. Baskets here are per-order distinct part
   * sets (bounded by order line count, single digits in this corpus
   * family at any SF), the same Σ-basket-power bound the pair/graph
-  * operators already declare. Not for catalog-scale arrays. */
+  * operators already declare. Not for catalog-scale arrays: a basket
+  * whose C(n,3) exceeds an Int fails with a require error. */
 case class Combinations3(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -48,6 +49,11 @@ object Combinations3 {
     var t = 0
     while (t < n) { xs(t) = arr.getLong(t); t += 1 }
     val m = n.toLong * (n - 1) * (n - 2) / 6
+    // the contract above, enforced: past this a basket would wrap the
+    // array size negative (n ≈ 2345) instead of failing by name
+    require(m <= Int.MaxValue, s"Combinations3: a basket of $n " +
+      s"elements has $m triples, more than one array holds — the " +
+      "kernel is for small baskets only")
     val out = new Array[Any](m.toInt)
     var w = 0
     var i = 0

@@ -338,20 +338,20 @@ case class SortedLongIntersect(left: Expression, right: Expression)
 
 object SortedLongIntersect {
   /** Shared analysis check for the merge-intersect kernels: both
-    * inputs must be array<long> (sortedness is the caller's contract
-    * — both producers, CharNgramCodes and sort_array'd adjacency,
-    * emit sorted arrays by construction). */
+    * inputs must be array<long> with no null elements — `getLong` on
+    * a null slot reads 0, a silent wrong member. Sortedness is the
+    * caller's contract: both producers, CharNgramCodes and the
+    * sort_array'd collect_list adjacency, emit sorted non-null arrays
+    * by construction. */
   def checkLongArrays(left: Expression, right: Expression, name: String)
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    def isLongArray(e: Expression): Boolean = e.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
+    def isLongArray(e: Expression): Boolean =
+      e.dataType == ArrayType(LongType, containsNull = false)
     if (isLongArray(left) && isLongArray(right)) TypeCheckSuccess
     else TypeCheckFailure(
-      s"$name requires two array<bigint> inputs, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+      s"$name requires two array<bigint> inputs without null " +
+        s"elements, got (${left.dataType}, ${right.dataType})")
   }
 
   def compute(a: ArrayData, b: ArrayData): ArrayData = {
@@ -370,6 +370,36 @@ object SortedLongIntersect {
     i = 0
     while (i < c) { boxed(i) = out(i); i += 1 }
     new GenericArrayData(boxed)
+  }
+}
+
+/** The array unchanged, declared without null elements: for an array
+  * read back from a table — file sources declare every element
+  * nullable — that a non-null producer wrote, so it can feed the
+  * merge-intersect kernels. A null element fails the query by name
+  * instead of reaching a kernel that would read it as 0. */
+case class AssertNonNullElements(child: Expression) extends UnaryExpression {
+  override def dataType: DataType =
+    child.dataType.asInstanceOf[ArrayType].copy(containsNull = false)
+  override def nullSafeEval(v: Any): Any =
+    AssertNonNullElements.check(v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.expressions.AssertNonNullElements.check($c)")
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object AssertNonNullElements {
+  def check(a: ArrayData): ArrayData = {
+    val n = a.numElements()
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) throw new IllegalStateException(
+        s"AssertNonNullElements: element $i of a $n-element array is null")
+      i += 1
+    }
+    a
   }
 }
 

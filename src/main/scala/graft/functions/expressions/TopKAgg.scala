@@ -99,157 +99,6 @@ case class TopKAgg(valueExpr: Expression, idExpr: Expression, k: Int,
     copy(valueExpr = newChildren(0), idExpr = newChildren(1))
 }
 
-/** Bounded top-k aggregate over an EXACT integer ordering key with a
-  * string tie-break and an opaque payload — the keyword-extraction
-  * shape (round 22, VERDICT r21 #4): per document the top
-  * [[graft.operators.Search.KeywordsPerDoc]] tokens by
-  * (tf·idf₉ desc, token asc), where the score rides as its unscaled
-  * 10⁻⁹ long (decimal-exact — a double key could flip near-ties) and
-  * the payload carries the (tf, df, 6-dp display score) the report
-  * column needs, so nothing joins back after the aggregate.
-  *
-  * Same scale rationale as [[TopKAgg]]: the window form shuffles and
-  * sorts EVERY (doc, token) row; the aggregate's partial state is ≤ k
-  * entries per group per task, combined map-side, so the exchange
-  * carries O(groups × k). Tie-break compares [[UTF8String]]s — the
-  * engine's own binary string order, identical to `ORDER BY tok ASC`.
-  * Entries are kept in a k-slot array with linear worst-slot
-  * replacement: k is a report constant (3), far below any heap
-  * crossover. Returns array<struct<tok, tf, df, score>> in rank
-  * order. */
-case class KeywordTopKAgg(scoreL: Expression, tok: Expression,
-    tf: Expression, df: Expression, score6: Expression, k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KeywordTopKAgg.Buf] {
-  require(k > 0, "k must be positive")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    val want = Seq(LongType, StringType, LongType, LongType, DoubleType)
-    val got = children.map(_.dataType)
-    if (got == want) TypeCheckSuccess
-    else TypeCheckFailure(
-      s"keyword_top_k requires (bigint, string, bigint, bigint, double)" +
-        s" inputs, got (${got.map(_.simpleString).mkString(", ")})")
-  }
-
-  override def children: Seq[Expression] = Seq(scoreL, tok, tf, df, score6)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("tok", StringType), StructField("tf", LongType),
-    StructField("df", LongType), StructField("score", DoubleType))),
-    containsNull = false)
-
-  override def createAggregationBuffer(): KeywordTopKAgg.Buf =
-    new KeywordTopKAgg.Buf(k)
-
-  override def update(buf: KeywordTopKAgg.Buf, input: InternalRow)
-      : KeywordTopKAgg.Buf = {
-    val s = scoreL.eval(input); val t = tok.eval(input)
-    if (s != null && t != null) {
-      // clone: the UTF8String points into a reused row buffer
-      buf.offer(s.asInstanceOf[Long],
-        t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].clone(),
-        tf.eval(input).asInstanceOf[Long],
-        df.eval(input).asInstanceOf[Long],
-        score6.eval(input).asInstanceOf[Double])
-    }
-    buf
-  }
-
-  override def merge(a: KeywordTopKAgg.Buf, b: KeywordTopKAgg.Buf)
-      : KeywordTopKAgg.Buf = {
-    b.foreach(a.offer)
-    a
-  }
-
-  override def eval(buf: KeywordTopKAgg.Buf): Any =
-    new GenericArrayData(buf.toSorted.map { e =>
-      new GenericInternalRow(Array[Any](e.tok, e.tf, e.df, e.score))
-    })
-
-  override def serialize(buf: KeywordTopKAgg.Buf): Array[Byte] = {
-    val es = buf.toSorted
-    val size = 4 + es.map(e => 8 + 4 + e.tok.numBytes() + 8 + 8 + 8).sum
-    val bb = ByteBuffer.allocate(size)
-    bb.putInt(es.length)
-    es.foreach { e =>
-      bb.putLong(e.scoreL)
-      val tb = e.tok.getBytes
-      bb.putInt(tb.length); bb.put(tb)
-      bb.putLong(e.tf); bb.putLong(e.df); bb.putDouble(e.score)
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): KeywordTopKAgg.Buf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new KeywordTopKAgg.Buf(k)
-    (0 until n).foreach { _ =>
-      val s = bb.getLong
-      val tb = new Array[Byte](bb.getInt); bb.get(tb)
-      buf.offer(s, org.apache.spark.unsafe.types.UTF8String.fromBytes(tb),
-        bb.getLong, bb.getLong, bb.getDouble)
-    }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): KeywordTopKAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KeywordTopKAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(scoreL = newChildren(0), tok = newChildren(1),
-      tf = newChildren(2), df = newChildren(3), score6 = newChildren(4))
-}
-
-object KeywordTopKAgg {
-  final case class Entry(scoreL: Long,
-      tok: org.apache.spark.unsafe.types.UTF8String,
-      tf: Long, df: Long, score: Double)
-
-  /** k-slot top set under (scoreL desc, tok asc): linear worst-slot
-    * replacement — O(k) per admitted row, and k is a tiny report
-    * constant. Tokens within a group are unique, so no equal-key
-    * ambiguity exists. */
-  final class Buf(k: Int) {
-    private val slots = new Array[Entry](k)
-    private var n = 0
-
-    private def better(a: Entry, b: Entry): Boolean =
-      a.scoreL > b.scoreL ||
-        (a.scoreL == b.scoreL && a.tok.compareTo(b.tok) < 0)
-
-    def offer(scoreL: Long,
-        tok: org.apache.spark.unsafe.types.UTF8String,
-        tf: Long, df: Long, score: Double): Unit = {
-      val e = Entry(scoreL, tok, tf, df, score)
-      if (n < k) { slots(n) = e; n += 1; return }
-      var worst = 0
-      var i = 1
-      while (i < n) { if (better(slots(worst), slots(i))) worst = i; i += 1 }
-      if (better(e, slots(worst))) slots(worst) = e
-    }
-
-    def foreach(f: (Long,
-        org.apache.spark.unsafe.types.UTF8String, Long, Long, Double)
-        => Unit): Unit = {
-      var i = 0
-      while (i < n) {
-        val e = slots(i); f(e.scoreL, e.tok, e.tf, e.df, e.score); i += 1
-      }
-    }
-
-    /** Entries in rank order (scoreL desc, tok asc). */
-    def toSorted: Array[Entry] =
-      slots.take(n).sortWith(better)
-  }
-}
-
 object TopKAgg {
   /** Bounded min-heap over the (value desc, id asc) total order:
     * the root is the WORST retained pair, evicted when a better one

@@ -386,7 +386,10 @@ object Dedup {
     // this session's cached file listing (observed as FILE_NOT_EXIST
     // mid-scan); a metadata refresh per call is cheap insurance
     spark.catalog.refreshTable(name)
-    val t = spark.table(name)
+    // the table declares its grams nullable-element, as every file
+    // source does; the merge kernels take only non-null ones
+    val t = spark.table(name).withColumn("grams_a",
+      TextFunctions.assertNonNullElements(col("grams_a")))
     // default: let the planner broadcast the batch-sized probe over
     // the bucketed index (zero exchange anywhere near the corpus).
     // forceSortMerge models the big-batch regime where broadcast is

@@ -232,15 +232,7 @@ object Search {
     * bounded by the document's own vocabulary (a document is finite
     * at any corpus size); corpus-scale work is the one explode +
     * (doc, term) and term-grain hash aggregates. */
-  def keywordExtract(spark: SparkSession, dir: String): DataFrame =
-    keywordExtractImpl(spark, dir, bounded = true)
-
-  /** `bounded = true` (the production path) ranks per document with
-    * the bounded KeywordTopKAgg aggregate; `false` keeps the round-21
-    * row_number-window form — retained solely so the equivalence spec
-    * can pin the two to each other on a real corpus. */
-  private[graft] def keywordExtractImpl(spark: SparkSession, dir: String,
-      bounded: Boolean): DataFrame = {
+  def keywordExtract(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
       .filter(col("text").isNotNull)
     // corpus size as a broadcast one-row aggregate riding the plan —
@@ -261,44 +253,17 @@ object Search {
         round(log(col("__n") / col("df").cast("double")), 9)
           .cast("decimal(28,9)"))
       .drop("__n")
-    // Round 22 (VERDICT r21 #4, guide §2.2): the per-doc rank was a
-    // row_number window over the WHOLE scored (doc, term) table —
-    // every row exchanged by doc_id and sorted for a 3-row-per-doc
-    // answer. The bounded KeywordTopKAgg aggregate keeps ≤ k entries
-    // per doc per task and combines map-side, so the exchange carries
-    // O(docs × k) heap states instead of every token row and no sort
-    // runs at all. Ordering stays DECIMAL-exact: the aggregate's key
-    // is score·10⁹ as a long — tf · (idf9·10⁹), exact integers (idf9
-    // has scale 9; ANSI mode would throw, never wrap, on a corpus
-    // that overflowed the product) — with the engine's own binary
-    // string order breaking ties on the token, identical to the
-    // window's (score desc, tok asc).
     val scored = tf.join(df, "tok")
       .withColumn("score", col("tf").cast("decimal(10,0)") * col("idf9"))
-    if (bounded) {
-      scored
-        .withColumn("score_l",
-          col("tf") * (col("idf9") * lit(1000000000L)).cast("long"))
-        .groupBy("doc_id")
-        .agg(graft.functions.AggFunctions.keywordTopK(col("score_l"),
-          col("tok"), col("tf"), col("df"),
-          round(col("score").cast("double"), 6), KeywordsPerDoc).as("ks"))
-        .select(col("doc_id"), posexplode(col("ks")))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("rnk"),
-          col("col.tok").as("keyword"), col("col.tf").as("tf"),
-          col("col.df").as("df"), col("col.score").as("score"))
-        .orderBy("doc_id", "rnk")
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id")
-        .orderBy(col("score").desc, col("tok").asc)
-      scored
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= KeywordsPerDoc)
-        .select(col("doc_id"), col("rnk"), col("tok").as("keyword"),
-          col("tf"), col("df"),
-          round(col("score").cast("double"), 6).as("score"))
-        .orderBy("doc_id", "rnk")
-    }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id")
+      .orderBy(col("score").desc, col("tok").asc)
+    scored
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= KeywordsPerDoc)
+      .select(col("doc_id"), col("rnk"), col("tok").as("keyword"),
+        col("tf"), col("df"),
+        round(col("score").cast("double"), 6).as("score"))
+      .orderBy("doc_id", "rnk")
   }
 }

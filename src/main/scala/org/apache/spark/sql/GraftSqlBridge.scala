@@ -74,4 +74,19 @@ object GraftSqlBridge {
         c -> (bs.map(_._2).max, bs.map(_._3).min)
       }
   }
+
+  /** Every job Spark's status store holds, oldest first, each with the
+    * data of its stages that ran, read once every event posted so far
+    * has been processed. The store is private[spark] and is kept with
+    * or without the UI. */
+  def jobsWithStages(sc: org.apache.spark.SparkContext): Seq[(
+      org.apache.spark.status.api.v1.JobData,
+      Seq[org.apache.spark.status.api.v1.StageData])] = {
+    sc.listenerBus.waitUntilEmpty()
+    val store = sc.statusStore
+    store.jobsList(null).sortBy(_.jobId).map { j =>
+      j -> j.stageIds.toSeq.flatMap(store.stageData(_)).filter(
+        _.status != org.apache.spark.status.api.v1.StageStatus.SKIPPED)
+    }
+  }
 }

@@ -9,60 +9,6 @@ import org.apache.spark.sql.functions._
   * query computes). */
 class R22EquivalenceSpec extends SparkTestBase {
 
-  test("keyword_extract: bounded aggregate equals the window form") {
-    val a = graft.operators.Search
-      .keywordExtractImpl(spark, SfDir, bounded = true).collect().toSeq
-    val b = graft.operators.Search
-      .keywordExtractImpl(spark, SfDir, bounded = false).collect().toSeq
-    assert(a === b)
-    assert(a.nonEmpty)
-  }
-
-  test("keyword_extract: aggregate tie-break matches the window on a crafted tie") {
-    // two tokens with identical (tf, df) in one doc → identical
-    // decimal scores; the window breaks on tok asc, the aggregate on
-    // the UTF8String binary order — craft docs where that matters,
-    // including multi-byte tokens
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "zeta alpha zeta alpha beta"),
-      (2L, "beta beta alpha alpha zeta zeta gamma gamma delta"),
-      (3L, "öre zz öre zz aa aa")
-    ).toDF("doc_id", "text")
-    val tf = docs.select(col("doc_id"),
-        explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-    val n = docs.count().toDouble
-    val dfT = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-      .withColumn("idf9",
-        round(log(lit(n) / col("df").cast("double")), 9)
-          .cast("decimal(28,9)"))
-    val scored = tf.join(dfT, "tok")
-      .withColumn("score", col("tf").cast("decimal(10,0)") * col("idf9"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("score").desc, col("tok").asc)
-    val win = scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("doc_id"), col("rnk"), col("tok"), col("tf"),
-        col("df"), round(col("score").cast("double"), 6).as("score"))
-      .orderBy("doc_id", "rnk").collect().toSeq
-    val agg = scored
-      .withColumn("score_l",
-        col("tf") * (col("idf9") * lit(1000000000L)).cast("long"))
-      .groupBy("doc_id")
-      .agg(graft.functions.AggFunctions.keywordTopK(col("score_l"),
-        col("tok"), col("tf"), col("df"),
-        round(col("score").cast("double"), 6), 3).as("ks"))
-      .select(col("doc_id"), posexplode(col("ks")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col.tok").as("tok"), col("col.tf").as("tf"),
-        col("col.df").as("df"), col("col.score").as("score"))
-      .orderBy("doc_id", "rnk").collect().toSeq
-    assert(agg === win)
-    assert(win.size === 9)
-  }
-
   test("dedup_curve: hoisted-norm cosine equals the kernel form") {
     val a = graft.operators.Similarity
       .dedupCurveImpl(spark, SfDir, hoist = true).collect().toSeq

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs: small parallelism, UTC, AQE on
-  * (the production config shape, scaled down). */
+/** Shared local session for all specs: the harness session
+  * (`graft.Session.builder`) at small parallelism. */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val SfDir = "/root/testdata/sf0.001"
@@ -20,18 +20,8 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT64 micros, not the deprecated INT96: the modern parquet
-      // timestamp layout every table format defaults to, and 25-40%
-      // cheaper to scan (no 12-byte julian decode + rebase check)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    // the harness confs at a fixed local[4], whatever the host
+    val s = graft.Session.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
