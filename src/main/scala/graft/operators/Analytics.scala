@@ -291,12 +291,9 @@ object Analytics {
     * discipline). The lineitem/l_orderkey grain also carries its
     * null-partkey count so ref_audit's null-FK rule rides the same
     * collapse. */
-  private val keyCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-
   private[graft] def keyCounts(spark: SparkSession, dir: String,
-      table: String, key: String): DataFrame = {
-    def compute: DataFrame = {
+      table: String, key: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, table, s"key_counts_$key") {
       val base = Tables.load(spark, dir, table)
       val agg =
         if (table == "lineitem" && key == "l_orderkey")
@@ -306,11 +303,6 @@ object Analytics {
         else base.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt"))
       agg.localCheckpoint()
     }
-    Pctl.key(dir, table, s"key_counts_$key") match {
-      case Some(k) => graft.CorpusCache.df(keyCountCache, k, spark)(compute)
-      case None => compute
-    }
-  }
 
   def refAudit(spark: SparkSession, dir: String): DataFrame = {
     // pinned shared key grains (bounded: distinct-key rows)
@@ -795,7 +787,7 @@ object Analytics {
         datediff(col("l_shipdate"), col("o_orderdate")).cast("long"))
     val pc = Pctl.grouped(lagged, Seq("o_orderpriority"), col("lag_days"),
         Seq(0.5, 0.9), Seq("plo", "phi"),
-        Pctl.key(dir, "lineitem", "ship_lag"))
+        Some(Pctl.Site(dir, "lineitem", "ship_lag")))
       .select(col("o_orderpriority"),
         round(col("plo"), 6).as("p50_days"),
         round(col("phi"), 6).as("p90_days"))

@@ -28,18 +28,10 @@ object Bpe {
   /** Deterministic training-sample size (docs, by hashed-id order). */
   val SampleDocs = 512
 
-  // merge-table cache keyed by corpus dir + mtime (same freshness rule
-  // as Similarity.modelKey)
-  private val cache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]])
-
-  private def modelKey(dir: String): String =
-    dir + "@" + new java.io.File(dir, "documents.parquet").lastModified
-
   /** Corpus-trained merge list, rank order (rank r fuses pair
-    * merges(r) into id 256+r). */
+    * merges(r) into id 256+r); a [[graft.CorpusCache]] value. */
   def trainedMerges(spark: SparkSession, dir: String): Seq[Long] =
-    cache.computeIfAbsent(modelKey(dir), _ => {
+    graft.CorpusCache.value(spark, dir, "documents", "bpe_merges") {
       import spark.implicits._
       val sample = Tables.load(spark, dir, "documents")
         .filter(col("text").isNotNull)
@@ -48,7 +40,7 @@ object Bpe {
         .select("text").as[String].collect()
         .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toSeq
       train(sample, NumMerges)
-    })
+    }
 
   private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'

@@ -132,17 +132,16 @@ object Components {
     * canonical-keep flag. Every doc appears exactly once (singletons
     * are their own one-doc cluster), so `is_canonical = 1` rows ARE
     * the deduplicated corpus. */
-  /** Corpus-keyed near-dup components fixed point (the centroidCache
-    * pattern): documents-nodes + blocked trigram-Jaccard edges ≥
+  /** Corpus-keyed near-dup components fixed point (a CorpusCache
+    * frame): documents-nodes + blocked trigram-Jaccard edges ≥
     * [[EdgeThreshold]] → pinned (id, comp) labels, computed ONCE per
     * corpus. Three consumers — #75 dedup_components, #121
     * cluster_split, #163 canonical_docs — treat the fixed point as a
     * build-once/query-many model artifact instead of each re-running
     * the O(rounds × |E|) propagation; bounded state (|docs| label
-    * rows, executor-side via localCheckpoint). Uncached when the
-    * corpus mtime is unreadable (the chainCache discipline). */
-  def nearDupComponents(spark: SparkSession, dir: String): DataFrame = {
-    def compute: DataFrame = {
+    * rows, executor-side via localCheckpoint). */
+  def nearDupComponents(spark: SparkSession, dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "documents", "neardup_components") {
       val docs = Tables.load(spark, dir, "documents")
       val edges = Dedup.ngramJaccardPairs(docs)
         .filter(col("jac") >= EdgeThreshold)
@@ -150,16 +149,6 @@ object Components {
       connectedComponents(docs.select(col("doc_id").as("id")), edges)
         .localCheckpoint()
     }
-    Pctl.key(dir, "documents", "neardup_components") match {
-      case Some(k) => graft.CorpusCache.df(nearDupCache, k, spark)(compute)
-      case None => compute
-    }
-  }
-
-  // size-capped + session-validated via CorpusCache (ADVICE r14):
-  // entries are localCheckpoint'd frames pinned to their session
-  private val nearDupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
 
   /** Corpus-keyed distinct co-purchase part pairs (a < b) — the
     * basket graph's undirected edge list, shared by #146 PageRank,
@@ -167,8 +156,8 @@ object Components {
     * [[nearDupComponents]]): one (orderkey, partkey) collapse + one
     * key self-join per corpus, pinned. Bounded by the part
     * vocabulary², generated basket-bounded. */
-  def basketPairs(spark: SparkSession, dir: String): DataFrame = {
-    def compute: DataFrame = {
+  def basketPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "lineitem", "basket_pairs") {
       val lines = basketLines(spark, dir)
       lines.select(col("l_orderkey"), col("l_partkey").as("a"))
         .join(lines.select(col("l_orderkey"), col("l_partkey").as("b")),
@@ -177,19 +166,14 @@ object Components {
         .select("a", "b").distinct()
         .localCheckpoint()
     }
-    Pctl.key(dir, "lineitem", "basket_pairs") match {
-      case Some(k) => graft.CorpusCache.df(basketCache, k, spark)(compute)
-      case None => compute
-    }
-  }
 
   /** Corpus-keyed COUNTED co-purchase pairs (pa < pb, support =
     * co-ordered basket count) — one artifact up from [[basketPairs]]:
     * #143 co-occurrence and #191 item-CF each re-ran the same
     * lines⋈lines self-join per call (round 15). Bounded by the part
     * vocabulary², generated basket-bounded. */
-  def basketPairCounts(spark: SparkSession, dir: String): DataFrame = {
-    def compute: DataFrame = {
+  def basketPairCounts(spark: SparkSession, dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "lineitem", "basket_pair_counts") {
       val lines = basketLines(spark, dir)
       lines.select(col("l_orderkey"), col("l_partkey").as("pa"))
         .join(lines.select(col("l_orderkey"), col("l_partkey").as("pb")),
@@ -198,44 +182,27 @@ object Components {
         .groupBy("pa", "pb").agg(count(lit(1)).as("support"))
         .localCheckpoint()
     }
-    Pctl.key(dir, "lineitem", "basket_pair_counts") match {
-      case Some(k) => graft.CorpusCache.df(basketCache, k, spark)(compute)
-      case None => compute
-    }
-  }
 
   /** Corpus-keyed DISTINCT (order, part) basket collapse — the input
     * every basket-graph/association operator starts from (#143
     * co-occurrence, #191 item-CF, #210 itemsets, the [[basketPairs]]
     * graph): one lineitem scan + distinct per corpus, pinned. */
-  def basketLines(spark: SparkSession, dir: String): DataFrame = {
-    def compute: DataFrame = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .localCheckpoint()
-    Pctl.key(dir, "lineitem", "basket_lines") match {
-      case Some(k) => graft.CorpusCache.df(basketCache, k, spark)(compute)
-      case None => compute
+  def basketLines(spark: SparkSession, dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "lineitem", "basket_lines") {
+      Tables.load(spark, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_partkey")).distinct()
+        .localCheckpoint()
     }
-  }
-
-  // size-capped + session-validated via CorpusCache (ADVICE r14)
-  private val basketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
 
   /** Corpus-keyed SYMMETRIZED basket edges (both directions of
     * [[basketPairs]]) — hoisted from khopReach (round 21) so the
     * adjacency artifact below shares it. */
-  def basketPairsSym(spark: SparkSession, dir: String): DataFrame = {
-    def compute: DataFrame = {
+  def basketPairsSym(spark: SparkSession, dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "lineitem", "basket_pairs_sym") {
       val base = basketPairs(spark, dir)
       base.unionByName(base.select(col("b").as("a"), col("a").as("b")))
         .localCheckpoint()
     }
-    Pctl.key(dir, "lineitem", "basket_pairs_sym") match {
-      case Some(k) => graft.CorpusCache.df(basketCache, k, spark)(compute)
-      case None => compute
-    }
-  }
 
   /** Corpus-keyed ADJACENCY of the basket graph: one row per node —
     * (node, sorted neighbor array). The round-21 optimization artifact
@@ -252,16 +219,13 @@ object Components {
     * old per-dst aggregate carried. Build-once per corpus, cold mode
     * (SPARK_GRAFT_COLD=1) clears and re-pays it like every other
     * graph artifact. */
-  def basketAdjacency(spark: SparkSession, dir: String): DataFrame = {
-    def compute: DataFrame = basketPairsSym(spark, dir)
-      .groupBy(col("a").as("node"))
-      .agg(sort_array(collect_list(col("b"))).as("nbrs"))
-      .localCheckpoint()
-    Pctl.key(dir, "lineitem", "basket_adj") match {
-      case Some(k) => graft.CorpusCache.df(basketCache, k, spark)(compute)
-      case None => compute
+  def basketAdjacency(spark: SparkSession, dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "lineitem", "basket_adj") {
+      basketPairsSym(spark, dir)
+        .groupBy(col("a").as("node"))
+        .agg(sort_array(collect_list(col("b"))).as("nbrs"))
+        .localCheckpoint()
     }
-  }
 
   /** Corpus-keyed DEGREE-ORIENTED adjacency: for each node u, the
     * sorted array of out-neighbors under the (deg, id) orientation
@@ -270,8 +234,8 @@ object Components {
     * are arboricity-bounded (the orientation's point), so no row's
     * array explodes on a degree hub. Same build-once discipline as
     * [[basketAdjacency]]. */
-  def orientedAdjacency(spark: SparkSession, dir: String): DataFrame = {
-    def compute: DataFrame = {
+  def orientedAdjacency(spark: SparkSession, dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "lineitem", "basket_adj_oriented") {
       val pairs = basketPairs(spark, dir)
       val deg = pairs.select(col("a").as("v"))
         .unionByName(pairs.select(col("b").as("v")))
@@ -288,27 +252,6 @@ object Components {
         .groupBy(col("e.src").as("src"))
         .agg(sort_array(collect_list(col("e.dst"))).as("nbrs"))
         .localCheckpoint()
-    }
-    Pctl.key(dir, "lineitem", "basket_adj_oriented") match {
-      case Some(k) => graft.CorpusCache.df(basketCache, k, spark)(compute)
-      case None => compute
-    }
-  }
-
-  // corpus-keyed driver scalars for the broadcast gates (node and
-  // directed-edge counts of the pinned graph artifacts — one count
-  // job over a checkpointed frame each, cached like the frames)
-  private val graphStatCache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long])
-
-  private def cachedCount(dir: String, site: String)(
-      compute: => Long): Long =
-    Pctl.key(dir, "lineitem", site) match {
-      case Some(k) =>
-        if (graphStatCache.size > graft.CorpusCache.MaxEntries)
-          graphStatCache.clear()
-        graphStatCache.computeIfAbsent(k, _ => compute).longValue()
-      case None => compute
     }
 
   def dedupComponents(spark: SparkSession, dir: String): DataFrame = {
@@ -368,7 +311,8 @@ object Components {
     // [[PrBroadcastNodeMax]] — genuinely catalog-sized (ADVICE r14:
     // the old 5M gate allowed a ~120 MB broadcast per round).
     val adj = basketAdjacency(spark, dir)
-    val nNodes = cachedCount(dir, "basket_n_nodes")(adj.count())
+    val nNodes = graft.CorpusCache.value(spark, dir, "lineitem",
+      "basket_n_nodes")(adj.count())
     val bcastNodes = nNodes <= PrBroadcastNodeMax
     if (bcastNodes) {
       // ADJACENCY iteration (round 21, guide §2.3): each round's
@@ -491,11 +435,13 @@ object Components {
     // round-14 shuffled form runs unchanged (the unbounded-safe
     // shape). Per-row cost stays d⁺(u)+d⁺(v), arboricity-bounded.
     val adjO = orientedAdjacency(spark, dir)
-    val mEdges = cachedCount(dir, "basket_m_oriented")(
+    val mEdges = graft.CorpusCache.value(spark, dir, "lineitem",
+        "basket_m_oriented") {
       adjO.agg(sum(size(col("nbrs")))).head() match {
         case r if r.isNullAt(0) => 0L
         case r => r.getLong(0)
-      })
+      }
+    }
     // Round 22 (VERDICT r21 #3): the closing N⁺(u)∩N⁺(v) was the last
     // `array_intersect` in a graph/gram hot path — per oriented edge
     // it built an OpenHashSet over nu and hashed every element of nv,
@@ -615,7 +561,8 @@ object Components {
     // gate the frontier⋈edges shuffled form runs unchanged. Neighbor
     // sets are identical either way, so hops and hashes are too.
     val adj = basketAdjacency(spark, dir)
-    val nNodes = cachedCount(dir, "basket_n_nodes")(adj.count())
+    val nNodes = graft.CorpusCache.value(spark, dir, "lineitem",
+      "basket_n_nodes")(adj.count())
     lazy val pairs = basketPairsSym(spark, dir)
     val part = Tables.load(spark, dir, "part").select("p_partkey")
     var visited = part
@@ -628,7 +575,8 @@ object Components {
     // ungated frontier. Gate on BOTH counts (hop ≥ 2 frontiers are
     // ⊆ nodes, so the node gate alone bounds them; the seed count is
     // corpus-keyed like the node count, one tiny catalog scan).
-    val nSeeds = cachedCount(dir, "khop_n_seeds")(visited.count())
+    val nSeeds = graft.CorpusCache.value(spark, dir, "lineitem",
+      "khop_n_seeds")(visited.count())
     val bcastFrontier =
       nNodes <= PrBroadcastNodeMax && nSeeds <= PrBroadcastNodeMax
     var frontier = visited

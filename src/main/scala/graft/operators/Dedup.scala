@@ -550,46 +550,40 @@ object Dedup {
   // pair set and the band candidate set are both corpus-bounded
   // build-once artifacts (the nearDupComponents pattern) — lsh_eval
   // re-derived BOTH per call (two shingle explodes + two pair joins)
-  private val lshEvalCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.DataFrame]
-
   def lshEval(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
       .filter(col("text").isNotNull)
-    // exact side: (doc, shingle-hash) at distinct grain — the md5
-    // tail-32 identity BOTH engines compute natively (PortableHash)
-    val dd = docs
-      .select(col("doc_id"),
-        filter(split(lower(trim(col("text"))), "\\s+"), t => t =!= "")
-          .as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(0, size(toks) - 2)," +
-          " i -> concat(toks[i], ' ', toks[i + 1]))")).as("sh"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("sh")), 25, 8), 16, 10).cast("long")
-          .as("h"))
-      .distinct()
-      .localCheckpoint() // pinned: sizes, df and both join sides
-    val sz = dd.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val keep = dd.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= EvalDfCap).select("h")
-    val capped = dd.join(keep, "h")
-    val inter = capped.select(col("doc_id").as("a"), col("h"))
-      .join(capped.select(col("doc_id").as("b"), col("h")), "h")
-      .filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("i"))
-    def posCompute: org.apache.spark.sql.DataFrame = inter
-      .join(sz.select(col("doc_id").as("a"), col("n").as("na")), "a")
-      .join(sz.select(col("doc_id").as("b"), col("n").as("nb")), "b")
-      .filter(col("i") * EvalJacNum >= col("na") + col("nb") - col("i"))
-      .select("a", "b")
-      .localCheckpoint() // pinned: tp join + fn count
-    val pos = Pctl.key(dir, "documents", "lsh_eval_pos") match {
-      case Some(k) =>
-        graft.CorpusCache.df(lshEvalCache, k, spark)(posCompute)
-      case None => posCompute
+    val pos = graft.CorpusCache.df(spark, dir, "documents",
+        "lsh_eval_pos") {
+      // exact side: (doc, shingle-hash) at distinct grain — the md5
+      // tail-32 identity BOTH engines compute natively (PortableHash)
+      val dd = docs
+        .select(col("doc_id"),
+          filter(split(lower(trim(col("text"))), "\\s+"), t => t =!= "")
+            .as("toks"))
+        .filter(size(col("toks")) >= 2)
+        .select(col("doc_id"),
+          explode(expr("transform(sequence(0, size(toks) - 2)," +
+            " i -> concat(toks[i], ' ', toks[i + 1]))")).as("sh"))
+        .select(col("doc_id"),
+          conv(substring(md5(col("sh")), 25, 8), 16, 10).cast("long")
+            .as("h"))
+        .distinct()
+        .localCheckpoint() // pinned: sizes, df and both join sides
+      val sz = dd.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val keep = dd.groupBy("h").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= EvalDfCap).select("h")
+      val capped = dd.join(keep, "h")
+      val inter = capped.select(col("doc_id").as("a"), col("h"))
+        .join(capped.select(col("doc_id").as("b"), col("h")), "h")
+        .filter(col("a") < col("b"))
+        .groupBy("a", "b").agg(count(lit(1)).as("i"))
+      inter
+        .join(sz.select(col("doc_id").as("a"), col("n").as("na")), "a")
+        .join(sz.select(col("doc_id").as("b"), col("n").as("nb")), "b")
+        .filter(col("i") * EvalJacNum >= col("na") + col("nb") - col("i"))
+        .select("a", "b")
+        .localCheckpoint() // pinned: tp join + fn count
     }
     // candidate side: the #20 portable band buckets, ids only
     val bandKeys = docs
@@ -602,13 +596,10 @@ object Dedup {
       .select(col("doc_id"), col("band"),
         concat_ws(",", slice(col("sig"), col("band") * 2 + 1, lit(2)))
           .as("key"))
-    def candCompute: org.apache.spark.sql.DataFrame =
+    val cand = graft.CorpusCache.df(spark, dir, "documents",
+        "lsh_eval_cand") {
       bucketPairs(bandKeys).select("a", "b").distinct()
         .localCheckpoint() // pinned: counts + tp join
-    val cand = Pctl.key(dir, "documents", "lsh_eval_cand") match {
-      case Some(k) =>
-        graft.CorpusCache.df(lshEvalCache, k, spark)(candCompute)
-      case None => candCompute
     }
     val nDocs = docs.select(count(lit(1)).as("n_docs"))
     val nPos = pos.select(count(lit(1)).as("n_pos"))
@@ -677,16 +668,13 @@ object Dedup {
     * pinned row count (so the hot path needs no emptiness probe):
     * the (lang, source, blk) keys with population > cap. Bounded
     * grain (≤ n_docs/cap rows), built once per corpus, drop logged
-    * at build. Self-managed computeIfAbsent with session validation
-    * (the scd2Cache pattern), REGISTERED so cold mode clears it. */
+    * at build; a [[graft.CorpusCache.pinned]] artifact. */
   private[graft] case class ContainGuard(drop: DataFrame, blocks: Long)
 
-  private val containGuardCache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, ContainGuard])
-
   private[graft] def containGuard(spark: SparkSession, dir: String,
-      cap: Long = ContainBlockCap): ContainGuard = {
-    def compute: ContainGuard = {
+      cap: Long = ContainBlockCap): ContainGuard =
+    graft.CorpusCache.pinned(spark, dir, "documents",
+        s"containment_guard_$cap")((g: ContainGuard) => g.drop) {
       val over = Tables.load(spark, dir, "documents")
         .groupBy(col("lang"), col("source"),
           floor(col("n_chars") / lit(20)).as("blk"))
@@ -702,17 +690,6 @@ object Dedup {
           "(covered by containment_content)")
       ContainGuard(over.select("lang", "source", "blk"), st.getLong(0))
     }
-    Pctl.key(dir, "documents", s"containment_guard_$cap") match {
-      case Some(k) =>
-        if (containGuardCache.size > graft.CorpusCache.MaxEntries)
-          containGuardCache.clear()
-        val cur = containGuardCache.get(k)
-        if (cur != null && (cur.drop.sparkSession eq spark) &&
-            !spark.sparkContext.isStopped) cur
-        else { val v = compute; containGuardCache.put(k, v); v }
-      case None => compute
-    }
-  }
 
   def containmentPairs(spark: SparkSession, dir: String): DataFrame =
     containmentPairsWith(spark, dir, ContainBlockCap)
@@ -764,14 +741,6 @@ object Dedup {
     * corpus shingle volume with a cap-sized constant, never n². */
   val ContainAnchorDfCap = 50L
 
-  // corpus-keyed artifact (the lsh_eval_pos pattern): the verified
-  // containment pair table is a bounded build-once report — anchors,
-  // candidate pairs, and exact intersections all derive from the one
-  // pinned shingle index and the result is ≤ the candidate bound.
-  private val containContentCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.DataFrame]
-
   /** #192 (content-keyed twin, round 16 — VERDICT r15 #2) Containment
     * via RARE-SHINGLE ANCHOR blocking: candidates are doc pairs that
     * share at least one word-bigram shingle with corpus df in
@@ -796,7 +765,12 @@ object Dedup {
     * threshold/order compare (both engines agree); ties broken by
     * (a, b) so the LIMIT is deterministic. */
   def containmentContent(spark: SparkSession, dir: String): DataFrame = {
-    def compute: org.apache.spark.sql.DataFrame = {
+    // corpus artifact (the lsh_eval_pos pattern): the verified
+    // containment pair table is a bounded build-once report — anchors,
+    // candidate pairs, and exact intersections all derive from the one
+    // pinned shingle index and the result is ≤ the candidate bound
+    val scored = graft.CorpusCache.df(spark, dir, "documents",
+        "containment_content") {
       val docs = Tables.load(spark, dir, "documents")
         .filter(col("text").isNotNull)
       // the lshEval shingle identity: distinct (doc, md5-tail-32 of
@@ -841,11 +815,6 @@ object Dedup {
             .as("cont_b"))
         .filter(greatest(col("cont_a"), col("cont_b")) >= ContainMin)
         .localCheckpoint()
-    }
-    val scored = Pctl.key(dir, "documents", "containment_content") match {
-      case Some(k) =>
-        graft.CorpusCache.df(containContentCache, k, spark)(compute)
-      case None => compute
     }
     scored
       .orderBy(greatest(col("cont_a"), col("cont_b")).desc,

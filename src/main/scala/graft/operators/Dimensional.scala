@@ -20,22 +20,15 @@ object Dimensional {
 
   private val DayUs = 86400L * 1000000L
 
-  /** Per-corpus max purchase-chain length (see scd2DimWith).
-    * Registered so the bench's cold mode (ADVICE r16 #1: clearAll
-    * must reach self-managed computeIfAbsent caches too) drops the
-    * probe along with every other corpus-keyed artifact. */
-  private val chainCache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long])
-
   // ---- corpus-keyed staged collapses (VERDICT r14 #5) ----
   // The user-grain family (#196 wilson_funnel, #201 survival_curve,
   // #176 rfm_segments), the (user, day) distinct (#190 stickiness)
   // and the (user, week) purchase collapse (#199 ltv_curve) each
   // re-derived the same events collapse per query — at ×100 every
   // one of those cells was one redundant 60M-row scan. Each collapse
-  // is now pinned ONCE per corpus (the basketLines precedent; same
-  // CorpusCache size-cap + session-validation discipline), so the
-  // family's steady state reads bounded-grain artifacts. Values are
+  // is now pinned ONCE per corpus (the basketLines precedent, a
+  // CorpusCache frame), so the family's steady state reads
+  // bounded-grain artifacts. Values are
   // bit-identical: every facet below is exactly the aggregate the
   // consumer computed inline (min/max/count partials and the exact
   // decimal sum are order-free).
@@ -44,57 +37,45 @@ object Dimensional {
     * user-grain aggregate: first-event struct (channel attribution),
     * last instant, purchase recency/frequency/exact-decimal monetary. */
   private[graft] def userCard(spark: SparkSession,
-      dir: String): DataFrame = {
-    def compute: DataFrame = Tables.load(spark, dir, "events")
-      .groupBy("user_id")
-      .agg(
-        min(struct(unix_micros(col("ts")).as("us"), col("event_id"),
-          col("event_type"))).as("f"),
-        max(unix_micros(col("ts"))).as("last_us"),
-        max(when(col("event_type") === "purchase",
-          unix_micros(col("ts")))).as("p_last_us"),
-        sum((col("event_type") === "purchase").cast("long"))
-          .as("p_freq"),
-        Num.dsumExact(when(col("event_type") === "purchase",
-          col("value"))).as("p_mon"))
-      .localCheckpoint()
-    Pctl.key(dir, "events", "user_card") match {
-      case Some(k) => graft.CorpusCache.df(cardCache, k, spark)(compute)
-      case None => compute
+      dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "events", "user_card") {
+      Tables.load(spark, dir, "events")
+        .groupBy("user_id")
+        .agg(
+          min(struct(unix_micros(col("ts")).as("us"), col("event_id"),
+            col("event_type"))).as("f"),
+          max(unix_micros(col("ts"))).as("last_us"),
+          max(when(col("event_type") === "purchase",
+            unix_micros(col("ts")))).as("p_last_us"),
+          sum((col("event_type") === "purchase").cast("long"))
+            .as("p_freq"),
+          Num.dsumExact(when(col("event_type") === "purchase",
+            col("value"))).as("p_mon"))
+        .localCheckpoint()
     }
-  }
 
   /** Distinct (user, epoch-day) activity — the DAU/retention grain. */
   private[graft] def userDays(spark: SparkSession,
-      dir: String): DataFrame = {
-    def compute: DataFrame = Tables.load(spark, dir, "events")
-      .select(col("user_id"),
-        expr(s"unix_micros(ts) div $DayUs").as("day"))
-      .distinct().localCheckpoint()
-    Pctl.key(dir, "events", "user_days") match {
-      case Some(k) => graft.CorpusCache.df(cardCache, k, spark)(compute)
-      case None => compute
+      dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "events", "user_days") {
+      Tables.load(spark, dir, "events")
+        .select(col("user_id"),
+          expr(s"unix_micros(ts) div $DayUs").as("day"))
+        .distinct().localCheckpoint()
     }
-  }
 
   /** (user, epoch-week) exact purchase revenue in micro-units. */
   private[graft] def userWeekRev(spark: SparkSession,
-      dir: String): DataFrame = {
-    def compute: DataFrame = Tables.load(spark, dir, "events")
-      .filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"),
-        expr(s"unix_micros(ts) div ${DayUs * 7L}").as("week"))
-      .agg((Num.dsumExact(col("value")) * lit(1000000L))
-        .cast("decimal(38,0)").as("rev_u"))
-      .localCheckpoint()
-    Pctl.key(dir, "events", "user_week_rev") match {
-      case Some(k) => graft.CorpusCache.df(cardCache, k, spark)(compute)
-      case None => compute
+      dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "events", "user_week_rev") {
+      Tables.load(spark, dir, "events")
+        .filter(col("event_type") === "purchase")
+        .groupBy(col("user_id"),
+          expr(s"unix_micros(ts) div ${DayUs * 7L}").as("week"))
+        .agg((Num.dsumExact(col("value")) * lit(1000000L))
+          .cast("decimal(38,0)").as("rev_u"))
+        .localCheckpoint()
     }
-  }
-
-  private val cardCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
 
   /** The pinned #87 dimension + its chain stats — in production the
     * SCD2 dimension IS a table; its consumers (#157 scd2_lookup,
@@ -104,32 +85,16 @@ object Dimensional {
   private[graft] case class Scd2Artifact(dim: DataFrame, rows: Long,
     maxChain: Long)
 
-  // Registered for the same reason as chainCache: without enrollment
-  // a cold rep of scd2_lookup / band_migration reuses the warm
-  // dimension artifact and understates the cold floor.
-  private val scd2Cache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Scd2Artifact])
-
   private[graft] def scd2Artifact(spark: SparkSession,
-      dir: String): Scd2Artifact = {
-    def compute: Scd2Artifact = {
+      dir: String): Scd2Artifact =
+    graft.CorpusCache.pinned(spark, dir, "events", "scd2_artifact")(
+        (a: Scd2Artifact) => a.dim) {
       val dim = scd2Dim(spark, dir).localCheckpoint()
       val stats = dim.groupBy("ticker_id").agg(count(lit(1)).as("c"))
         .agg(sum(col("c")), max(col("c"))).head()
       if (stats.isNullAt(0)) Scd2Artifact(dim, 0L, 0L)
       else Scd2Artifact(dim, stats.getLong(0), stats.getLong(1))
     }
-    Pctl.key(dir, "events", "scd2_artifact") match {
-      case Some(k) =>
-        if (scd2Cache.size > graft.CorpusCache.MaxEntries)
-          scd2Cache.clear()
-        val cur = scd2Cache.get(k)
-        if (cur != null && (cur.dim.sparkSession eq spark) &&
-            !spark.sparkContext.isStopped) cur
-        else { val v = compute; scd2Cache.put(k, v); v }
-      case None => compute
-    }
-  }
 
   /** #87 SCD Type-2 dimension build: compress each ticker's price
     * stream to its CHANGE points (drop no-op updates — the defining
@@ -178,26 +143,14 @@ object Dimensional {
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .withColumn("us", unix_micros(col("ts")))
-    // corpus-keyed probe cache (the centroidCache pattern): the max
-    // per-key count is a corpus statistic, probed once per corpus —
-    // every scd2 consumer (scd2_lookup, band_migration) reuses it
-    // instead of re-scanning events per call.
-    def maxPerKey: Long = {
-      def probe: Long = ev.groupBy("user_id")
-        .agg(count(lit(1)).as("n")).agg(max(col("n"))).head().getLong(0)
-      val mtime = new java.io.File(dir, "events.parquet").lastModified
-      // mtime == 0 means the events table is not laid out as a single
-      // `events.parquet` under dir (ADVICE r13): the key would then be
-      // CONSTANT across corpus regenerations and a stale chain length
-      // could route a newly hot-keyed corpus to the single-task plain
-      // window — re-probe instead of caching. Bounded: corpora seen
-      // per JVM are a handful; clear() guards the pathological case.
-      if (mtime == 0L) probe
-      else {
-        if (Dimensional.chainCache.size > 64) Dimensional.chainCache.clear()
-        Dimensional.chainCache.computeIfAbsent(dir + "@" + mtime, _ => probe)
+    // the max per-key count is a corpus statistic, probed once per
+    // corpus — every scd2 consumer (scd2_lookup, band_migration)
+    // reuses it instead of re-scanning events per call
+    def maxPerKey: Long =
+      graft.CorpusCache.value(spark, dir, "events", "scd2_chain") {
+        ev.groupBy("user_id").agg(count(lit(1)).as("n"))
+          .agg(max(col("n"))).head().getLong(0)
       }
-    }
     val changes = if (!forceTwoLevel && maxPerKey <= Rank.SingleTaskMax) {
       val byUser = Window.partitionBy("user_id")
         .orderBy(col("us"), col("event_id"))
@@ -303,17 +256,10 @@ object Dimensional {
         case r if r.isNullAt(0) => 0L
         case r => r.getLong(0)
       }
-    val maxPerUser = Pctl.key(dir, "events", "funnel_chain") match {
-      case Some(k) =>
-        graft.CorpusCache.value(funnelChainCache, k)(
-          java.lang.Long.valueOf(probe)).longValue()
-      case None => probe
-    }
+    val maxPerUser =
+      graft.CorpusCache.value(spark, dir, "events", "funnel_chain")(probe)
     funnelPerUserVia(spark, dir, maxPerUser > Rank.SingleTaskMax)
   }
-
-  private val funnelChainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
 
   /** Route-forced internals (spec support): window chain vs the
     * skew-immune grouped-min form. */
@@ -586,7 +532,8 @@ object Dimensional {
         .select(((unix_micros(col(tCol)) - unix_micros(col("t1")))
           .cast("double") / lit(3600e6)).as("h"))
       val pc = Pctl.grouped(hours, Seq.empty, col("h"), Seq(0.5, 0.9),
-        Seq("plo", "phi"), Pctl.key(dir, "events", s"funnel_times_$name"))
+        Seq("plo", "phi"),
+        Some(Pctl.Site(dir, "events", s"funnel_times_$name")))
       hours.agg(count(lit(1)).as("n_users"))
         .crossJoin(broadcast(pc))
         .select(lit(name).as("stage"), col("n_users"),

@@ -150,25 +150,14 @@ object LmFilter {
   /** Corpus-keyed bigram-type counts (w1, w2, c2) — the shared MODEL
     * grain of #153 lm_perplexity and #169 pmi_collocations (round 15:
     * each re-exploded the corpus per call to rebuild it). Vocab²-
-    * bounded, pinned once per corpus; the CorpusCache discipline. */
-  private val bigramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-
+    * bounded, pinned once per corpus (a CorpusCache frame). */
   private[graft] def bigramCounts(spark: SparkSession,
-      dir: String): DataFrame = {
-    def compute: DataFrame = bigramInstances(spark, dir)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .localCheckpoint()
-    Pctl.key(dir, "documents", "bigram_counts") match {
-      case Some(k) => graft.CorpusCache.df(bigramCache, k, spark)(compute)
-      case None => compute
+      dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "documents", "bigram_counts") {
+      bigramInstances(spark, dir)
+        .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+        .localCheckpoint()
     }
-  }
-
-  /** Corpus-keyed LM vocabulary size (see the derivation note in
-    * [[lmPerplexity]]) — one bounded scalar per corpus. */
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
 
   /** Broadcast gate for the bigram-scoring join (round 16, VERDICT
     * r15 #3 — the scd2 `PitBroadcastMaxChain` pattern): when the
@@ -180,9 +169,6 @@ object LmFilter {
     * it. The gate reads one corpus-cached scalar, not a per-call
     * count. */
   val LmBroadcastMaxTypes = 1000000L
-
-  private val modelSizeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
 
   /** Shared (doc, w1, w2) adjacent-pair stream for the LM and PMI
     * operators. */
@@ -228,11 +214,8 @@ object LmFilter {
         .filter(size(col("toks")) > 0)
         .select(element_at(col("toks"), -1).as("tok")))
       .agg(countDistinct(col("tok"))).head().getLong(0)
-    val v = Pctl.key(dir, "documents", "lm_vocab") match {
-      case Some(k) => graft.CorpusCache.value(vocabCache, k)(
-        java.lang.Long.valueOf(vProbe)).longValue()
-      case None => vProbe
-    }
+    val v = graft.CorpusCache.value(spark, dir, "documents", "lm_vocab")(
+      vProbe)
     val ctx = c2.groupBy("w1").agg(sum(col("c2")).as("ctx"))
     val model = c2.join(ctx, "w1")
       .select(col("w1"), col("w2"),
@@ -242,12 +225,8 @@ object LmFilter {
     // adaptive model shipping (round 16): |bigram types| is a bounded
     // corpus scalar — broadcast the model below the gate so the one
     // corpus-scale pass (the instance stream) never shuffles
-    def sizeProbe: Long = c2.count()
-    val nTypes = Pctl.key(dir, "documents", "lm_model_size") match {
-      case Some(k) => graft.CorpusCache.value(modelSizeCache, k)(
-        java.lang.Long.valueOf(sizeProbe)).longValue()
-      case None => sizeProbe
-    }
+    val nTypes = graft.CorpusCache.value(spark, dir, "documents",
+      "lm_model_size")(c2.count())
     val modelSide =
       if (nTypes <= LmBroadcastMaxTypes) broadcast(model) else model
     val scored = bigrams.join(modelSide, Seq("w1", "w2"))

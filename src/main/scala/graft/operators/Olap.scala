@@ -145,7 +145,7 @@ object Olap {
     Pctl.grouped(Tables.load(spark, dir, "events"),
         Seq("event_type"), col("value"),
         Seq(0.25, 0.5, 0.9, 0.99), Seq("p25", "p50", "p90", "p99"),
-        Pctl.key(dir, "events", "percentiles"))
+        Some(Pctl.Site(dir, "events", "percentiles")))
       .select(col("event_type"),
         round(col("p25"), 6).as("p25"), round(col("p50"), 6).as("p50"),
         round(col("p90"), 6).as("p90"), round(col("p99"), 6).as("p99"))
@@ -285,9 +285,6 @@ object Olap {
     * safety. */
   val QuantileBinsBlockCap = 100000L
 
-  private val blockCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
   def quantileBins(spark: SparkSession, dir: String): DataFrame =
     quantileBinsWith(spark, dir, QuantileBinsBlockCap)
 
@@ -297,16 +294,11 @@ object Olap {
       .select(col("event_type"), col("value"), col("event_id"))
       .withColumn("blk", floor(col("value")).cast("long"))
     // the probe is one count-distinct-shaped aggregate over the
-    // two-column scan, corpus-keyed like every other route probe
-    // (chainCache / Pctl pattern; uncached when mtime is unreadable);
+    // two-column scan, a corpus artifact like every other route probe;
     // above the cap the block table never leaves the executors
-    def probe: Long = ev.select(col("event_type"), col("blk"))
-      .distinct().count()
-    val nBlocks = Pctl.key(dir, "events", "quantile_bins_blocks") match {
-      case Some(k) =>
-        graft.CorpusCache.value(blockCountCache, k)(
-          java.lang.Long.valueOf(probe)).longValue()
-      case None => probe
+    val nBlocks = graft.CorpusCache.value(spark, dir, "events",
+        "quantile_bins_blocks") {
+      ev.select(col("event_type"), col("blk")).distinct().count()
     }
     if (nBlocks > blockCap) {
       val ranked = Rank.twoLevelRank(ev, Seq("event_type"), col("blk"),
@@ -692,7 +684,7 @@ object Olap {
     val ev = Tables.load(spark, dir, "events")
     val cuts = Pctl.grouped(ev, Seq("event_type"), col("value"),
         Seq(0.05, 0.95), Seq("plo", "phi"),
-        Pctl.key(dir, "events", "winsorize"))
+        Some(Pctl.Site(dir, "events", "winsorize")))
       .select(col("event_type"),
         round(col("plo"), 6).as("lo"), round(col("phi"), 6).as("hi"))
     ev.join(broadcast(cuts), "event_type")

@@ -40,12 +40,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   *
   * The analysis (route + the blocked route's rank geometry — both
   * BOUNDED corpus statistics: the geometry is ≤ 3·|ps|·|groups|
-  * driver rows, never data-sized) is cached per (corpus mtime, call
-  * site), the centroidCache / scd2-chain-probe pattern: build once,
-  * query many. Steady state for a blocked-route consumer is then ONE
-  * pruned fetch pass, exactly like a warehouse engine planning from
-  * table statistics. Callers must feed non-null, non-NaN values (all
-  * call sites filter or construct them so).
+  * driver rows, never data-sized) is a [[graft.CorpusCache]] value
+  * per (corpus, call site): build once, query many. Steady state for
+  * a blocked-route consumer is then ONE pruned fetch pass, exactly
+  * like a warehouse engine planning from table statistics. Callers
+  * must feed non-null, non-NaN values (all call sites filter or
+  * construct them so).
   */
 object Pctl {
 
@@ -70,21 +70,9 @@ object Pctl {
     * flag, not a group list (group counts are data-sized at 100 TB). */
   private case class BlockedE(geo: Geo, anyAllNull: Boolean) extends Entry
 
-  private val cache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Entry])
-
-  /** Cache key for the corpus analysis: corpus identity (dir + source
-    * table mtime) + call site. The ps list and grouping keys (the
-    * geometry depends on both) are folded in by [[grouped]] itself, so
-    * a site string reused with a different ps/keys combination can
-    * never be served stale geometry (ADVICE r14). None (no caching,
-    * re-analyze every call) when the table's mtime is unreadable —
-    * the chainCache discipline: a constant key across corpus
-    * regenerations could serve stale geometry. */
-  def key(dir: String, table: String, site: String): Option[String] = {
-    val m = new java.io.File(dir, s"$table.parquet").lastModified
-    if (m == 0L) None else Some(s"$dir@$m#$site")
-  }
+  /** Where [[grouped]] caches its corpus analysis: the corpus table
+    * and the call site (see [[graft.CorpusCache]]). */
+  case class Site(dir: String, table: String, name: String)
 
   /** One row per `keys` combination, with `names(i)` = the exact
     * interpolated `ps(i)` percentile of `value` (raw double — callers
@@ -94,7 +82,7 @@ object Pctl {
     * `keys` empty = one global row (non-empty input assumed). */
   def grouped(df: DataFrame, keys: Seq[String], value: Column,
       ps: Seq[Double], names: Seq[String],
-      cacheKey: Option[String] = None): DataFrame = {
+      site: Option[Site] = None): DataFrame = {
     require(ps.nonEmpty && ps.length == names.length)
     // full projection (nulls kept): percentile/approx_percentile skip
     // nulls natively, so the plain/sketch routes emit all-null groups
@@ -104,13 +92,13 @@ object Pctl {
       df.select((keys.map(col) :+ value.cast("double").as("__pv")): _*)
     val v = vAll.filter(col("__pv").isNotNull)
     // geometry depends on ps AND the grouping keys — folded into the
-    // cache key so a site string can't serve mismatched geometry
-    val entry = cacheKey
-      .map(k => s"$k|ps=${ps.mkString(",")}|keys=${keys.mkString(",")}")
-    match {
-      case Some(k) =>
-        if (cache.size > graft.CorpusCache.MaxEntries) cache.clear()
-        cache.computeIfAbsent(k, _ => analyze(vAll, v, keys, ps))
+    // site so a site name reused with other ps/keys can't serve
+    // mismatched geometry (ADVICE r14)
+    val entry = site match {
+      case Some(Site(dir, table, name)) =>
+        graft.CorpusCache.value(df.sparkSession, dir, table,
+          s"$name|ps=${ps.mkString(",")}|keys=${keys.mkString(",")}")(
+          analyze(vAll, v, keys, ps))
       case None => analyze(vAll, v, keys, ps)
     }
     entry match {

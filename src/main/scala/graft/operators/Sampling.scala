@@ -161,9 +161,6 @@ object Sampling {
   private case class BalanceStats(counts: Seq[(String, Long)],
     thresholds: Map[String, (Long, Long)])
 
-  private val classCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, BalanceStats]
-
   /** Row bound for [[balanceDownsample]]'s per-class window route
     * inside the threshold PROBE (above it the two-level rank
     * decomposition runs — the 100 TB path: the majority class is the
@@ -233,10 +230,8 @@ object Sampling {
           (r.getLong(1), r.getLong(2))).toMap
       BalanceStats(counts, thr)
     }
-    val stats = Pctl.key(dir, "documents", "balance_counts") match {
-      case Some(k) => graft.CorpusCache.value(classCountCache, k)(probe)
-      case None => probe
-    }
+    val stats = graft.CorpusCache.value(spark, dir, "documents",
+      "balance_counts")(probe)
     // empty corpus: every class audit row vanishes downstream anyway;
     // min on an empty collection would throw (ADVICE r13)
     val docs = skeyed(Tables.load(spark, dir, "documents"))

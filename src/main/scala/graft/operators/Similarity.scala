@@ -56,20 +56,13 @@ object Similarity {
     * threshold, the exact number of qualifying pairs and of distinct
     * vectors involved — the "how aggressive is this cutoff" curve a
     * curation team reads before committing a dedup pass. Pairs are
-    * scored once with the codegen cosine kernel (6 dp-rounded before
-    * every threshold compare, so membership is engine-exact), then a
+    * scored once — the codegen cosine kernel's value from per-vector
+    * norms, 6 dp-rounded before every threshold compare, so
+    * membership is engine-exact (R22EquivalenceSpec pins it to the
+    * kernel's pair scan) — then a
     * threshold-spine left join keeps zero rows visible. Broadcast
     * self-join over the bounded sample; output |thresholds| rows. */
-  def dedupCurve(spark: SparkSession, dir: String): DataFrame =
-    dedupCurveImpl(spark, dir, hoist = true)
-
-  /** `hoist = true` (the production path) precomputes per-vector
-    * norms outside the pair loop; `false` keeps the CosineSim-kernel
-    * pair scan — retained solely so the equivalence spec can pin the
-    * two to each other (the hoist must be bit-identical before the
-    * 6 dp round). */
-  private[graft] def dedupCurveImpl(spark: SparkSession, dir: String,
-      hoist: Boolean): DataFrame = {
+  def dedupCurve(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir).filter(col("vec_id") < CurveSample)
     // Norms hoisted OUT of the O(sample²) pair loop (round 22,
     // VERDICT r21 #2): the CosineSim kernel re-accumulates BOTH row
@@ -92,10 +85,8 @@ object Similarity {
     val b = e.select(col("vec_id").as("ib"), col("vec").as("vb"),
         sqrt(dot(col("vec"), col("vec"))).as("nb"))
     val den = col("na") * col("nb")
-    val cos =
-      if (hoist) when(den === 0d, lit(null))
-        .otherwise(dot(col("va"), col("vb")) / den)
-      else cosine(col("va"), col("vb"))
+    val cos = when(den === 0d, lit(null))
+      .otherwise(dot(col("va"), col("vb")) / den)
     // pin the qualifying pairs ONCE (round 21, JobProfile): the
     // n_pairs and n_docs branches each re-ran the full O(sample²)
     // cosine scan (~2M kernel calls twice per rep); the checkpoint
@@ -278,42 +269,27 @@ object Similarity {
     c
   }
 
-  /** #26b IVF ANN: partition the corpus into centroid cells, probe
-    * each query's nprobe nearest cells, exact re-rank inside. The
-    * only cross product is rows × C (broadcast, C bounded); the probe
-    * join is hash-partitioned on cell id. Rows-only; recall gated in
-    * SimilaritySpec. */
-  // Trained-centroid cache, keyed by corpus dir + source mtime (a
-  // regenerated corpus at the same path must not serve stale
-  // centroids): the centroid set is a bounded model artifact (C ×
-  // dim doubles — here 32×64), trained once per corpus and reused by
-  // every probe query, exactly like a production IVF index. The
-  // driver-side materialization is bounded by C, never by data size.
-  private val centroidCache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]])
-
-  /** Cache key carrying the corpus identity AND freshness. */
-  private def modelKey(dir: String): String =
-    dir + "@" + new java.io.File(dir, "embeddings.parquet").lastModified
-
   /** Deterministic seed sample + Lloyd refinement over an arbitrary
-    * training slice, cached under modelKey(dir) + `variant` (the
-    * slice form exists for the append path, whose centroids must be
-    * trained on the BASE corpus only — the whole point of
-    * append-without-retrain). With [[ModelStore]] enabled the trained
-    * table persists once per corpus and later sessions LOAD it
-    * (round 17, VERDICT r16 #5) instead of re-running Lloyd. */
+    * training slice, a corpus artifact per `variant`: the centroid set
+    * is a bounded model (C × dim doubles — here 32×64), trained once
+    * per corpus and reused by every probe query, exactly like a
+    * production IVF index; its driver-side materialization is bounded
+    * by C, never by data size (the slice form exists for the append
+    * path, whose centroids must be trained on the BASE corpus only —
+    * the whole point of append-without-retrain). With [[ModelStore]]
+    * enabled the trained table persists once per corpus and later
+    * sessions LOAD it (round 17, VERDICT r16 #5) instead of re-running
+    * Lloyd. */
   private[graft] def trainCentroidsOf(spark: SparkSession, e: DataFrame,
       dir: String, variant: String, iters: Int): DataFrame = {
-    val cached = centroidCache.computeIfAbsent(modelKey(dir) + variant,
-      _ => {
-      import spark.implicits._
+    import spark.implicits._
+    val cached = graft.CorpusCache.value(spark, dir, "embeddings",
+        "centroids" + variant) {
       ModelStore.table(spark, dir,
         "centroids" + variant.replace('#', '_'), "embeddings") {
         lloydTrain(e, iters)
       }.as[(Long, Seq[Double])].collect().toSeq
-    })
-    import spark.implicits._
+    }
     cached.toDF("c_id", "cvec")
   }
 
@@ -342,6 +318,11 @@ object Similarity {
       iters: Int = IvfKmeansIters): DataFrame =
     trainCentroidsOf(spark, emb(spark, dir), dir, "#" + iters, iters)
 
+  /** #26b IVF ANN: partition the corpus into centroid cells, probe
+    * each query's nprobe nearest cells, exact re-rank inside. The
+    * only cross product is rows × C (broadcast, C bounded); the probe
+    * join is hash-partitioned on cell id. Rows-only; recall gated in
+    * SimilaritySpec. */
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     annIvfWith(spark, dir, IvfAssign, IvfProbe, IvfProbeMargin, IvfProbeMax)
 
@@ -637,25 +618,21 @@ object Similarity {
     * centroid table is |labels| rows → broadcast; the argmax is the
     * bounded rows×|labels| broadcast-product + per-vector window, the
     * same shape as [[annIvf]]'s assignment step. */
-  // Label-centroid model cache, keyed by corpus dir — same bounded
-  // model-artifact pattern as [[trainedCentroids]]: |labels| rows ×
-  // dim doubles, computed once per corpus, reused by every
-  // assignment query. The collect is bounded by label cardinality,
-  // never by data size.
-  private val labelCentroidCache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]])
-
+  // Label centroids: the bounded corpus-artifact pattern of
+  // [[trainedCentroids]] — |labels| rows × dim doubles, computed once
+  // per corpus, reused by every assignment query. The collect is
+  // bounded by label cardinality, never by data size.
   def centroidAssign(spark: SparkSession, dir: String): DataFrame = {
-    val cached = labelCentroidCache.computeIfAbsent(modelKey(dir), _ => {
-      import spark.implicits._
+    import spark.implicits._
+    val cached = graft.CorpusCache.value(spark, dir, "embeddings",
+        "label_centroids") {
       ModelStore.table(spark, dir, "label_centroids", "embeddings") {
         centroidDims(spark, dir)
           .groupBy(col("label").as("c_label"))
           .agg(expr("transform(array_sort(collect_list(struct(pos, m))), t -> t.m)")
             .as("cvec"))
       }.as[(Int, Seq[Double])].collect().toSeq
-    })
-    import spark.implicits._
+    }
     val cvecs = cached.toDF("c_label", "cvec")
     val e = emb(spark, dir)
     val w = org.apache.spark.sql.expressions.Window
@@ -790,20 +767,18 @@ object Similarity {
       .withColumnRenamed("col", "sv")
       .drop(vecCol)
 
-  // Sub-codebook cache: M×K×subDim doubles (8×16×8 = 1024) — the
-  // same bounded model-artifact pattern as [[trainedCentroids]].
-  private val pqCache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Int, Seq[Double])]])
-
-  /** Lloyd-trained PQ sub-codebooks (L2 geometry): assignment by
+  /** Lloyd-trained PQ sub-codebooks (L2 geometry), a bounded corpus
+    * artifact like [[trainedCentroids]] (M×K×subDim doubles, 8×16×8 =
+    * 1024): assignment by
     * argmax(sv·c - |c|²/2) ≡ argmin ‖sv-c‖², recompute by
     * decimal-exact dimension means — deterministic on any cluster.
     * Training shape: iters × (rows×M sub-vectors ⋈ broadcast M×K
     * codebook + one (m, cid, pos) scalar shuffle); at 100 TB
     * codebooks train on a sampled slice, same plan. */
   def trainedPqCodebooks(spark: SparkSession, dir: String): DataFrame = {
-    val cached = pqCache.computeIfAbsent(modelKey(dir), _ => {
-      import spark.implicits._
+    import spark.implicits._
+    val cached = graft.CorpusCache.value(spark, dir, "embeddings",
+        "pq_codebooks") {
       ModelStore.table(spark, dir, "pq_codebooks", "embeddings") {
       val e = emb(spark, dir).select(col("vec_id"), col("vec"))
       val sub = subVectors(e)
@@ -841,8 +816,7 @@ object Similarity {
       }
       cb.select(col("m"), col("cid"), col("cvec"))
       }.as[(Int, Int, Seq[Double])].collect().toSeq
-    })
-    import spark.implicits._
+    }
     cached.toDF("m", "cid", "cvec")
   }
 
@@ -851,25 +825,20 @@ object Similarity {
   // cells — is the FAISS "add" phase, a deterministic derivative of
   // (corpus, ModelStore codebooks) exactly like the persisted IVF
   // postings of #119 ann_indexed. Built once per corpus, pinned via
-  // localCheckpoint; registered through CorpusCache.df so cold mode
+  // localCheckpoint as CorpusCache frames, so cold mode
   // (SPARK_GRAFT_COLD=1) clears and re-pays the build like every
   // other model artifact. Previously ann_pq AND ann_ivfpq re-encoded
   // all vectors (subvector join + per-(vec,m) argmax window +
   // collect_list fold) on every call — the bulk of both cells.
-  private val pqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
 
   /** Corpus encoded to PQ codes: per vector the M best sub-codes
     * plus the reconstruction norm² (Σ_m |c_{m,code}|²), both needed
     * by the ADC scorer. The sums fold over the m-sorted struct list,
     * so the double accumulation order is fixed. */
-  private def pqEncoded(spark: SparkSession, dir: String): DataFrame = {
-    def compute = pqEncodedCompute(spark, dir).localCheckpoint()
-    Pctl.key(dir, "embeddings", "pq_encoded") match {
-      case Some(k) => graft.CorpusCache.df(pqIndexCache, k, spark)(compute)
-      case None => compute
+  private def pqEncoded(spark: SparkSession, dir: String): DataFrame =
+    graft.CorpusCache.df(spark, dir, "embeddings", "pq_encoded") {
+      pqEncodedCompute(spark, dir).localCheckpoint()
     }
-  }
 
   private def pqEncodedCompute(spark: SparkSession, dir: String): DataFrame = {
     // cn2 rides as EXACT integer micro-units (round 15): the
@@ -992,7 +961,10 @@ object Similarity {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id").orderBy(round(col("cs"), 6).desc,
         col("c_id").asc)
-    def cellCodesCompute = {
+    // the cell-filed code postings are the IVFPQ index add-phase —
+    // a corpus artifact like pqEncoded
+    val cellCodes = graft.CorpusCache.df(spark, dir, "embeddings",
+        "ivfpq_cell_codes") {
       val assigned = e.crossJoin(centroids)
         .select(col("vec_id"), col("c_id"),
           cosine(col("vec"), col("cvec")).as("cs"))
@@ -1000,13 +972,6 @@ object Similarity {
         .filter(col("rn") <= IvfAssign)
         .select(col("c_id").as("cell"), col("vec_id"))
       assigned.join(pqEncoded(spark, dir), "vec_id").localCheckpoint()
-    }
-    // the cell-filed code postings are the IVFPQ index add-phase —
-    // corpus-keyed like pqEncoded (see pqIndexCache)
-    val cellCodes = Pctl.key(dir, "embeddings", "ivfpq_cell_codes") match {
-      case Some(k) =>
-        graft.CorpusCache.df(pqIndexCache, k, spark)(cellCodesCompute)
-      case None => cellCodesCompute
     }
     // query side: the same adaptive cell probing as annIvf
     val qside = broadcast(pqQuerySide(spark, dir))

@@ -386,12 +386,14 @@ object TimeSeries {
     // both grouped medians ride Pctl (VERDICT r13 #1): the plain
     // one-agg plan below the group-size gate, blocked-exact above it
     val med = Pctl.grouped(events, Seq("event_type"), col("value"),
-        Seq(0.5), Seq("m"), Pctl.key(dir, "events", "robust_med"))
+        Seq(0.5), Seq("m"),
+        Some(Pctl.Site(dir, "events", "robust_med")))
       .select(col("event_type"), round(col("m"), 6).as("med"))
     val dev = events.join(broadcast(med), "event_type")
       .withColumn("dev", abs(col("value") - col("med")))
     val mad = Pctl.grouped(dev, Seq("event_type"), col("dev"),
-        Seq(0.5), Seq("m"), Pctl.key(dir, "events", "robust_mad"))
+        Seq(0.5), Seq("m"),
+        Some(Pctl.Site(dir, "events", "robust_mad")))
       .select(col("event_type"), round(col("m"), 6).as("mad"))
     // count, med and the outlier tally share ONE pass over dev (the
     // mad gate broadcasts in) — n/med/n_out per group in one agg

@@ -47,16 +47,6 @@ object Alerts {
   val BackfillStart: LocalDate = LocalDate.of(2024, 1, 1)
   val BackfillDays = 4
 
-  // Corpus-keyed halt-trail cache (round 15, VERDICT r14 #7): the
-  // backfill arm replays a real 4-day chain — scratch-table wipe +
-  // many small log commits, IO-bound and constant per corpus. The
-  // resulting TaskRun ledger is a bounded driver value (≤ BackfillDays
-  // rows, deterministic: the outage is injected), so it is probed
-  // once per corpus like every other route probe; the chain machinery
-  // itself stays exercised by backfill_range and the Backfill specs.
-  private val bfCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Backfill.TaskRun]]
-
   /** #214 driver-gate query: one row per alert —
     * (source, alert_key, severity, n, detail). */
   def alertFeed(spark: SparkSession, dir: String): DataFrame = {
@@ -81,8 +71,13 @@ object Alerts {
         lit("warn").as("severity"),
         col("n_violations").as("n"),
         lit("rule violations over events").as("detail"))
-    // backfill halt trail: run the real chain against the outage
-    // (once per corpus — the ledger is deterministic and bounded)
+    // backfill halt trail (round 15, VERDICT r14 #7): run the real
+    // 4-day chain against the outage — scratch-table wipe + many small
+    // log commits, IO-bound and constant per corpus. The TaskRun
+    // ledger is a bounded driver value (≤ BackfillDays rows,
+    // deterministic: the outage is injected), so it is a corpus
+    // artifact like every other route probe; the chain machinery stays
+    // exercised by backfill_range and the Backfill specs.
     def replay: Seq[Backfill.TaskRun] = {
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_alertbf_${graft.sources.StagePath.key(dir)}").getPath
@@ -97,10 +92,7 @@ object Alerts {
         BackfillStart.plusDays(BackfillDays.toLong))(day).runs
     }
     val runsLedger =
-      graft.operators.Pctl.key(dir, "events", "alert_backfill") match {
-        case Some(k) => graft.CorpusCache.value(bfCache, k)(replay)
-        case None => replay
-      }
+      graft.CorpusCache.value(spark, dir, "events", "alert_backfill")(replay)
     val bf = runsLedger
       .filter(r => r.status == "failed" || r.status == "blocked")
       .map { r =>

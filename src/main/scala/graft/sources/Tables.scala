@@ -171,26 +171,13 @@ object Tables {
     }
   }
 
-  // Corpus-keyed table row counts — the adaptive-plan gate probe
-  // (round 21, the scd2_lookup/Rank.SingleTaskMax pattern applied to
-  // the ordered-window family): one count job per (corpus, table),
-  // cached like the other corpus statistics and cleared by cold mode.
-  private val rowCountCache = graft.CorpusCache.register(
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long])
-
-  /** Row count of `dir/name.parquet`, corpus-keyed (dir + mtime —
-    * the Pctl.key discipline; uncached when the mtime is unreadable). */
-  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
-    def compute: Long = load(spark, dir, name).count()
-    val m = new java.io.File(dir, s"$name.parquet").lastModified
-    if (m == 0L) compute
-    else {
-      if (rowCountCache.size > graft.CorpusCache.MaxEntries)
-        rowCountCache.clear()
-      rowCountCache.computeIfAbsent(s"$dir@$m#$name", _ => compute)
-        .longValue()
-    }
-  }
+  /** Row count of `dir/name.parquet` — the adaptive-plan gate probe
+    * (round 21, the scd2_lookup/Rank.SingleTaskMax pattern applied to
+    * the ordered-window family): one count job per (corpus, table), a
+    * [[graft.CorpusCache]] value. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
+    graft.CorpusCache.value(spark, dir, name, "row_count")(
+      load(spark, dir, name).count())
 
   /** Generic typed ingest: read with a declared schema and enforce
     * target column types via casts — the `schema_fields` +

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Analytics, Components, Dimensional, LmFilter, Num}
+import graft.operators.{Analytics, Components, Dimensional, LmFilter, Num,
+  Similarity}
 import graft.sources.Tables
 
 /** Round-15 artifact-equivalence contracts: every corpus-keyed pinned
@@ -17,25 +18,34 @@ class ArtifactSpec extends SparkTestBase {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
 
-  test("CorpusCache.clearAll reaches value/df-managed AND " +
-    "self-managed registered caches (the bench cold mode)") {
-    val managed =
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-    graft.CorpusCache.value(managed, "k")(java.lang.Long.valueOf(7L))
-    // register several maps while ALL are still EMPTY: Java Maps are
-    // content-equal, so a hash-keyed registry would keep only one of
-    // them (the bug a ×100 cold BenchOne caught live — identity
-    // semantics are the contract here)
-    val a = graft.CorpusCache.register(
-      new java.util.concurrent.ConcurrentHashMap[String, String])
-    val b = graft.CorpusCache.register(
-      new java.util.concurrent.ConcurrentHashMap[String, String])
-    val c = graft.CorpusCache.register(
-      new java.util.concurrent.ConcurrentHashMap[String, String])
-    a.put("a", "1"); b.put("b", "2"); c.put("c", "3")
-    assert(managed.size === 1 && a.size + b.size + c.size === 3)
+  test("clearAll rebuilds a frame, a scalar, a model and a composite") {
+    // one artifact of each shape the bench's cold mode must reach: a
+    // pinned frame, a driver scalar, a trained model and a composite
+    // (frame + scalars); a build shows as a job under its site's name
+    def all() = (Components.basketPairs(spark, SfDir),
+      Tables.rowCount(spark, SfDir, "events"),
+      rows(Similarity.trainedCentroids(spark, SfDir)),
+      Dimensional.scd2Artifact(spark, SfDir))
+    def builds(body: => Unit): Set[String] = jobDescriptions(body)
+      .filter(_.startsWith("graft:artifact:")).toSet
+    val sites = Set("basket_pairs", "row_count",
+      s"centroids#${Similarity.IvfKmeansIters}", "scd2_artifact")
+      .map("graft:artifact:" + _)
+    val (pairs, n, model, scd2) = all()
+    // warm: the same pinned objects come back and nothing is built
+    assert(builds {
+      val (p2, n2, m2, s2) = all()
+      assert((p2 eq pairs) && n2 == n && m2 == model && (s2 eq scd2))
+    }.isEmpty)
     graft.CorpusCache.clearAll()
-    assert(managed.isEmpty && a.isEmpty && b.isEmpty && c.isEmpty)
+    // cold: each one is built again, to equal rows
+    assert(sites.subsetOf(builds {
+      val (p3, n3, m3, s3) = all()
+      assert(!(p3 eq pairs) && !(s3 eq scd2) && !(s3.dim eq scd2.dim))
+      assert(rows(p3) === rows(pairs) && n3 === n && m3 === model)
+      assert(rows(s3.dim) === rows(scd2.dim) && s3.rows === scd2.rows &&
+        s3.maxChain === scd2.maxChain)
+    }))
   }
 
   test("clearAll reaches an operator that self-manages its " +
@@ -45,8 +55,8 @@ class ArtifactSpec extends SparkTestBase {
     // warm: the second call must serve the SAME pinned artifact
     assert(warm2.dim eq warm1.dim)
     graft.CorpusCache.clearAll()
-    // cold: a fresh build — if scd2Cache weren't enrolled, the warm
-    // artifact would leak through and understate the cold floor
+    // cold: a fresh build — a warm artifact leaking through would
+    // understate the cold floor
     val cold = Dimensional.scd2Artifact(spark, SfDir)
     assert(!(cold.dim eq warm1.dim))
     assert(rows(cold.dim) === rows(warm1.dim))
@@ -223,8 +233,8 @@ class ArtifactSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteQuietly(root)
     sys.props("graft.modelstore") = "1"
     def racePair(): Unit = {
-      // CorpusCache would serialize the two callers through one
-      // computeIfAbsent; go straight at the store layer so both
+      // CorpusCache would serialize the two callers on one artifact
+      // slot; go straight at the store layer so both
       // threads really run the train→publish→pointer-swap path.
       // Under the generation+pointer protocol BOTH callers must
       // succeed with the honest model — the delete-in-place protocol

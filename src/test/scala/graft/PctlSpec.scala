@@ -99,7 +99,7 @@ class PctlSpec extends SparkTestBase {
     "different ps must not share geometry") {
     val df = Seq(("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 10.0))
       .toDF("k", "v")
-    val ck = Pctl.key(SfDir, "events", "pctlspec_site_reuse")
+    val ck = Some(Pctl.Site(SfDir, "events", "pctlspec_site_reuse"))
     val p50 = Pctl.grouped(df, Seq("k"), col("v"), Seq(0.5), Seq("p"),
       ck).orderBy("k").collect()
     val p25 = Pctl.grouped(df, Seq("k"), col("v"), Seq(0.25), Seq("p"),

@@ -10,12 +10,28 @@ import org.apache.spark.sql.functions._
 class R22EquivalenceSpec extends SparkTestBase {
 
   test("dedup_curve: hoisted-norm cosine equals the kernel form") {
-    val a = graft.operators.Similarity
-      .dedupCurveImpl(spark, SfDir, hoist = true).collect().toSeq
-    val b = graft.operators.Similarity
-      .dedupCurveImpl(spark, SfDir, hoist = false).collect().toSeq
-    assert(a === b)
-    assert(a.nonEmpty)
+    import graft.operators.Similarity
+    def curve(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
+    // reference: the CosineSim-kernel pair scan over the same sample
+    val e = Similarity.emb(spark, SfDir)
+      .filter(col("vec_id") < Similarity.CurveSample)
+    val pairs = e.select(col("vec_id").as("ia"), col("vec").as("va"))
+      .join(e.select(col("vec_id").as("ib"), col("vec").as("vb")),
+        col("ia") < col("ib"))
+      .select(col("ia"), col("ib"),
+        round(graft.functions.VectorFunctions.cosine(col("va"), col("vb")),
+          6).as("c"))
+      .localCheckpoint()
+    val ref = Similarity.CurveThresholds.map { t =>
+      val q = pairs.filter(col("c") >= t)
+      val nDocs = q.select(col("ia").as("v"))
+        .union(q.select(col("ib").as("v"))).distinct().count()
+      (t, q.count(), nDocs)
+    }
+    val got = curve(Similarity.dedupCurve(spark, SfDir))
+    assert(got === ref)
+    assert(got.exists(_._2 > 0))
   }
 
   test("triangle_count closing plan carries the merge-intersect kernel, not array_intersect") {

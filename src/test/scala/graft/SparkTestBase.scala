@@ -16,6 +16,27 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     Console.withOut(new java.io.PrintStream(out)) { df.explain("formatted") }
     out.toString("UTF-8")
   }
+
+  /** The description of every job `body` starts ("" when unset), read
+    * by a SparkListener, in start order. */
+  def jobDescriptions(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator)
+      .asScala.toSeq
+  }
 }
 
 object SparkTestBase {

@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Waits until every listener event posted so far has been delivered
+  * (the listener bus is private[spark]). */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
