@@ -155,18 +155,6 @@ object Analytics {
       .orderBy("day", "day_rank")
   }
 
-  /** #143 Market-basket co-occurrence — the top co-ordered part pairs
-    * with support and lift, the "frequently bought together" report.
-    * Pair generation is basket-bounded: lines first collapse to
-    * DISTINCT (order, part) — which also makes the metric invariant
-    * under corpus duplication — then self-join on the order key, so
-    * the explode is Σ basket² (~7² per order), never catalog². Lift's
-    * numerator/denominator are exact integers; one terminal round.
-    *
-    * Scale: the order-keyed self-join co-shuffles once on l_orderkey;
-    * pair support is a hash aggregate on (part_a, part_b); the top-20
-    * is TakeOrdered (no global sort materialized). A mega-basket is
-    * the skew exposure and gets capped upstream in a real feed. */
   /** Smoothing pseudo-count for [[targetEncode]] (the standard
     * empirical-Bayes m-estimate). */
   val EncodeSmoothM = 20L
@@ -239,6 +227,18 @@ object Analytics {
       .limit(20)
   }
 
+  /** #143 Market-basket co-occurrence — the top co-ordered part pairs
+    * with support and lift, the "frequently bought together" report.
+    * Pair generation is basket-bounded: lines first collapse to
+    * DISTINCT (order, part) — which also makes the metric invariant
+    * under corpus duplication — then self-join on the order key, so
+    * the explode is Σ basket² (~7² per order), never catalog². Lift's
+    * numerator/denominator are exact integers; one terminal round.
+    *
+    * Scale: the order-keyed self-join co-shuffles once on l_orderkey;
+    * pair support is a hash aggregate on (part_a, part_b); the top-20
+    * is TakeOrdered (no global sort materialized). A mega-basket is
+    * the skew exposure and gets capped upstream in a real feed. */
   def coOccurrence(spark: SparkSession, dir: String): DataFrame = {
     // pinned: the distinct collapse feeds the order count, the part
     // counts and BOTH sides of the pair self-join — lazy, each
@@ -264,25 +264,6 @@ object Analytics {
       .limit(20)
   }
 
-  /** #144 Referential-integrity audit — the cross-table contract a
-    * warehouse checks on every load (single-table nulls/ranges are
-    * #60's dq_checks): orphaned facts (lineitem→orders, orders→
-    * customer, customer→nation), duplicate primary keys, and null
-    * foreign keys, one row per check — all six checks ONE unioned
-    * lazy plan, one action.
-    *
-    * Every check runs at KEY grain, never row grain: each table
-    * collapses once to (key → row count [, null-FK count]) — the
-    * map-side combine — then orphan checks anti-join the collapsed
-    * key tables and SUM the carried counts back to row-exact answers.
-    * At ×100 the row-grain anti-join form (60M-row probe vs 150M-row
-    * build, plus a re-scan per total) measured 4.7× the DuckDB twin;
-    * key grain shrinks every join input to the distinct-key domain
-    * and derives totals/dup-PK/null counts from the SAME collapsed
-    * tables, which are localCheckpoint-pinned so no check re-scans a
-    * fact table. A null key groups alone, never joins, and is
-    * counted orphan — exactly the row-grain LEFT ANTI (and the
-    * oracle's NOT EXISTS) semantics. */
   /** Corpus-keyed (key → row count) collapses — the shared input of
     * the key-grain audit/report family (#144 ref_audit, #145
     * join_cardinality, which between them re-derived seven of these
@@ -304,6 +285,25 @@ object Analytics {
       agg.localCheckpoint()
     }
 
+  /** #144 Referential-integrity audit — the cross-table contract a
+    * warehouse checks on every load (single-table nulls/ranges are
+    * #60's dq_checks): orphaned facts (lineitem→orders, orders→
+    * customer, customer→nation), duplicate primary keys, and null
+    * foreign keys, one row per check — all six checks ONE unioned
+    * lazy plan, one action.
+    *
+    * Every check runs at KEY grain, never row grain: each table
+    * collapses once to (key → row count [, null-FK count]) — the
+    * map-side combine — then orphan checks anti-join the collapsed
+    * key tables and SUM the carried counts back to row-exact answers.
+    * At ×100 the row-grain anti-join form (60M-row probe vs 150M-row
+    * build, plus a re-scan per total) measured 4.7× the DuckDB twin;
+    * key grain shrinks every join input to the distinct-key domain
+    * and derives totals/dup-PK/null counts from the SAME collapsed
+    * tables, which are localCheckpoint-pinned so no check re-scans a
+    * fact table. A null key groups alone, never joins, and is
+    * counted orphan — exactly the row-grain LEFT ANTI (and the
+    * oracle's NOT EXISTS) semantics. */
   def refAudit(spark: SparkSession, dir: String): DataFrame = {
     // pinned shared key grains (bounded: distinct-key rows)
     val kli = keyCounts(spark, dir, "lineitem", "l_orderkey")
@@ -491,9 +491,9 @@ object Analytics {
     * is 80% of revenue").
     *
     * Per-part revenue is one key-grain 128-bit-long aggregate; the
-    * cumulative sum over the revenue-ranked catalog is TWO-LEVEL
-    * (the #126/#155 decomposition over monotone revenue bands —
-    * block-local running sums + band-total offsets), so no task ever
+    * cumulative sum over the revenue-ranked catalog is
+    * [[Rank.twoLevelPrefixSum]] over monotone revenue bands
+    * (block-local running sums + band-total offsets), so no task ever
     * sorts the whole catalog; class thresholds are exact decimal
     * cross-multiplications (5·cum ≤ 4·total etc. — never a float
     * share compare). The single-window form is the oracle. */
@@ -506,29 +506,13 @@ object Analytics {
       .groupBy("l_partkey")
       .agg((Num.dsum128Raw(col("rev_u")) * lit(1000000L)).cast("long")
         .as("rev"))
-      .withColumn("band", expr(s"rev div $AbcBandUs"))
-    val wLoc = Window.partitionBy("band")
-      .orderBy(col("rev").desc, col("l_partkey").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // the band table is |bands|-row bounded: partitionBy(lit(0))
-    // names the intended single partition (documentation only — the
-    // WindowExec warning survives constant folding, ADVICE r21), and
-    // `total` rides it as a wN-style whole-set sum —
-    // round 21: the previous `rev.agg(sum).head()` driver action ran
-    // a SECOND full lineitem aggregate job per call (JobProfile:
-    // two identical ~530 taskMs scan+agg jobs) just to fetch one
-    // scalar the offsets table already knows. Σ band-totals of exact
-    // longs ≡ the global sum, so every value is unchanged.
-    val wBand = Window.partitionBy(lit(0)).orderBy(col("band").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(lit(0))
-    val offsets = rev.groupBy("band").agg(sum(col("rev")).as("btot"))
-      .withColumn("off", coalesce(sum(col("btot")).over(wBand), lit(0L)))
-      .withColumn("total", sum(col("btot")).over(wAll))
-      .select("band", "off", "total")
-    rev.withColumn("lcum", sum(col("rev")).over(wLoc))
-      .join(broadcast(offsets), "band")
-      .withColumn("cum", col("lcum") + col("off"))
+    // blocks = −band run ascending with the (rev desc) order; `total`
+    // is the helper's whole-set sum (Σ band totals of exact longs ≡
+    // the global sum) — no second lineitem aggregate job per call
+    Rank.twoLevelPrefixSum(rev, Seq.empty, -expr(s"rev div $AbcBandUs"),
+        Seq(col("rev").desc, col("l_partkey").asc), col("rev"),
+        "cum_ex", "total")
+      .withColumn("cum", col("cum_ex") + col("rev"))
       .withColumn("abc_class",
         when(col("cum").cast(dec) * 5 <= col("total").cast(dec) * 4, "A")
           .when(col("cum").cast(dec) * 20 <= col("total").cast(dec) * 19,
@@ -580,8 +564,6 @@ object Analytics {
         col("chi2"))
   }
 
-  /** Snapshot instant for [[backlogAging]]: the corpus midpoint
-    * keeps both open and shipped orders populated at any SF. */
   /** #212 Order-backlog aging snapshot — "as of date D, which orders
     * are not yet fully shipped, and how old are they": the
     * fulfillment-backlog report a commerce warehouse serves beside
@@ -598,7 +580,8 @@ object Analytics {
     * integer epoch-day midpoint of the order-date RANGE,
     * (min+max) div 2 (NOT a median: on a non-uniform date
     * distribution the two differ; the range midpoint is chosen
-    * because it needs only the min/max bounds probe) — so both
+    * because it needs only the min/max bounds probe, and it keeps
+    * both open and shipped orders populated at any SF) — so both
     * engines compute the identical instant. */
   def backlogAging(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.load(spark, dir, "orders")
@@ -659,26 +642,6 @@ object Analytics {
       .limit(20)
   }
 
-  /** #208 Order-invariant table fingerprint — one row per table:
-    * row count plus a content checksum that any engine can recompute
-    * and compare (replication / migration / backup verification —
-    * the cheap "are these two copies the same table?" handshake, the
-    * whole-table cousin of #158's row-level diff).
-    *
-    * Checksum = Σ over rows of the portable md5 tail-32 of the row's
-    * canonical string (every column length-prefixed via [[canonField]]
-    * and '|'-joined), summed as plain longs — ADDITION is
-    * commutative, so the fingerprint is independent of row order,
-    * partitioning and engine. Canonicalization pins the fragile
-    * spots: timestamps via unix_micros (never engine string
-    * formats), doubles via the 6 dp decimal cast; NULL fields render
-    * as the explicit marker 'N' (Spark's concat_ws silently SKIPS
-    * nulls and SQL '||' nullifies the whole row — either would make
-    * the two engines disagree the moment any field is NULL), and the
-    * length prefix makes a '|' inside text/props unable to alias a
-    * field boundary. Row-linear, one
-    * map-side-combinable aggregate per table, all three tables ONE
-    * unioned lazy plan. */
   /** NULL-safe, boundary-proof canonical rendering of one field:
     * `<char-length>:<string-value>`, NULL → the marker `N`. Shared by
     * the batch fingerprint, the streaming twin
@@ -699,6 +662,26 @@ object Analytics {
       canonField(col("event_type")),
       canonField(Num.unscaled6(col("value"))), canonField(col("props")))
 
+  /** #208 Order-invariant table fingerprint — one row per table:
+    * row count plus a content checksum that any engine can recompute
+    * and compare (replication / migration / backup verification —
+    * the cheap "are these two copies the same table?" handshake, the
+    * whole-table cousin of #158's row-level diff).
+    *
+    * Checksum = Σ over rows of the portable md5 tail-32 of the row's
+    * canonical string (every column length-prefixed via [[canonField]]
+    * and '|'-joined), summed as plain longs — ADDITION is
+    * commutative, so the fingerprint is independent of row order,
+    * partitioning and engine. Canonicalization pins the fragile
+    * spots: timestamps via unix_micros (never engine string
+    * formats), doubles via the 6 dp decimal cast; NULL fields render
+    * as the explicit marker 'N' (Spark's concat_ws silently SKIPS
+    * nulls and SQL '||' nullifies the whole row — either would make
+    * the two engines disagree the moment any field is NULL), and the
+    * length prefix makes a '|' inside text/props unable to alias a
+    * field boundary. Row-linear, one
+    * map-side-combinable aggregate per table, all three tables ONE
+    * unioned lazy plan. */
   def tableFingerprint(spark: SparkSession, dir: String): DataFrame = {
     def fp(name: String, canon: DataFrame): DataFrame =
       canon

@@ -102,10 +102,12 @@ object AsOfJoin {
           .withColumn("_carry",
             last(col("_bwin"), ignoreNulls = true).over(wBlk))
           .select(col(key), col("_blk"), col("_carry"))
+        // left: a probe whose key or block is null has no carry row
+        // but still belongs in the output, as in the single window
         blocked
           .withColumn("_lfwd",
             last(col("_bpay"), ignoreNulls = true).over(wLoc))
-          .join(carries, Seq(key, "_blk"))
+          .join(carries, Seq(key, "_blk"), "left")
           .withColumn("_fwd", coalesce(col("_lfwd"), col("_carry")))
           .drop("_blk", "_lfwd", "_carry")
           .filter(col("_is_build") === 0)
@@ -141,14 +143,10 @@ object AsOfJoin {
       .select("event_id", "user_id", "ts")
     val build = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("value").as("asof_value"))
-    // adaptive plan (round 21, the scd2_lookup pattern): below
-    // Rank.SingleWindowMax events the single-window merge wins —
-    // forms AsOfTwoLevelSpec-proven equal, skew shape still gated at
-    // kill-test volume (see the bound's scaladoc)
+    // forms AsOfTwoLevelSpec-proven equal
     asOfImpl(probe, build, "user_id", "ts", Seq("asof_value"),
       buildOrder = Seq(col("asof_value")),
-      twoLevel = Tables.rowCount(spark, dir, "events") >
-        Rank.SingleWindowMax)
+      twoLevel = Rank.keyedTwoLevel(spark, dir))
       .select("event_id", "user_id", "ts", "asof_value")
       .orderBy("event_id")
   }
@@ -182,9 +180,7 @@ object AsOfJoin {
     asOfImpl(probe, build, "user_id", "ts",
       Seq("asof_value", "asof_ts"),
       buildOrder = Seq(col("asof_value")),
-      // same adaptive gate as clicksAsOfPurchases
-      twoLevel = Tables.rowCount(spark, dir, "events") >
-        Rank.SingleWindowMax)
+      twoLevel = Rank.keyedTwoLevel(spark, dir))
       .select(col("event_id"), col("user_id"), col("ts"),
         when(fresh, col("asof_value")).as("asof_value"),
         when(fresh, (ageUs / lit(1000000L)).cast("long")).as("age_s"))

@@ -126,12 +126,6 @@ object Components {
     } finally sym.unpersist()
   }
 
-  /** #75 Near-dup dedup clusters over `documents`: edges = blocked
-    * trigram-Jaccard pairs ≥ [[EdgeThreshold]], components via
-    * [[connectedComponents]], annotated with cluster size and the
-    * canonical-keep flag. Every doc appears exactly once (singletons
-    * are their own one-doc cluster), so `is_canonical = 1` rows ARE
-    * the deduplicated corpus. */
   /** Corpus-keyed near-dup components fixed point (a CorpusCache
     * frame): documents-nodes + blocked trigram-Jaccard edges ≥
     * [[EdgeThreshold]] → pinned (id, comp) labels, computed ONCE per
@@ -254,6 +248,12 @@ object Components {
         .localCheckpoint()
     }
 
+  /** #75 Near-dup dedup clusters over `documents`: edges = blocked
+    * trigram-Jaccard pairs ≥ [[EdgeThreshold]], components via
+    * [[connectedComponents]], annotated with cluster size and the
+    * canonical-keep flag. Every doc appears exactly once (singletons
+    * are their own one-doc cluster), so `is_canonical = 1` rows ARE
+    * the deduplicated corpus. */
   def dedupComponents(spark: SparkSession, dir: String): DataFrame = {
     val comp = nearDupComponents(spark, dir)
     val sizes = comp.groupBy("comp").agg(count(lit(1)).as("comp_size"))

@@ -130,24 +130,6 @@ object Curation {
     * → 21 blocks at 0.05 width). */
   val QualityScoreBlocks = 20
 
-  /** #126 Per-language quality-percentile gate: keep the top 60% of
-    * each language by stopword-ratio score — the relative-quality
-    * curation move ("keep the best X% per language", FineWeb-style)
-    * as opposed to [[curationPipeline]]'s absolute token gate.
-    *
-    * Exact-rank semantics without the naive plan's failure mode: a
-    * `row_number() OVER (PARTITION BY lang ...)` sorts an entire
-    * language in one task — the hot-partition shape that made
-    * one-window sessionize 20× slower under skew, and English IS the
-    * hot key of every multilingual corpus. Instead the rank is
-    * two-level (the pack_sequences / quantile_bins decomposition):
-    * local row_number inside each (lang, score-block) — bounded
-    * windows, parallel across blocks — plus broadcast cumulative
-    * block offsets (langs × 21 rows). `floor` is monotone in score,
-    * so offset + local rank ≡ the global (score DESC, doc_id ASC)
-    * rank, and the DuckDB oracle verifies exactly that equivalence
-    * with its single-window form. Keep count is integer arithmetic
-    * (`floor((3n+4)/5)` = ceil(0.6n)) — no float membership test. */
   /** #207 Quality-gate threshold sweep — the keep-rate curve read
     * BEFORE fixing a quality cutoff (the quality-side twin of #175's
     * dedup curve): for stopword-ratio thresholds 0%..50% in 5%
@@ -178,33 +160,34 @@ object Curation {
       .orderBy("threshold_pct")
   }
 
+  /** #126 Per-language quality-percentile gate: keep the top 60% of
+    * each language by stopword-ratio score — the relative-quality
+    * curation move ("keep the best X% per language", FineWeb-style)
+    * as opposed to [[curationPipeline]]'s absolute token gate.
+    *
+    * Exact-rank semantics without the naive plan's failure mode: a
+    * `row_number() OVER (PARTITION BY lang ...)` sorts an entire
+    * language in one task — the hot-partition shape that made
+    * one-window sessionize 20× slower under skew, and English IS the
+    * hot key of every multilingual corpus. Instead the rank is
+    * [[Rank.twoLevelRank]]: local row_number inside each (lang,
+    * score-block) — bounded windows, parallel across blocks — plus
+    * broadcast cumulative block offsets (langs × 21 rows). `floor`
+    * is monotone in score, so offset + local rank ≡ the global
+    * (score DESC, doc_id ASC) rank, and the DuckDB oracle verifies
+    * exactly that equivalence with its single-window form. Keep count is integer arithmetic
+    * (`floor((3n+4)/5)` = ceil(0.6n)) — no float membership test. */
   def qualityFilter(spark: SparkSession, dir: String): DataFrame = {
-    val blocked = Tables.load(spark, dir, "documents")
+    val scored = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"),
         TextFunctions.qualityStruct(col("text")).as("s"))
       .select(col("doc_id"), col("lang"),
         round(col("s").getField("n_stop").cast("double") /
           col("s").getField("n_tok").cast("double"), 6).as("score"))
-      .withColumn("blk",
-        floor(col("score") * QualityScoreBlocks).cast("long"))
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang", "blk")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val local = blocked
-      .withColumn("lrnk", row_number().over(wLocal).cast("long"))
-    val wOff = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang").orderBy(col("blk").desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val wN = org.apache.spark.sql.expressions.Window.partitionBy("lang")
-    val offsets = blocked.groupBy("lang", "blk")
-      .agg(count(lit(1)).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .withColumn("n", sum(col("c")).over(wN))
-      .select("lang", "blk", "off", "n")
-    local.join(broadcast(offsets), Seq("lang", "blk"))
-      .select(col("doc_id"), col("lang"), col("score"),
-        (col("off") + col("lrnk")).as("rnk"), col("n"))
+    Rank.twoLevelRank(scored, Seq("lang"),
+        floor(col("score") * QualityScoreBlocks).cast("long"),
+        blkAscending = false, Seq(col("score").desc, col("doc_id").asc),
+        "rnk", "n")
       .select(col("doc_id"), col("lang"), col("score"), col("rnk"),
         when(col("rnk") <= floor((lit(QualityKeepNum) * col("n") +
             (QualityKeepDen - 1L)) / lit(QualityKeepDen.toDouble))

@@ -226,14 +226,6 @@ object Dimensional {
       .orderBy("cohort_day", "day_offset")
   }
 
-  /** #88 Conversion funnel: signup → first click after signup →
-    * first purchase after that click, per user; one summary row per
-    * stage with reach and decimal-exact mean hours-from-signup.
-    * The stage chain is three conditional-min windows over ONE user
-    * partitioning (t2's predicate reads t1, t3's reads t2 — Catalyst
-    * stacks them on a single sort/shuffle), reduced to per-user stage
-    * times and one tiny 3-row summary — not a join+agg round per
-    * stage. */
   /** Per-user funnel stage times (t1 signup → t2 click → t3
     * purchase) — shared by [[funnelStages]] and [[funnelTimes]].
     *
@@ -305,6 +297,14 @@ object Dimensional {
     }
   }
 
+  /** #88 Conversion funnel: signup → first click after signup →
+    * first purchase after that click, per user; one summary row per
+    * stage with reach and decimal-exact mean hours-from-signup.
+    * The stage chain is three conditional-min windows over ONE user
+    * partitioning (t2's predicate reads t1, t3's reads t2 — Catalyst
+    * stacks them on a single sort/shuffle), reduced to per-user stage
+    * times and one tiny 3-row summary — not a join+agg round per
+    * stage. */
   def funnelStages(spark: SparkSession, dir: String): DataFrame = {
     val perUser = funnelPerUser(spark, dir)
     // ONE summary aggregate carries all three stages (three lazy
@@ -333,123 +333,49 @@ object Dimensional {
       .orderBy("stage")
   }
 
-  /** #134 Last-touch revenue attribution — every purchase credits the
-    * LATEST preceding click/view by the same user within a 24 h
-    * lookback; older or absent touches land in `unattributed`. The
-    * as-of match is the single-sort union-merge (the [[AsOfJoin]]
-    * shape that beats DuckDB's native ASOF 3× at ×100): touches and
-    * purchases interleave in ONE per-user (ts, kind, id) sort, a
-    * running `last(ignoreNulls)` carries the freshest touch into each
-    * purchase row, and the bound check nulls stale matches (any
-    * earlier touch is staler still). Touches are pre-collapsed to one
-    * row per (user, ts) — max event_id wins — so the merge order is
-    * total and the oracle's ASOF tie behavior is pinned.
-    *
-    * Scale: one shuffle+sort on user_id for the merge, then a 3-row
-    * channel aggregate of exact decimal revenue sums. Per-user state
-    * in the running window is one struct. */
   /** Attribution lookback: touches older than this never get credit.
     * Shared with the streaming twin (EventStream.attributedPurchases). */
   val AttributionLookbackUs: Long = 24L * 3600 * 1000000
 
-  /** The running last-touch is TWO-LEVEL, like sessionize: the
-    * single-window form sorts a hot user's whole history in one task
-    * (measured 2.95× under the 90%-one-key kill-test). Level 1 runs
-    * the running `last(ignoreNulls)` within (user, day-block) —
-    * bounded local windows. Level 2 collapses each block's FINAL
-    * touch to one row via max-of-struct (an aggregate: map-side
-    * partial, skew-immune), takes a running last over the per-user
-    * block summaries (≤ |days| rows per user), and joins the carried
-    * previous-block touch back on the same (user, block) key. A
-    * purchase's effective touch = coalesce(block-local, carried) —
-    * blocks partition time per user, so this is exactly the
-    * single-window answer (the oracle's ASOF form verifies it). */
+  /** #134 Last-touch revenue attribution — every purchase credits the
+    * LATEST preceding click/view by the same user within a 24 h
+    * lookback; older or absent touches land in `unattributed`.
+    *
+    * The match is an as-of join ([[AsOfJoin.asOfImpl]], the
+    * union-merge shape that beats DuckDB's native ASOF 3× at ×100):
+    * purchases probe, click/view touches build, keyed on user_id. A
+    * touch at the purchase's own instant counts (builds sort before
+    * probes at equal ts), and among same-instant touches the highest
+    * event_id wins (`buildOrder`) — the oracle's ASOF tie behavior,
+    * with no per-(user, ts) pre-collapse. The bound check then nulls
+    * stale matches (any earlier touch is staler still).
+    *
+    * Above the keyed-window gate the as-of is two-level (the
+    * single-window form sorts a hot user's whole history in one
+    * task, measured 2.95× under the 90%-one-key kill-test): running
+    * last touch within (user, day-block), plus the previous blocks'
+    * winner carried in — [[AsOfJoin.asOfImpl]]'s proof.
+    *
+    * Scale: one shuffle+sort on user_id for the merge, then a 3-row
+    * channel aggregate of exact decimal revenue sums. */
   def attribution(spark: SparkSession, dir: String): DataFrame =
-    // adaptive plan (round 21, the scd2_lookup pattern): below
-    // Rank.SingleWindowMax events the textbook one-window-per-user
-    // merge wins (the blocked form's summary/carry/join passes cost
-    // more than they save); forms AttributionTwoLevelSpec-proven
-    // equal, and the skew kill-test corpus (≥1M events) stays on the
-    // two-level shape — see the bound's scaladoc.
-    attributionImpl(spark, dir,
-      twoLevel = Tables.rowCount(spark, dir, "events") >
-        Rank.SingleWindowMax)
+    // forms AttributionTwoLevelSpec-proven equal
+    attributionImpl(spark, dir, twoLevel = Rank.keyedTwoLevel(spark, dir))
 
   private[graft] def attributionImpl(spark: SparkSession, dir: String,
       twoLevel: Boolean): DataFrame = {
-    val LookbackUs = AttributionLookbackUs
-    val BlockUs = 86400L * 1000000L
     val events = Tables.load(spark, dir, "events")
-    // Round 21 (guide §2.4): the per-(user, ts) touch pre-collapse
-    // (groupBy + max-of-struct — one whole extra exchange of the
-    // touch stream) is FOLDED into the one merge sort this operator
-    // already pays: event_id rides the touch struct, the local
-    // window orders same-ts touches by it (max last, where the
-    // running `last` picks it up), and the block summary's
-    // max-of-struct breaks t_us ties by event_id — the same winner
-    // the collapse pre-picked, row for row.
     val touches = events
       .filter(col("event_type") === "click" || col("event_type") === "view")
-      .select(col("user_id"), col("ts"), lit(0).as("kind"),
-        lit(null).cast("long").as("conv_id"),
-        col("event_id").as("tie"),
-        lit(null).cast("double").as("value"),
-        struct(unix_micros(col("ts")).as("t_us"),
-          col("event_id").as("eid"),
-          col("event_type").as("channel")).as("touch"))
-    val convs = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), lit(1).as("kind"),
-        col("event_id").as("conv_id"),
-        lit(null).cast("long").as("tie"), col("value"),
-        lit(null).cast(touches.schema("touch").dataType).as("touch"))
-    val merged = touches.unionByName(convs)
-      .withColumn("block", floor(unix_micros(col("ts")) / BlockUs))
-    // total order within (user, block): same-ts touches by event_id
-    // (`tie` — a PRIMITIVE sort key; ordering by the touch struct
-    // itself would put an interpreted struct comparator in the sort),
-    // same-ts purchases by conv_id — deterministic without the
-    // pre-collapse
-    val attributed = if (twoLevel) {
-      val wLocal = Window.partitionBy("user_id", "block")
-        .orderBy(col("ts"), col("kind"), col("conv_id"), col("tie"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = merged.withColumn("localLast",
-        last(col("touch"), ignoreNulls = true).over(wLocal))
-      // one row per (user, block): the block's final touch — touch
-      // structs order by (t_us, eid, channel), so max-of-struct IS
-      // "latest touch, max event_id on ties"
-      val wCarry = Window.partitionBy("user_id").orderBy(col("block"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val blockTouch = merged.filter(col("kind") === 0)
-        .groupBy("user_id", "block")
-        .agg(max(col("touch")).as("blockLast"))
-      // spine over EVERY (user, block) present — a purchase block with
-      // no touches of its own must still receive the carry
-      val carried = merged.select("user_id", "block").distinct()
-        .join(blockTouch, Seq("user_id", "block"), "left")
-        .withColumn("prevTouch",
-          last(col("blockLast"), ignoreNulls = true).over(wCarry))
-        .select("user_id", "block", "prevTouch")
-      local.filter(col("kind") === 1)
-        .join(carried, Seq("user_id", "block"), "left")
-        .withColumn("eff", coalesce(col("localLast"), col("prevTouch")))
-    } else {
-      // the textbook single-window form the blocked decomposition
-      // reproduces (its scaladoc proof): blocks partition a user's
-      // timeline, so global running last ≡ block-local last when one
-      // exists, else the latest earlier block's winner
-      val wUser = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("kind"), col("conv_id"), col("tie"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      merged
-        .withColumn("eff", last(col("touch"), ignoreNulls = true).over(wUser))
-        .filter(col("kind") === 1)
-    }
-    attributed
+      .select(col("user_id"), col("ts"), col("event_id"),
+        unix_micros(col("ts")).as("t_us"), col("event_type").as("channel"))
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("value"))
+    AsOfJoin.asOfImpl(purchases, touches, "user_id", "ts",
+        Seq("t_us", "channel"), buildOrder = Seq(col("event_id")), twoLevel)
       .withColumn("channel",
-        when(col("eff").isNotNull &&
-          unix_micros(col("ts")) - col("eff.t_us") <= LookbackUs,
-          col("eff.channel")).otherwise(lit("unattributed")))
+        when(unix_micros(col("ts")) - col("t_us") <= AttributionLookbackUs,
+          col("channel")).otherwise(lit("unattributed")))
       .groupBy("channel")
       .agg(count(lit(1)).as("n_conv"),
         round(Num.dsum(col("value")), 6).as("revenue"))
@@ -753,17 +679,6 @@ object Dimensional {
       .orderBy("metric")
   }
 
-  /** #162 User-growth curve: per day — distinct active users, NEW
-    * users (first-ever event that day), and the cumulative distinct
-    * user count (= running sum of news, the identity that makes
-    * "cumulative distinct" cheap: each user contributes exactly once,
-    * on their first day).
-    *
-    * Two key-grain aggregates (user-grain min-ts for first-seen;
-    * (day, user)-grain distinct collapse for actives — both
-    * partial-aggregate map-side, the skew-immune shapes) + one
-    * ≤|days|-row running-sum window. |days| output rows at any
-    * corpus size. */
   /** #170 Growth accounting — the full DAU decomposition every
     * product warehouse serves beside #162's curve: per day, actives
     * split into NEW (first-ever day), RETAINED (also active the
@@ -816,6 +731,17 @@ object Dimensional {
       .orderBy("day")
   }
 
+  /** #162 User-growth curve: per day — distinct active users, NEW
+    * users (first-ever event that day), and the cumulative distinct
+    * user count (= running sum of news, the identity that makes
+    * "cumulative distinct" cheap: each user contributes exactly once,
+    * on their first day).
+    *
+    * Two key-grain aggregates (user-grain min-ts for first-seen;
+    * (day, user)-grain distinct collapse for actives — both
+    * partial-aggregate map-side, the skew-immune shapes) + one
+    * ≤|days|-row running-sum window. |days| output rows at any
+    * corpus size. */
   def userGrowth(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.load(spark, dir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day"))
@@ -833,27 +759,6 @@ object Dimensional {
       .orderBy("day")
   }
 
-  /** #176 RFM customer segmentation — the classic marketing
-    * base-table: every purchaser scored 1-5 on Recency (last
-    * purchase instant), Frequency (purchase count) and Monetary
-    * (exact decimal revenue), reported as the 5×5×5 segment grid
-    * with populations and revenue totals.
-    *
-    * Quintiles are RANK-based (equal-population, the marketing
-    * convention), and the rank is the [[Rank.twoLevelRank]]
-    * decomposition — the user grain is billions of rows at 100 TB,
-    * so no task may sort a whole metric axis. Each metric's block id
-    * is monotone in its order (recency: the day; frequency/monetary:
-    * the magnitude's log — engine-LOCAL, only rank equality matters).
-    * The quintile is the NTILE identity on integers,
-    * q = (rn−1)·5 div n + 1 (first buckets take the remainder —
-    * exactly SQL NTILE), applied to the SAME row_number arithmetic
-    * in the DuckDB oracle, so scores are engine-exact including at
-    * quintile boundaries. Score = 6 − q: 5 = best.
-    *
-    * Ties: every rank breaks on user_id; equal metric values order
-    * identically on both engines (monetary compares exact decimals,
-    * never floats). */
   /** #201 Kaplan-Meier survival curve over user lifetimes — THE
     * churn statistic: for each lifetime day t, the share of users
     * still active at t, correctly handling right-censoring (users
@@ -1028,6 +933,27 @@ object Dimensional {
       .orderBy("day")
   }
 
+  /** #176 RFM customer segmentation — the classic marketing
+    * base-table: every purchaser scored 1-5 on Recency (last
+    * purchase instant), Frequency (purchase count) and Monetary
+    * (exact decimal revenue), reported as the 5×5×5 segment grid
+    * with populations and revenue totals.
+    *
+    * Quintiles are RANK-based (equal-population, the marketing
+    * convention), and the rank is the [[Rank.twoLevelRank]]
+    * decomposition — the user grain is billions of rows at 100 TB,
+    * so no task may sort a whole metric axis. Each metric's block id
+    * is monotone in its order (recency: the day; frequency/monetary:
+    * the magnitude's log — engine-LOCAL, only rank equality matters).
+    * The quintile is the NTILE identity on integers,
+    * q = (rn−1)·5 div n + 1 (first buckets take the remainder —
+    * exactly SQL NTILE), applied to the SAME row_number arithmetic
+    * in the DuckDB oracle, so scores are engine-exact including at
+    * quintile boundaries. Score = 6 − q: 5 = best.
+    *
+    * Ties: every rank breaks on user_id; equal metric values order
+    * identically on both engines (monetary compares exact decimals,
+    * never floats). */
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
     val dayUs = DayUs
     // purchaser facets from the pinned journey card: p_last_us /

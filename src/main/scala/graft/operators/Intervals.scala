@@ -56,12 +56,9 @@ object Intervals {
     * IS the global prefix max — spec-asserted equal to the
     * single-window form. */
   def intervalMerge(spark: SparkSession, dir: String): DataFrame =
-    // adaptive plan (round 21, the scd2_lookup pattern): below
-    // Rank.SingleWindowMax events the single-window form wins (see
-    // the bound's scaladoc); the forms are IntervalsSpec-proven equal
-    mergeStats(intervals(spark, dir), twoLevel =
-      graft.sources.Tables.rowCount(spark, dir, "events") >
-        Rank.SingleWindowMax)
+    // forms IntervalsSpec-proven equal
+    mergeStats(intervals(spark, dir),
+      twoLevel = Rank.keyedTwoLevel(spark, dir))
 
   /** [[intervalMerge]] core, parameterized for the equivalence spec:
     * `twoLevel = false` is the textbook one-window-per-user form. */
@@ -107,12 +104,11 @@ object Intervals {
     * putting −1 first), reporting the maximum simultaneous interval
     * count and the FIRST instant it is attained.
     *
-    * The running sum is two-level (the pack_sequences prefix-sum
-    * shape): block-local running sums within (type, day) plus
-    * whole-block delta totals prefix-summed over a ≤|days|-row
-    * window. Peak and its first instant come from ONE max-of-struct
-    * aggregate ((run, −t) — max run, tie → min t), not a second
-    * join-back pass. Prefix values at tied (t, delta) rows are the
+    * The running sum is [[Rank.twoLevelPrefixSum]]: block-local
+    * running sums within (type, day) plus whole-block delta totals
+    * prefix-summed over a ≤|days|-row window. Peak and its first
+    * instant come from ONE max-of-struct aggregate ((run, −t) — max
+    * run, tie → min t), not a second join-back pass. Prefix values at tied (t, delta) rows are the
     * same multiset under any tie order, so peak and first-instant
     * are deterministic. */
   def concurrencyPeak(spark: SparkSession, dir: String): DataFrame =
@@ -122,38 +118,19 @@ object Intervals {
     // tasks at ANY volume (in-suite 0.56 → 0.72 s when gated). The
     // (type, day)-blocked decomposition is about parallelism, not
     // just hot keys; it stays unconditional.
-    peakStats(intervals(spark, dir), twoLevel = true)
+    peakStats(intervals(spark, dir))
 
-  /** [[concurrencyPeak]] core, parameterized for the equivalence
-    * spec (single-window vs two-level prefix sums). */
-  def peakStats(iv: DataFrame, twoLevel: Boolean): DataFrame = {
+  /** [[concurrencyPeak]] core over an interval set (IntervalsSpec
+    * compares it with its own single-window reference). */
+  def peakStats(iv: DataFrame): DataFrame = {
     val pts = iv.select(col("event_type"),
         explode(array(
           struct(col("t_us").as("t"), lit(1).as("d")),
           struct(col("end_us").as("t"), lit(-1).as("d")))).as("pt"))
       .select(col("event_type"), col("pt.t").as("t"), col("pt.d").as("d"))
-    val withRun =
-      if (twoLevel) {
-        val blocked = pts.withColumn("blk", floor(col("t") / DayUs))
-        val wLoc = Window.partitionBy("event_type", "blk")
-          .orderBy(col("t"), col("d"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wBlk = Window.partitionBy("event_type").orderBy(col("blk"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = blocked.groupBy("event_type", "blk")
-          .agg(sum(col("d")).as("tot"))
-          .withColumn("off", coalesce(sum(col("tot")).over(wBlk), lit(0L)))
-          .select("event_type", "blk", "off")
-        blocked
-          .withColumn("lrun", sum(col("d")).over(wLoc))
-          .join(offsets, Seq("event_type", "blk"))
-          .withColumn("run", col("lrun") + col("off"))
-      } else {
-        val w = Window.partitionBy("event_type").orderBy(col("t"), col("d"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        pts.withColumn("run", sum(col("d")).over(w))
-      }
-    withRun
+    Rank.twoLevelPrefixSum(pts, Seq("event_type"), floor(col("t") / DayUs),
+        Seq(col("t"), col("d")), col("d"), "run_ex", "d_total")
+      .withColumn("run", col("run_ex") + col("d"))
       .groupBy("event_type")
       .agg(sum((col("d") === 1).cast("long")).as("n_intervals"),
         max(struct(col("run"), (-col("t")).as("neg_t"))).as("m"))

@@ -85,27 +85,6 @@ object LmFilter {
     * at every SF), so both verdicts occur everywhere. */
   val NllKeepMax = 3.40
 
-  /** Bigram language-model perplexity filter (the CCNet/KenLM
-    * quality gate, self-trained): add-one-smoothed bigram model
-    * counted over the corpus itself, each document scored by its
-    * mean bigram negative log-likelihood, gated at [[NllKeepMax]].
-    *
-    * Exactness: each distinct bigram's log-prob
-    * ln((c₂+1)/(ctx+V)) — a deterministic double of three integer
-    * counts — is rounded to 9 dp and carried as decimal(28,9); the
-    * per-doc sum is exact decimal, one terminal 6 dp round. Engine-
-    * portable by the drift_psi/bm25 precedent (ln only ever inside a
-    * value that is quantized before summation).
-    *
-    * Scale shape: the model is two hash aggregates at bigram-type
-    * grain (bounded by vocab², partial-aggregated map-side — the
-    * "the the"-style head bigrams collapse in the mapper), pinned
-    * once (localCheckpoint) because ctx counts and scoring both read
-    * it; scoring is one bigram-keyed hash join of the instance
-    * stream against the model (broadcast-able when the vocab is
-    * small; AQE decides) and one doc-grain aggregate. No windows, no
-    * driver-side state — V is the single scalar collected, a bounded
-    * model artifact like the IVF centroid count. */
   /** Minimum pair count for [[pmiCollocations]] — PMI is noise for
     * rare pairs (one co-occurrence of two rare words maxes the
     * score); the classic count gate. */
@@ -187,6 +166,27 @@ object LmFilter {
       .select(col("doc_id"), col("b.0").as("w1"), col("b.1").as("w2"))
   }
 
+  /** Bigram language-model perplexity filter (the CCNet/KenLM
+    * quality gate, self-trained): add-one-smoothed bigram model
+    * counted over the corpus itself, each document scored by its
+    * mean bigram negative log-likelihood, gated at [[NllKeepMax]].
+    *
+    * Exactness: each distinct bigram's log-prob
+    * ln((c₂+1)/(ctx+V)) — a deterministic double of three integer
+    * counts — is rounded to 9 dp and carried as decimal(28,9); the
+    * per-doc sum is exact decimal, one terminal 6 dp round. Engine-
+    * portable by the drift_psi/bm25 precedent (ln only ever inside a
+    * value that is quantized before summation).
+    *
+    * Scale shape: the model is two hash aggregates at bigram-type
+    * grain (bounded by vocab², partial-aggregated map-side — the
+    * "the the"-style head bigrams collapse in the mapper), pinned
+    * once (localCheckpoint) because ctx counts and scoring both read
+    * it; scoring is one bigram-keyed hash join of the instance
+    * stream against the model (broadcast-able when the vocab is
+    * small; AQE decides) and one doc-grain aggregate. No windows, no
+    * driver-side state — V is the single scalar collected, a bounded
+    * model artifact like the IVF centroid count. */
   def lmPerplexity(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val toks = docs.select(col("doc_id"),

@@ -53,10 +53,6 @@ object Num {
       GraftSqlBridge.expression(c)))
   }
 
-  /** 128-bit exact sum of [[unscaled6]] longs → double. Bounded
-    * intermediate sums of unscaled6 values (e.g. per-order partials
-    * summed by the built-in long sum) can be re-summed with this at
-    * any scale — the accumulator is 128-bit. */
   /** Raw 128-bit exact sum of a LONG column as decimal(38,6) — the
     * unscaled value of the result IS the exact integer Σc (the kernel
     * interprets inputs as micro-units). Callers needing the plain
@@ -69,6 +65,10 @@ object Num {
         .toAggregateExpression())
   }
 
+  /** 128-bit exact sum of [[unscaled6]] longs → double. Bounded
+    * intermediate sums of unscaled6 values (e.g. per-order partials
+    * summed by the built-in long sum) can be re-summed with this at
+    * any scale — the accumulator is 128-bit. */
   def dsumUnscaled(c: Column): Column = {
     import org.apache.spark.sql.GraftSqlBridge
     GraftSqlBridge.column(

@@ -604,23 +604,6 @@ object Olap {
       .orderBy("column")
   }
 
-  /** #186 Winsorization — per-group tail clamping at the exact
-    * interpolated p05/p95 (the robust-preprocessing step run before
-    * any mean-based feature lands in a training set; the
-    * outlier-DETECTION twins are #85/#138, this one repairs instead
-    * of flags).
-    *
-    * Engine-exactness: the cut points are the #39 exact interpolated
-    * percentiles ROUNDED to 6 dp on both engines BEFORE any
-    * comparison — every clamp decision compares identical doubles
-    * against identical cuts, so membership (and therefore the
-    * clamped multiset) is bit-identical; means are exact decimal
-    * sums of 6 dp-quantized values with one terminal division.
-    *
-    * Scale: the exact per-group percentile sorts each group on one
-    * task — the documented #39 trade (the GK sketch #79 is the
-    * hot-group escape); the clamp pass is one broadcast join + a
-    * map-side-combined aggregate over the same scan. */
   /** Benford expected first-digit shares in integer ppm,
     * round(log₁₀(1+1/d)·10⁶) for d = 1..9 — pinned literals shared
     * verbatim with the DuckDB twin (computed once, embedded, never
@@ -675,11 +658,25 @@ object Olap {
       .orderBy("grp", "digit")
   }
 
-  /** #186 Winsorization — tail clamping at the exact interpolated
-    * p05/p95 per group. The cut computation rides [[Pctl.grouped]]
-    * (VERDICT r13 #1: the r13 bench's only regression was this
-    * operator's single-task percentile buffer at ×100; the blocked
-    * route re-reads only the two rank-straddling value blocks). */
+  /** #186 Winsorization — per-group tail clamping at the exact
+    * interpolated p05/p95 (the robust-preprocessing step run before
+    * any mean-based feature lands in a training set; the
+    * outlier-DETECTION twins are #85/#138, this one repairs instead
+    * of flags).
+    *
+    * Engine-exactness: the cut points are the #39 exact interpolated
+    * percentiles ROUNDED to 6 dp on both engines BEFORE any
+    * comparison — every clamp decision compares identical doubles
+    * against identical cuts, so membership (and therefore the
+    * clamped multiset) is bit-identical; means are exact decimal
+    * sums of 6 dp-quantized values with one terminal division.
+    *
+    * Scale: the cut computation rides [[Pctl.grouped]] (VERDICT r13
+    * #1: the r13 bench's only regression was this operator's
+    * single-task percentile buffer at ×100; the blocked route
+    * re-reads only the two rank-straddling value blocks); the clamp
+    * pass is one broadcast join + a map-side-combined aggregate over
+    * the same scan. */
   def winsorize(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.load(spark, dir, "events")
     val cuts = Pctl.grouped(ev, Seq("event_type"), col("value"),

@@ -1,14 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Shared TWO-LEVEL global-rank decomposition (SURVEY.md §5): a
-  * global `row_number` without any task ever sorting a whole key
-  * space. The pattern proved out across #96/#126/#139/#167 — this
-  * helper factors it for the round-15 consumers ([[Dimensional
-  * .rfmSegments]], [[LmFilter.zipfFit]], [[TrainExport]] ordinals).
+  * global `row_number` (or running sum) without any task ever sorting
+  * a whole key space — the one copy of the pattern. Consumers:
+  * [[twoLevelRank]] — [[Curation.qualityFilter]], [[Skew.skewReport]],
+  * [[TrainExport.balanceBuckets]], [[TrainExport.assignIds]],
+  * [[Dimensional.rfmSegments]], [[LmFilter.zipfFit]],
+  * [[Olap.quantileBins]], [[Sampling.balanceDownsample]];
+  * [[twoLevelPrefixSum]] — [[Analytics.abcAnalysis]],
+  * [[Intervals.concurrencyPeak]], [[Sampling.systematicSample]].
   *
   * Decomposition: rows carry a caller-chosen BLOCK id that is
   * monotone in the global order's leading key (so blocks partition
@@ -16,8 +21,9 @@ import org.apache.spark.sql.functions._
   * (partition, block) — bounded by the block's population, many
   * tasks. Level 2 builds the |blocks|-row cumulative-offset table
   * and broadcast-joins it back: global rank = block offset + local
-  * rank. Equivalence to the single-window form is oracle-checked on
-  * every consumer (the DuckDB twin ranks with ONE window).
+  * rank. Equivalence to the single-window form is RankSpec-proven
+  * and oracle-checked on every consumer (the DuckDB twin ranks with
+  * ONE window).
   */
 object Rank {
 
@@ -42,8 +48,14 @@ object Rank {
     * two-level shape — the gate can never hide a reintroduced
     * one-task sort from SKEW_full.json. Equivalence of the two forms
     * is spec-proven per operator (AsOfTwoLevelSpec, IntervalsSpec,
-    * AttributionTwoLevelSpec). */
+    * AttributionTwoLevelSpec, SessionTwoLevelSpec). */
   val SingleWindowMax = 500000L
+
+  /** The keyed ordered-window family's route (as-of joins, interval
+    * merge, attribution, sessions): two-level iff `dir`'s `events`
+    * table has more than [[SingleWindowMax]] rows. */
+  def keyedTwoLevel(spark: SparkSession, dir: String): Boolean =
+    Tables.rowCount(spark, dir, "events") > SingleWindowMax
 
   /** Adds `rankName` (1-based global row_number within `part` over
     * `order`) and `nName` (the partition's row count) to `df`.

@@ -21,8 +21,12 @@ object Sessions {
 
   val SessionGapMinutes = 30
 
-  /** #41 Sessionization: split each user's event stream on >30 min
-    * silence, one output row per session.
+  /** Per-session rows of the events stream — one core for
+    * [[sessionize]] and [[sessionEntryExit]]: each user's stream split
+    * on >30 min silence, as (user_id, sess_id, sess_start, sess_end,
+    * n_events, sum_dec — the exact decimal value sum, fst/lst — the
+    * first/last (us, event_id, event_type) of the session). Columns a
+    * caller does not read are pruned from both aggregates by Catalyst.
     *
     * TWO-LEVEL form, not one per-user window. The classic
     * single-window version (lag → boundary flag → running sum over
@@ -35,8 +39,8 @@ object Sessions {
     *     time-disjoint, so a hot user's sort spreads over as many
     *     tasks as days. Local sessions (maximal ≤30-min-gap chains
     *     within the block) are aggregated to ONE ROW each — min/max
-    *     ts, count, and the exact unscaled-long value sum, all
-    *     additively mergeable.
+    *     ts, count, the exact value sum and the first/last event
+    *     structs, all mergeable.
     *  2. A second window over the per-user SESSION rows (orders of
     *     magnitude fewer — a chain that spans a block boundary can
     *     only be the block's first/last local session) merges chains
@@ -45,84 +49,78 @@ object Sessions {
     *     session spans a boundary iff the adjacent local sessions
     *     merge — the block-local maximality is preserved globally.
     *
-    * Bit-identical to the one-window form: block boundaries respect
-    * the (ts, event_id) order, long partial sums re-sum exactly via
-    * the 128-bit kernel, and session starts are strictly increasing
-    * per user (sessions are >gap apart), so the renumbering matches
-    * the running-sum ids. */
-  def sessionize(spark: SparkSession, dir: String): DataFrame =
-    // adaptive plan (round 21, the scd2_lookup pattern): below
-    // Rank.SingleWindowMax events the one-window-per-user form wins
-    // (the block assembly's second window + regroup cost more than
-    // they save); forms SessionTwoLevelSpec-proven equal, and the
-    // skew kill-test corpus (≥1M events) stays on the two-level
-    // shape — see the bound's scaladoc.
-    sessionizeImpl(spark, dir,
-      twoLevel = Tables.rowCount(spark, dir, "events") >
-        Rank.SingleWindowMax)
-
-  private[graft] def sessionizeImpl(spark: SparkSession, dir: String,
+    * Bit-identical to the one-window form (`twoLevel = false`, taken
+    * at or below the keyed-window gate, where the block assembly's
+    * second window + regroup cost more than they save;
+    * SessionTwoLevelSpec-proven): block boundaries respect the
+    * (ts, event_id) order, decimal partial sums re-sum exactly,
+    * (us, event_id, …) structs order like the events, and session
+    * starts are strictly increasing per user (sessions are >gap
+    * apart), so the renumbering matches the running-sum ids. */
+  private def sessions(spark: SparkSession, dir: String,
       twoLevel: Boolean): DataFrame = {
     val gapUs = SessionGapMinutes * 60L * 1000000L
     val blockUs = 86400L * 1000000L // 1 day >> gap
     val ev = Tables.load(spark, dir, "events")
       .withColumn("us", unix_micros(col("ts")))
-    val sessions = if (twoLevel) {
-      val byBlock = Window.partitionBy("user_id", "block")
+    // running count of >gap boundaries in (ts, event_id) order
+    def numbered(df: DataFrame, part: Seq[String], name: String) = {
+      val w = Window.partitionBy(part.map(col): _*)
         .orderBy(col("ts"), col("event_id"))
-      val local = ev
-        .withColumn("block", floor(col("us") / blockUs))
-        .withColumn("prev_us", lag(col("us"), 1).over(byBlock))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
+      df.withColumn("prev_us", lag(col("us"), 1).over(w))
+        .withColumn(name, sum(when(col("prev_us").isNull ||
             col("us") - col("prev_us") > gapUs, 1L).otherwise(0L))
-        .withColumn("lsess", sum(col("new_sess")).over(
-          byBlock.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        // same (user, block) clustering — no extra shuffle for this agg
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    }
+    val fst = min(struct(col("us"), col("event_id"), col("event_type")))
+    val lst = max(struct(col("us"), col("event_id"), col("event_type")))
+    if (twoLevel) {
+      // same (user, block) clustering — no extra shuffle for this agg
+      val local = numbered(ev.withColumn("block", floor(col("us") / blockUs)),
+          Seq("user_id", "block"), "lsess")
         .groupBy("user_id", "block", "lsess")
         .agg(min(col("ts")).as("sess_start"), max(col("ts")).as("sess_end"),
           min(col("us")).as("start_us"), max(col("us")).as("end_us"),
           count(lit(1)).as("n_events"),
           // 128-bit exact partial (same kernel as salted phase-1
           // aggregates): block-local sums are unbounded by design
-          Num.dsumExact(col("value")).as("sum_dec"))
+          Num.dsumExact(col("value")).as("sum_dec"),
+          fst.as("fst"), lst.as("lst"))
       val byUser = Window.partitionBy("user_id")
         .orderBy(col("start_us"), col("lsess"))
       local
         .withColumn("prev_end", lag(col("end_us"), 1).over(byUser))
-        .withColumn("new_chain",
-          when(col("prev_end").isNull ||
+        .withColumn("sess_id", sum(when(col("prev_end").isNull ||
             col("start_us") - col("prev_end") > gapUs, 1L).otherwise(0L))
-        .withColumn("sess_id", sum(col("new_chain")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .over(byUser.rowsBetween(Window.unboundedPreceding,
+            Window.currentRow)))
         .groupBy("user_id", "sess_id")
         .agg(min(col("sess_start")).as("sess_start"),
           max(col("sess_end")).as("sess_end"),
           sum(col("n_events")).as("n_events"),
-          // exact decimal re-sum of exact partials → identical double
-          sum(col("sum_dec")).cast("double").as("sum_value"))
-    } else {
-      // the classic single-window form the blocked assembly
-      // reproduces (its scaladoc proof): sess_id = running count of
-      // >gap boundaries in (ts, event_id) order ≡ the renumbered
-      // chain ids (both number sessions 1..k by start instant), and
-      // the exact decimal sum is association-free
-      val byUser = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("event_id"))
-      ev
-        .withColumn("prev_us", lag(col("us"), 1).over(byUser))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > gapUs, 1L).otherwise(0L))
-        .withColumn("sess_id", sum(col("new_sess")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          sum(col("sum_dec")).as("sum_dec"),
+          min(col("fst")).as("fst"), max(col("lst")).as("lst"))
+    } else
+      numbered(ev, Seq("user_id"), "sess_id")
         .groupBy("user_id", "sess_id")
         .agg(min(col("ts")).as("sess_start"), max(col("ts")).as("sess_end"),
           count(lit(1)).as("n_events"),
-          Num.dsumExact(col("value")).cast("double").as("sum_value"))
-    }
-    sessions.orderBy("user_id", "sess_id")
+          Num.dsumExact(col("value")).as("sum_dec"),
+          fst.as("fst"), lst.as("lst"))
   }
+
+  /** #41 Sessionization: split each user's event stream on >30 min
+    * silence, one output row per session (the [[sessions]] core). */
+  def sessionize(spark: SparkSession, dir: String): DataFrame =
+    sessionizeImpl(spark, dir, twoLevel = Rank.keyedTwoLevel(spark, dir))
+
+  private[graft] def sessionizeImpl(spark: SparkSession, dir: String,
+      twoLevel: Boolean): DataFrame =
+    sessions(spark, dir, twoLevel)
+      .select(col("user_id"), col("sess_id"), col("sess_start"),
+        col("sess_end"), col("n_events"),
+        col("sum_dec").cast("double").as("sum_value"))
+      .orderBy("user_id", "sess_id")
 
   /** #42 Per-key lag + moving window: previous price, absolute and
     * percent change, and a 3-row moving average per ticker over the
@@ -239,75 +237,17 @@ object Sessions {
     * The landing/exit-page report product analytics serves beside
     * the #161 path mining and the #88 funnel.
     *
-    * Same two-level session assembly as [[sessionize]] (block-local
-    * gap chains + per-user boundary stitch — bit-identical to the
-    * one-window form, skew kill-tested there); entry/exit ride the
-    * merge as min/max of (us, event_id, event_type) structs, whose
+    * Reads the [[sessions]] core; entry/exit ride its merge as
+    * min/max of (us, event_id, event_type) structs, whose
     * lexicographic order IS the session's event order (event_id
     * breaks ts ties), so no second pass over the events. Output is
     * ≤|types|² rows at any scale. */
   def sessionEntryExit(spark: SparkSession, dir: String): DataFrame =
-    // adaptive plan — same gate and spec coverage as [[sessionize]]
-    sessionEntryExitImpl(spark, dir,
-      twoLevel = Tables.rowCount(spark, dir, "events") >
-        Rank.SingleWindowMax)
+    sessionEntryExitImpl(spark, dir, twoLevel = Rank.keyedTwoLevel(spark, dir))
 
   private[graft] def sessionEntryExitImpl(spark: SparkSession, dir: String,
-      twoLevel: Boolean): DataFrame = {
-    val gapUs = SessionGapMinutes * 60L * 1000000L
-    val blockUs = 86400L * 1000000L
-    val ev = Tables.load(spark, dir, "events")
-      .withColumn("us", unix_micros(col("ts")))
-    val perSession = if (twoLevel) {
-      val byBlock = Window.partitionBy("user_id", "block")
-        .orderBy(col("ts"), col("event_id"))
-      val local = ev
-        .withColumn("block", floor(col("us") / blockUs))
-        .withColumn("prev_us", lag(col("us"), 1).over(byBlock))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > gapUs, 1L).otherwise(0L))
-        .withColumn("lsess", sum(col("new_sess")).over(
-          byBlock.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "block", "lsess")
-        .agg(min(col("us")).as("start_us"), max(col("us")).as("end_us"),
-          min(struct(col("us"), col("event_id"), col("event_type")))
-            .as("fst"),
-          max(struct(col("us"), col("event_id"), col("event_type")))
-            .as("lst"),
-          count(lit(1)).as("n_events"))
-      val byUser = Window.partitionBy("user_id")
-        .orderBy(col("start_us"), col("lsess"))
-      local
-        .withColumn("prev_end", lag(col("end_us"), 1).over(byUser))
-        .withColumn("new_chain",
-          when(col("prev_end").isNull ||
-            col("start_us") - col("prev_end") > gapUs, 1L).otherwise(0L))
-        .withColumn("sess_id", sum(col("new_chain")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "sess_id")
-        .agg(min(col("fst")).as("fst"), max(col("lst")).as("lst"),
-          sum(col("n_events")).as("n_events"))
-    } else {
-      // single-window twin — the same session set ([[sessionize]]'s
-      // proof), entry/exit as one min/max-of-struct pass per session
-      val byUser = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("event_id"))
-      ev
-        .withColumn("prev_us", lag(col("us"), 1).over(byUser))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > gapUs, 1L).otherwise(0L))
-        .withColumn("sess_id", sum(col("new_sess")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "sess_id")
-        .agg(min(struct(col("us"), col("event_id"), col("event_type")))
-            .as("fst"),
-          max(struct(col("us"), col("event_id"), col("event_type")))
-            .as("lst"),
-          count(lit(1)).as("n_events"))
-    }
-    perSession
+      twoLevel: Boolean): DataFrame =
+    sessions(spark, dir, twoLevel)
       .select(col("fst.event_type").as("entry_type"),
         col("lst.event_type").as("exit_type"), col("n_events"))
       .groupBy("entry_type", "exit_type")
@@ -315,5 +255,4 @@ object Sessions {
         sum((col("n_events") === 1L).cast("long")).as("n_bounces"),
         sum(col("n_events")).as("total_events"))
       .orderBy("entry_type", "exit_type")
-  }
 }

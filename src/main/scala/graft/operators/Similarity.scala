@@ -585,13 +585,6 @@ object Similarity {
       .orderBy("q_id", "rnk")
   }
 
-  /** #72 Per-label embedding centroids (prototype vectors — class
-    * means for classifier init / nearest-centroid labeling / drift
-    * monitoring). Long form (label, pos, m): one decimal-exact mean
-    * per (label, dimension), the same partition-order-independent
-    * recompute shape as [[kmeansRefine]]'s assignment step, plus the
-    * per-label support count. One explode pass + one (label, pos)
-    * shuffle of scalars — no vector ever rides a shuffle. */
   /** The (label, pos, m) dimension means — shared by the reporting
     * query and the cached assignment model, so the model build does
     * not pay the report's presentation sort / support-count join. */
@@ -601,6 +594,13 @@ object Similarity {
       .groupBy(col("label"), col("pos").cast("long").as("pos"))
       .agg(graft.operators.Num.davg(col("col")).as("m"))
 
+  /** #72 Per-label embedding centroids (prototype vectors — class
+    * means for classifier init / nearest-centroid labeling / drift
+    * monitoring). Long form (label, pos, m): one decimal-exact mean
+    * per (label, dimension), the same partition-order-independent
+    * recompute shape as [[kmeansRefine]]'s assignment step, plus the
+    * per-label support count. One explode pass + one (label, pos)
+    * shuffle of scalars — no vector ever rides a shuffle. */
   def labelCentroids(spark: SparkSession, dir: String): DataFrame = {
     val n = emb(spark, dir).groupBy("label")
       .agg(count(lit(1)).as("n_vecs"))

@@ -69,43 +69,30 @@ object Skew {
     * paths (#32/#58) or a two-level window rewrite are mandatory.
     *
     * Gini needs every key ranked by count — a global per-type sort
-    * the naive window does on ONE task. The rank is two-level (the
-    * #126 decomposition): log₂(count) blocks bound each local window
-    * (monotone in count, ~40 blocks), broadcast cumulative offsets
-    * restore the global (count, user_id) rank exactly. Numerator and
-    * denominator of the Gini are exact decimal integers at any corpus
-    * size; the one double division is terminal.
+    * the naive window does on ONE task. The rank is
+    * [[Rank.twoLevelRank]]: log₂(count) blocks bound each local
+    * window (monotone in count, ~40 blocks), broadcast cumulative
+    * offsets restore the global (count, user_id) rank exactly.
+    * Numerator and denominator of the Gini are exact decimal integers
+    * at any corpus size; the one double division is terminal.
     *
     * Scale: one fact-table hash aggregate to key grain, then all
     * windows are (type, log-block)-bounded; offsets are types ×
     * blocks rows, broadcast. */
   def skewReport(spark: SparkSession, dir: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
     // pinned: the key-grain collapse feeds both the local-rank and
     // the offsets branches — lazy, each re-scans the fact table
     val keyed = Tables.load(spark, dir, "events")
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("blk", floor(log(2.0, col("cnt"))).cast("long"))
       .localCheckpoint()
-    val wLocal = W.partitionBy("event_type", "blk")
-      .orderBy(col("cnt").asc, col("user_id").asc)
-    val local = keyed.withColumn("lrnk",
-      row_number().over(wLocal).cast("long"))
-    val wOff = W.partitionBy("event_type").orderBy(col("blk").asc)
-      .rowsBetween(W.unboundedPreceding, -1)
-    val wN = W.partitionBy("event_type")
-    val offsets = keyed.groupBy("event_type", "blk")
-      .agg(count(lit(1)).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .withColumn("n", sum(col("c")).over(wN))
-      .select("event_type", "blk", "off", "n")
     // G = (Σ(2r−1)x − n·Σx) / (n·Σx), r = 1..n ascending by (cnt,
     // key); numerator/denominator stay exact decimal until ONE
     // terminal double division
     val Dec = "decimal(38,0)"
-    local.join(broadcast(offsets), Seq("event_type", "blk"))
-      .withColumn("rnk", col("off") + col("lrnk"))
+    Rank.twoLevelRank(keyed, Seq("event_type"),
+        floor(log(2.0, col("cnt"))).cast("long"), blkAscending = true,
+        Seq(col("cnt").asc, col("user_id").asc), "rnk", "n")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_keys"),
         sum(col("cnt")).as("n_rows"),

@@ -245,28 +245,6 @@ object TextOps {
   val BloomBits = 1 << 20
   val BloomHashes = 5
 
-  /** #83 Bloom-prefiltered decontamination: answer-identical to
-    * [[contaminationCheck]], but corpus shingles first pass a
-    * membership probe against a Bloom filter of the benchmark set —
-    * built DISTRIBUTED by the mergeable [[graft.functions.expressions.BloomAgg]]
-    * (partial bitsets OR-combine map-side; nothing collects) and
-    * broadcast as one ~128 KiB row. No false negatives, so the
-    * downstream exact join sees every true match; false positives
-    * (< 1e-8 here) are removed by that same join, which is why this
-    * query shares `contamination`'s DuckDB oracle verbatim.
-    *
-    * The 100 TB point is the regime where the reference set OUTGROWS
-    * broadcast: a web-scale blocklist or seen-set of raw 8-byte
-    * hashes in the GBs forces the exact join to hash-shuffle every
-    * corpus shingle (O(corpus tokens) rows), while its Bloom filter
-    * at the same FP budget is ~100× smaller, still broadcasts, and
-    * cuts that shuffle to true matches plus the FP sliver. When the
-    * raw set broadcasts anyway (this corpus: the exact join is
-    * already broadcast and shuffle-free), the sketch adds its build
-    * jobs without removing any work — BASELINE.md records that
-    * honestly. The build-probe pair serves any bounded-reference
-    * membership pre-screen (seen URLs, license blocklists, index
-    * presence). */
   /** Bloom sizing for the DESIGN-REGIME benchmark below: the
     * reference set there is millions of hashes, so the filter grows
     * to 2^26 bits (8 MiB — still broadcastable where the raw 8-byte
@@ -320,6 +298,28 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** #83 Bloom-prefiltered decontamination: answer-identical to
+    * [[contaminationCheck]], but corpus shingles first pass a
+    * membership probe against a Bloom filter of the benchmark set —
+    * built DISTRIBUTED by the mergeable [[graft.functions.expressions.BloomAgg]]
+    * (partial bitsets OR-combine map-side; nothing collects) and
+    * broadcast as one ~128 KiB row. No false negatives, so the
+    * downstream exact join sees every true match; false positives
+    * (< 1e-8 here) are removed by that same join, which is why this
+    * query shares `contamination`'s DuckDB oracle verbatim.
+    *
+    * The 100 TB point is the regime where the reference set OUTGROWS
+    * broadcast: a web-scale blocklist or seen-set of raw 8-byte
+    * hashes in the GBs forces the exact join to hash-shuffle every
+    * corpus shingle (O(corpus tokens) rows), while its Bloom filter
+    * at the same FP budget is ~100× smaller, still broadcasts, and
+    * cuts that shuffle to true matches plus the FP sliver. When the
+    * raw set broadcasts anyway (this corpus: the exact join is
+    * already broadcast and shuffle-free), the sketch adds its build
+    * jobs without removing any work — BASELINE.md records that
+    * honestly. The build-probe pair serves any bounded-reference
+    * membership pre-screen (seen URLs, license blocklists, index
+    * presence). */
   def contaminationBloom(spark: SparkSession, dir: String): DataFrame = {
     val sh = Tables.load(spark, dir, "documents")
       .select(col("doc_id"),

@@ -203,38 +203,24 @@ object TrainExport {
     * expressible as pure arithmetic on the rank (no sequential
     * greedy state, so it distributes).
     *
-    * The global rank rides the same two-level decomposition as
-    * [[Curation.qualityFilter]]: block-local row_number (blocks =
-    * token-count ranges, bounded windows) + broadcast cumulative
-    * offsets — no single task sorts the corpus. Output is the
-    * per-bucket schedule summary; the DuckDB oracle recomputes it
-    * with a single global window, verifying the decomposition AND
-    * the snake arithmetic. */
+    * The global rank is [[Rank.twoLevelRank]]: block-local
+    * row_number (blocks = token-count ranges, bounded windows) +
+    * broadcast cumulative offsets — no single task sorts the corpus.
+    * Output is the per-bucket schedule summary; the DuckDB oracle
+    * recomputes it with a single global window, verifying the
+    * decomposition AND the snake arithmetic. */
   def balanceBuckets(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions
     val t = Tables.load(spark, dir, "documents")
       .select(col("doc_id"),
         TextFunctions.tokenCounts(col("text")).getField("ws")
           .cast("long").as("n_tok"))
-      .withColumn("blk", floor(col("n_tok") / lit(32L)).cast("long"))
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy("blk").orderBy(col("n_tok").desc, col("doc_id").asc)
-    val local = t.withColumn("lrnk", row_number().over(wLocal).cast("long"))
-    // single-partition window — deliberately: it runs over the
-    // per-BLOCK counts table (≤ max_doc_tokens/32 rows, e.g. ~31k
-    // rows even for million-token documents), never over data rows;
-    // partitionBy(lit(0)) names that intent (documentation only —
-    // the WindowExec warning survives constant folding, ADVICE r21)
-    val wOff = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(0))
-      .orderBy(col("blk").desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val offsets = t.groupBy("blk").agg(count(lit(1)).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select("blk", "off")
-    val ranked = local.join(broadcast(offsets), "blk")
-      .withColumn("rnk", col("off") + col("lrnk") - 1L) // 0-based
+    // blocks = 32-token ranges; the offsets table is one row per
+    // block (≤ max_doc_tokens/32 rows), never one per document
+    val ranked = Rank.twoLevelRank(t, Seq.empty,
+        floor(col("n_tok") / lit(32L)).cast("long"), blkAscending = false,
+        Seq(col("n_tok").desc, col("doc_id").asc), "rnk", "n")
+      .withColumn("rnk", col("rnk") - 1L) // 0-based
     // snake: fold rank mod 2B back onto [0, B): 0..B-1 then B-1..0
     val m = pmod(col("rnk"), lit(2L * NumBuckets))
     val bucket = when(m < NumBuckets, m)

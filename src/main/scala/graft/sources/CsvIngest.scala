@@ -16,8 +16,8 @@ import graft.operators.Num
   */
 object CsvIngest {
 
-  /** CSV file schema for an events batch: everything arrives as text
-    * plus the corrupt-record catch-all. */
+  /** Events-batch file schema, shared by the CSV and JSON readers:
+    * everything arrives as text plus the corrupt-record catch-all. */
   val eventsCsv: StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", StringType),
     StructField("user_id", LongType), StructField("event_type", StringType),
@@ -32,19 +32,21 @@ object CsvIngest {
 
   /** Read a CSV directory with the declared schema, split on the
     * corrupt-record column. */
-  def readEvents(spark: SparkSession, path: String): IngestBatch = {
+  def readEvents(spark: SparkSession, path: String): IngestBatch =
+    split(spark.read.schema(eventsCsv).option("header", "true")
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt")
+      .csv(path))
+
+  /** The bad-row policy of both readers over a PERMISSIVE parse of
+    * [[eventsCsv]]. */
+  private[sources] def split(parsed: DataFrame): IngestBatch = {
     // Spark requires the parsed batch to be materialized before the
     // corrupt-record column can be queried on its own (see
     // UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN); a real
     // deployment writes clean/bad out immediately, so the cache holds
     // one ingest batch, not the table.
-    val raw = spark.read
-      .schema(eventsCsv)
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(path)
-      .cache()
+    val raw = parsed.cache()
     // The timestamp arrives as text (so a bad ts does NOT set
     // _corrupt); parse with try_to_timestamp and quarantine parse
     // failures too — a plain to_timestamp would THROW under ANSI mode
@@ -62,24 +64,34 @@ object CsvIngest {
     IngestBatch(clean, bad, () => { raw.unpersist(); () })
   }
 
-  /** §2 #33 `csv_ingest`: round-trip one day of events through CSV —
-    * format timestamps as text, write, re-read with the declared
-    * schema, and aggregate. The oracle aggregates the same slice of
-    * the source directly: the round-trip must be lossless (doubles
-    * print as shortest-exact, timestamps carry micros). */
-  def csvIngestQuery(spark: SparkSession, dir: String): DataFrame = {
-    val out = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_csv_${StagePath.key(dir)}").getPath
+  /** §2 #33 `csv_ingest`: round-trip one day of events through CSV
+    * ([[roundTrip]]). */
+  def csvIngestQuery(spark: SparkSession, dir: String): DataFrame =
+    roundTrip(spark, dir, "csv", "2024-01-01 00:00:00",
+      "2024-01-02 00:00:00", readEvents)
+
+  /** The ingest queries' body: format one day `[from, to)` of events
+    * with text timestamps, write it as `format`, re-read it with
+    * `read`, stage the typed clean rows and aggregate. The oracle
+    * aggregates the same slice of the source directly: the
+    * round-trip must be lossless (doubles print as shortest-exact,
+    * timestamps carry micros). */
+  private[sources] def roundTrip(spark: SparkSession, dir: String,
+      format: String, from: String, to: String,
+      read: (SparkSession, String) => IngestBatch): DataFrame = {
+    val out = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_${format}_${StagePath.key(dir)}").getPath
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     // raw-nanos range load → the one-day window prunes at the scan
-    Tables.loadEventsRange(spark, dir,
-        "2024-01-01 00:00:00", "2024-01-02 00:00:00")
+    Tables.loadEventsRange(spark, dir, from, to)
       .select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
         col("user_id"), col("event_type"), col("value"))
       .coalesce(1)
-      .write.option("header", "true").mode("overwrite").csv(out)
-    val batch = readEvents(spark, out)
+      // header: read by the CSV reader, ignored by JSON
+      .write.format(format).option("header", "true").mode("overwrite")
+      .save(out)
+    val batch = read(spark, out)
     // Warehouse-load step: stage the typed clean rows to parquet (this
     // materializes the parsed batch), then drop the parse cache — the
     // returned aggregate reads the staged table, so nothing stays

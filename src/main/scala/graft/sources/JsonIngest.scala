@@ -1,9 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.operators.Num
 
 /** Schema'd JSON-lines ingest with corrupt-row quarantine
   * (SURVEY.md §2 #57) — the same bad-row contract as `CsvIngest`
@@ -14,60 +11,18 @@ import graft.operators.Num
   */
 object JsonIngest {
 
-  val eventsJson: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", StringType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("_corrupt", StringType)))
-
   /** Read a JSON-lines directory with the declared schema, split on
-    * the corrupt-record column. Same caller-owned cache lifetime as
-    * CsvIngest.readEvents. */
-  def readEvents(spark: SparkSession, path: String): CsvIngest.IngestBatch = {
-    val raw = spark.read
-      .schema(eventsJson)
+    * the corrupt-record column. Same schema, bad-row policy and
+    * caller-owned cache lifetime as CsvIngest.readEvents. */
+  def readEvents(spark: SparkSession, path: String): CsvIngest.IngestBatch =
+    CsvIngest.split(spark.read.schema(CsvIngest.eventsCsv)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .json(path)
-      .cache()
-    // Same ANSI-safe timestamp quarantine as CsvIngest.readEvents: a
-    // malformed ts string parses fine against the text schema, so it
-    // must be caught by try_to_timestamp, not thrown at by ANSI.
-    val tsParsed =
-      try_to_timestamp(col("ts"), lit("yyyy-MM-dd HH:mm:ss.SSSSSS"))
-    val badRow = col("_corrupt").isNotNull ||
-      (col("ts").isNotNull && tsParsed.isNull)
-    val clean = raw.filter(!badRow)
-      .drop("_corrupt")
-      .withColumn("ts", tsParsed)
-    val bad = raw.filter(badRow)
-    CsvIngest.IngestBatch(clean, bad, () => { raw.unpersist(); () })
-  }
+      .json(path))
 
   /** §2 #57 `json_ingest`: round-trip one day of events through
-    * JSON-lines — write, re-read with the declared schema, stage
-    * typed parquet, aggregate. Oracle aggregates the same source
-    * slice directly: the round-trip must be lossless. */
-  def jsonIngestQuery(spark: SparkSession, dir: String): DataFrame = {
-    val out = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_json_${StagePath.key(dir)}").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    // raw-nanos range load → the one-day window prunes at the scan
-    Tables.loadEventsRange(spark, dir,
-        "2024-01-02 00:00:00", "2024-01-03 00:00:00")
-      .select(col("event_id"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .coalesce(1)
-      .write.mode("overwrite").json(out)
-    val batch = readEvents(spark, out)
-    val staged = out + "_typed"
-    batch.clean.write.mode("overwrite").parquet(staged)
-    batch.release()
-    spark.read.parquet(staged).groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        Num.dsum(col("value")).as("sum_value"),
-        max(col("ts")).as("max_ts"))
-      .orderBy("event_type")
-  }
+    * JSON-lines (CsvIngest.roundTrip). */
+  def jsonIngestQuery(spark: SparkSession, dir: String): DataFrame =
+    CsvIngest.roundTrip(spark, dir, "json", "2024-01-02 00:00:00",
+      "2024-01-03 00:00:00", readEvents)
 }

@@ -63,4 +63,16 @@ class AsOfTwoLevelSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out === Map(1L -> 42.0, 2L -> 42.0))
   }
+
+  test("a probe with a null key stays in the output on both routes") {
+    val p3 = Seq((1L, None, tsOf(dayUs)), (2L, Some(1L), tsOf(dayUs)))
+      .toDF("event_id", "user_id", "ts")
+    val b3 = Seq((1L, tsOf(1000L), 5.0)).toDF("user_id", "ts", "v")
+    for (twoLevel <- Seq(true, false)) {
+      val out = AsOfJoin.asOfImpl(p3, b3, "user_id", "ts", Seq("v"), Nil,
+          twoLevel).select("event_id", "v").collect()
+        .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+      assert(out === Map(1L -> None, 2L -> Some(5.0)), s"twoLevel=$twoLevel")
+    }
+  }
 }

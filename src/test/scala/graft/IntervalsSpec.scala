@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Intervals, Sessions}
@@ -54,9 +56,28 @@ class IntervalsSpec extends SparkTestBase {
     assert(hot.getLong(1) === 2000L && hot.getLong(2) < 2000L)
   }
 
+  /** The single-window form [[Intervals.peakStats]] decomposes: one
+    * running sum of the ±1 sweep points per event_type. */
+  private def peakStatsOneWindow(iv: DataFrame) = {
+    val w = Window.partitionBy("event_type").orderBy(col("t"), col("d"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    iv.select(col("event_type"),
+        explode(array(
+          struct(col("t_us").as("t"), lit(1).as("d")),
+          struct(col("end_us").as("t"), lit(-1).as("d")))).as("pt"))
+      .select(col("event_type"), col("pt.t").as("t"), col("pt.d").as("d"))
+      .withColumn("run", sum(col("d")).over(w))
+      .groupBy("event_type")
+      .agg(sum((col("d") === 1).cast("long")).as("n_intervals"),
+        max(struct(col("run"), (-col("t")).as("neg_t"))).as("m"))
+      .select(col("event_type"), col("n_intervals"),
+        col("m.run").as("peak"), (-col("m.neg_t")).as("peak_ts_us"))
+      .orderBy("event_type")
+  }
+
   test("two-level concurrency sweep equals the single-window form (skewed)") {
-    val a = Intervals.peakStats(skewed, twoLevel = true).collect().toSeq
-    val b = Intervals.peakStats(skewed, twoLevel = false).collect().toSeq
+    val a = Intervals.peakStats(skewed).collect().toSeq
+    val b = peakStatsOneWindow(skewed).collect().toSeq
     assert(a === b)
     assert(a.forall(_.getLong(2) >= 1L))
   }
@@ -67,7 +88,7 @@ class IntervalsSpec extends SparkTestBase {
       (3L, "a", 3L, 4L, 6L), (4L, "a", 4L, 8L, 12L),
       // half-open: end at 20 + start at 20 never overlap
       (5L, "b", 5L, 15L, 20L), (6L, "b", 6L, 20L, 25L)))
-    val out = Intervals.peakStats(iv, twoLevel = true).collect()
+    val out = Intervals.peakStats(iv).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(out("a") === ((4L, 3L, 4L)))
