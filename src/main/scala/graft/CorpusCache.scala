@@ -19,24 +19,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    table not laid out as one directory) the artifact is built on
   *    every call and never cached; a constant key would outlive a
   *    regeneration of the corpus.
+  *  - **pin**: a frame artifact is pinned here, once, by
+  *    `localCheckpoint` on the frame its build returns, so a build
+  *    body stays a lazy plan and no operator pins what it caches.
+  *    [[pinned]] then derives its driver values from the pinned
+  *    frame, so they are computed from exactly the rows it serves.
   *  - **cap**: each site keeps at most [[MaxEntries]] corpora and is
   *    cleared whole when a new one would exceed that. The cap counts
   *    per site, so a long run over many corpora never evicts another
   *    site's entries; an evicted artifact is rebuilt on its next use.
-  *  - **session check**: a cached `localCheckpoint`ed frame is pinned
-  *    to the session (and executor blocks) that built it. [[df]] and
-  *    [[pinned]] serve a cached entry only to the session that built
-  *    it while its context is running, and rebuild otherwise.
-  *    [[value]] holds driver values (scalars, collected models), which
-  *    are session-independent.
+  *  - **session check**: a pinned frame lives in the session (and
+  *    executor blocks) that built it. [[df]] and [[pinned]] serve a
+  *    cached entry only to the session that built it while its
+  *    context is running, and rebuild otherwise. [[value]] holds
+  *    driver values (scalars, collected models), which are
+  *    session-independent.
   *  - **builds**: a build never runs inside a map update. The maps
   *    only create an empty slot per artifact; the build runs under
   *    that slot's own lock, so concurrent first callers build once and
   *    a build may call other artifacts (`basketAdjacency` →
   *    `basketPairsSym` → `basketPairs`). Warm hits run no Spark job.
-  *  - **job description**: a build's jobs run under the description
-  *    `graft:artifact:<site>`; the caller's description (nested builds
-  *    included) is restored afterwards.
+  *  - **job description**: a build's jobs (its pin and derivation
+  *    included) run under the description `graft:artifact:<site>`;
+  *    the caller's description (nested builds included) is restored
+  *    afterwards.
   *  - **cold mode**: [[clearAll]] drops every artifact; the next use
   *    of each pays its build.
   */
@@ -65,19 +71,22 @@ object CorpusCache {
       site: String)(compute: => V): V =
     cached[V](spark, dir, table, site, _ => true)(compute)
 
-  /** A pinned frame, served only to the session that built it. */
+  /** The frame `build` returns, pinned; served only to the session
+    * that built it. */
   def df(spark: SparkSession, dir: String, table: String, site: String)(
-      compute: => DataFrame): DataFrame =
-    pinned[DataFrame](spark, dir, table, site)(identity)(compute)
+      build: => DataFrame): DataFrame =
+    pinned(spark, dir, table, site)(build)(identity)
 
-  /** A value that holds a pinned frame (`frame` reaches it) next to
-    * driver values derived from it; the whole value is rebuilt when
-    * the frame fails the session check. */
+  /** `frame`, pinned, with driver values `derive` computes from the
+    * pinned frame once per build; the whole value is rebuilt when the
+    * frame fails the session check. */
   def pinned[V](spark: SparkSession, dir: String, table: String,
-      site: String)(frame: V => DataFrame)(compute: => V): V =
-    cached[V](spark, dir, table, site, v =>
-      (frame(v).sparkSession eq spark) && !spark.sparkContext.isStopped)(
-      compute)
+      site: String)(frame: => DataFrame)(derive: DataFrame => V): V =
+    cached[(DataFrame, V)](spark, dir, table, site, { case (f, _) =>
+      (f.sparkSession eq spark) && !spark.sparkContext.isStopped }) {
+      val pin = frame.localCheckpoint()
+      (pin, derive(pin))
+    }._2
 
   private def cached[V](spark: SparkSession, dir: String, table: String,
       site: String, live: V => Boolean)(compute: => V): V = {

@@ -183,7 +183,8 @@ object Analytics {
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n"),
         (Num.dsum128Raw(col("y")) * lit(1000000L)).cast(dec).as("sy"))
-      .localCheckpoint() // pinned: feeds rows + the 1-row totals
+      // pin: kept by the per-call A/B in CHANGES.md (target_encode)
+      .localCheckpoint()
     val totals = perBrand
       .agg(sum(col("n")).as("nn"), sum(col("sy")).cast(dec).as("syt"))
     perBrand.crossJoin(broadcast(totals))
@@ -276,13 +277,11 @@ object Analytics {
       table: String, key: String): DataFrame =
     graft.CorpusCache.df(spark, dir, table, s"key_counts_$key") {
       val base = Tables.load(spark, dir, table)
-      val agg =
-        if (table == "lineitem" && key == "l_orderkey")
-          base.groupBy(col(key).as("k"))
-            .agg(count(lit(1)).as("cnt"),
-              sum(col("l_partkey").isNull.cast("long")).as("n_null_part"))
-        else base.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt"))
-      agg.localCheckpoint()
+      if (table == "lineitem" && key == "l_orderkey")
+        base.groupBy(col(key).as("k"))
+          .agg(count(lit(1)).as("cnt"),
+            sum(col("l_partkey").isNull.cast("long")).as("n_null_part"))
+      else base.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt"))
     }
 
   /** #144 Referential-integrity audit — the cross-table contract a
@@ -300,8 +299,8 @@ object Analytics {
     * build, plus a re-scan per total) measured 4.7× the DuckDB twin;
     * key grain shrinks every join input to the distinct-key domain
     * and derives totals/dup-PK/null counts from the SAME collapsed
-    * tables, which are localCheckpoint-pinned so no check re-scans a
-    * fact table. A null key groups alone, never joins, and is
+    * tables, which CorpusCache pins so no check re-scans a fact
+    * table. A null key groups alone, never joins, and is
     * counted orphan — exactly the row-grain LEFT ANTI (and the
     * oracle's NOT EXISTS) semantics. */
   def refAudit(spark: SparkSession, dir: String): DataFrame = {
@@ -543,6 +542,7 @@ object Analytics {
       .groupBy(col("c_mktsegment").as("seg"),
         col("o_orderpriority").as("prio"))
       .agg(count(lit(1)).as("n"))
+      // pin: kept by the per-call A/B in CHANGES.md (chi_square)
       .localCheckpoint()
     val rTot = cells.groupBy("seg").agg(sum(col("n")).as("r"))
     val cTot = cells.groupBy("prio").agg(sum(col("n")).as("c"))
@@ -587,7 +587,6 @@ object Analytics {
     val o = Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         expr("unix_micros(o_orderdate) div 86400000000").as("oday"))
-      .localCheckpoint() // pinned: bounds probe + the join
     val d = o.agg(expr("(min(oday) + max(oday)) div 2")).head().getLong(0)
     val li = Tables.load(spark, dir, "lineitem")
       .select(col("l_orderkey"),
@@ -730,6 +729,7 @@ object Analytics {
       .groupBy(col("c_mktsegment").as("seg"),
         col("o_orderpriority").as("prio"))
       .agg(count(lit(1)).as("n"))
+      // pin: kept by the per-call A/B in CHANGES.md (mutual_info)
       .localCheckpoint()
     val rTot = cells.groupBy("seg").agg(sum(col("n")).as("r"))
     val cTot = cells.groupBy("prio").agg(sum(col("n")).as("c"))

@@ -35,10 +35,11 @@ import graft.sources.Tables
   */
 object Components {
 
-  /** Edge-count bound for broadcasting a whole edge set as a join
-    * build side (~20M two-long rows ≈ 320MB worst-case in-memory —
-    * inside a healthy executor; above it the shuffled join is the
-    * only unbounded-safe shape). */
+  /** Read by no operator: no route broadcasts a whole edge set (the
+    * graph gates are [[PrBroadcastNodeMax]] and
+    * [[TriBroadcastEdgeMax]]). Kept only because
+    * `perfbench/Gates.scala` compiles against it; its `edge_broadcast`
+    * row reports a route that no operator takes. */
   val BroadcastEdgeMax = 20000000L
 
   /** Trigram-Jaccard edge threshold: 0.5 keeps the planted dup
@@ -86,10 +87,16 @@ object Components {
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
       .union(nodes.select(col("id").as("src"), col("id").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // store the edge blocks in one job before the rounds: the first
+    // round's stages run as concurrent jobs, and both would wait on
+    // the same block ("Block rdd_… already exists") while one task
+    // computes it
+    sym.count()
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("comp").cast("decimal(38,0)")).as("s"))
         .head.getDecimal(0)
     var labels = nodes.select(col("id"), col("id").as("comp"))
+      // pin: loop seed; each round reads the previous round's pin
       .localCheckpoint()
     var prev = labelSum(labels)
     var it = 0
@@ -104,7 +111,7 @@ object Components {
         val stepped = (1 to HopsPerRound).foldLeft(labels) { (cur, _) =>
           sym.join(cur.withColumnRenamed("id", "src"), "src")
             .groupBy(col("dst").as("id")).agg(min(col("comp")).as("comp"))
-        }.localCheckpoint()
+        }.localCheckpoint() // pin: per-round truncation (plan doubles)
         // pointer jumping: a label is always a node id, so every comp
         // matches exactly one label row — l(v) <- min(l(v), l(l(v)))
         val next = stepped
@@ -133,7 +140,7 @@ object Components {
     * cluster_split, #163 canonical_docs — treat the fixed point as a
     * build-once/query-many model artifact instead of each re-running
     * the O(rounds × |E|) propagation; bounded state (|docs| label
-    * rows, executor-side via localCheckpoint). */
+    * rows, executor-side, pinned by CorpusCache). */
   def nearDupComponents(spark: SparkSession, dir: String): DataFrame =
     graft.CorpusCache.df(spark, dir, "documents", "neardup_components") {
       val docs = Tables.load(spark, dir, "documents")
@@ -141,7 +148,6 @@ object Components {
         .filter(col("jac") >= EdgeThreshold)
         .select("a", "b")
       connectedComponents(docs.select(col("doc_id").as("id")), edges)
-        .localCheckpoint()
     }
 
   /** Corpus-keyed distinct co-purchase part pairs (a < b) — the
@@ -158,7 +164,6 @@ object Components {
           "l_orderkey")
         .filter(col("a") < col("b"))
         .select("a", "b").distinct()
-        .localCheckpoint()
     }
 
   /** Corpus-keyed COUNTED co-purchase pairs (pa < pb, support =
@@ -174,7 +179,6 @@ object Components {
           "l_orderkey")
         .filter(col("pa") < col("pb"))
         .groupBy("pa", "pb").agg(count(lit(1)).as("support"))
-        .localCheckpoint()
     }
 
   /** Corpus-keyed DISTINCT (order, part) basket collapse — the input
@@ -185,7 +189,6 @@ object Components {
     graft.CorpusCache.df(spark, dir, "lineitem", "basket_lines") {
       Tables.load(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
-        .localCheckpoint()
     }
 
   /** Corpus-keyed SYMMETRIZED basket edges (both directions of
@@ -195,7 +198,6 @@ object Components {
     graft.CorpusCache.df(spark, dir, "lineitem", "basket_pairs_sym") {
       val base = basketPairs(spark, dir)
       base.unionByName(base.select(col("b").as("a"), col("a").as("b")))
-        .localCheckpoint()
     }
 
   /** Corpus-keyed ADJACENCY of the basket graph: one row per node —
@@ -218,7 +220,6 @@ object Components {
       basketPairsSym(spark, dir)
         .groupBy(col("a").as("node"))
         .agg(sort_array(collect_list(col("b"))).as("nbrs"))
-        .localCheckpoint()
     }
 
   /** Corpus-keyed DEGREE-ORIENTED adjacency: for each node u, the
@@ -245,7 +246,6 @@ object Components {
             .as("e"))
         .groupBy(col("e.src").as("src"))
         .agg(sort_array(collect_list(col("e.dst"))).as("nbrs"))
-        .localCheckpoint()
     }
 
   /** #75 Near-dup dedup clusters over `documents`: edges = blocked
@@ -348,6 +348,7 @@ object Components {
         // per round — truncate per round for node sets within 10× of
         // the gate (the small-graph default skips the extra job).
         if (nNodes > PrBroadcastNodeMax / 10 && it < PrIters)
+          // pin: per-round truncation near the gate only
           ranks = ranks.localCheckpoint()
       }
       pageRankTop(ranks)
@@ -358,8 +359,10 @@ object Components {
       val pairs = basketPairs(spark, dir)
       val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
+        // pin: read by every round of the shuffled route
         .localCheckpoint()
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+        // pin: read by every round of the shuffled route
         .localCheckpoint()
       var ranks = deg.select(col("src").as("node"), col("deg"),
         lit(PrScale).as("rank_u"))
@@ -373,6 +376,7 @@ object Components {
           .select(col("node"), col("deg"),
             (lit(PrBase) + expr("(17 * coalesce(s, 0L)) DIV 20"))
               .as("rank_u"))
+        // pin: per-round truncation of the shuffled route
         if (it < PrIters) ranks = ranks.localCheckpoint()
       }
       pageRankTop(ranks)
@@ -452,16 +456,15 @@ object Components {
     // intersection (same elements, same order) with zero per-pair
     // allocation beyond the result array.
     val tris = triangleTriples(adjO, mEdges)
-    // tris is consumed exactly ONCE (no checkpoint, no second pass):
-    // the 3-role explode feeds the per-part tally, and the grand
-    // total rides the PLAN as Σ n_tri / 3 over that tiny table — an
+    // tris feeds ONE per-part tally (no checkpoint): the 3-role
+    // explode feeds the tally, and the grand total rides the PLAN as
+    // Σ n_tri / 3 over that tiny table — an
     // exact integer (every triangle contributes 3 explode rows) and
     // a broadcast one-row aggregate, never a driver count() action
     // (VERDICT r13 #5)
     val perPart = tris.select(explode(array(
         col("pa"), col("pb"), col("pc"))).as("part_id"))
       .groupBy("part_id").agg(count(lit(1)).as("n_tri"))
-      .localCheckpoint()
     val total = perPart.agg(expr("sum(n_tri) div 3").as("total_tri"))
     // partitionBy(lit(0)): runs over the 10 survivors by construction
     val w = org.apache.spark.sql.expressions.Window
@@ -568,7 +571,6 @@ object Components {
     var visited = part
       .filter(col("p_partkey") % 97 === 0)
       .select(col("p_partkey").as("node"), lit(0L).as("hop"))
-      .localCheckpoint()
     // ADVICE r21: the hop-1 frontier is the PART-CATALOG seed slice,
     // which the adjacency node count does not bound — a corpus with a
     // huge part catalog but a small basket graph would broadcast an
@@ -581,10 +583,6 @@ object Components {
       nNodes <= PrBroadcastNodeMax && nSeeds <= PrBroadcastNodeMax
     var frontier = visited
     for (h <- 1 to KhopMaxHops) {
-      // one checkpoint per hop (the frontier, consumed twice: the
-      // union below and the next hop's join); `visited` stays a lazy
-      // union of ≤ KhopMaxHops+1 checkpointed frames — truncating it
-      // per hop was a second materialization with nothing to truncate
       val expanded =
         if (bcastFrontier)
           adj.join(broadcast(frontier.select(col("node"))), "node")
@@ -595,6 +593,7 @@ object Components {
       val next = expanded.distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
         .select(col("node"), lit(h.toLong).as("hop"))
+        // pin: per hop; `visited` stays a lazy union of these pins
         .localCheckpoint()
       visited = visited.unionByName(next)
       frontier = next

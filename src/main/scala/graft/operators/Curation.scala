@@ -14,12 +14,9 @@ import graft.functions.TextFunctions
   *
   * Scale shape (§5): ONE corpus scan computes the per-doc quality,
   * language, and content-hash columns (codegen'd kernels + sha2) and
-  * reduces each doc to a scalars-only metadata row (~40 B/doc),
-  * materialized via localCheckpoint — every later stage (dedup
-  * keep-set, cap, split, accounting) runs off that table, so the
-  * lazy-plan alternative of re-scanning and re-tokenizing the corpus
-  * once per consuming branch (8 scans in the composed plan) never
-  * happens. The cap rides the bounded-heap TopKAgg (O(cap) state per
+  * reduces each doc to a scalars-only metadata row (~40 B/doc);
+  * every later stage (dedup keep-set, cap, split, accounting) runs
+  * off those rows in one lazy plan. The cap rides the bounded-heap TopKAgg (O(cap) state per
   * source); split assignment is a pure per-row projection; the final
   * accounting is one map-side-combined aggregate. Nothing in the
   * composition adds state proportional to a hot group.
@@ -40,12 +37,11 @@ object Curation {
         TextFunctions.langId(col("text")).as("pred_lang"))
     // stage 1+2: quality + language gates, then reduce every
     // surviving doc to scalars (text itself is not needed past the
-    // content hash) and materialize — the single corpus scan
+    // content hash)
     val meta = docs
       .filter(col("n_tok") >= MinTokens && col("pred_lang").isin(Langs: _*))
       .select(col("doc_id"), col("source"), col("n_tok"),
         sha2(col("text"), 256).as("h"))
-      .localCheckpoint()
     // stage 3: exact dedup — keep the min doc_id per content hash
     val keeps = meta
       .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
@@ -91,6 +87,7 @@ object Curation {
           .cast("long").as("n_tok"),
         TextFunctions.langId(col("text")).as("pred_lang"),
         sha2(col("text"), 256).as("h"))
+      // pin: kept by the per-call A/B in CHANGES.md (curation_audit)
       .localCheckpoint()
     val gated = meta.filter(col("n_tok") >= MinTokens &&
       col("pred_lang").isin(Langs: _*))

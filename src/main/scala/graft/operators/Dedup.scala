@@ -569,7 +569,7 @@ object Dedup {
           conv(substring(md5(col("sh")), 25, 8), 16, 10).cast("long")
             .as("h"))
         .distinct()
-        .localCheckpoint() // pinned: sizes, df and both join sides
+        .localCheckpoint() // pin: inner, cold build only; feeds 4 branches
       val sz = dd.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val keep = dd.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") <= EvalDfCap).select("h")
@@ -583,7 +583,6 @@ object Dedup {
         .join(sz.select(col("doc_id").as("b"), col("n").as("nb")), "b")
         .filter(col("i") * EvalJacNum >= col("na") + col("nb") - col("i"))
         .select("a", "b")
-        .localCheckpoint() // pinned: tp join + fn count
     }
     // candidate side: the #20 portable band buckets, ids only
     val bandKeys = docs
@@ -599,7 +598,6 @@ object Dedup {
     val cand = graft.CorpusCache.df(spark, dir, "documents",
         "lsh_eval_cand") {
       bucketPairs(bandKeys).select("a", "b").distinct()
-        .localCheckpoint() // pinned: counts + tp join
     }
     val nDocs = docs.select(count(lit(1)).as("n_docs"))
     val nPos = pos.select(count(lit(1)).as("n_pos"))
@@ -674,13 +672,12 @@ object Dedup {
   private[graft] def containGuard(spark: SparkSession, dir: String,
       cap: Long = ContainBlockCap): ContainGuard =
     graft.CorpusCache.pinned(spark, dir, "documents",
-        s"containment_guard_$cap")((g: ContainGuard) => g.drop) {
-      val over = Tables.load(spark, dir, "documents")
+        s"containment_guard_$cap")(
+      Tables.load(spark, dir, "documents")
         .groupBy(col("lang"), col("source"),
           floor(col("n_chars") / lit(20)).as("blk"))
         .agg(count(lit(1)).as("pop"))
-        .filter(col("pop") > cap)
-        .localCheckpoint()
+        .filter(col("pop") > cap)) { over =>
       val st = over.agg(count(lit(1)).as("b"),
         sum(col("pop")).as("d")).head()
       if (st.getLong(0) > 0)
@@ -788,7 +785,7 @@ object Dedup {
           conv(substring(md5(col("sh")), 25, 8), 16, 10).cast("long")
             .as("h"))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint() // pin: inner, cold build only; feeds 6 branches
       val sz = dd.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val anchors = dd.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2 && col("df") <= ContainAnchorDfCap)
@@ -814,7 +811,6 @@ object Dedup {
           round(col("inter").cast("double") / col("nb").cast("double"), 6)
             .as("cont_b"))
         .filter(greatest(col("cont_a"), col("cont_b")) >= ContainMin)
-        .localCheckpoint()
     }
     scored
       .orderBy(greatest(col("cont_a"), col("cont_b")).desc,

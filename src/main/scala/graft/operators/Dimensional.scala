@@ -51,7 +51,6 @@ object Dimensional {
             .as("p_freq"),
           Num.dsumExact(when(col("event_type") === "purchase",
             col("value"))).as("p_mon"))
-        .localCheckpoint()
     }
 
   /** Distinct (user, epoch-day) activity — the DAU/retention grain. */
@@ -61,7 +60,7 @@ object Dimensional {
       Tables.load(spark, dir, "events")
         .select(col("user_id"),
           expr(s"unix_micros(ts) div $DayUs").as("day"))
-        .distinct().localCheckpoint()
+        .distinct()
     }
 
   /** (user, epoch-week) exact purchase revenue in micro-units. */
@@ -74,7 +73,6 @@ object Dimensional {
           expr(s"unix_micros(ts) div ${DayUs * 7L}").as("week"))
         .agg((Num.dsumExact(col("value")) * lit(1000000L))
           .cast("decimal(38,0)").as("rev_u"))
-        .localCheckpoint()
     }
 
   /** The pinned #87 dimension + its chain stats — in production the
@@ -88,8 +86,7 @@ object Dimensional {
   private[graft] def scd2Artifact(spark: SparkSession,
       dir: String): Scd2Artifact =
     graft.CorpusCache.pinned(spark, dir, "events", "scd2_artifact")(
-        (a: Scd2Artifact) => a.dim) {
-      val dim = scd2Dim(spark, dir).localCheckpoint()
+        scd2Dim(spark, dir)) { dim =>
       val stats = dim.groupBy("ticker_id").agg(count(lit(1)).as("c"))
         .agg(sum(col("c")), max(col("c"))).head()
       if (stats.isNullAt(0)) Scd2Artifact(dim, 0L, 0L)
@@ -448,10 +445,7 @@ object Dimensional {
     * (VERDICT r13 #1) — one-agg exact below the size gate, the
     * blocked exact decomposition above it. */
   def funnelTimes(spark: SparkSession, dir: String): DataFrame = {
-    // PINNED: perUser is the user-grain collapse (one row per user —
-    // output-bounded, never event-bounded); four consumers below
-    // (per-stage count + percentile probe/fetch) would each re-run
-    // the event-scan window chain if left lazy
+    // pin: kept by the per-call A/B in CHANGES.md (funnel_times)
     val perUser = funnelPerUser(spark, dir).localCheckpoint()
     def stage(name: String, tCol: String): DataFrame = {
       val hours = perUser.filter(col(tCol).isNotNull)
@@ -506,11 +500,9 @@ object Dimensional {
     val matched = probes.join(touches, Seq("user_id", "t_block"))
       .filter(col("t_us") <= col("p_us") &&
         col("p_us") - col("t_us") <= LookbackUs)
-    // pinned at (conv, channel) grain — bounded by convs × |channels|
-    // — so the pair-grain `matched` set is consumed exactly ONCE and
-    // the anti-join below reads this collapse, not the pair set
     val perConvChan = matched.groupBy("conv_id", "channel")
       .agg(count(lit(1)).as("c"), first(col("value")).as("value"))
+      // pin: kept by the per-call A/B in CHANGES.md (attribution_linear)
       .localCheckpoint()
     val perConv = perConvChan.groupBy("conv_id")
       .agg(sum(col("c")).as("n"))
@@ -690,14 +682,14 @@ object Dimensional {
     * construction (spec-asserted).
     *
     * Shape: ONE distinct (user, day) collapse (map-side partial,
-    * skew-immune), pinned because the lag classification and the
-    * churn lead both read it; per-user windows then run over
+    * skew-immune) read by the lag classification and the churn
+    * lead; per-user windows then run over
     * ≤|days| rows regardless of raw stream skew. |days| output
     * rows. */
   def growthAccounting(spark: SparkSession, dir: String): DataFrame = {
     val ad = Tables.load(spark, dir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day"))
-      .distinct().localCheckpoint()
+      .distinct()
     val maxDay = ad.agg(max(col("day"))).head().getDate(0)
     val w = Window.partitionBy("user_id").orderBy("day")
     val flagged = ad

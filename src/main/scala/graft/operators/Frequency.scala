@@ -69,15 +69,8 @@ object Frequency {
     * key k" for ANY k (no key list, overestimate-bounded). A real
     * pipeline wants both. */
   def cmsFreq(spark: SparkSession, dir: String): DataFrame = {
-    // ONE scan: the key-grain table is |keys| rows and feeds the
-    // counter build, the probe selection and the estimate join — as a
-    // lazy lineage each consumer would re-scan and re-aggregate the
-    // full event stream (measured 7.6× vs the twin at ×100);
-    // localCheckpoint pins the bounded collapse (the tfidf postings
-    // pattern)
     val keyed = Tables.load(spark, dir, "events")
       .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
     // portable bucket hash: md5("cms:<row>:<key>") tail-8-hex, the
     // established cross-engine key (TrainExport.shuffleKey); one
     // explode fans each key to its d cells

@@ -135,7 +135,6 @@ object LmFilter {
     graft.CorpusCache.df(spark, dir, "documents", "bigram_counts") {
       bigramInstances(spark, dir)
         .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        .localCheckpoint()
     }
 
   /** Broadcast gate for the bigram-scoring join (round 16, VERDICT
@@ -181,8 +180,8 @@ object LmFilter {
     * Scale shape: the model is two hash aggregates at bigram-type
     * grain (bounded by vocab², partial-aggregated map-side — the
     * "the the"-style head bigrams collapse in the mapper), pinned
-    * once (localCheckpoint) because ctx counts and scoring both read
-    * it; scoring is one bigram-keyed hash join of the instance
+    * once per corpus ([[bigramCounts]]) because ctx counts and
+    * scoring both read it; scoring is one bigram-keyed hash join of the instance
     * stream against the model (broadcast-able when the vocab is
     * small; AQE decides) and one doc-grain aggregate. No windows, no
     * driver-side state — V is the single scalar collected, a bounded
@@ -268,7 +267,6 @@ object LmFilter {
           t => t =!= "")).as("tok"))
       .groupBy("lang", "tok")
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // pinned: feeds rank + the totals branch
     val totals = counts.groupBy("lang")
       .agg(count(lit(1)).as("n_types"), sum(col("cnt")).as("n_tokens"))
     val ranked = Rank.twoLevelRank(counts, Seq("lang"),

@@ -532,13 +532,9 @@ object Olap {
             col("o_orderpriority").as("bin")))).as("c"))
       .select(col("is_ref"), col("c.feature").as("feature"),
         col("c.bin").as("bin"))
-    // pinned: |features|×|bins| rows feeding BOTH the totals branch
-    // and the PSI aggregate — lazy, each would re-scan + re-explode
-    // the fact table
     val binCounts = cells.groupBy("feature", "bin")
       .agg(sum(col("is_ref").cast("long")).as("ref_n"),
         sum((!col("is_ref")).cast("long")).as("cur_n"))
-      .localCheckpoint()
     val totals = binCounts.groupBy("feature")
       .agg(sum(col("ref_n")).as("ref_t"), sum(col("cur_n")).as("cur_t"))
     binCounts.join(broadcast(totals), "feature")
@@ -586,9 +582,8 @@ object Olap {
           date_format(col("o_orderdate"), "yyyy-MM").as("val")))).as("c"))
       .select(col("c.column").as("column"),
         coalesce(col("c.val"), lit("<null>")).as("val"))
-    // pinned (column, value) grain — feeds totals AND the profile agg
     val vc = cells.groupBy("column", "val")
-      .agg(count(lit(1)).as("c")).localCheckpoint()
+      .agg(count(lit(1)).as("c"))
     val totals = vc.groupBy("column").agg(sum(col("c")).as("n"))
     vc.join(broadcast(totals), "column")
       .withColumn("p", col("c").cast("double") / col("n").cast("double"))

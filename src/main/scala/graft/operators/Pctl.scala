@@ -125,6 +125,7 @@ object Pctl {
     val blocks = v.withColumn("__blk", floor(col("__pv")))
       .groupBy(keyCols :+ col("__blk"): _*)
       .agg(count(lit(1)).as("__c"))
+      // pin: analysis only, cached per site; stats + geometry read it
       .localCheckpoint()
     val stats = blocks.groupBy(keyCols: _*)
       .agg(sum(col("__c")).as("__n"), max(col("__c")).as("__mb"))
@@ -290,6 +291,7 @@ object Pctl {
         val blocks = v.withColumn("__blk", floor(col("__pv")))
           .groupBy(keys.map(col) :+ col("__blk"): _*)
           .agg(count(lit(1)).as("__c"))
+          // pin: spec-only route hook, as analyze pins its blocks
           .localCheckpoint()
         blockedFetch(v, keys, ps, names,
           buildGeo(blocks, v.schema, keys, ps))

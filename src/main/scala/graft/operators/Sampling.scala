@@ -288,10 +288,10 @@ object Sampling {
           25, 8), 16, 10).cast("long").as("skey"))
     val k2 = 2L * SysK
     val summed =
-      if (docs.count() <= Rank.SingleTaskMax) {
+      if (Tables.rowCount(spark, dir, "documents") <= Rank.SingleTaskMax) {
         // adaptive plan (the scd2_lookup pattern): one partition, two
         // frame sums — the decomposition's extra exchanges dominate
-        // at dim-sized corpora (footer-only count)
+        // at dim-sized corpora
         val W = org.apache.spark.sql.expressions.Window
         val ord = W.partitionBy(lit(0))
           .orderBy(col("skey"), col("doc_id"))

@@ -70,17 +70,11 @@ object Search {
     val tfCols = QueryTerms.zipWithIndex.map { case (q, i) =>
       sum(when(col("term") === lit(q), 1L).otherwise(0L)).as(s"tf$i")
     }
-    // ONE tokenization pass over the corpus: the per-doc aggregate is
-    // ~40 B/doc of scalars, so materializing it (localCheckpoint) and
-    // serving both the stats reduction and the scoring pass from it
-    // beats re-running the explode+agg per branch (the lazy plan
-    // scans and tokenizes the corpus once per consumer). The n_docs
-    // count below still touches documents, but a bare count answers
-    // from parquet footer metadata, not data pages.
+    // the n_docs count below touches documents, but a bare count
+    // answers from parquet footer metadata, not data pages
     val perDoc = termStream(docs)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("dl"), tfCols: _*)
-      .localCheckpoint()
     val dfCols = QueryTerms.indices.map { i =>
       sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i")
     }
@@ -134,16 +128,10 @@ object Search {
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
-    // ONE tokenize+weigh pass: the weighted postings feed FOUR lazy
-    // branches (norms + both self-join sides) — without the
-    // materialization each branch re-tokenizes the corpus (the bm25
-    // localCheckpoint rationale, ×4). Postings are (doc, term, df, w)
-    // scalars, ~tens of bytes per token instance.
     val w = tf.join(dfT, "term").crossJoin(broadcast(n))
       .withColumn("w", col("tf").cast("double") *
         log(lit(1d) + col("n_docs").cast("double") / col("df").cast("double")))
       .select("doc_id", "term", "df", "w")
-      .localCheckpoint()
     val norms = w.groupBy("doc_id")
       .agg(sqrt(Num.dsum(col("w") * col("w"))).as("nrm"))
     val idx = w.filter(col("df") <= SimDfCap)
@@ -246,7 +234,8 @@ object Search {
           t => t =!= "")).as("tok"))
       .groupBy("doc_id", "tok")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // pinned: df branch + the scoring join
+      // pin: kept by the per-call A/B in CHANGES.md (keyword_extract)
+      .localCheckpoint()
     val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nRow))
       .withColumn("idf9",

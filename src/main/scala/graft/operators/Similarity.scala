@@ -87,14 +87,10 @@ object Similarity {
     val den = col("na") * col("nb")
     val cos = when(den === 0d, lit(null))
       .otherwise(dot(col("va"), col("vb")) / den)
-    // pin the qualifying pairs ONCE (round 21, JobProfile): the
-    // n_pairs and n_docs branches each re-ran the full O(sample²)
-    // cosine scan (~2M kernel calls twice per rep); the checkpoint
-    // holds only the lean (ia, ib, c) survivors of the lowest
-    // threshold — bounded by the curve's own report
     val pairs = a.join(broadcast(b), col("ia") < col("ib"))
       .select(col("ia"), col("ib"), round(cos, 6).as("c"))
       .filter(col("c") >= CurveThresholds.min)
+      // pin: kept by the per-call A/B in CHANGES.md (dedup_curve)
       .localCheckpoint()
     val spine = spark.createDataFrame(
       CurveThresholds.map(Tuple1(_))).toDF("threshold")
@@ -824,8 +820,8 @@ object Similarity {
   // against the trained codebooks — and filing codes under their IVF
   // cells — is the FAISS "add" phase, a deterministic derivative of
   // (corpus, ModelStore codebooks) exactly like the persisted IVF
-  // postings of #119 ann_indexed. Built once per corpus, pinned via
-  // localCheckpoint as CorpusCache frames, so cold mode
+  // postings of #119 ann_indexed. Built once per corpus as pinned
+  // CorpusCache frames, so cold mode
   // (SPARK_GRAFT_COLD=1) clears and re-pays the build like every
   // other model artifact. Previously ann_pq AND ann_ivfpq re-encoded
   // all vectors (subvector join + per-(vec,m) argmax window +
@@ -837,35 +833,31 @@ object Similarity {
     * so the double accumulation order is fixed. */
   private def pqEncoded(spark: SparkSession, dir: String): DataFrame =
     graft.CorpusCache.df(spark, dir, "embeddings", "pq_encoded") {
-      pqEncodedCompute(spark, dir).localCheckpoint()
+      // cn2 rides as EXACT integer micro-units (round 15): the
+      // reconstruction norm² is then an order-free integer sum — the
+      // same value on any partitioning and in the DuckDB oracle's
+      // unordered SUM (whole-number doubles < 2^53 add exactly).
+      val cbn = broadcast(trainedPqCodebooks(spark, dir)
+        .withColumn("cn2", dot(col("cvec"), col("cvec")))
+        .withColumn("cn2i",
+          round(dot(col("cvec"), col("cvec")) * 1e6).cast("long")))
+      val aw = org.apache.spark.sql.expressions.Window
+        .partitionBy("vec_id", "m").orderBy(col("score").desc, col("cid").asc)
+      subVectors(emb(spark, dir).select(col("vec_id"), col("vec")))
+        .join(cbn, "m")
+        // 6 dp-rounded argmax — same discipline as the training loop
+        .withColumn("score",
+          round(dot(col("sv"), col("cvec")) - col("cn2") / 2d, 6))
+        .withColumn("rn", row_number().over(aw))
+        .filter(col("rn") === 1)
+        .groupBy("vec_id")
+        .agg(
+          expr("transform(array_sort(collect_list(struct(m, cid, cn2i)))," +
+            " x -> x.cid)").as("codes"),
+          (expr("aggregate(transform(array_sort(collect_list(struct(m, cid," +
+            " cn2i))), x -> x.cn2i), 0L, (a, x) -> a + x)").cast("double")
+            / 1e6).as("rnorm2"))
     }
-
-  private def pqEncodedCompute(spark: SparkSession, dir: String): DataFrame = {
-    // cn2 rides as EXACT integer micro-units (round 15): the
-    // reconstruction norm² is then an order-free integer sum — the
-    // same value on any partitioning and in the DuckDB oracle's
-    // unordered SUM (whole-number doubles < 2^53 add exactly).
-    val cbn = broadcast(trainedPqCodebooks(spark, dir)
-      .withColumn("cn2", dot(col("cvec"), col("cvec")))
-      .withColumn("cn2i",
-        round(dot(col("cvec"), col("cvec")) * 1e6).cast("long")))
-    val aw = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id", "m").orderBy(col("score").desc, col("cid").asc)
-    subVectors(emb(spark, dir).select(col("vec_id"), col("vec")))
-      .join(cbn, "m")
-      // 6 dp-rounded argmax — same discipline as the training loop
-      .withColumn("score",
-        round(dot(col("sv"), col("cvec")) - col("cn2") / 2d, 6))
-      .withColumn("rn", row_number().over(aw))
-      .filter(col("rn") === 1)
-      .groupBy("vec_id")
-      .agg(
-        expr("transform(array_sort(collect_list(struct(m, cid, cn2i)))," +
-          " x -> x.cid)").as("codes"),
-        (expr("aggregate(transform(array_sort(collect_list(struct(m, cid," +
-          " cn2i))), x -> x.cn2i), 0L, (a, x) -> a + x)").cast("double")
-          / 1e6).as("rnorm2"))
-  }
 
   /** Broadcast-able PQ query side: per query the flat ADC lookup
     * table lut[m*K + cid] = q_m · c_{m,cid} (cells of centroids
@@ -971,7 +963,7 @@ object Similarity {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= IvfAssign)
         .select(col("c_id").as("cell"), col("vec_id"))
-      assigned.join(pqEncoded(spark, dir), "vec_id").localCheckpoint()
+      assigned.join(pqEncoded(spark, dir), "vec_id")
     }
     // query side: the same adaptive cell probing as annIvf
     val qside = broadcast(pqQuerySide(spark, dir))

@@ -80,12 +80,9 @@ object Skew {
     * windows are (type, log-block)-bounded; offsets are types ×
     * blocks rows, broadcast. */
   def skewReport(spark: SparkSession, dir: String): DataFrame = {
-    // pinned: the key-grain collapse feeds both the local-rank and
-    // the offsets branches — lazy, each re-scans the fact table
     val keyed = Tables.load(spark, dir, "events")
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
     // G = (Σ(2r−1)x − n·Σx) / (n·Σx), r = 1..n ascending by (cnt,
     // key); numerator/denominator stay exact decimal until ONE
     // terminal double division

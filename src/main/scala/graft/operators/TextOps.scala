@@ -272,7 +272,6 @@ object TextOps {
         explode(graft.functions.TextFunctions.shingleHashes(col("text"),
           ShingleWidth)).as("sh"))
     val bench = sh.filter(col("doc_id") % 2 === 0).select("sh").distinct()
-      .localCheckpoint()
     val corpus = sh.filter(col("doc_id") % 2 === 1)
     val candidates =
       if (!useBloom) corpus
@@ -325,11 +324,8 @@ object TextOps {
       .select(col("doc_id"),
         explode(graft.functions.TextFunctions.shingleHashes(col("text"),
           ShingleWidth)).as("sh"))
-    // the benchmark hash set is bounded — materialize it once and
-    // serve BOTH the bloom build and the exact join from it (two lazy
-    // consumers would each re-scan and re-shingle the benchmark docs)
     val bench = sh.filter(col("doc_id") < BenchDocMax).select("sh")
-      .distinct().localCheckpoint()
+      .distinct()
     // finished-sketch-as-literal, not a crossJoined binary column:
     // see contaminationAtScale — a column probe re-copies the bitmap
     // per row
@@ -452,7 +448,8 @@ object TextOps {
         conv(substring(md5(col("sh")), 25, 8), 16, 10).cast("long")
           .as("h"))
       .distinct()
-      .localCheckpoint() // pinned: df branch + the join-back
+      // pin: kept by the per-call A/B in CHANGES.md (novelty_score)
+      .localCheckpoint()
     val df = dd.groupBy("h").agg(count(lit(1)).as("df"))
     dd.join(df, "h")
       .groupBy("doc_id")

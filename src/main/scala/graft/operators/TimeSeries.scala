@@ -330,12 +330,11 @@ object TimeSeries {
     * everything after is calendar-bound (2.4k rows here, 36.5k rows
     * for a century). The spine explode is one broadcast row. */
   def seasonalDecomp(spark: SparkSession, dir: String): DataFrame = {
-    // pinned: the calendar-bounded day table feeds the spine bounds
-    // AND the series join — lazy, both would re-scan orders
     val daily = Tables.load(spark, dir, "orders")
       .groupBy(to_date(col("o_orderdate")).as("day"))
       .agg((sum(col("o_totalprice").cast("decimal(18,6)")) * 1000000L)
         .cast("long").as("rev_u"))
+      // pin: kept by the per-call A/B in CHANGES.md (seasonal_decomp)
       .localCheckpoint()
     val spine = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(explode(sequence(col("d0"), col("d1"))).as("day"))

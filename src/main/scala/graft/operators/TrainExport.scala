@@ -366,8 +366,8 @@ object TrainExport {
     val order = Seq(col("is_new").asc, col("skey").asc,
       col("doc_id").asc)
     val ranked =
-      if (docs.count() <= Rank.SingleTaskMax) {
-        // adaptive plan (the scd2_lookup pattern; footer-only count)
+      if (Tables.rowCount(spark, dir, "documents") <= Rank.SingleTaskMax) {
+        // adaptive plan (the scd2_lookup pattern)
         val W = org.apache.spark.sql.expressions.Window
         docs.withColumn("ordinal",
           row_number().over(W.orderBy(order: _*)).cast("long"))

@@ -4,11 +4,16 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
 import graft.operators.{Bpe, Components}
+import graft.sources.Tables
 
 /** The corpus-artifact cache contract (see [[CorpusCache]]): the
   * unreadable-mtime policy, the per-site cap, build job descriptions,
-  * and that no operator keeps a cache of its own. */
+  * the pin rule, and that no operator keeps a cache or an unexplained
+  * pin of its own. */
 class CorpusCacheSpec extends SparkTestBase {
 
   test("a table without a readable mtime is rebuilt on every call") {
@@ -72,6 +77,71 @@ class CorpusCacheSpec extends SparkTestBase {
       assert(jobDescriptions(Components.basketAdjacency(spark, SfDir))
         .isEmpty)
     } finally sc.setJobDescription(null)
+  }
+
+  private def lazyLangCounts(): DataFrame =
+    Tables.load(spark, SfDir, "documents").groupBy("lang").count()
+
+  test("a df build returning a lazy frame is served pinned; warm runs no job") {
+    CorpusCache.clearAll()
+    var served: DataFrame = null
+    val cold = jobDescriptions {
+      served = CorpusCache.df(spark, SfDir, "documents", "pin_spec_df")(
+        lazyLangCounts())
+    }
+    assert(served.queryExecution.logical.isInstanceOf[LogicalRDD],
+      served.queryExecution.logical.getClass.getName)
+    assert(cold.nonEmpty &&
+      cold.forall(_ == "graft:artifact:pin_spec_df"), cold.mkString(", "))
+    var warm: DataFrame = null
+    assert(jobDescriptions {
+      warm = CorpusCache.df(spark, SfDir, "documents", "pin_spec_df")(
+        lazyLangCounts())
+    }.isEmpty)
+    assert(warm eq served)
+    assert(served.collect().toSet === lazyLangCounts().collect().toSet)
+  }
+
+  test("a pinned build's derive runs once per build, over the pinned frame") {
+    CorpusCache.clearAll()
+    var derives = 0
+    def get(): (DataFrame, Long) =
+      CorpusCache.pinned(spark, SfDir, "documents", "pin_spec_derive")(
+        lazyLangCounts()) { f =>
+        derives += 1
+        (f, f.count())
+      }
+    val (frame, n) = get()
+    assert(derives === 1)
+    assert(frame.queryExecution.logical.isInstanceOf[LogicalRDD])
+    assert(n === lazyLangCounts().count())
+    assert(get()._1 eq frame)
+    assert(derives === 1)
+    // a new build derives again, from its own pinned frame
+    CorpusCache.clearAll()
+    val (rebuilt, _) = get()
+    assert(derives === 2)
+    assert(!(rebuilt eq frame))
+  }
+
+  test("every localCheckpoint() outside CorpusCache carries a // pin: reason") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val pins = files.filter { f: Path =>
+      root.relativize(f).toString != "graft/CorpusCache.scala"
+    }.flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+      lines.indices.filter(i => lines(i).contains(".localCheckpoint("))
+        .map(i => (s"${root.relativize(f)}:${i + 1}",
+          lines(i).contains("// pin:") ||
+            (i > 0 && lines(i - 1).trim.startsWith("// pin:"))))
+    }
+    assert(files.size > 50)
+    assert(pins.nonEmpty)
+    val bare = pins.filterNot(_._2).map(_._1)
+    assert(bare.isEmpty, bare.mkString(", "))
   }
 
   test("no cache map or cap outside CorpusCache in operators/ and pipeline/") {
