@@ -43,17 +43,6 @@ object GraftFunctions {
         s"$fn: $param must be an integer literal, got $x")
     }
   }
-  private def longArg(e: Expression, fn: String, param: String): Long = {
-    require(e.foldable, s"$fn: $param must be a literal")
-    e.eval() match {
-      case n: Number => n.longValue
-      case null =>
-        throw new IllegalArgumentException(s"$fn: $param must not be NULL")
-      case x => throw new IllegalArgumentException(
-        s"$fn: $param must be an integer literal, got $x")
-    }
-  }
-
   /** (name, doc, builder) for every graft SQL function. */
   val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("cosine_sim",
@@ -65,27 +54,28 @@ object GraftFunctions {
     ("fnv64",
       info("fnv64", "fnv64(s) - FNV-1a 64-bit fingerprint of a string"),
       (es: Seq[Expression]) => Fnv64(es(0))),
-    ("minhash_sig",
-      info("minhash_sig", "minhash_sig(s, k, w) - k-element MinHash signature over word w-shingles"),
-      (es: Seq[Expression]) => MinHashSig(es(0),
-        intArg(es(1), "minhash_sig", "k"), intArg(es(2), "minhash_sig", "w"))),
-    ("simhash64",
-      info("simhash64", "simhash64(s) - 64-bit SimHash of the whitespace tokens"),
-      (es: Seq[Expression]) => SimHash64(es(0))),
+    ("portable_minhash_sig",
+      info("portable_minhash_sig",
+        "portable_minhash_sig(s, k) - k-element md5-based MinHash signature over word 2-shingles"),
+      (es: Seq[Expression]) => PortableMinHashSig(es(0),
+        intArg(es(1), "portable_minhash_sig", "k"))),
+    ("portable_simhash32",
+      info("portable_simhash32",
+        "portable_simhash32(s) - md5-based 32-bit SimHash of the whitespace tokens"),
+      (es: Seq[Expression]) => PortableSimHash32(es(0))),
     ("char_ngrams",
       info("char_ngrams", "char_ngrams(s, n) - distinct lowercase character n-grams"),
       (es: Seq[Expression]) => CharNgrams(es(0), intArg(es(1), "char_ngrams", "n"))),
     ("sig_agree",
       info("sig_agree", "sig_agree(a, b) - agreeing positions of two long-array signatures"),
       (es: Seq[Expression]) => LongArrayAgree(es(0), es(1))),
-    ("sign_band_keys",
-      info("sign_band_keys",
-        "sign_band_keys(vec, seed, dim, bands, bits) - sign-LSH band keys of a double vector"),
-      (es: Seq[Expression]) => SignBandKeys(es(0),
-        longArg(es(1), "sign_band_keys", "seed"),
-        intArg(es(2), "sign_band_keys", "dim"),
-        intArg(es(3), "sign_band_keys", "bands"),
-        intArg(es(4), "sign_band_keys", "bits"))),
+    ("portable_sign_band_keys",
+      info("portable_sign_band_keys",
+        "portable_sign_band_keys(vec, bands, bits, dim) - md5-based sign-LSH band keys of a double vector"),
+      (es: Seq[Expression]) => PortableSignBandKeys(es(0),
+        intArg(es(1), "portable_sign_band_keys", "bands"),
+        intArg(es(2), "portable_sign_band_keys", "bits"),
+        intArg(es(3), "portable_sign_band_keys", "dim"))),
     ("sentiment_counts",
       info("sentiment_counts",
         "sentiment_counts(s) - struct(n_pos, n_neg, n_tok) lexicon sentiment counts"),

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
-import graft.functions.expressions.{LongArrayAgree, MinHashSig, SentimentCounts, SimHash64}
+import graft.functions.expressions.{LongArrayAgree, SentimentCounts}
 
 /** Text-analysis kernels (SURVEY.md §2 #27-29), re-expressing the
   * reference's "text analyzed data" goal (/root/reference/README.md:3)
@@ -17,15 +17,6 @@ object TextFunctions {
 
   /** Whitespace tokens of trimmed, lowercased text. */
   def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
-
-  /** MinHash signature (array<long>, length k) over word w-shingles —
-    * single-pass codegen'd kernel (see SignatureExpressions). */
-  def minhashSig(text: Column, k: Int, w: Int): Column =
-    GraftSqlBridge.column(MinHashSig(GraftSqlBridge.expression(text), k, w))
-
-  /** 64-bit SimHash of the whitespace tokens, packed into a long. */
-  def simhash64(text: Column): Column =
-    GraftSqlBridge.column(SimHash64(GraftSqlBridge.expression(text)))
 
   /** Portable (md5-based, oracle-replicable) MinHash signature —
     * see [[graft.functions.expressions.PortableMinHashSig]]. */

@@ -4,12 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
-import graft.functions.expressions.{CosineSim, DotProduct, Fnv64, IntCosine, PqAdc, PortableSignBandKeys, QuantizeI8, RpCoords, SignBandKeys}
+import graft.functions.expressions.{CosineSim, DotProduct, Fnv64, IntCosine, PqAdc, PortableSignBandKeys, QuantizeI8, RpCoords}
 
 /** Column-level vector API over the custom Catalyst kernels plus the
   * random-hyperplane LSH used by the similarity operators
   * (SURVEY.md §2 #23-26). Everything is deterministic: hyperplanes
-  * come from a fixed-seed PRNG baked at class-load. */
+  * are derived from md5 inside the kernel. */
 object VectorFunctions {
 
   private def c(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
@@ -44,69 +44,13 @@ object VectorFunctions {
   def pqAdc(codes: Column, lut: Column, k: Int): Column =
     c(PqAdc(e(codes), e(lut), k))
 
-  /** Deterministic random hyperplanes (unit-free Gaussian) for
-    * sign-LSH. Fixed seed → identical buckets on every run/executor. */
-  def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(nPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** Sign-LSH signature: bit i = (v · plane_i) > 0, packed into an
-    * int. nPlanes ≤ 31. One pass per plane; planes are literals so
-    * the whole signature stays in codegen. */
-  def lshSignature(vec: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex
-      .map { case (p, i) =>
-        when(dot(vec, typedLit(p)) > 0d, lit(1 << i)).otherwise(lit(0))
-      }
-      .reduce(_ + _)
-
-  /** Split a packed signature into `bands` keys of `bitsPerBand` bits
-    * each; near-dup candidates = any shared (band, key). */
-  def bandKeys(sig: Column, bands: Int, bitsPerBand: Int): Column = {
-    val mask = (1 << bitsPerBand) - 1
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(sig, b * bitsPerBand).bitwiseAND(lit(mask)).as("key"))
-    }: _*)
-  }
-
-  /** All sign-LSH band keys in one codegen'd kernel call —
-    * array<long>, element b = band b's `bits`-bit key. The plane
-    * matrix is derived from the seed inside the kernel (per-JVM
-    * cache), NOT embedded as bands×bits literal expressions, which
-    * would bloat every generated stage with the banding projection
-    * and cost seconds of Janino compile time per query. Produces the
-    * same keys as `bandKeysFromPlanes(hyperplanes(bands*bits, dim,
-    * seed), …)`. Use with `posexplode` → (band, key). */
-  def signBandKeys(vec: Column, bands: Int, bits: Int, seed: Long = 42L,
-      dim: Int = 64): Column =
-    c(SignBandKeys(e(vec), seed, dim, bands, bits))
-
   /** PORTABLE sign-LSH band keys — integer md5-affine hyperplanes +
     * 6 dp-quantized components + exact integer dots, so bucket
     * membership is replicable in any engine with `md5` (see
     * PortableSignBandKeys). The production LSH operators (#24, #26)
-    * run on this form so their full pipelines are DuckDB-oracled;
-    * same kernel/codegen discipline as [[signBandKeys]]. */
+    * run on this form so their full pipelines are DuckDB-oracled.
+    * Use with `posexplode` → (band, key). */
   def portableSignBandKeys(vec: Column, bands: Int, bits: Int,
       dim: Int = 64): Column =
     c(PortableSignBandKeys(e(vec), bands, bits, dim))
-
-  /** Per-band LSH keys straight from the hyperplanes (no packed-int
-    * cap on plane count): band b's key is the `bitsPerBand`-bit sign
-    * pattern of planes [b·r, (b+1)·r). L×r tunes the recall/candidate
-    * trade-off per corpus — more bands raise recall, more bits shrink
-    * buckets. */
-  def bandKeysFromPlanes(vec: Column, planes: Seq[Seq[Double]],
-      bands: Int, bitsPerBand: Int): Column = {
-    require(planes.size >= bands * bitsPerBand, "not enough planes")
-    array((0 until bands).map { b =>
-      val key = (0 until bitsPerBand).map { i =>
-        when(dot(vec, typedLit(planes(b * bitsPerBand + i))) > 0d,
-          lit(1 << i)).otherwise(lit(0))
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), key.as("key"))
-    }: _*)
-  }
 }

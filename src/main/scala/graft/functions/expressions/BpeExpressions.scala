@@ -19,9 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * counted (consistent with the `ws` metric it sits beside).
   *
   * The merge table rides IN the expression (a few hundred packed
-  * longs — serialized to executors with the plan, like SignBandKeys'
-  * seed), and the per-row kernel is a codegen'd static call on a
-  * per-instance rank map. Pretokens are word-sized, so the
+  * longs — serialized to executors with the plan), and the per-row
+  * kernel is a codegen'd static call on a per-instance rank map. Pretokens are word-sized, so the
   * rank-scan-per-merge encode is O(len²) only in the worst
   * single-word case — bounded and allocation-light. */
 case class BpeTokenCount(child: Expression, merges: Seq[Long])

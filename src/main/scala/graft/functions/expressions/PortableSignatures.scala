@@ -8,11 +8,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** PORTABLE-hash signature kernels (SURVEY.md §2 #20-21, round 11).
+/** PORTABLE-hash signature kernels (SURVEY.md §2 #20-21, #24, #26),
+  * the one near-dup signature family.
   *
-  * [[MinHashSig]]/[[SimHash64]] are the 100 TB throughput path, but
-  * their seeded-XXH64 family exists in no other engine, so queries
-  * built on them can never be verified value-for-value by an
+  * A seeded hash such as Spark's XXH64 exists in no other engine, so
+  * queries built on it can never be verified value-for-value by an
   * independent oracle. These kernels compute signatures from a hash
   * BOTH Spark and DuckDB evaluate natively — the md5 hex tail as a
   * 32-bit value, `conv(substr(md5(x),25,8),16,10)` ≡
@@ -265,7 +265,8 @@ object PortableSimHash32 {
   * sign pattern of planes [b·bits, (b+1)·bits), bit i set iff
   * dot > 0. Plane matrix is cached per JVM (re-derived from (bands ×
   * bits, dim) — nothing ships with the task), generated code is one
-  * static call, same codegen discipline as [[SignBandKeys]]. */
+  * static call: per-plane literal expressions would bloat every
+  * generated stage that embeds the banding projection. */
 case class PortableSignBandKeys(child: Expression, bands: Int,
     bits: Int, dim: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

@@ -62,14 +62,14 @@ object SentimentCounts {
   private val NegH: Array[Long] = NegWords.map(wordHash).toArray
 
   /** Single-pass kernel: token XXH64s (shared tokenizer,
-    * [[MinHashSig.tokenHashes]]) matched against the pre-hashed
+    * [[ShingleHashes.tokenHashes]]) matched against the pre-hashed
     * lexicons by linear scan (|lexicon| ≤ 8 longs — cheaper than any
     * set structure). Hash-equality equals string-equality up to XXH64
     * collisions (~2^-64 per pair; the oracle compares strings, so a
     * collision would surface as a hash mismatch — none possible on
     * these vocabularies, verified by the unit test vectors). */
   def compute(text: UTF8String): InternalRow = {
-    val th = MinHashSig.tokenHashes(text)
+    val th = ShingleHashes.tokenHashes(text)
     var pos = 0
     var neg = 0
     var i = 0

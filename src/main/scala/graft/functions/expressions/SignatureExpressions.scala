@@ -9,50 +9,43 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Document-signature kernels for near-dup detection (SURVEY.md §2
-  * #20-21). Composing these from built-in higher-order functions
+/** Document-signature kernels (SURVEY.md §2 #20-22, #71).
+  * Composing these from built-in higher-order functions
   * (transform/aggregate lambdas) is correct but catastrophically slow:
   * HOFs are interpreted (CodegenFallback) and nested lambdas re-
-  * evaluate their captured subtrees per element, so a K×bands×shingles
-  * nest re-tokenizes each document thousands of times. These kernels
-  * instead run tokenize → shingle → K seeded hashes in ONE tight JVM
-  * loop per row, invoked from generated code via a static call — the
-  * per-row cost at 100 TB is a single virtual-free method call.
-  *
-  * Hash family: ONE XXH64 over the shingle's UTF-8 bytes, then K
-  * multiply-add permutations g_j(h) = A_j·h + B_j (mod 2^64, A_j odd
-  * → bijective) with A/B drawn from SplitMix64. Hashing once and
-  * permuting K times costs ~K× less than K seeded XXH64 passes and
-  * is the standard minwise-family construction (cf. Spark MLlib's
-  * MinHashLSH, which uses the same a·x+b form over a prime field).
-  * Wrap-around arithmetic is fine here: these are plain JVM longs
-  * inside the kernel, not ANSI SQL expressions.
+  * evaluate their captured subtrees per element. These kernels
+  * instead run one tight JVM loop per row, invoked from generated
+  * code via a static call. The near-dup signatures themselves
+  * (MinHash, SimHash, sign-LSH band keys) are the portable kernels
+  * in PortableSignatures.scala.
   */
 
-/** MinHash signature: array<long> of length k; element j is the min
-  * over distinct lowercase word w-shingles of XXH64(shingle, seed=j).
-  * Documents with fewer than w tokens get an empty array (no shingle
-  * → no signature → never a near-dup candidate). */
-case class MinHashSig(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+/** Distinct hashes of the lowercase word w-shingles (array<long>) —
+  * the decontamination kernel (SURVEY.md §2 #71). One XXH64 per
+  * token, FNV-combine per window, fmix avalanche, so no shingle
+  * string ever materializes: the per-doc cost is one tokenize pass
+  * + one rolling combine. Distinctness is
+  * applied inside the kernel (per doc), so downstream needs no
+  * per-doc distinct. Two different shingles collide with probability
+  * ~2^-64 — at any corpus size the expected false-share count is
+  * vanishingly below one, which is why every production
+  * decontamination pipeline compares n-gram hashes, not strings. */
+case class ShingleHashes(child: Expression, w: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
-    MinHashSig.compute(v.asInstanceOf[UTF8String], k, w)
+    ShingleHashes.compute(v.asInstanceOf[UTF8String], w)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.MinHashSig.compute($c, $k, $w);")
+      s"${ev.value} = graft.functions.expressions.ShingleHashes.compute($c, $w);")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-object MinHashSig {
-  /** Max permutation count the static A/B tables cover. */
-  val MaxK = 256
-
+object ShingleHashes {
   /** One XXH64 per lowercased whitespace token, computed directly on
     * the UTF-8 bytes — no String, StringBuilder, or regex allocation
     * in the per-row path (this scan IS the per-document cost of the
-    * dedup operators at 100 TB). ASCII A-Z lowercased in place;
+    * decontamination and sentiment operators). ASCII A-Z lowercased in place;
     * multi-byte UTF-8 sequences pass through untouched. Whitespace =
     * the Java regex \s class (space, \t, \n, \x0B, \f, \r), so token
     * boundaries match the previous split("\\s+") form. */
@@ -86,8 +79,7 @@ object MinHashSig {
     if (m == out.length) out else java.util.Arrays.copyOf(out, m)
   }
 
-  // SplitMix64 finalizer — avalanches the combined shingle hash so
-  // the downstream multiply-add permutations see uniform input.
+  // SplitMix64 finalizer — avalanches the combined shingle hash.
   @inline private[expressions] def fmix(z0: Long): Long = {
     var z = z0
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
@@ -95,79 +87,8 @@ object MinHashSig {
     z ^ (z >>> 31)
   }
 
-  // SplitMix64 — the standard seed-expansion mixer (public domain,
-  // Steele et al., "Fast Splittable Pseudorandom Number Generators").
-  private def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-  private val MixA: Array[Long] =
-    Array.tabulate(MaxK)(j => splitmix64(2L * j) | 1L) // odd → bijective
-  private val MixB: Array[Long] =
-    Array.tabulate(MaxK)(j => splitmix64(2L * j + 1))
-
-  /** Single-pass kernel, called from both interpreted and generated
-    * paths. Deterministic for a given (text, k, w). A shingle's hash
-    * is the avalanched combination of its tokens' hashes (one XXH64
-    * per TOKEN, not per shingle×K) — distinct token sequences
-    * collide only with hash probability, and each distinct shingle
-    * hash feeds the K multiply-add permutations. */
-  def compute(text: UTF8String, k: Int, w: Int): ArrayData = {
-    require(k <= MaxK, s"k=$k exceeds MaxK=$MaxK")
-    val th = tokenHashes(text)
-    // w <= 0 must not degenerate to one constant empty-window hash
-    // per doc (every doc would minhash-match every other) — same
-    // guard as ShingleHashes
-    if (w <= 0 || th.length < w)
-      return new GenericArrayData(Array.empty[Long])
-    val seen = new java.util.HashSet[java.lang.Long]()
-    val mins = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i + w <= th.length) {
-      var h = 0x27d4eb2f165667c5L // arbitrary odd seed
-      var j = i
-      while (j < i + w) { h = (h ^ th(j)) * 0x100000001b3L; j += 1 }
-      h = fmix(h)
-      if (seen.add(h)) {
-        var s = 0
-        while (s < k) {
-          val v = MixA(s) * h + MixB(s)
-          if (v < mins(s)) mins(s) = v
-          s += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-}
-
-/** Distinct hashes of the lowercase word w-shingles (array<long>) —
-  * the decontamination kernel (SURVEY.md §2 #71). Same hash family as
-  * [[MinHashSig]] (one XXH64 per token, FNV-combine per window, fmix
-  * avalanche), so no shingle string ever materializes: the per-doc
-  * cost is one tokenize pass + one rolling combine. Distinctness is
-  * applied inside the kernel (per doc), so downstream needs no
-  * per-doc distinct. Two different shingles collide with probability
-  * ~2^-64 — at any corpus size the expected false-share count is
-  * vanishingly below one, which is why every production
-  * decontamination pipeline compares n-gram hashes, not strings. */
-case class ShingleHashes(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    ShingleHashes.compute(v.asInstanceOf[UTF8String], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.ShingleHashes.compute($c, $w);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ShingleHashes {
   def compute(text: UTF8String, w: Int): ArrayData = {
-    val th = MinHashSig.tokenHashes(text)
+    val th = tokenHashes(text)
     // w <= 0 must not degenerate to "one empty-window hash per doc"
     // (every doc would share the constant fmix(seed) shingle)
     if (w <= 0 || th.length < w)
@@ -175,10 +96,10 @@ object ShingleHashes {
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     var i = 0
     while (i + w <= th.length) {
-      var h = 0x27d4eb2f165667c5L // same seed/combine as MinHashSig
+      var h = 0x27d4eb2f165667c5L // arbitrary odd seed
       var j = i
       while (j < i + w) { h = (h ^ th(j)) * 0x100000001b3L; j += 1 }
-      seen.add(MinHashSig.fmix(h))
+      seen.add(fmix(h))
       i += 1
     }
     val out = new Array[Long](seen.size)
@@ -186,21 +107,6 @@ object ShingleHashes {
     while (it.hasNext) { out(k) = it.next(); k += 1 }
     new GenericArrayData(out)
   }
-}
-
-/** 64-bit SimHash of the lowercase whitespace tokens: bit b of the
-  * result is 1 iff the sum over tokens of ±1 (sign = bit b of
-  * XXH64(token, seed=0)) is ≥ 0. Empty text → all ties → all bits 1
-  * (deterministic). */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    SimHash64.compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.SimHash64.compute($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Distinct character n-grams of the lowercased text (array<string>,
@@ -458,30 +364,5 @@ object LongArrayAgree {
       i += 1
     }
     agree
-  }
-}
-
-object SimHash64 {
-  def compute(text: UTF8String): Long = {
-    // token hashes come from the shared byte-level scan (same XXH64
-    // over the same lowercased token bytes as before — SimHash values
-    // are unchanged for ASCII text); duplicates kept: frequency
-    // weights the bit votes.
-    val th = MinHashSig.tokenHashes(text)
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < th.length) {
-      val h = th(i)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) >= 0) sig |= (1L << b); b += 1 }
-    sig
   }
 }

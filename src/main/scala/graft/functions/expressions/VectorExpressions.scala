@@ -88,68 +88,6 @@ case class CosineSim(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** All sign-LSH band keys of a vector in ONE kernel call:
-  * array<long> of length `bands`, element b = the `bits`-bit sign
-  * pattern of hyperplanes [b·bits, (b+1)·bits). Composing this from
-  * per-plane DotProduct literals is semantically identical but
-  * catastrophic for codegen: bands×bits literal array expressions
-  * bloat every generated stage that embeds the banding projection,
-  * and Janino recompiles that stage per query plan — seconds of
-  * compile time per stage at ANY data size. Here the plane matrix is
-  * NOT part of the expression tree: it is re-derived from (seed,
-  * nPlanes, dim) via the fixed-seed Gaussian PRNG and cached per JVM
-  * (deterministic on every executor — nothing ships with the task),
-  * and the generated code is one static call. */
-case class SignBandKeys(child: Expression, seed: Long, dim: Int,
-    bands: Int, bits: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    SignBandKeys.compute(v.asInstanceOf[ArrayData], seed, dim, bands, bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.SignBandKeys.compute(" +
-        s"$c, ${seed}L, $dim, $bands, $bits);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SignBandKeys {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int), Array[Double]]
-
-  /** Flattened row-major plane matrix — the exact sequence
-    * `VectorFunctions.hyperplanes(n, dim, seed)` produces, so bucket
-    * assignments match the Column-API banding bit for bit. */
-  def planesFlat(seed: Long, n: Int, dim: Int): Array[Double] =
-    cache.computeIfAbsent((seed, n, dim), _ => {
-      val rnd = new scala.util.Random(seed)
-      Array.fill(n * dim)(rnd.nextGaussian())
-    })
-
-  def compute(vec: ArrayData, seed: Long, dim: Int, bands: Int,
-      bits: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val planes = planesFlat(seed, bands * bits, dim)
-    val n = math.min(vec.numElements(), dim)
-    val keys = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var key = 0L
-      var i = 0
-      while (i < bits) {
-        val base = (b * bits + i) * dim
-        var dot = 0.0
-        var j = 0
-        while (j < n) { dot += vec.getDouble(j) * planes(base + j); j += 1 }
-        if (dot > 0.0) key |= (1L << i)
-        i += 1
-      }
-      keys(b) = key
-      b += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(keys)
-  }
-}
-
 /** FNV-1a 64-bit rolling hash over a string's UTF-8 bytes — the
   * document-fingerprint kernel (SURVEY.md §2 #30). Deterministic,
   * seed-free, codegen'd. Test vectors in Fnv64Spec. */

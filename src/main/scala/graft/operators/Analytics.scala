@@ -535,33 +535,41 @@ object Analytics {
     * cell aggregate; everything after the cells is free at any
     * corpus size. */
   def chiSquare(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.load(spark, dir, "customer")
-      .select("c_custkey", "c_mktsegment").distinct()
-    val cells = Tables.load(spark, dir, "orders")
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"),
-        col("o_orderpriority").as("prio"))
-      .agg(count(lit(1)).as("n"))
-      // pin: kept by the per-call A/B in CHANGES.md (chi_square)
-      .localCheckpoint()
-    val rTot = cells.groupBy("seg").agg(sum(col("n")).as("r"))
-    val cTot = cells.groupBy("prio").agg(sum(col("n")).as("c"))
-    val n = cells.agg(sum(col("n"))).head().getLong(0)
-    val terms = cells.join(broadcast(rTot), "seg")
-      .join(broadcast(cTot), "prio")
+    val terms = segPrioCells(spark, dir)
       .withColumn("e",
-        (col("r") * col("c")).cast("double") / lit(n.toDouble))
+        (col("r") * col("c")).cast("double") / col("n_tot").cast("double"))
       .withColumn("t", round((col("n").cast("double") - col("e"))
         * (col("n").cast("double") - col("e")) / col("e"), 9)
         .cast("decimal(28,9)"))
     terms.agg(
+        max(col("n_tot")).as("n_obs"),
         countDistinct(col("seg")).as("n_segments"),
         countDistinct(col("prio")).as("n_priorities"),
         round(sum(col("t")).cast("double"), 6).as("chi2"))
-      .select(lit(n).as("n_obs"), col("n_segments"),
+      .select(col("n_obs"), col("n_segments"),
         col("n_priorities"),
         ((col("n_segments") - 1) * (col("n_priorities") - 1)).as("dof"),
         col("chi2"))
+  }
+
+  /** The segment × priority contingency of [[chiSquare]] and
+    * [[mutualInfo]]: one row per cell (seg, prio, n) with its row
+    * total r, column total c and grand total n_tot, carried in the
+    * plan, so no driver action runs. There are |segments| ×
+    * |priorities| cells at any corpus size, so they sit in one
+    * partition, and the totals are windows over it with no exchange. */
+  private def segPrioCells(spark: SparkSession, dir: String): DataFrame = {
+    val cust = Tables.load(spark, dir, "customer")
+      .select("c_custkey", "c_mktsegment").distinct()
+    Tables.load(spark, dir, "orders")
+      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_mktsegment").as("seg"),
+        col("o_orderpriority").as("prio"))
+      .agg(count(lit(1)).as("n"))
+      .coalesce(1)
+      .withColumn("r", sum(col("n")).over(Window.partitionBy("seg")))
+      .withColumn("c", sum(col("n")).over(Window.partitionBy("prio")))
+      .withColumn("n_tot", sum(col("n")).over(Window.partitionBy(lit(0))))
   }
 
   /** #212 Order-backlog aging snapshot — "as of date D, which orders
@@ -722,27 +730,14 @@ object Analytics {
     * discipline), total rounded 6 dp. Same one-scan + broadcast-dim
     * + |cells| shape as [[chiSquare]]. */
   def mutualInfo(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.load(spark, dir, "customer")
-      .select("c_custkey", "c_mktsegment").distinct()
-    val cells = Tables.load(spark, dir, "orders")
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"),
-        col("o_orderpriority").as("prio"))
-      .agg(count(lit(1)).as("n"))
-      // pin: kept by the per-call A/B in CHANGES.md (mutual_info)
-      .localCheckpoint()
-    val rTot = cells.groupBy("seg").agg(sum(col("n")).as("r"))
-    val cTot = cells.groupBy("prio").agg(sum(col("n")).as("c"))
-    val n = cells.agg(sum(col("n"))).head().getLong(0)
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy(lit(0))
-    cells.join(broadcast(rTot), "seg")
-      .join(broadcast(cTot), "prio")
+    segPrioCells(spark, dir)
       .withColumn("pmi",
-        log((col("n").cast("double") * lit(n.toDouble))
+        log((col("n").cast("double") * col("n_tot").cast("double"))
           / (col("r") * col("c")).cast("double")))
       .withColumn("term9",
-        round(col("n").cast("double") / lit(n.toDouble) * col("pmi"), 9)
-          .cast("decimal(28,9)"))
+        round(col("n").cast("double") / col("n_tot").cast("double")
+          * col("pmi"), 9).cast("decimal(28,9)"))
       .withColumn("mi_nats",
         round(sum(col("term9")).over(wAll).cast("double"), 6))
       .select(col("seg"), col("prio"), col("n"),

@@ -31,11 +31,22 @@ object Dedup {
       .select("content_hash", "keep_id", "dup_count")
       .orderBy("keep_id")
 
-  // MinHash parameters: K seeded XXH64 permutations computed by the
-  // codegen'd MinHashSig kernel, banded b×r = K.
-  val MinhashK = 32
-  val MinhashBands = 16
-  val MinhashR = 2 // rows per band
+  // Near-dup signatures are the portable kernels (round 11): a 32-bit
+  // value from the md5 hex tail (md5 is native in Spark AND DuckDB)
+  // feeds the banding/bucketing/scoring arithmetic, all of it
+  // built-in codegen functions or arithmetic-only kernels — which
+  // makes the ENTIRE near-dup pipeline (shingling, permutation
+  // minima, band keys, bucket caps, pair scoring, ranking) hash-exact
+  // against an independent engine.
+  val PortableK = 16 // permutations
+  val PortableBands = 8 // r = 2 rows per band
+  /** Smallest prime above 2^32 — the permutation modulus. */
+  val PortableP: Long = graft.functions.expressions.PortableHash.P
+  /** Affine coefficients (single source of truth: the kernel). */
+  val PortableA: Seq[Long] =
+    graft.functions.expressions.PortableHash.A.take(PortableK).toSeq
+  val PortableB: Seq[Long] =
+    graft.functions.expressions.PortableHash.B.take(PortableK).toSeq
   val BucketCap = 64 // frequent-bucket pruning bound
   val TopPairs = 1000
 
@@ -78,28 +89,9 @@ object Dedup {
         col(s"x.$payload").as(s"${payload}_a"),
         col(s"y.$payload").as(s"${payload}_b"))
 
-  /** Band keys for a minhash signature row: band j's key is the hash
-    * of the j-th r-slice. `sig` must be a concrete (already projected)
-    * column so the kernel runs once per doc, not once per band. The
-    * signature rides along so pair scoring happens in-bucket. */
-  private def bandedMinhash(withSig: DataFrame): DataFrame =
-    withSig
-      .select(col("doc_id"), col("sig"),
-        explode(sequence(lit(0), lit(MinhashBands - 1))).as("band"))
-      .select(col("doc_id"), col("sig"), col("band"),
-        hash(slice(col("sig"), col("band") * MinhashR + 1, lit(MinhashR)))
-          .as("key"))
-
-  /** #20 MinHash+LSH near-dup: top candidate pairs by estimated
-    * Jaccard (signature agreement fraction). Signatures come from the
-    * single-pass MinHashSig kernel; candidate generation shuffles only
-    * (doc_id, band, key) and the two signature join-backs shuffle one
-    * signature row per doc — at 100 TB the signature table would be
-    * persisted/checkpointed instead of recomputed per use. Output is
-    * the ranked candidate list (deterministic total order);
-    * thresholding is caller policy; MinhashSpec verifies estimates
-    * against exact Jaccard. */
-  def minhashLsh(spark: SparkSession, dir: String): DataFrame =
+  /** #20 MinHash+LSH near-dup over the corpus: the registered
+    * `dedup_minhash` query. */
+  def minhashLshPortable(spark: SparkSession, dir: String): DataFrame =
     minhashLshOn(Tables.load(spark, dir, "documents"))
 
   /** #20 ranked candidate list (bounded output for inspection). */
@@ -110,26 +102,35 @@ object Dedup {
 
   /** All LSH candidate pairs with estimated Jaccard — unbounded,
     * for apply-dedup and threshold policies. One scan of the corpus:
-    * the signature is computed once per doc and carried through the
-    * bucket shuffle (K=32 longs ≈ 256 B/doc/band), and the agreement
-    * count runs in-bucket via the codegen'd LongArrayAgree kernel —
-    * no join-backs, which would re-run the MinHashSig kernel on every
-    * branch of the self-join DAG. (At 100 TB the alternative is
-    * persisting the signature table once and joining back; this shape
-    * keeps the whole operator a single pipeline instead.) */
+    * the single-pass [[graft.functions.expressions.PortableMinHashSig]]
+    * signature is computed once per doc and carried through the
+    * bucket shuffle (K=16 longs), band keys are the literal r-slice
+    * values (no re-hash, so DuckDB groups on the identical key), and
+    * the agreement count runs in-bucket via the arithmetic-only
+    * LongArrayAgree kernel — no join-backs, which would re-run the
+    * signature kernel on every branch of the self-join DAG.
+    * est_jaccard = agree/K (a power-of-two division, exact in binary
+    * in both engines). */
   def minhashPairs(docs: DataFrame): DataFrame = {
     val withSig = docs
+      .filter(col("text").isNotNull)
       .select(col("doc_id"),
-        TextFunctions.minhashSig(col("text"), MinhashK, 2).as("sig"))
-      .filter(size(col("sig")) === MinhashK)
-    bucketPairsWith(bandedMinhash(withSig), "sig")
+        TextFunctions.portableMinhashSig(col("text"), PortableK).as("sig"))
+      .filter(size(col("sig")) === PortableK)
+    val banded = withSig
+      .select(col("doc_id"), col("sig"),
+        explode(sequence(lit(0), lit(PortableBands - 1))).as("band"))
+      .select(col("doc_id"), col("sig"), col("band"),
+        concat_ws(",", slice(col("sig"), col("band") * 2 + 1, lit(2)))
+          .as("key"))
+    bucketPairsWith(banded, "sig")
       .select(col("a"), col("b"),
         TextFunctions.sigAgree(col("sig_a"), col("sig_b")).as("agree"))
       // a pair can collide in several bands; agree is deterministic
       // per pair, so max == the single value
       .groupBy("a", "b").agg(max(col("agree")).as("agree"))
       .select(col("a"), col("b"),
-        (col("agree").cast("double") / MinhashK).as("est_jaccard"))
+        (col("agree").cast("double") / PortableK).as("est_jaccard"))
   }
 
   /** End-to-end near-dedup: drop every doc that near-duplicates
@@ -149,31 +150,6 @@ object Dedup {
     docs.join(drops, Seq("doc_id"), "left_anti")
   }
 
-  // ---------------------------------------------------------------
-  // PORTABLE-HASH variants (round 11): the production signatures
-  // above run on the seeded-XXH64 codegen kernels — the 100 TB
-  // throughput path — but XXH64 exists in no other engine, so those
-  // queries could only ever be rows-only at the driver gate. These
-  // variants swap ONLY the hash primitive: a 32-bit value from the
-  // md5 hex tail (md5 is native in Spark AND DuckDB) feeds the same
-  // banding/bucketing/scoring arithmetic, all of it built-in codegen
-  // functions — which makes the ENTIRE near-dup pipeline (shingling,
-  // permutation minima, band keys, bucket caps, pair scoring,
-  // ranking) hash-exact against an independent engine. Same shuffle
-  // shape and O(rows × bands) bytes as the kernel path; the md5 per
-  // shingle is the only extra per-row cost.
-  // ---------------------------------------------------------------
-
-  val PortableK = 16 // permutations
-  val PortableBands = 8 // r = 2 rows per band
-  /** Smallest prime above 2^32 — the permutation modulus. */
-  val PortableP: Long = graft.functions.expressions.PortableHash.P
-  /** Affine coefficients (single source of truth: the kernel). */
-  val PortableA: Seq[Long] =
-    graft.functions.expressions.PortableHash.A.take(PortableK).toSeq
-  val PortableB: Seq[Long] =
-    graft.functions.expressions.PortableHash.B.take(PortableK).toSeq
-
   /** Whitespace word tokens of lower(trim(text)) — the split both
     * engines express identically. */
   private def portableToks(docs: DataFrame): DataFrame =
@@ -191,7 +167,7 @@ object Dedup {
   /** Portable MinHash signatures — the SQL-built form: word
     * 2-shingles → h32 → K affine permutation minima mod P, all
     * built-in functions. This is the SEMANTIC REFERENCE the DuckDB
-    * oracle mirrors token for token; the hot path below uses the
+    * oracle mirrors token for token; the operators use the
     * single-pass [[graft.functions.expressions.PortableMinHashSig]]
     * kernel instead (~3× at sf0.1: no explode shuffle, no md5 hex
     * string / conv parse per shingle), and PortableSignatureSpec
@@ -226,33 +202,6 @@ object Dedup {
           .reduce(_ + _).as("sig"))
   }
 
-  /** #20 oracled: MinHash+LSH on the portable signatures — band keys
-    * are the literal r-slice values (no re-hash, so DuckDB groups on
-    * the identical key), in-bucket agreement via the arithmetic-only
-    * LongArrayAgree kernel, est_jaccard = agree/K (a power-of-two
-    * division, exact in binary in both engines). */
-  def minhashLshPortable(spark: SparkSession, dir: String): DataFrame = {
-    val withSig = Tables.load(spark, dir, "documents")
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), graft.functions.TextFunctions
-        .portableMinhashSig(col("text"), PortableK).as("sig"))
-      .filter(size(col("sig")) === PortableK)
-    val banded = withSig
-      .select(col("doc_id"), col("sig"),
-        explode(sequence(lit(0), lit(PortableBands - 1))).as("band"))
-      .select(col("doc_id"), col("sig"), col("band"),
-        concat_ws(",", slice(col("sig"), col("band") * 2 + 1, lit(2)))
-          .as("key"))
-    bucketPairsWith(banded, "sig")
-      .select(col("a"), col("b"),
-        TextFunctions.sigAgree(col("sig_a"), col("sig_b")).as("agree"))
-      .groupBy("a", "b").agg(max(col("agree")).as("agree"))
-      .select(col("a"), col("b"),
-        (col("agree").cast("double") / PortableK).as("est_jaccard"))
-      .orderBy(col("est_jaccard").desc, col("a"), col("b"))
-      .limit(TopPairs)
-  }
-
   /** #21 oracled: 32-bit portable SimHash — per-token h32, per-bit
     * balance sums (±1 votes, ties set the bit), 4×8-bit band keys,
     * in-bucket Hamming. Signature via the single-pass
@@ -269,34 +218,6 @@ object Dedup {
         explode(sequence(lit(0), lit(3))).as("band"))
       .select(col("doc_id"), col("sig"), col("band"),
         expr("shiftrightunsigned(sig, band * 8) & 255").as("key"))
-    bucketPairsWith(banded, "sig")
-      .select(col("a"), col("b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("int")
-          .as("hamming"))
-      .groupBy("a", "b").agg(min(col("hamming")).as("hamming"))
-      .orderBy(col("hamming").asc, col("a"), col("b"))
-      .limit(500)
-  }
-
-  // SimHash parameters: 64-bit signature, 4×16-bit bands.
-  val SimhashBits = 64
-  val SimhashBands = 4
-
-  /** #21 SimHash near-dup: 64-bit SimHash64 kernel, band on 16-bit
-    * chunks, rank candidate pairs by Hamming distance (asc) via
-    * bit_count(xor). The 8-byte signature rides through the bucket
-    * shuffle and Hamming is computed in-bucket — one corpus scan, one
-    * SimHash64 evaluation per doc, no join-backs. */
-  def simhashNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val chunkBits = SimhashBits / SimhashBands
-    val mask = (1L << chunkBits) - 1
-    val withSig = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), TextFunctions.simhash64(col("text")).as("sig"))
-    val banded = withSig
-      .select(col("doc_id"), col("sig"),
-        explode(sequence(lit(0), lit(SimhashBands - 1))).as("band"))
-      .select(col("doc_id"), col("sig"), col("band"),
-        expr(s"shiftrightunsigned(sig, band * $chunkBits) & ${mask}L").as("key"))
     bucketPairsWith(banded, "sig")
       .select(col("a"), col("b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("int")
@@ -356,12 +277,16 @@ object Dedup {
     // Count, whose getLong over a string array reads garbage — wrong
     // Jaccard verdicts with no error. A new name means an old-layout
     // table is simply never matched (and a future representation
-    // change must bump the suffix again).
-    val name = s"graft_gram_index_codes_${graft.sources.StagePath.key(dir)}"
+    // change must bump the suffix again). The old-layout table under
+    // the unversioned name is never read again, so a build drops it.
+    val key = graft.sources.StagePath.key(dir)
+    val name = s"graft_gram_index_codes_$key"
     if (spark.catalog.tableExists(name)) return name
-    spark.sql(s"DROP TABLE IF EXISTS $name")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh, name))
+    Seq(name, s"graft_gram_index_$key").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh, t))
+    }
     Tables.load(spark, dir, "documents")
       .select(col("doc_id").as("a"), col("lang"), col("source"),
         floor(col("n_chars") / lit(20)).as("jblk"),
@@ -544,7 +469,7 @@ object Dedup {
     * >cap-frequency shingles on THIS corpus shape; the cap rule is
     * part of the operator's contract and the oracle recomputes it
     * identically. Candidates are the portable-signature band
-    * buckets ([[minhashLshPortable]]'s machinery, bucket-capped).
+    * buckets ([[minhashPairs]]' machinery, bucket-capped).
     * Every count is exact integers; rates are integer ppm. */
   // corpus-keyed eval artifacts (round 15): the exact ground-truth
   // pair set and the band candidate set are both corpus-bounded

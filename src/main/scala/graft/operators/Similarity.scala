@@ -21,7 +21,6 @@ object Similarity {
   // p≈0.63) → expected recall 1-(1-p^5)^8 ≈ 0.55 while probing ~20%
   // of the corpus. Clustered real-world embeddings (higher p) push
   // recall toward 1 at the same cost. L and r are per-corpus knobs.
-  val LshPlanes = 40
   val LshBands = 8
   val LshBitsPerBand = 5
   val EmbBucketCap = 512

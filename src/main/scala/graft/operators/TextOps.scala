@@ -220,10 +220,10 @@ object TextOps {
     * kernels' shared convention: ASCII-only case folding (a doc
     * differing from a benchmark shingle ONLY in non-ASCII letter case
     * is not matched, where the full-Unicode lower() oracle would
-    * match) — a documented semantic shared with MinHashSig/SimHash64,
-    * not a hash-collision artifact. The benchmark hash set is bounded
-    * (an
-    * eval suite, not a corpus) → broadcast; the join moves only
+    * match) — a documented semantic of `ShingleHashes.tokenHashes`,
+    * which SentimentCounts shares, not a hash-collision artifact. The
+    * benchmark hash set is bounded (an eval suite, not a corpus) →
+    * broadcast; the join moves only
     * (doc_id, hash) pairs. */
   def contaminationCheck(spark: SparkSession, dir: String): DataFrame = {
     val sh = Tables.load(spark, dir, "documents")

@@ -115,22 +115,27 @@ object Backfill {
     * retries, blocked dates, crash-replay idempotence. */
   def backfillRange(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_backfill_${graft.sources.StagePath.key(dir)}").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val writer = "daily_events"
-    val start = LocalDate.of(2024, 1, 1)
-    def day(d: LocalDate): DataFrame =
-      graft.sources.Tables.loadEventsRange(spark, dir,
-        s"$d 00:00:00", s"${d.plusDays(1)} 00:00:00")
-    VersionedTable.appendOnce(day(start), root, writer, start.toEpochDay)
-    val report = run(spark, root, writer, start, start.plusDays(3))(day)
-    require(report.completed && report.runs.head.status == "skipped",
-      s"backfill must resume past the pre-committed day: ${report.runs}")
-    VersionedTable.read(spark, root)
-      .groupBy(to_date(col("ts")).as("batch_date"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.operators.Num.dsum(col("value")).as("sum_value"))
-      .orderBy("batch_date")
+    // each call backfills into a directory of its own and returns its
+    // collected rows, so no call deletes another's table and nothing
+    // is left under the temp dir once the call returns
+    val root = java.nio.file.Files.createTempDirectory("graft_backfill_").toString
+    try {
+      val writer = "daily_events"
+      val start = LocalDate.of(2024, 1, 1)
+      def day(d: LocalDate): DataFrame =
+        graft.sources.Tables.loadEventsRange(spark, dir,
+          s"$d 00:00:00", s"${d.plusDays(1)} 00:00:00")
+      VersionedTable.appendOnce(day(start), root, writer, start.toEpochDay)
+      val report = run(spark, root, writer, start, start.plusDays(3))(day)
+      require(report.completed && report.runs.head.status == "skipped",
+        s"backfill must resume past the pre-committed day: ${report.runs}")
+      val daily = VersionedTable.read(spark, root)
+        .groupBy(to_date(col("ts")).as("batch_date"))
+        .agg(count(lit(1)).as("n_events"),
+          graft.operators.Num.dsum(col("value")).as("sum_value"))
+        .orderBy("batch_date")
+      spark.createDataFrame(java.util.Arrays.asList(daily.collect(): _*),
+        daily.schema)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 }

@@ -42,7 +42,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("minhash estimate tracks exact shingle Jaccard on candidates") {
-    val cands = Dedup.minhashLsh(spark, SfDir).limit(20)
+    val cands = Dedup.minhashLshPortable(spark, SfDir).limit(20)
     val docs = graft.sources.Tables.load(spark, SfDir, "documents")
     val gr = docs.select(col("doc_id"), array_distinct(TextFunctions.tokens(
       col("text"))).as("tok"))
@@ -56,8 +56,17 @@ class DedupSpec extends SparkTestBase {
     assert(rows.forall(_ > 0.5), s"high-est pair with low token overlap: ${rows.toSeq}")
   }
 
+  test("minhashLshOn over documents returns the dedup_minhash query's rows") {
+    val docs = graft.sources.Tables.load(spark, SfDir, "documents")
+    val viaFrame = Dedup.minhashLshOn(docs).collect().toSeq
+    val viaQuery = SparkEntry.queries("dedup_minhash")(spark, SfDir)
+      .collect().toSeq
+    assert(viaFrame.nonEmpty)
+    assert(viaFrame === viaQuery)
+  }
+
   test("simhash ranks a planted near-dup above unrelated docs") {
-    val got = Dedup.simhashNearDup(spark, SfDir).limit(20).collect()
+    val got = Dedup.simhashPortable(spark, SfDir).limit(20).collect()
     assert(got.nonEmpty)
     // hamming distances are sorted ascending and within [0, 64]
     val h = got.map(_.getInt(2)).toSeq
@@ -77,12 +86,26 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("no dedup plan contains a cartesian product or nested-loop join") {
-    for (df <- Seq(Dedup.minhashLsh(spark, SfDir),
-        Dedup.simhashNearDup(spark, SfDir),
+    for (df <- Seq(SparkEntry.queries("dedup_minhash")(spark, SfDir),
+        SparkEntry.queries("dedup_simhash")(spark, SfDir),
         Dedup.ngramJaccard(spark, SfDir))) {
       val plan = planOf(df)
       assert(!plan.contains("CartesianProduct"), plan.take(1500))
       assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1500))
     }
+  }
+
+  test("building the gram index drops the legacy unversioned table") {
+    val key = graft.sources.StagePath.key(SfDir)
+    val legacy = s"graft_gram_index_$key"
+    spark.sql(s"DROP TABLE IF EXISTS graft_gram_index_codes_$key")
+    spark.range(3).toDF("a").write.mode("overwrite").saveAsTable(legacy)
+    assert(spark.catalog.tableExists(legacy))
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    assert(new java.io.File(wh, legacy).exists())
+    assert(Dedup.buildGramIndex(spark, SfDir) ===
+      s"graft_gram_index_codes_$key")
+    assert(!spark.catalog.tableExists(legacy))
+    assert(!new java.io.File(wh, legacy).exists())
   }
 }

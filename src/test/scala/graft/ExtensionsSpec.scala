@@ -15,8 +15,8 @@ class ExtensionsSpec extends SparkTestBase {
       .toDF("a", "b", "s").createOrReplaceTempView("ext_t")
     val r = spark.sql(
       """SELECT cosine_sim(a, b) AS c, dot_product(a, b) AS d,
-        |  fnv64(s) AS f, simhash64(s) AS sh,
-        |  size(minhash_sig(s, 8, 2)) AS mk,
+        |  fnv64(s) AS f, portable_simhash32(s) AS sh,
+        |  size(portable_minhash_sig(s, 8)) AS mk,
         |  size(char_ngrams(s, 3)) AS ng
         |FROM ext_t""".stripMargin).collect()(0)
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
@@ -29,14 +29,14 @@ class ExtensionsSpec extends SparkTestBase {
     assert(r.getInt(5) === 9) // "hello world" has 9 distinct trigrams
   }
 
-  test("round-3 SQL kernels: sig_agree and sign_band_keys") {
+  test("round-3 SQL kernels: sig_agree and portable_sign_band_keys") {
     GraftFunctions.register(spark)
     Seq((Seq(1L, 2L, 3L, 4L), Seq(1L, 9L, 3L, 7L),
         Seq.fill(64)(0.5)))
       .toDF("sa", "sb", "v").createOrReplaceTempView("ext_t3")
     val r = spark.sql(
       """SELECT sig_agree(sa, sb) AS ag,
-        |  sign_band_keys(v, 42L, 64, 8, 5) AS keys
+        |  portable_sign_band_keys(v, 8, 5, 64) AS keys
         |FROM ext_t3""".stripMargin).collect()(0)
     assert(r.getInt(0) === 2)
     val keys = r.getSeq[Long](1)
@@ -44,7 +44,7 @@ class ExtensionsSpec extends SparkTestBase {
     // same keys as the Column API
     val viaCol = Seq(Tuple1(Seq.fill(64)(0.5))).toDF("v")
       .select(graft.functions.VectorFunctions
-        .signBandKeys(col("v"), 8, 5).as("k"))
+        .portableSignBandKeys(col("v"), 8, 5).as("k"))
       .collect()(0).getSeq[Long](0)
     assert(keys === viaCol)
   }

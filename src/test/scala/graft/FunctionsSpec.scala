@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions, VectorFunctions}
-import graft.functions.expressions.{MinHashSig, SimHash64}
+import graft.functions.expressions.{PortableMinHashSig, PortableSimHash32}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Kernel-level tests: FNV-1a vectors, cosine/dot, minhash/simhash
@@ -41,7 +41,7 @@ class FunctionsSpec extends SparkTestBase {
   test("minhash: identical docs share the whole signature; shuffled words mostly too") {
     val k = 32
     val sigOf = (s: String) =>
-      MinHashSig.compute(UTF8String.fromString(s), k, 2).toLongArray().toSeq
+      PortableMinHashSig.compute(UTF8String.fromString(s), k).toLongArray().toSeq
     val a = sigOf("the quick brown fox jumps over the lazy dog")
     val b = sigOf("the quick brown fox jumps over the lazy dog")
     val c = sigOf("an entirely different sentence about stock prices today")
@@ -57,7 +57,8 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("simhash: identical → distance 0; near-identical close; disjoint far") {
-    val h = (s: String) => SimHash64.compute(UTF8String.fromString(s))
+    val h = (s: String) =>
+      PortableSimHash32.compute(UTF8String.fromString(s)).longValue
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val near = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
     val far = "one two three four five six seven eight nine ten"
@@ -108,19 +109,5 @@ class FunctionsSpec extends SparkTestBase {
       TextFunctions.charNgrams(col("y"), 3)).as("j")).as[Double].collect()
     assert(got(0) === 1.0)
     assert(got(1) === 0.0)
-  }
-
-  test("lsh signature is deterministic and bands partition the bits") {
-    val planes = VectorFunctions.hyperplanes(16, 4)
-    assert(planes === VectorFunctions.hyperplanes(16, 4)) // fixed seed
-    val df = Seq(Seq(1.0, -2.0, 0.5, 3.0)).toDF("v")
-    val sig = df.select(VectorFunctions.lshSignature(col("v"), planes).as("s"))
-    val s1 = sig.as[Int].collect()(0)
-    val s2 = sig.as[Int].collect()(0)
-    assert(s1 === s2)
-    val keys = df.select(VectorFunctions.bandKeys(
-      VectorFunctions.lshSignature(col("v"), planes), 2, 8).as("k"))
-      .selectExpr("k[0].key", "k[1].key").collect()(0)
-    assert((keys.getInt(0) | (keys.getInt(1) << 8)) === s1)
   }
 }
