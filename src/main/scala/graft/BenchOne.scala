@@ -4,8 +4,10 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.status.api.v1.{JobData, StageData}
 
 /** Profiling harness for a single query (or a few): repeats each named
-  * SparkEntry query after a warmup and prints per-rep wall times, so a
-  * Bench outlier can be separated into plan cost vs co-tenant noise.
+  * SparkEntry query after three warm-up reps (after one, the short
+  * queries' timed reps still fall along the JIT warm-up curve) and
+  * prints per-rep wall times, so a Bench outlier can be separated
+  * into plan cost vs co-tenant noise.
   * Then it runs ONE more rep and prints that rep's job/stage breakdown
   * (per-job wall, per-stage task time, input and shuffle bytes), jobs
   * slowest-first, so the dominant action — a localCheckpoint
@@ -43,7 +45,7 @@ object BenchOne {
         fn(spark, runDir).collect() // full result, like Bench and the DuckDB fetchall
         (System.nanoTime() - t0) / 1e9
       }
-      fn(spark, runDir).collect() // warmup
+      (1 to 3).foreach(_ => fn(spark, runDir).collect()) // warm-up
       val times = (1 to reps).map(_ => rep())
       println(f"[benchone] $name reps=${times.map(t => f"$t%.3f").mkString(",")} min=${times.min}%.3f")
       profile(spark, name)(rep())

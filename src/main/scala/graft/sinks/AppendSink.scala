@@ -22,18 +22,12 @@ object AppendSink {
     df.write.mode("append").partitionBy(partitionCols: _*).parquet(path)
 
   /** Idempotent append: re-running the same batch replaces exactly the
-    * partitions it writes. */
+    * partitions it writes (dynamic overwrite as a write option, so the
+    * session's conf is never touched). */
   def idempotentAppend(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+      partitionCols: Seq[String]): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path)
 
   /** Manifest-aware table read — the reader side of the
     * [[compactDay]] commit protocol. Day dirs with `_batch_id=*`

@@ -11,9 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - `root/_graft_log/v<20-digit>.json` — one immutable action file
   *    per version: the data files this commit adds and removes
-  *    (paths relative to root). The TABLE STATE at version N is the
-  *    replay of actions 1..N; data files themselves are never listed
-  *    by directory.
+  *    (paths relative to root), an [[appendOnce]] tag and, in Delta's
+  *    `metaData` shape, the schema of the files it adds:
+  *    `{"adds":[..],"removes":[..],"writer":"w","epoch":7,
+  *    "metaData":{"schemaString":"<StructType JSON>"}}`. The TABLE
+  *    STATE at version N is the replay of actions 1..N; data files are
+  *    never listed by directory, nor footers read for the schema (a
+  *    commit without `metaData`, from before it existed, still is).
   *  - Data files land under `root/data/<uuid>/` BEFORE their commit
   *    references them — an uncommitted (or crashed) write is plain
   *    unreferenced bytes, invisible to every reader.
@@ -46,7 +50,10 @@ object VersionedTable {
 
   private val LogDir = "_graft_log"
 
-  final case class Snapshot(version: Long, files: Seq[String]) {
+  /** The table at `version`: its live files and, where recorded, the
+    * schema JSON of the commit that added each. */
+  final case class Snapshot(version: Long, files: Seq[String],
+      schemas: Map[String, String]) {
     def isEmpty: Boolean = files.isEmpty
   }
 
@@ -57,48 +64,35 @@ object VersionedTable {
 
   private val VersionRe = "v(\\d{20})\\.json".r
 
-  /** Quote a JSON string (paths are uuid/part names — conservative
-    * escaping anyway). */
-  private def q(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  private def unq(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
-  private def writeActions(f: java.io.File, adds: Seq[String],
-      removes: Seq[String], txn: Option[(String, Long)] = None): Unit = {
-    val txnPart = txn.map { case (w, e) =>
-      s""","writer":${q(w)},"epoch":$e""" }.getOrElse("")
-    val body = s"""{"adds":[${adds.map(q).mkString(",")}],""" +
-      s""""removes":[${removes.map(q).mkString(",")}]$txnPart}"""
-    java.nio.file.Files.write(f.toPath,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  /** One log entry (see the log format above). */
+  private final case class Commit(adds: Seq[String],
+      removes: Seq[String] = Seq.empty, txn: Option[(String, Long)] = None,
+      schema: Option[String] = None) {
+    def schemas: Map[String, String] =
+      schema.fold(Map.empty[String, String])(s => adds.map(_ -> s).toMap)
   }
 
-  private val StrListRe = """"([^"\\]*(?:\\.[^"\\]*)*)"""".r
+  // stats sidecars written before this reader print NaN bare
+  private val Json = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .enable(com.fasterxml.jackson.core.json.JsonReadFeature
+      .ALLOW_NON_NUMERIC_NUMBERS).build()
 
-  private def readActions(f: java.io.File): (Seq[String], Seq[String]) = {
-    val s = new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    def list(key: String): Seq[String] = {
-      val m = (s""""$key"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
-      m.map(g => StrListRe.findAllMatchIn(g.group(1))
-        .map(mm => unq(mm.group(1))).toSeq).getOrElse(Seq.empty)
-    }
-    (list("adds"), list("removes"))
+  private def writeCommit(f: java.io.File, c: Commit): Unit = {
+    val o = Json.createObjectNode()
+    c.adds.foldLeft(o.putArray("adds"))(_.add(_))
+    c.removes.foldLeft(o.putArray("removes"))(_.add(_))
+    c.txn.foreach { case (w, e) => o.put("writer", w).put("epoch", e) }
+    c.schema.foreach(o.putObject("metaData").put("schemaString", _))
+    java.nio.file.Files.write(f.toPath, Json.writeValueAsBytes(o))
   }
 
-  /** The (writer, epoch) transaction tag of a committed version, if
-    * it was an [[appendOnce]] commit. */
-  private def readTxn(f: java.io.File): Option[(String, Long)] = {
-    val s = new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    for {
-      w <- """"writer"\s*:\s*"([^"\\]*(?:\\.[^"\\]*)*)"""".r
-        .findFirstMatchIn(s).map(m => unq(m.group(1)))
-      e <- """"epoch"\s*:\s*(-?\d+)""".r.findFirstMatchIn(s)
-        .map(_.group(1).toLong)
-    } yield (w, e)
+  private def readCommit(root: String, v: Long): Commit = {
+    import scala.jdk.CollectionConverters._
+    val o = Json.readTree(versionFile(root, v))
+    def strs(k: String) = o.path(k).elements().asScala.map(_.asText).toSeq
+    Commit(strs("adds"), strs("removes"),
+      Option(o.get("writer")).map(w => (w.asText, o.get("epoch").asLong)),
+      Option(o.path("metaData").get("schemaString")).map(_.asText))
   }
 
   /** Committed versions present in the log, ascending. */
@@ -120,47 +114,60 @@ object VersionedTable {
     * until [[vacuum]] reclaims their files (the retention window IS
     * the time-travel horizon, as in Delta/Iceberg). */
   def snapshotAt(root: String, asOf: Long): Snapshot = {
-    val vs = versions(root)
-    val live = new scala.collection.mutable.LinkedHashSet[String]
+    val live = collection.mutable.LinkedHashMap.empty[String, Option[String]]
     var v = 0L
-    for (next <- vs) {
-      if (next == v + 1 && next <= asOf) {
-        val (adds, removes) = readActions(versionFile(root, next))
-        removes.foreach(live -= _)
-        adds.foreach(live += _)
-        v = next
-      }
+    for (next <- versions(root) if next == v + 1 && next <= asOf) {
+      val c = readCommit(root, next)
+      c.removes.foreach(live -= _)
+      c.adds.foreach(live(_) = c.schema)
+      v = next
     }
-    Snapshot(v, live.toSeq)
+    Snapshot(v, live.keys.toSeq,
+      live.collect { case (f, Some(s)) => f -> s }.toMap)
+  }
+
+  /** The one parquet read of table files: `files` (root-relative) with
+    * the merge of their commits' schemas, in commit order (Spark's
+    * mergeSchema rule) — no footer is opened to build the frame. Files
+    * from a commit that recorded no schema fall back to mergeSchema
+    * inference over the footers. */
+  private def readFiles(spark: SparkSession, root: String,
+      files: Seq[String], schemas: Map[String, String]): DataFrame = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val paths = files.map(f => new java.io.File(root, f).getAbsolutePath)
+    if (files.forall(schemas.contains))
+      spark.read.schema(files.map(schemas).distinct
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .reduce(org.apache.spark.sql.GraftSqlBridge.mergeSchemas))
+        .parquet(paths: _*)
+    else spark.read.option("mergeSchema", "true").parquet(paths: _*)
   }
 
   /** DataFrame over a pinned snapshot (the caller's `snap` keeps
     * serving the same files regardless of later commits).
     * SCHEMA EVOLUTION: the snapshot's schema is the UNION of its
-    * files' schemas (mergeSchema), so a batch appended with an added
-    * column widens the table and older files read the new column as
-    * NULL — the additive-evolution contract (Delta's default).
-    * Incompatible type changes fail loudly at read, as they should:
-    * the log records files, not casts. */
+    * commits' schemas, so a batch appended with an added column widens
+    * the table and older files read the new column as NULL — the
+    * additive-evolution contract (Delta's default). Incompatible type
+    * changes fail loudly when the frame is built, as they should: the
+    * log records files, not casts. */
   def read(spark: SparkSession, root: String, snap: Snapshot): DataFrame = {
     require(!snap.isEmpty, s"version ${snap.version} of $root is empty")
-    spark.read.option("mergeSchema", "true").parquet(snap.files.map(f =>
-      new java.io.File(root, f).getAbsolutePath): _*)
+    readFiles(spark, root, snap.files, snap.schemas)
   }
 
   /** Read the latest committed snapshot. */
   def read(spark: SparkSession, root: String): DataFrame =
     read(spark, root, snapshot(root))
 
-  /** Atomically publish version `v` with the given actions. True iff
-    * this writer won the version (hard-link creation is the
-    * linearization point — it FAILS if v was already committed). */
-  private def tryCommit(root: String, v: Long, adds: Seq[String],
-      removes: Seq[String], txn: Option[(String, Long)] = None): Boolean = {
+  /** Atomically publish version `v` with commit `c`. True iff this
+    * writer won the version (hard-link creation is the linearization
+    * point — it FAILS if v was already committed). */
+  private def tryCommit(root: String, v: Long, c: Commit): Boolean = {
     logDir(root).mkdirs()
     val tmp = new java.io.File(logDir(root),
       s".v$v-${java.util.UUID.randomUUID()}.tmp")
-    writeActions(tmp, adds, removes, txn)
+    writeCommit(tmp, c)
     try {
       java.nio.file.Files.createLink(versionFile(root, v).toPath, tmp.toPath)
       true
@@ -171,15 +178,21 @@ object VersionedTable {
     }
   }
 
-  /** Stage `df` as fresh uuid-named data files (NOT yet visible). */
-  private def stage(df: DataFrame, root: String): Seq[String] = {
+  /** Delete the staged files of a commit that lost. */
+  private def discard(root: String, c: Commit): Unit =
+    c.adds.foreach(f =>
+      java.nio.file.Files.deleteIfExists(new java.io.File(root, f).toPath))
+
+  /** Stage `df` as fresh uuid-named data files (NOT yet visible): the
+    * adds of a commit that records `df`'s schema. */
+  private def stage(df: DataFrame, root: String): Commit = {
     val uuid = java.util.UUID.randomUUID().toString
     val dir = new java.io.File(new java.io.File(root, "data"), uuid)
     df.write.parquet(dir.getAbsolutePath)
-    Option(dir.listFiles()).getOrElse(Array.empty).toSeq
+    Commit(Option(dir.listFiles()).getOrElse(Array.empty).toSeq
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => s"data/$uuid/${f.getName}")
-      .sorted
+      .sorted, schema = Some(df.schema.json))
   }
 
   /** Transactional append: stage the batch, then claim the next
@@ -190,71 +203,52 @@ object VersionedTable {
     * Delta data-skipping shape). Returns the committed version. */
   def append(df: DataFrame, root: String,
       statsCols: Seq[String] = Seq.empty): Long = {
-    val adds = stage(df, root)
-    if (statsCols.nonEmpty) writeStats(df.sparkSession, root, adds, statsCols)
-    var v = snapshot(root).version + 1
-    while (!tryCommit(root, v, adds, Seq.empty)) {
-      v = math.max(v + 1, snapshot(root).version + 1)
-    }
-    v
+    val c = stage(df, root)
+    if (statsCols.nonEmpty) writeStats(df.sparkSession, root, c, statsCols)
+    commit(root, snapshot(root), c).get // removes nothing: never stale
   }
 
   /** Per-file [min,max] of `statsCols` (as doubles — exact for the
     * long/double id-and-measure domains stats serve), written as ONE
-    * `_stats.json` sidecar in the staged uuid dir. The sidecar lives
-    * and dies with its data files: staged before the commit link, so
-    * a crashed write leaves only unreferenced bytes, and immutable
-    * after (uuid dirs are never rewritten). One extra scan of the
-    * JUST-WRITTEN batch — bounded by the batch, not the table. */
-  private def writeStats(spark: SparkSession, root: String,
-      adds: Seq[String], statsCols: Seq[String]): Unit = {
+    * `_stats.json` sidecar (`{"<file>":{"<col>":[min,max]}}`) in the
+    * staged uuid dir. The sidecar lives and dies with its data files:
+    * staged before the commit link, so a crashed write leaves only
+    * unreferenced bytes, and immutable after (uuid dirs are never
+    * rewritten). One extra scan of the JUST-WRITTEN batch — bounded by
+    * the batch, not the table. */
+  private def writeStats(spark: SparkSession, root: String, staged: Commit,
+      statsCols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions._
-    val uuidDirs = adds.map(f => f.split("/").dropRight(1).mkString("/"))
-      .distinct
-    uuidDirs.foreach { d =>
-      val dir = new java.io.File(root, d)
-      val aggs = statsCols.flatMap(c => Seq(
-        min(col(c).cast("double")).as(s"min_$c"),
-        max(col(c).cast("double")).as(s"max_$c")))
-      val rows = spark.read.parquet(dir.getAbsolutePath)
-        .groupBy(input_file_name().as("_f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-      val body = rows.map { r =>
-        val fname = r.getString(0).split("/").last
-        val cols = statsCols.map { c =>
-          val mn = r.getAs[Any](s"min_$c")
-          val mx = r.getAs[Any](s"max_$c")
-          s"${q(c)}:[${mn},${mx}]"
-        }.mkString(",")
-        s"${q(fname)}:{$cols}"
-      }.mkString("{", ",", "}")
-      java.nio.file.Files.write(
-        new java.io.File(dir, "_stats.json").toPath,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    val aggs = statsCols.flatMap(c => Seq(
+      min(col(c).cast("double")).as(s"min_$c"),
+      max(col(c).cast("double")).as(s"max_$c")))
+    val rows = readFiles(spark, root, staged.adds, staged.schemas)
+      .groupBy(input_file_name().as("_f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+    import scala.jdk.CollectionConverters._
+    val body = rows.map(r => r.getString(0).split("/").last -> statsCols
+      .map(c => c -> Seq(s"min_$c", s"max_$c").map(r.getAs[java.lang.Double])
+        .asJava).toMap.asJava).toMap.asJava
+    java.nio.file.Files.write(new java.io.File(
+      new java.io.File(root, staged.adds.head).getParentFile, "_stats.json")
+      .toPath, Json.writeValueAsBytes(body))
   }
 
   /** The [min,max] recorded for (file, col), if its uuid dir carries
-    * a stats sidecar naming both. */
+    * a stats sidecar naming both as numbers. An all-NULL file records
+    * null bounds, and a file with a NaN records NaN (Spark orders NaN
+    * above every number): neither bounds its rows, so it is kept. */
   private def fileStats(root: String, file: String,
       colName: String): Option[(Double, Double)] = {
-    val dir = new java.io.File(root, file).getParentFile
-    val sidecar = new java.io.File(dir, "_stats.json")
+    val f = new java.io.File(root, file)
+    val sidecar = new java.io.File(f.getParentFile, "_stats.json")
     if (!sidecar.exists()) return None
-    val s = new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val fname = file.split("/").last
-    val fileRe = (java.util.regex.Pattern.quote(q(fname)) +
-      """\s*:\s*\{([^}]*)\}""").r
-    for {
-      block <- fileRe.findFirstMatchIn(s).map(_.group(1))
-      m <- (java.util.regex.Pattern.quote(q(colName)) +
-        """\s*:\s*\[([^,\]]+),([^\]]+)\]""").r.findFirstMatchIn(block)
-      // an all-NULL file records "null" bounds — unparseable → kept
-      mn <- m.group(1).toDoubleOption
-      mx <- m.group(2).toDoubleOption
-    } yield (mn, mx)
+    val b = Json.readTree(sidecar).path(f.getName).path(colName)
+    val bounds = Seq(b.path(0), b.path(1))
+    if (bounds.forall(n => n.isNumber && !n.asDouble.isNaN))
+      Some((bounds(0).asDouble, bounds(1).asDouble))
+    else None
   }
 
   /** DATA-SKIPPING READ: the snapshot restricted to `lo <= col <= hi`,
@@ -267,20 +261,16 @@ object VersionedTable {
     * way, so pruning is a pure optimization, never a correctness
     * dependence. NULL semantics: a NULL never satisfies the range,
     * and min/max aggregates ignore NULLs, so an all-NULL file
-    * (stats NULL → unparseable → kept) still filters correctly. */
+    * (stats NULL → kept) still filters correctly. */
   def readRange(spark: SparkSession, root: String, colName: String,
       lo: Double, hi: Double): DataFrame = {
     import org.apache.spark.sql.functions._
     val snap = snapshot(root)
     require(!snap.isEmpty, s"readRange on empty table $root")
-    val keep = snap.files.filter(f => fileStats(root, f, colName) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true
-    })
+    val keep = statsCandidates(root, snap.files, Map(colName -> (lo, hi)))
     val df =
       if (keep.isEmpty) read(spark, root, snap).limit(0)
-      else spark.read.parquet(keep.map(f =>
-        new java.io.File(root, f).getAbsolutePath): _*)
+      else readFiles(spark, root, keep, snap.schemas)
     df.filter(col(colName).cast("double") >= lo &&
       col(colName).cast("double") <= hi)
   }
@@ -288,10 +278,7 @@ object VersionedTable {
   /** Files [[readRange]] would open (exposed for the pruning spec). */
   private[graft] def rangeFiles(root: String, colName: String,
       lo: Double, hi: Double): Seq[String] =
-    snapshot(root).files.filter(f => fileStats(root, f, colName) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true
-    })
+    statsCandidates(root, snapshot(root).files, Map(colName -> (lo, hi)))
 
   /** Per-column [lo,hi] bounds provable from the TOP-LEVEL AND
     * conjuncts of `pred`: `c >= 5 && c < 9 && f(x)` yields
@@ -325,7 +312,7 @@ object VersionedTable {
   def committedEpoch(root: String, writer: String,
       epoch: Long): Option[Long] =
     versions(root).find(v =>
-      readTxn(versionFile(root, v)).contains((writer, epoch)))
+      readCommit(root, v).txn.contains((writer, epoch)))
 
   /** EXACTLY-ONCE append for replayable sources: the commit carries a
     * `(writer, epoch)` transaction tag, and a replay of an
@@ -343,21 +330,16 @@ object VersionedTable {
     committedEpoch(root, writer, epoch) match {
       case Some(v) => v
       case None =>
-        val adds = stage(df, root)
+        val c = stage(df, root).copy(txn = Some((writer, epoch)))
         var v = snapshot(root).version + 1
-        var done = -1L
-        while (done < 0) {
-          if (tryCommit(root, v, adds, Seq.empty, Some((writer, epoch))))
-            done = v
-          else committedEpoch(root, writer, epoch) match {
+        while (!tryCommit(root, v, c))
+          committedEpoch(root, writer, epoch) match {
             case Some(prior) => // replayed concurrently-visible commit
-              adds.foreach(f => java.nio.file.Files.deleteIfExists(
-                new java.io.File(root, f).toPath))
-              done = prior
+              discard(root, c)
+              return prior
             case None => v = math.max(v + 1, snapshot(root).version + 1)
           }
-        }
-        done
+        v
     }
   }
 
@@ -375,19 +357,34 @@ object VersionedTable {
   def changes(spark: SparkSession, root: String,
       sinceVersion: Long): DataFrame = {
     val snap = snapshot(root)
-    val added = versions(root)
+    val appends = versions(root)
       .filter(v => v > sinceVersion && v <= snap.version)
-      .flatMap { v =>
-        val (adds, removes) = readActions(versionFile(root, v))
-        if (removes.isEmpty) adds else Seq.empty
-      }
+      .map(readCommit(root, _)).filter(_.removes.isEmpty)
+    val added = appends.flatMap(_.adds)
     if (added.isEmpty) {
       require(!snap.isEmpty,
         s"changes($sinceVersion) on empty table $root: no schema to serve")
       read(spark, root, snap).limit(0)
-    } else
-      spark.read.option("mergeSchema", "true").parquet(added.map(f =>
-        new java.io.File(root, f).getAbsolutePath): _*)
+    } else readFiles(spark, root, added, appends.flatMap(_.schemas).toMap)
+  }
+
+  /** Commit `c` on top of `snap`, retrying past concurrent commits
+    * that leave its `removes` (files live at `snap`) live. If one
+    * removed any of them (a racing compaction or delete won), the
+    * rewrite no longer covers the table: its files are deleted and
+    * None tells the caller to restart from a fresh snapshot. */
+  private def commit(root: String, snap: Snapshot,
+      c: Commit): Option[Long] = {
+    var v = snap.version + 1
+    while (!tryCommit(root, v, c)) {
+      if (versions(root).filter(_ > snap.version).exists(nv =>
+          readCommit(root, nv).removes.exists(c.removes.contains))) {
+        discard(root, c)
+        return None
+      }
+      v = math.max(v + 1, snapshot(root).version + 1)
+    }
+    Some(v)
   }
 
   /** Transactional compaction: rewrite the current snapshot into
@@ -406,9 +403,8 @@ object VersionedTable {
   def compact(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024,
       statsCols: Seq[String] = Seq.empty): Long = {
-    var committed = -1L
-    var done = false
-    while (!done) {
+    var committed = Option.empty[Long]
+    while (committed.isEmpty) {
       val snap = snapshot(root)
       if (snap.isEmpty) return -1L
       val bytes = snap.files
@@ -419,30 +415,11 @@ object VersionedTable {
         if (statsCols.isEmpty) content.coalesce(nFiles)
         else content.repartitionByRange(nFiles,
           statsCols.map(org.apache.spark.sql.functions.col): _*)
-      val adds = stage(shaped, root)
-      if (statsCols.nonEmpty) writeStats(spark, root, adds, statsCols)
-      var v = snap.version + 1
-      var stale = false
-      while (!done && !stale) {
-        if (tryCommit(root, v, adds, snap.files)) {
-          committed = v
-          done = true
-        } else {
-          // someone committed v first: if they removed any of OUR
-          // inputs, this rewrite no longer covers the table — restart
-          val newer = versions(root).filter(_ > snap.version)
-          stale = newer.exists { nv =>
-            val (_, removes) = readActions(versionFile(root, nv))
-            removes.exists(snap.files.contains)
-          }
-          if (!stale) v = math.max(v + 1, snapshot(root).version + 1)
-          else adds.foreach(f =>
-            java.nio.file.Files.deleteIfExists(
-              new java.io.File(root, f).toPath))
-        }
-      }
+      val c = stage(shaped, root)
+      if (statsCols.nonEmpty) writeStats(spark, root, c, statsCols)
+      committed = commit(root, snap, c.copy(removes = snap.files))
     }
-    committed
+    committed.get
   }
 
   /** #105 driver-gate query: two day-batches committed as versions,
@@ -452,18 +429,31 @@ object VersionedTable {
     * The ScalaTest suite covers what SQL can't see: concurrent
     * writers, crash windows, pinned snapshots. */
   def versionedCommits(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_vtable_${graft.sources.StagePath.key(dir)}").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    append(graft.sources.Tables.loadEventsRange(spark, dir,
-      "2024-01-01 00:00:00", "2024-01-02 00:00:00"), root)
-    append(graft.sources.Tables.loadEventsRange(spark, dir,
-      "2024-01-02 00:00:00", "2024-01-03 00:00:00"), root)
+    val root = gateTable("", dir)
+    append(eventsDay(spark, dir, 1), root)
+    append(eventsDay(spark, dir, 2), root)
     compact(spark, root)
     vacuum(root, retentionMs = 0L) // single-writer table, quiesced here
-    read(spark, root)
-      .groupBy(to_date(col("ts")).as("batch_date"))
+    perDay(read(spark, root))
+  }
+
+  /** A fresh table under java.io.tmpdir for one gate query over `dir`. */
+  private def gateTable(name: String, dir: String): String = {
+    val root = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_vtable${name}_${graft.sources.StagePath.key(dir)}").getPath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    root
+  }
+
+  /** Day `d` of January 2024 of the corpus's events: one batch. */
+  private def eventsDay(spark: SparkSession, dir: String, d: Int): DataFrame =
+    graft.sources.Tables.loadEventsRange(spark, dir,
+      f"2024-01-$d%02d 00:00:00", f"2024-01-${d + 1}%02d 00:00:00")
+
+  /** The gate queries' answer: events and exact Σvalue per day. */
+  private def perDay(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    df.groupBy(to_date(col("ts")).as("batch_date"))
       .agg(count(lit(1)).as("n_events"),
         graft.operators.Num.dsum(col("value")).as("sum_value"))
       .orderBy("batch_date")
@@ -489,7 +479,8 @@ object VersionedTable {
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
     val ranges = predicateRanges(predicate)
-    while (true) {
+    var committed = Option.empty[Long]
+    while (committed.isEmpty) {
       val snap = snapshot(root)
       if (snap.isEmpty) return -1L
       // metadata prune FIRST: files whose _stats.json [min,max] cannot
@@ -502,9 +493,7 @@ object VersionedTable {
         if (ranges.isEmpty) snap.files
         else statsCandidates(root, snap.files, ranges)
       if (candidates.isEmpty) return -1L
-      val pruned = spark.read.option("mergeSchema", "true")
-        .parquet(candidates.map(f =>
-          new java.io.File(root, f).getAbsolutePath): _*)
+      val pruned = readFiles(spark, root, candidates, snap.schemas)
       // schema evolution guard: a predicate column carried only by
       // non-candidate files cannot resolve over the pruned read
       // (classic Datasets analyze eagerly, so the failure is here,
@@ -523,26 +512,12 @@ object VersionedTable {
       val touched = snap.files.filter(f =>
         touchedAbs.exists(_.endsWith("/" + f)))
       if (touched.isEmpty) return -1L
-      val kept = spark.read.option("mergeSchema", "true")
-        .parquet(touched.map(f =>
-          new java.io.File(root, f).getAbsolutePath): _*)
+      val kept = readFiles(spark, root, touched, snap.schemas)
         .filter(coalesce(predicate, lit(false)) === false)
-      val adds = stage(kept, root)
-      var v = snap.version + 1
-      var stale = false
-      while (!stale) {
-        if (tryCommit(root, v, adds, touched)) return v
-        val newer = versions(root).filter(_ > snap.version)
-        stale = newer.exists { nv =>
-          val (_, removes) = readActions(versionFile(root, nv))
-          removes.exists(touched.contains)
-        }
-        if (!stale) v = math.max(v + 1, snapshot(root).version + 1)
-        else adds.foreach(f => java.nio.file.Files.deleteIfExists(
-          new java.io.File(root, f).toPath))
-      }
+      committed = commit(root, snap,
+        stage(kept, root).copy(removes = touched))
     }
-    -1L // unreachable
+    committed.get
   }
 
   /** #107 driver-gate query: three day-batches appended as versions
@@ -551,22 +526,12 @@ object VersionedTable {
     * only, rewrites invisible). The oracle aggregates days 2-3
     * straight from the source: feed content == appended batches. */
   def versionedChanges(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_vtable_cdc_${graft.sources.StagePath.key(dir)}").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val mark = append(graft.sources.Tables.loadEventsRange(spark, dir,
-      "2024-01-01 00:00:00", "2024-01-02 00:00:00"), root)
-    append(graft.sources.Tables.loadEventsRange(spark, dir,
-      "2024-01-02 00:00:00", "2024-01-03 00:00:00"), root)
+    val root = gateTable("_cdc", dir)
+    val mark = append(eventsDay(spark, dir, 1), root)
+    append(eventsDay(spark, dir, 2), root)
     compact(spark, root) // rewrite only: must NOT surface in the feed
-    append(graft.sources.Tables.loadEventsRange(spark, dir,
-      "2024-01-03 00:00:00", "2024-01-04 00:00:00"), root)
-    changes(spark, root, mark)
-      .groupBy(to_date(col("ts")).as("batch_date"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.operators.Num.dsum(col("value")).as("sum_value"))
-      .orderBy("batch_date")
+    append(eventsDay(spark, dir, 3), root)
+    perDay(changes(spark, root, mark))
   }
 
   /** #109 driver-gate query: an INCREMENTALLY MAINTAINED aggregate
@@ -580,13 +545,9 @@ object VersionedTable {
     * re-sum exactly. */
   def incrementalCdcAgg(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_vtable_inc_${graft.sources.StagePath.key(dir)}").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    append(graft.sources.Tables.loadEventsRange(spark, dir,
-      "2024-01-01 00:00:00", "2024-01-02 00:00:00"), root)
-    append(graft.sources.Tables.loadEventsRange(spark, dir,
-      "2024-01-02 00:00:00", "2024-01-03 00:00:00"), root)
+    val root = gateTable("_inc", dir)
+    append(eventsDay(spark, dir, 1), root)
+    append(eventsDay(spark, dir, 2), root)
     def partial(feed: DataFrame): DataFrame = feed
       .groupBy(to_date(col("ts")).as("batch_date"))
       .agg(count(lit(1)).as("n"),
@@ -594,8 +555,7 @@ object VersionedTable {
     val pull1 = partial(changes(spark, root, 0L)) // file list pinned NOW
     val mark = snapshot(root).version
     compact(spark, root) // rewrite between the pulls: invisible to CDC
-    append(graft.sources.Tables.loadEventsRange(spark, dir,
-      "2024-01-03 00:00:00", "2024-01-04 00:00:00"), root)
+    append(eventsDay(spark, dir, 3), root)
     val pull2 = partial(changes(spark, root, mark))
     pull1.unionByName(pull2)
       .groupBy("batch_date")

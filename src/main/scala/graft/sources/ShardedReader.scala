@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Range-sharding + shard union (SURVEY.md §2 #2-3), re-expressing the
@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first: sharding a keyspace is a predicate per shard — each
   * shard is an independent, pushdown-able scan (parallelism comes
-  * from partitions, not processes), and the union is a zero-shuffle
-  * `unionByName`. At 100 TB each shard maps to a partition range of
-  * the source table and the union is metadata-only.
+  * from partitions, not processes). Unioned back, the shards
+  * [[rangeShards]] builds are ONE scan of their source filtered by the
+  * covered range (disjoint ranges make that exact union-all), not N
+  * scans of it.
   */
 object ShardedReader {
 
@@ -39,8 +40,11 @@ object ShardedReader {
       df.filter(col(key) >= lo && col(key) < hi)
     }
 
-  /** Union-all of shards by column name — fails fast on schema drift
-    * instead of silently misaligning positions. */
+  /** Union-all of shards: one scan of the source, in its own
+    * partitions, for [[rangeShards]]' disjoint ranges; else a
+    * `unionByName` (fails fast on schema drift instead of silently
+    * misaligning positions). */
   def unionShards(shards: Seq[DataFrame]): DataFrame =
-    shards.reduce(_.unionByName(_))
+    org.apache.spark.sql.GraftSqlBridge.rangeShardUnion(shards)
+      .getOrElse(shards.reduce(_.unionByName(_)))
 }

@@ -75,6 +75,52 @@ object GraftSqlBridge {
       }
   }
 
+  /** Union-all of shards that are each `lo <= k AND k < hi` over the
+    * SAME plan (one deterministic key `k`, integral literal bounds,
+    * pairwise disjoint ranges) as ONE filter over that plan by the OR
+    * of the ranges, adjacent ones fused: each row is in at most one
+    * shard, so this is exact. None for any other input. Here because
+    * `classic.Dataset.ofRows` is private[sql]. */
+  def rangeShardUnion(shards: Seq[DataFrame]): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    def bound(e: Expression) = e match {
+      case Literal(v: java.lang.Number, _: types.IntegralType) =>
+        Some((v.longValue, e))
+      case _ => None
+    }
+    val parsed = shards.map(_.queryExecution.analyzed).collect {
+      case Filter(And(GreaterThanOrEqual(k, lo), LessThan(k2, hi)), child)
+          if k.deterministic && k.semanticEquals(k2) && bound(lo).nonEmpty &&
+            bound(hi).nonEmpty => (child, k, bound(lo).get, bound(hi).get)
+    }
+    if (parsed.isEmpty || parsed.size < shards.size) return None
+    val (child, key, _, _) = parsed.head
+    if (!parsed.forall(p => p._1.fastEquals(child) && p._2.semanticEquals(key)))
+      return None
+    // empty ranges select nothing in either form
+    val ranges = parsed.map(p => (p._3, p._4))
+      .filter { case (lo, hi) => lo._1 < hi._1 }.sortBy(_._1._1)
+    if (ranges.isEmpty ||
+        ranges.zip(ranges.tail).exists { case (a, b) => a._2._1 > b._1._1 })
+      return None
+    val fused = ranges.tail.foldLeft(List(ranges.head)) {
+      case ((lo, hi) :: done, (l, h)) if l._1 == hi._1 => (lo, h) :: done
+      case (done, r) => r :: done
+    }
+    val cond = fused.map { case ((_, lo), (_, hi)) =>
+      And(GreaterThanOrEqual(key, lo), LessThan(key, hi)): Expression
+    }.reduce(Or(_, _))
+    Some(classic.Dataset.ofRows(
+      shards.head.sparkSession.asInstanceOf[classic.SparkSession],
+      Filter(cond, child)))
+  }
+
+  /** `a` widened by `b` by Spark's mergeSchema rule (new fields append,
+    * incompatible types fail); `StructType.merge` is private[sql]. */
+  def mergeSchemas(a: types.StructType, b: types.StructType): types.StructType =
+    a.merge(b)
+
   /** Every job Spark's status store holds, oldest first, each with the
     * data of its stages that ran, read once every event posted so far
     * has been processed. The store is private[spark] and is kept with

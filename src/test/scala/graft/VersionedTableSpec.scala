@@ -299,6 +299,21 @@ class VersionedTableSpec extends SparkTestBase {
       .count() === 61L)
   }
 
+  test("a NaN in a stats column bounds nothing: its file is read") {
+    val root = freshRoot()
+    VersionedTable.append(batch(0, 10).coalesce(1)
+      .withColumn("x", when(col("id") === 9, lit(Double.NaN))
+        .otherwise(col("id").cast("double"))), root, Seq("x"))
+    assert(VersionedTable.rangeFiles(root, "x", 2, 4).size === 1)
+    assert(VersionedTable.readRange(spark, root, "x", 2, 4).count() === 3L)
+    // the sidecar form older writers left: NaN printed bare
+    val file = new java.io.File(root, VersionedTable.snapshot(root).files.head)
+    java.nio.file.Files.write(
+      new java.io.File(file.getParentFile, "_stats.json").toPath,
+      s"""{"${file.getName}":{"x":[0.0,NaN]}}""".getBytes("UTF-8"))
+    assert(VersionedTable.rangeFiles(root, "x", 2, 4).size === 1)
+  }
+
   test("schema evolution: an added column widens the table, old rows NULL") {
     val root = freshRoot()
     VersionedTable.append(batch(0, 10), root)
@@ -315,6 +330,59 @@ class VersionedTableSpec extends SparkTestBase {
     val t2 = VersionedTable.read(spark, root)
     assert(t2.columns.sorted.toSeq === Seq("id", "lang", "val"))
     assert(t2.count() === 15L)
+  }
+
+  test("reads take the schema from the log: building a frame runs no job") {
+    val root = freshRoot()
+    VersionedTable.append(batch(0, 10), root)
+    VersionedTable.append(batch(10, 10).withColumn("lang", lit("en")), root)
+    // each commit records the schema of the files it adds
+    val log = new java.io.File(s"$root/_graft_log/v${"0" * 19}2.json")
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(log).path("metaData").path("schemaString").asText
+    assert(org.apache.spark.sql.types.DataType.fromJson(meta) ===
+      batch(0, 1).withColumn("lang", lit("en")).schema)
+    var t: org.apache.spark.sql.DataFrame = null
+    var feed: org.apache.spark.sql.DataFrame = null
+    val jobs = jobDescriptions {
+      t = VersionedTable.read(spark, root)
+      feed = VersionedTable.changes(spark, root, 1L)
+    }
+    assert(jobs.isEmpty, s"no footer inference job, got $jobs")
+    assert(t.columns.toSeq === Seq("id", "val", "lang"))
+    assert(t.schema.forall(_.nullable),
+      "older files read an added column as NULL, as under inference")
+    assert(t.count() === 20L && feed.count() === 10L)
+  }
+
+  test("a legacy commit without a schema still reads through inference") {
+    val root = freshRoot()
+    val dir = new java.io.File(s"$root/data/legacy")
+    batch(0, 10).coalesce(1).write.parquet(dir.getPath)
+    val part = dir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).head
+    new java.io.File(s"$root/_graft_log").mkdirs()
+    java.nio.file.Files.write(
+      new java.io.File(s"$root/_graft_log/v${"0" * 19}1.json").toPath,
+      s"""{"adds":["data/legacy/$part"],"removes":[]}""".getBytes("UTF-8"))
+    assert(VersionedTable.snapshot(root).schemas.isEmpty)
+    assert(jobDescriptions(VersionedTable.read(spark, root)).nonEmpty,
+      "a schemaless commit's files are read by footer inference")
+    assert(VersionedTable.read(spark, root).count() === 10L)
+    // a later commit with a schema widens a table it shares with them
+    VersionedTable.append(batch(10, 5).withColumn("lang", lit("en")), root)
+    val t = VersionedTable.read(spark, root)
+    assert(t.columns.sorted.toSeq === Seq("id", "lang", "val"))
+    assert(t.filter(col("lang").isNull).count() === 10L)
+    assert(VersionedTable.changes(spark, root, 0L).count() === 15L)
+  }
+
+  test("an incompatible type change across commits fails loudly") {
+    val root = freshRoot()
+    VersionedTable.append(batch(0, 10), root)
+    VersionedTable.append(batch(10, 10)
+      .select(col("id").cast("string").as("id"), col("val")), root)
+    val e = intercept[Exception](VersionedTable.read(spark, root).collect())
+    assert(e.getMessage.contains("id"), e.getMessage)
   }
 
   test("streaming writeToVersioned composes with concurrent compaction") {
