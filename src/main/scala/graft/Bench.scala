@@ -8,42 +8,24 @@ import org.apache.spark.sql.SparkSession
   * query must not lower the total — VERDICT r1). */
 object Bench {
 
-  /** Stage every testdata table as an n-file parquet copy under the
-    * tmp dir, so scans parallelize the way a real many-file corpus
-    * does. The driver's SF parquet is one file with ONE row group,
-    * which Spark cannot split — every scan (and the partial
-    * aggregation fused into it) runs on a single thread, an SF
-    * artifact that does not exist at 100 TB (millions of files).
-    * This stages it once so all queries read a realistic layout.
-    * Values are bit-identical to the source (events is read with its
-    * PHYSICAL schema — raw nanos longs on the legacy layout, native
-    * micros on the current one — so the copy preserves exact values
-    * and the staged dir re-detects the same layout). Idempotent per
-    * (dir, n); one-time cost is reported separately in the bench
-    * JSON. */
+  /** Stage every testdata table as an n-file parquet copy (a
+    * [[graft.sources.StagePath.derived]] copy of the corpus), so scans
+    * parallelize the way a real many-file corpus does. The driver's SF
+    * parquet is one file with ONE row group, which Spark cannot split —
+    * every scan (and the partial aggregation fused into it) runs on a
+    * single thread, an SF artifact that does not exist at 100 TB
+    * (millions of files). This stages it once so all queries read a
+    * realistic layout. Values are bit-identical to the source; the
+    * one-time cost is reported separately in the bench JSON. */
   def stage(spark: SparkSession, dir: String, n: Int): String = {
-    val dest = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_bench_stage_${graft.sources.StagePath.key(dir)}_$n")
-    val marker = new java.io.File(dest, "_STAGED")
-    // freshness: a staged copy older than its source is rebuilt, not
-    // served stale — the driver regenerates /root/testdata between
-    // rounds (observed Aug 13: the events timestamp layout changed)
-    val srcMtime = graft.sources.Tables.schemas.keys
-      .map(t => new java.io.File(dir, s"$t.parquet").lastModified()).max
-    if (marker.exists() && marker.lastModified() >= srcMtime)
-      return dest.getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(dest)
-    graft.sources.Tables.schemas.keys.foreach { name =>
-      val schema =
-        if (name == "events")
-          graft.sources.Tables.eventsPhysicalSchema(spark, dir)
-        else graft.sources.Tables.schemas(name)
-      spark.read.schema(schema).parquet(s"$dir/$name.parquet")
-        .repartition(n)
-        .write.mode("overwrite").parquet(s"$dest/$name.parquet")
+    val tables = graft.sources.Tables.schemas
+    graft.sources.StagePath.derived(dir, tables.keys.toSeq, s"bench_stage_$n") {
+      dest => tables.foreach { case (name, schema) =>
+        spark.read.schema(schema).parquet(s"$dir/$name.parquet")
+          .repartition(n)
+          .write.parquet(s"$dest/$name.parquet")
+      }
     }
-    marker.createNewFile()
-    dest.getPath
   }
 
   def main(args: Array[String]): Unit = {

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.status.api.v1.{JobData, StageData}
 
 /** Profiling harness for a single query (or a few): repeats each named
-  * SparkEntry query after three warm-up reps (after one, the short
-  * queries' timed reps still fall along the JIT warm-up curve) and
-  * prints per-rep wall times, so a Bench outlier can be separated
+  * SparkEntry query after three warm-up reps of every named query
+  * (after one rep, or with the warm-up interleaved, the first query's
+  * timed reps still fall along the JIT warm-up curve) and prints
+  * per-rep wall times, so a Bench outlier can be separated
   * into plan cost vs co-tenant noise.
   * Then it runs ONE more rep and prints that rep's job/stage breakdown
   * (per-job wall, per-stage task time, input and shuffle bytes), jobs
@@ -37,6 +38,10 @@ object BenchOne {
     // same staged layout as Bench, so numbers stay comparable
     val staged = if (stageFiles > 0) Bench.stage(spark, sfDir, stageFiles) else sfDir
     val runDir = if (mult > 1) ScaleBench.multiply(staged, mult) else staged
+    // warm-up: every listed query runs its 3 reps before any is timed,
+    // so the first one is not timed on the JVM's warm-up curve
+    args.foreach(name => (1 to 3).foreach(_ =>
+      SparkEntry.queries(name)(spark, runDir).collect()))
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       def rep(): Double = {
@@ -45,7 +50,6 @@ object BenchOne {
         fn(spark, runDir).collect() // full result, like Bench and the DuckDB fetchall
         (System.nanoTime() - t0) / 1e9
       }
-      (1 to 3).foreach(_ => fn(spark, runDir).collect()) // warm-up
       val times = (1 to reps).map(_ => rep())
       println(f"[benchone] $name reps=${times.map(t => f"$t%.3f").mkString(",")} min=${times.min}%.3f")
       profile(spark, name)(rep())

@@ -33,10 +33,12 @@ import graft.sinks.VersionedTable
   */
 object ProtocolBench {
 
-  def run(spark: SparkSession, dir: String, commits: Int): Unit = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_protocol_bench").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  def run(spark: SparkSession, dir: String, commits: Int): Unit =
+    graft.sources.StagePath.scratch("protocol_bench")(
+      run(spark, dir, commits, _))
+
+  private def run(spark: SparkSession, dir: String, commits: Int,
+      root: String): Unit = {
 
     // one day-slice of events, cached once: each commit re-appends the
     // same rows (content is irrelevant to protocol cost; distinct

@@ -299,28 +299,22 @@ object ScaleBench {
     * only tables SkewQueries read. */
   def skewStage(spark: SparkSession, staged: String): String = {
     import org.apache.spark.sql.functions._
-    val dest = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_skewstage_${graft.sources.StagePath.key(staged)}")
-    val marker = new java.io.File(dest, "_STAGED")
-    val srcMarker = new java.io.File(staged, "_STAGED")
-    if (marker.exists() && marker.lastModified() >= srcMarker.lastModified())
-      return dest.getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(dest)
-    val sch = graft.sources.Tables.eventsPhysicalSchema(spark, staged)
-    spark.read.schema(sch).parquet(s"$staged/events.parquet")
-      .withColumn("user_id",
-        when(pmod(col("event_id"), lit(10L)) < 9, lit(42L))
-          .otherwise(col("user_id")))
-      .repartition(8)
-      .write.mode("overwrite").parquet(s"$dest/events.parquet")
-    spark.read.parquet(s"$staged/documents.parquet")
-      .withColumn("lang",
-        when(pmod(col("doc_id"), lit(10L)) < 9, lit("en"))
-          .otherwise(col("lang")))
-      .repartition(8)
-      .write.mode("overwrite").parquet(s"$dest/documents.parquet")
-    marker.createNewFile()
-    dest.getPath
+    import graft.sources.Tables
+    graft.sources.StagePath.derived(staged, Seq("events", "documents"),
+        "skewstage") { dest =>
+      Tables.load(spark, staged, "events")
+        .withColumn("user_id",
+          when(pmod(col("event_id"), lit(10L)) < 9, lit(42L))
+            .otherwise(col("user_id")))
+        .repartition(8)
+        .write.parquet(s"$dest/events.parquet")
+      Tables.load(spark, staged, "documents")
+        .withColumn("lang",
+          when(pmod(col("doc_id"), lit(10L)) < 9, lit("en"))
+            .otherwise(col("lang")))
+        .repartition(8)
+        .write.parquet(s"$dest/documents.parquet")
+    }
   }
 
   /** Multiply the named staged tables by hardlinking each part file
@@ -330,30 +324,23 @@ object ScaleBench {
   def multiply(staged: String, mult: Int,
       tables: Set[String] = null): String = {
     val tag = if (tables == null) "" else "_fact"
-    val dest = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_scale_${graft.sources.StagePath.key(staged)}$tag" + s"_x$mult")
-    val marker = new java.io.File(dest, "_STAGED")
-    // freshness: if the staged source was rebuilt (its marker is
-    // newer), the old hardlinks still point at the REPLACED inodes —
-    // rebuild the multiplied view rather than serve stale data
-    val srcMarker = new java.io.File(staged, "_STAGED")
-    if (marker.exists() && marker.lastModified() >= srcMarker.lastModified())
-      return dest.getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(dest)
-    new java.io.File(staged).listFiles().filter(_.isDirectory).foreach { t =>
-      val out = new java.io.File(dest, t.getName)
-      out.mkdirs()
-      val m = if (tables == null || tables.exists(n => t.getName.startsWith(n)))
-        mult else 1
-      t.listFiles().filter(_.getName.endsWith(".parquet")).foreach { part =>
-        for (i <- 0 until m)
-          java.nio.file.Files.createLink(
-            new java.io.File(out, s"m${i}_${part.getName}").toPath,
-            part.toPath)
+    val dirs = new java.io.File(staged).listFiles().filter(_.isDirectory)
+    graft.sources.StagePath.derived(staged,
+        dirs.map(_.getName.stripSuffix(".parquet")).toSeq,
+        s"scale${tag}_x$mult") { dest =>
+      dirs.foreach { t =>
+        val out = new java.io.File(dest, t.getName)
+        out.mkdirs()
+        val m = if (tables == null || tables.exists(n => t.getName.startsWith(n)))
+          mult else 1
+        t.listFiles().filter(_.getName.endsWith(".parquet")).foreach { part =>
+          for (i <- 0 until m)
+            java.nio.file.Files.createLink(
+              new java.io.File(out, s"m${i}_${part.getName}").toPath,
+              part.toPath)
+        }
       }
     }
-    marker.createNewFile()
-    dest.getPath
   }
 
   def main(args: Array[String]): Unit = {
@@ -423,46 +410,46 @@ object ScaleBench {
       else multiply(stage(spark, sfDir), mult)
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.ListBuffer[String]()
-    val writeDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_scale_out").getPath
-    // consume a result the way a deployment would: large outputs are
-    // written, everything else is collected (same contract as Bench)
-    def consume(name: String,
-        df: org.apache.spark.sql.DataFrame): Unit =
-      if (WriteQueries(name))
-        // natural parallel write (VERDICT r10 #2): the trailing
-        // orderBy range-partitions the dimension, so an N-file write
-        // preserves global order across the file sequence — the form
-        // a Spark deployment actually ships. The DuckDB twin's COPY
-        // TO stays single-file (its ordered write cannot fan out);
-        // the asymmetry is noted in BASELINE.md.
-        df.write.mode("overwrite").parquet(s"$writeDir/$name")
-      else df.collect()
-    // optional comma-list filter for targeted perf work on a few rows
-    val only = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries: Seq[(String, (org.apache.spark.sql.SparkSession, String)
-        => org.apache.spark.sql.DataFrame)] = (mode match {
-      case "joins" => JoinQueries.map(n => n -> SparkEntry.queries(n))
-      case "bloom" => BloomQueries.toSeq.sortBy(_._1)
-      case _ => Queries.map(n => n -> SparkEntry.queries(n))
-    }).filter(q => only.forall(_.contains(q._1)))
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    queries.foreach { case (name, fn) =>
-      try {
-        consume(name, fn(spark, runDir)) // warmup
-        var best = Double.MaxValue
-        for (_ <- 1 to reps) {
-          val t0 = System.nanoTime()
-          consume(name, fn(spark, runDir))
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          System.err.println(f"[scalebench] $name rep ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    graft.sources.StagePath.scratch("scale_out") { writeDir =>
+      // consume a result the way a deployment would: large outputs are
+      // written, everything else is collected (same contract as Bench)
+      def consume(name: String,
+          df: org.apache.spark.sql.DataFrame): Unit =
+        if (WriteQueries(name))
+          // natural parallel write (VERDICT r10 #2): the trailing
+          // orderBy range-partitions the dimension, so an N-file write
+          // preserves global order across the file sequence — the form
+          // a Spark deployment actually ships. The DuckDB twin's COPY
+          // TO stays single-file (its ordered write cannot fan out);
+          // the asymmetry is noted in BASELINE.md.
+          df.write.mode("overwrite").parquet(s"$writeDir/$name")
+        else df.collect()
+      // optional comma-list filter for targeted perf work on a few rows
+      val only = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      val queries: Seq[(String, (org.apache.spark.sql.SparkSession, String)
+          => org.apache.spark.sql.DataFrame)] = (mode match {
+        case "joins" => JoinQueries.map(n => n -> SparkEntry.queries(n))
+        case "bloom" => BloomQueries.toSeq.sortBy(_._1)
+        case _ => Queries.map(n => n -> SparkEntry.queries(n))
+      }).filter(q => only.forall(_.contains(q._1)))
+      val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+      queries.foreach { case (name, fn) =>
+        try {
+          consume(name, fn(spark, runDir)) // warmup
+          var best = Double.MaxValue
+          for (_ <- 1 to reps) {
+            val t0 = System.nanoTime()
+            consume(name, fn(spark, runDir))
+            best = math.min(best, (System.nanoTime() - t0) / 1e9)
+            System.err.println(f"[scalebench] $name rep ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          }
+          timings(name) = best
+        } catch {
+          case e: Throwable =>
+            errors += name
+            System.err.println(s"[scalebench] $name FAILED: ${e.getMessage}")
         }
-        timings(name) = best
-      } catch {
-        case e: Throwable =>
-          errors += name
-          System.err.println(s"[scalebench] $name FAILED: ${e.getMessage}")
       }
     }
     val qs = timings.map { case (k, v) => "\"" + k + "\":" + v }

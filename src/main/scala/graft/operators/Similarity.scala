@@ -445,28 +445,6 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$root/postings.parquet")
   }
 
-  /** Corpus-keyed scratch location for the `ann_indexed` query's
-    * index (a derived artifact, rebuilt when the corpus regenerates
-    * — same mtime-guard pattern as Bench.stage). */
-  private def indexRoot(dir: String, tag: String = ""): String = {
-    // v2: centroid derivation changed in round 13 (portable seed hash
-    // + rounded-argmax Lloyd) — the version bump orphans any index a
-    // previous build left in /tmp, which the mtime guard alone cannot
-    // catch (the corpus didn't change; the model code did).
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivf_index_v2${tag}_${graft.sources.StagePath.key(dir)}")
-    val marker = new java.io.File(root, "_BUILT")
-    val srcMtime =
-      new java.io.File(dir, "embeddings.parquet").lastModified
-    if (!(marker.exists() && marker.lastModified() >= srcMtime)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
-      root.mkdirs()
-      marker.createNewFile() // before build: a crashed build retries
-      marker.setLastModified(0L)
-    }
-    root.getPath
-  }
-
   /** Query the PERSISTED index with the tuned probe settings —
     * bit-identical to [[annIvf]] (same trained centroids, same
     * postings, read back through parquet). Rows-only like annIvf;
@@ -490,17 +468,23 @@ object Similarity {
       margin, probeMax)
   }
 
+  /** The `ann_indexed` query's index, a
+    * [[graft.sources.StagePath.derived]] copy of the embeddings. v2:
+    * centroid derivation changed in round 13 (portable seed hash +
+    * rounded-argmax Lloyd), and the version in the name orphans an
+    * index a previous build left, which the mtime key alone cannot
+    * catch (the corpus didn't change; the model code did). */
+  private def indexRoot(dir: String, tag: String)(
+      build: String => Unit): String =
+    graft.sources.StagePath.derived(dir, Seq("embeddings"),
+      s"ivf_index_v2$tag")(build)
+
   /** The persisted #119 index tables (built first if absent) — also
     * the STATIC side of the streaming serving twin
     * [[graft.streaming.EventStream.annServe]]. */
   def ivfIndexTables(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val root = indexRoot(dir)
-    val marker = new java.io.File(root, "_BUILT")
-    if (marker.lastModified() == 0L) {
-      buildIvfIndex(spark, dir, root)
-      marker.setLastModified(System.currentTimeMillis())
-    }
+    val root = indexRoot(dir, "")(buildIvfIndex(spark, dir, _))
     (spark.read.parquet(s"$root/centroids.parquet"),
       spark.read.parquet(s"$root/postings.parquet"))
   }
@@ -527,24 +511,20 @@ object Similarity {
     * appended index is the spec's business; this query certifies the
     * append MACHINERY is lossless.) */
   def annAppend(spark: SparkSession, dir: String): DataFrame = {
-    val root = indexRoot(dir, "_append")
-    val marker = new java.io.File(root, "_BUILT")
-    if (marker.lastModified() == 0L) {
+    val root = indexRoot(dir, "_append") { root =>
       val e = emb(spark, dir)
       val base = e.filter(pmod(col("vec_id"), lit(AppendMod)) =!= 0L)
       val batch = e.filter(pmod(col("vec_id"), lit(AppendMod)) === 0L)
       val centroids = broadcast(trainCentroidsOf(spark, base,
         dir, "#append", IvfKmeansIters))
-      centroids.write.mode("overwrite")
-        .parquet(s"$root/centroids.parquet")
+      centroids.write.parquet(s"$root/centroids.parquet")
       ivfAssignCells(base, centroids, IvfAssign)
         .repartition(col("cell"))
-        .write.mode("overwrite").parquet(s"$root/postings.parquet")
+        .write.parquet(s"$root/postings.parquet")
       // the append: frozen centroids, new rows only, additive commit
       ivfAssignCells(batch, centroids, IvfAssign)
         .repartition(col("cell"))
         .write.mode("append").parquet(s"$root/postings.parquet")
-      marker.setLastModified(System.currentTimeMillis())
     }
     val centroids =
       broadcast(spark.read.parquet(s"$root/centroids.parquet"))

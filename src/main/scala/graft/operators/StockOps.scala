@@ -125,7 +125,7 @@ object StockOps {
   /** #10 Scheduled incremental batch: the 2-minute-cadence DAG
     * (stock_data_to_gcp.py:85-91) as one idempotent batch — a fixed
     * event-time window, id-deduped, rolled up hourly. The window
-    * predicate is applied to the raw nanos long via
+    * predicate is applied to the stored `ts` via
     * [[Tables.loadEventsRange]] so it reaches the parquet scan
     * (row-group pruning — the difference between reading one day and
     * the whole table at 100 TB); dedupe is one shuffle on the id. */
@@ -259,9 +259,9 @@ object StockOps {
       .groupBy("user_id")
       .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("m"))
       .select(col("user_id"), col("m.ts").as("ts"), col("m.value").as("value"))
-    // Both sides load through the raw-nanos range reader so the time
-    // window prunes at the parquet scan (not above the micros
-    // projection) — the base is a bounded history, the update one day.
+    // Both sides load through the range reader so the time window
+    // prunes at the parquet scan — the base is a bounded history, the
+    // update one day.
     val base = latest(Tables.loadEventsRange(spark, dir,
         until = "2024-01-04 00:00:00"))
       .select(col("user_id").as("b_user"), col("ts").as("b_ts"),
@@ -308,20 +308,18 @@ object StockOps {
     * not duplicate (oracle aggregates the source once). A replay
     * rewrites only the partitions present in the batch — at 100 TB a
     * re-run day swaps one partition, never the table. */
-  def appendRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_append_${graft.sources.StagePath.key(dir)}").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    val batch = Tables.loadEventsRange(spark, dir,
-        "2024-01-01 00:00:00", "2024-01-02 00:00:00")
-      .withColumn("batch_date", to_date(col("ts")))
-    AppendSink.idempotentAppend(batch, out, Seq("batch_date"))
-    AppendSink.idempotentAppend(batch, out, Seq("batch_date")) // replay
-    AppendSink.readBack(spark, out)
-      .groupBy("batch_date")
-      .agg(count(lit(1)).as("n_events"), Num.dsum(col("value")).as("sum_value"))
-      .orderBy("batch_date")
-  }
+  def appendRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.StagePath.scratch(spark, "append") { out =>
+      val batch = Tables.loadEventsRange(spark, dir,
+          "2024-01-01 00:00:00", "2024-01-02 00:00:00")
+        .withColumn("batch_date", to_date(col("ts")))
+      AppendSink.idempotentAppend(batch, out, Seq("batch_date"))
+      AppendSink.idempotentAppend(batch, out, Seq("batch_date")) // replay
+      AppendSink.readBack(spark, out)
+        .groupBy("batch_date")
+        .agg(count(lit(1)).as("n_events"), Num.dsum(col("value")).as("sum_value"))
+        .orderBy("batch_date")
+    }
 
   /** #129 Realized volatility per (ticker, day) from minute-bar
     * closes — the risk metric a market-data warehouse serves next to

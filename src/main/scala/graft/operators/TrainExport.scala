@@ -60,12 +60,6 @@ object TrainExport {
     conv(substring(md5(concat_ws(":", lit(seed), id)), 25, 8), 16, 10)
       .cast("long")
 
-  /** Scratch root for the exported shards (a derived artifact,
-    * rewritten on every call — the write IS the operator). */
-  private def shardRoot(dir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_shuffle_${graft.sources.StagePath.key(dir)}").getPath
-
   /** #122 Deterministic corpus shuffle + balanced shard export, with
     * the round trip verified: a training job wants the corpus in
     * pseudorandom order (no crawl/source runs — a locality-ordered
@@ -95,8 +89,21 @@ object TrainExport {
     * no global row_number), one partitioned write. At 100 TB the
     * shard count rises with the corpus (shards of ~1 GB), the shape
     * is unchanged. */
-  def corpusShuffle(spark: SparkSession, dir: String): DataFrame = {
-    val root = shardRoot(dir)
+  def corpusShuffle(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.StagePath.scratch(spark, "shuffle") { root =>
+      exportShards(spark, dir, root)
+      spark.read.parquet(root)
+        .groupBy(col("shard").cast("long").as("shard"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("sum_chars"),
+          sum(col("pos") * pmod(col("doc_id"), lit(1000003L)))
+            .as("ord_checksum"))
+        .orderBy("shard")
+    }
+
+  /** The export step of [[corpusShuffle]]: `dir`'s documents as
+    * shuffled, position-numbered shards under `root`. */
+  def exportShards(spark: SparkSession, dir: String, root: String): Unit = {
     val perShard = org.apache.spark.sql.expressions.Window
       .partitionBy("shard").orderBy(col("skey"), col("doc_id"))
     Tables.load(spark, dir, "documents")
@@ -111,13 +118,6 @@ object TrainExport {
       // order by construction
       .sortWithinPartitions("shard", "skey")
       .write.mode("overwrite").partitionBy("shard").parquet(root)
-    spark.read.parquet(root)
-      .groupBy(col("shard").cast("long").as("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("sum_chars"),
-        sum(col("pos") * pmod(col("doc_id"), lit(1000003L)))
-          .as("ord_checksum"))
-      .orderBy("shard")
   }
 
   // ---------------------------------------------------------------

@@ -72,25 +72,23 @@ object Alerts {
         col("n_violations").as("n"),
         lit("rule violations over events").as("detail"))
     // backfill halt trail (round 15, VERDICT r14 #7): run the real
-    // 4-day chain against the outage — scratch-table wipe + many small
+    // 4-day chain against the outage — a scratch table + many small
     // log commits, IO-bound and constant per corpus. The TaskRun
     // ledger is a bounded driver value (≤ BackfillDays rows,
     // deterministic: the outage is injected), so it is a corpus
     // artifact like every other route probe; the chain machinery stays
     // exercised by backfill_range and the Backfill specs.
-    def replay: Seq[Backfill.TaskRun] = {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_alertbf_${graft.sources.StagePath.key(dir)}").getPath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      def day(d: LocalDate): DataFrame = {
-        if (d == OutageDay)
-          throw new java.io.IOException(s"upstream outage $d")
-        Tables.loadEventsRange(spark, dir,
-          s"$d 00:00:00", s"${d.plusDays(1)} 00:00:00")
+    def replay: Seq[Backfill.TaskRun] =
+      graft.sources.StagePath.scratch("alert_backfill") { root =>
+        def day(d: LocalDate): DataFrame = {
+          if (d == OutageDay)
+            throw new java.io.IOException(s"upstream outage $d")
+          Tables.loadEventsRange(spark, dir,
+            s"$d 00:00:00", s"${d.plusDays(1)} 00:00:00")
+        }
+        Backfill.run(spark, root, "alert_demo", BackfillStart,
+          BackfillStart.plusDays(BackfillDays.toLong))(day).runs
       }
-      Backfill.run(spark, root, "alert_demo", BackfillStart,
-        BackfillStart.plusDays(BackfillDays.toLong))(day).runs
-    }
     val runsLedger =
       graft.CorpusCache.value(spark, dir, "events", "alert_backfill")(replay)
     val bf = runsLedger

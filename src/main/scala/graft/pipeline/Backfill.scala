@@ -113,13 +113,9 @@ object Backfill {
     * same per-day aggregate straight from the source. The ScalaTest
     * suite covers what SQL can't see: halt-on-failure ordering,
     * retries, blocked dates, crash-replay idempotence. */
-  def backfillRange(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    // each call backfills into a directory of its own and returns its
-    // collected rows, so no call deletes another's table and nothing
-    // is left under the temp dir once the call returns
-    val root = java.nio.file.Files.createTempDirectory("graft_backfill_").toString
-    try {
+  def backfillRange(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.StagePath.scratch(spark, "backfill") { root =>
+      import org.apache.spark.sql.functions._
       val writer = "daily_events"
       val start = LocalDate.of(2024, 1, 1)
       def day(d: LocalDate): DataFrame =
@@ -129,13 +125,10 @@ object Backfill {
       val report = run(spark, root, writer, start, start.plusDays(3))(day)
       require(report.completed && report.runs.head.status == "skipped",
         s"backfill must resume past the pre-committed day: ${report.runs}")
-      val daily = VersionedTable.read(spark, root)
+      VersionedTable.read(spark, root)
         .groupBy(to_date(col("ts")).as("batch_date"))
         .agg(count(lit(1)).as("n_events"),
           graft.operators.Num.dsum(col("value")).as("sum_value"))
         .orderBy("batch_date")
-      spark.createDataFrame(java.util.Arrays.asList(daily.collect(): _*),
-        daily.schema)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
+    }
 }

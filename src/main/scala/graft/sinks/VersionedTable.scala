@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.StagePath
 
 /** Versioned-manifest table commits (SURVEY.md §2 #105): snapshot
   * isolation for a parquet table under CONCURRENT writers — the
@@ -428,22 +429,14 @@ object VersionedTable {
     * oracle aggregates the same two days straight from the source).
     * The ScalaTest suite covers what SQL can't see: concurrent
     * writers, crash windows, pinned snapshots. */
-  def versionedCommits(spark: SparkSession, dir: String): DataFrame = {
-    val root = gateTable("", dir)
-    append(eventsDay(spark, dir, 1), root)
-    append(eventsDay(spark, dir, 2), root)
-    compact(spark, root)
-    vacuum(root, retentionMs = 0L) // single-writer table, quiesced here
-    perDay(read(spark, root))
-  }
-
-  /** A fresh table under java.io.tmpdir for one gate query over `dir`. */
-  private def gateTable(name: String, dir: String): String = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_vtable${name}_${graft.sources.StagePath.key(dir)}").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    root
-  }
+  def versionedCommits(spark: SparkSession, dir: String): DataFrame =
+    StagePath.scratch(spark, "vtable") { root =>
+      append(eventsDay(spark, dir, 1), root)
+      append(eventsDay(spark, dir, 2), root)
+      compact(spark, root)
+      vacuum(root, retentionMs = 0L) // single-writer table, quiesced here
+      perDay(read(spark, root))
+    }
 
   /** Day `d` of January 2024 of the corpus's events: one batch. */
   private def eventsDay(spark: SparkSession, dir: String, d: Int): DataFrame =
@@ -525,14 +518,14 @@ object VersionedTable {
     * the first version — the incremental-consumer contract (new data
     * only, rewrites invisible). The oracle aggregates days 2-3
     * straight from the source: feed content == appended batches. */
-  def versionedChanges(spark: SparkSession, dir: String): DataFrame = {
-    val root = gateTable("_cdc", dir)
-    val mark = append(eventsDay(spark, dir, 1), root)
-    append(eventsDay(spark, dir, 2), root)
-    compact(spark, root) // rewrite only: must NOT surface in the feed
-    append(eventsDay(spark, dir, 3), root)
-    perDay(changes(spark, root, mark))
-  }
+  def versionedChanges(spark: SparkSession, dir: String): DataFrame =
+    StagePath.scratch(spark, "vtable") { root =>
+      val mark = append(eventsDay(spark, dir, 1), root)
+      append(eventsDay(spark, dir, 2), root)
+      compact(spark, root) // rewrite only: must NOT surface in the feed
+      append(eventsDay(spark, dir, 3), root)
+      perDay(changes(spark, root, mark))
+    }
 
   /** #109 driver-gate query: an INCREMENTALLY MAINTAINED aggregate
     * over the changes feed — the "don't rescan 100 TB for yesterday's
@@ -543,26 +536,26 @@ object VersionedTable {
     * recomputes the same aggregate from scratch over the source —
     * incremental == full recompute, bit-exact, because the partials
     * re-sum exactly. */
-  def incrementalCdcAgg(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = gateTable("_inc", dir)
-    append(eventsDay(spark, dir, 1), root)
-    append(eventsDay(spark, dir, 2), root)
-    def partial(feed: DataFrame): DataFrame = feed
-      .groupBy(to_date(col("ts")).as("batch_date"))
-      .agg(count(lit(1)).as("n"),
-        graft.operators.Num.dsumExact(col("value")).as("p"))
-    val pull1 = partial(changes(spark, root, 0L)) // file list pinned NOW
-    val mark = snapshot(root).version
-    compact(spark, root) // rewrite between the pulls: invisible to CDC
-    append(eventsDay(spark, dir, 3), root)
-    val pull2 = partial(changes(spark, root, mark))
-    pull1.unionByName(pull2)
-      .groupBy("batch_date")
-      .agg(sum(col("n")).as("n_events"),
-        sum(col("p")).cast("double").as("sum_value"))
-      .orderBy("batch_date")
-  }
+  def incrementalCdcAgg(spark: SparkSession, dir: String): DataFrame =
+    StagePath.scratch(spark, "vtable") { root =>
+      import org.apache.spark.sql.functions._
+      append(eventsDay(spark, dir, 1), root)
+      append(eventsDay(spark, dir, 2), root)
+      def partial(feed: DataFrame): DataFrame = feed
+        .groupBy(to_date(col("ts")).as("batch_date"))
+        .agg(count(lit(1)).as("n"),
+          graft.operators.Num.dsumExact(col("value")).as("p"))
+      val pull1 = partial(changes(spark, root, 0L)) // file list pinned NOW
+      val mark = snapshot(root).version
+      compact(spark, root) // rewrite between the pulls: invisible to CDC
+      append(eventsDay(spark, dir, 3), root)
+      val pull2 = partial(changes(spark, root, mark))
+      pull1.unionByName(pull2)
+        .groupBy("batch_date")
+        .agg(sum(col("n")).as("n_events"),
+          sum(col("p")).cast("double").as("sum_value"))
+        .orderBy("batch_date")
+    }
 
   /** Default vacuum retention: 7 days, the Delta VACUUM default. Any
     * honest writer stages and commits within this horizon, so files

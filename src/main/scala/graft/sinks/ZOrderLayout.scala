@@ -67,34 +67,24 @@ object ZOrderLayout {
   /** Write `events` z-ordered into `nFiles` files: range-partition by
     * z-key (files = contiguous z-ranges = tight min/max rectangles),
     * sort inside each so row groups within a file are rectangles too.
-    * Cached per (dir, nFiles) under /tmp like the bucketed warehouse —
-    * the layout shuffle is paid once at ingest, not per query. The
+    * A [[graft.sources.StagePath.derived]] copy per (dir, nFiles) — the
+    * layout shuffle is paid once at ingest, not per query. The
     * min/max domain collect is 4 scalars from one aggregate — bounded,
     * not a data collect. */
-  def build(spark: SparkSession, dir: String, nFiles: Int = 8): String = {
-    // cache key: MD5 of the source dir (collision-free in practice,
-    // unlike String.hashCode) + nFiles as a separate component; a
-    // layout older than its source is rebuilt, not served stale
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map("%02x".format(_)).mkString
-    val out = new java.io.File(s"/tmp/graft_zorder_${digest}_$nFiles")
-    val success = new java.io.File(out, "_SUCCESS")
-    val src = new java.io.File(dir, "events.parquet")
-    if (!success.isFile || success.lastModified < src.lastModified) {
-      val ev = Tables.load(spark, dir, "events")
-        .withColumn("ts_min", floor(col("ts").cast("long") / 60).cast("long"))
-      val r = ev.agg(min("user_id"), max("user_id"), min("ts_min"),
-        max("ts_min")).collect()(0)
-      ev.withColumn("zk", eventsZkey(col("user_id"), col("ts_min"),
-          (r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
-        .repartitionByRange(nFiles, col("zk"))
-        .sortWithinPartitions("zk")
-        .drop("zk", "ts_min")
-        .write.mode("overwrite").parquet(out.getAbsolutePath)
+  def build(spark: SparkSession, dir: String, nFiles: Int = 8): String =
+    graft.sources.StagePath.derived(dir, Seq("events"), s"zorder_$nFiles") {
+      out =>
+        val ev = Tables.load(spark, dir, "events")
+          .withColumn("ts_min", floor(col("ts").cast("long") / 60).cast("long"))
+        val r = ev.agg(min("user_id"), max("user_id"), min("ts_min"),
+          max("ts_min")).collect()(0)
+        ev.withColumn("zk", eventsZkey(col("user_id"), col("ts_min"),
+            (r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
+          .repartitionByRange(nFiles, col("zk"))
+          .sortWithinPartitions("zk")
+          .drop("zk", "ts_min")
+          .write.mode("overwrite").parquet(out)
     }
-    out.getAbsolutePath
-  }
 
   /** §2 #68 `zorder_scan`: two-predicate dashboard slice (a ticker
     * band over a two-day window) against the z-ordered layout. Both

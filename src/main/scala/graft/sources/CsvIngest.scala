@@ -78,32 +78,30 @@ object CsvIngest {
     * timestamps carry micros). */
   private[sources] def roundTrip(spark: SparkSession, dir: String,
       format: String, from: String, to: String,
-      read: (SparkSession, String) => IngestBatch): DataFrame = {
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${format}_${StagePath.key(dir)}").getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    // raw-nanos range load → the one-day window prunes at the scan
-    Tables.loadEventsRange(spark, dir, from, to)
-      .select(col("event_id"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .coalesce(1)
-      // header: read by the CSV reader, ignored by JSON
-      .write.format(format).option("header", "true").mode("overwrite")
-      .save(out)
-    val batch = read(spark, out)
-    // Warehouse-load step: stage the typed clean rows to parquet (this
-    // materializes the parsed batch), then drop the parse cache — the
-    // returned aggregate reads the staged table, so nothing stays
-    // pinned in executor memory across invocations.
-    val staged = out + "_typed"
-    batch.clean.write.mode("overwrite").parquet(staged)
-    batch.release()
-    spark.read.parquet(staged).groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        Num.dsum(col("value")).as("sum_value"),
-        max(col("ts")).as("max_ts"))
-      .orderBy("event_type")
-  }
+      read: (SparkSession, String) => IngestBatch): DataFrame =
+    StagePath.scratch(spark, format) { root =>
+      val out = s"$root/$format"
+      // range load → the one-day window prunes at the scan
+      Tables.loadEventsRange(spark, dir, from, to)
+        .select(col("event_id"),
+          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
+          col("user_id"), col("event_type"), col("value"))
+        .coalesce(1)
+        // header: read by the CSV reader, ignored by JSON
+        .write.format(format).option("header", "true").save(out)
+      val batch = read(spark, out)
+      // Warehouse-load step: stage the typed clean rows to parquet (this
+      // materializes the parsed batch), then drop the parse cache — the
+      // aggregate reads the staged table, so nothing stays pinned in
+      // executor memory across invocations.
+      val staged = s"$root/typed"
+      batch.clean.write.parquet(staged)
+      batch.release()
+      spark.read.parquet(staged).groupBy("event_type")
+        .agg(count(lit(1)).as("n_events"),
+          countDistinct(col("user_id")).as("n_users"),
+          Num.dsum(col("value")).as("sum_value"),
+          max(col("ts")).as("max_ts"))
+        .orderBy("event_type")
+    }
 }

@@ -95,20 +95,6 @@ class BackfillSpec extends SparkTestBase {
     assert(days === Seq(d0.toString, d0.plusDays(2).toString))
   }
 
-  test("backfill_range calls on one corpus never share a table") {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    def leftovers = Option(tmp.list()).toSeq.flatten
-      .filter(_.startsWith("graft_backfill_")).toSet
-    val before = leftovers
-    val first = Backfill.backfillRange(spark, SfDir)
-    val second = Backfill.backfillRange(spark, SfDir)
-    // the first call's frame is read only after the second call ran
-    val rows1 = first.collect().toSeq
-    assert(rows1.size === 3)
-    assert(rows1 === second.collect().toSeq)
-    assert(leftovers === before, "a call left its table under the temp dir")
-  }
-
   test("backfill_range driver query resumes past a pre-committed day") {
     val got = Backfill.backfillRange(spark, SfDir)
     assert(got.count() === 3L, "one row per backfilled day")

@@ -101,27 +101,18 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("events time-range predicates reach the parquet scan as pushed bounds") {
-    // The pushed form row-group-prunes via footer min/max. On the
-    // legacy NANOS layout the bounds are raw epoch-nanos longs (a
-    // filter on the derived micros ts would sit above the projection
-    // and full-scan at 100 TB); on the native MICROS layout they are
-    // timestamp literals pushed directly. Either way BOTH bounds must
-    // appear in the scan's PushedFilters.
-    val nanosLayout =
-      graft.sources.Tables.eventsTsIsNanosLong(spark, SfDir)
-    val (lo, hi) =
-      if (nanosLayout)
-        ("GreaterThanOrEqual(ts,1704067200000000000)",
-          "LessThan(ts,1704153600000000000)")
-      else ("GreaterThanOrEqual(ts,", "LessThan(ts,")
+    // The pushed form row-group-prunes via footer min/max: the bounds
+    // are timestamp literals pushed directly, and BOTH must appear in
+    // the scan's PushedFilters.
     val inc = planOf(StockOps.incrementalBatch(spark, SfDir))
-    assert(inc.contains(lo) && inc.contains(hi), inc.take(3000))
+    assert(inc.contains("GreaterThanOrEqual(ts,") && inc.contains("LessThan(ts,"),
+      inc.take(3000))
     val merge = planOf(StockOps.mergeUpsert(spark, SfDir))
     assert(merge.contains("LessThan(ts,") &&
       merge.contains("GreaterThanOrEqual(ts,"),
       merge.take(4000))
-    // range bounds are exact w.r.t. the floor-to-micros conversion:
-    // same rows as filtering the derived ts. This equivalence holds
+    // range bounds are exact: the same rows as filtering the loaded
+    // ts. This equivalence holds
     // under the repo-wide UTC convention (loadEventsRange parses its
     // bounds as UTC; the string-literal casts below use the session
     // timezone, pinned to UTC in SparkTestBase).

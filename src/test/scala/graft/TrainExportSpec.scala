@@ -47,13 +47,15 @@ class TrainExportSpec extends SparkTestBase {
     // deterministic: a second run (which rewrites the shards) agrees
     val again = TrainExport.corpusShuffle(spark, SfDir).collect()
     assert(out.toSeq === again.toSeq)
-    // physical ordering contract: a shard file's rows come back in
-    // shuffle-key order WITHOUT any sort on the read path, and pos is
-    // the contiguous 1..n rank the closed form assigns
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_shuffle_${graft.sources.StagePath.key(SfDir)}")
-    val one = spark.read.parquet(s"$root/shard=0")
+    // physical ordering contract: a shard file's rows, as the query's
+    // export step writes them, come back in shuffle-key order WITHOUT
+    // any sort on the read path, and pos is the contiguous 1..n rank
+    // the closed form assigns
+    val root = java.nio.file.Files.createTempDirectory("shufflespec")
+    TrainExport.exportShards(spark, SfDir, s"$root/shards")
+    val one = spark.read.parquet(s"$root/shards/shard=0")
       .select("skey", "pos").collect()
+    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
     assert(one.nonEmpty)
     assert(one.map(_.getLong(0)).toSeq ===
       one.map(_.getLong(0)).sortBy(identity).toSeq)
