@@ -541,10 +541,12 @@ object Analytics {
       .withColumn("t", round((col("n").cast("double") - col("e"))
         * (col("n").cast("double") - col("e")) / col("e"), 9)
         .cast("decimal(28,9)"))
+    // collect_set, not countDistinct: a distinct aggregate plans an
+    // Expand and re-shuffles the one-partition cells
     terms.agg(
         max(col("n_tot")).as("n_obs"),
-        countDistinct(col("seg")).as("n_segments"),
-        countDistinct(col("prio")).as("n_priorities"),
+        size(collect_set(col("seg"))).cast("long").as("n_segments"),
+        size(collect_set(col("prio"))).cast("long").as("n_priorities"),
         round(sum(col("t")).cast("double"), 6).as("chi2"))
       .select(col("n_obs"), col("n_segments"),
         col("n_priorities"),

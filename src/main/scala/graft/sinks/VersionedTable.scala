@@ -11,17 +11,17 @@ import graft.sources.StagePath
   * Delta/Iceberg shape:
   *
   *  - `root/_graft_log/v<20-digit>.json` — one immutable action file
-  *    per version: the data files this commit adds and removes
-  *    (paths relative to root), an [[appendOnce]] tag and, in Delta's
-  *    `metaData` shape, the schema of the files it adds:
-  *    `{"adds":[..],"removes":[..],"writer":"w","epoch":7,
-  *    "metaData":{"schemaString":"<StructType JSON>"}}`. The TABLE
-  *    STATE at version N is the replay of actions 1..N; data files are
-  *    never listed by directory, nor footers read for the schema (a
-  *    commit without `metaData`, from before it existed, still is).
-  *  - Data files land under `root/data/<uuid>/` BEFORE their commit
-  *    references them — an uncommitted (or crashed) write is plain
-  *    unreferenced bytes, invisible to every reader.
+  *    per version: the files this commit adds, as Delta's `add`
+  *    records them (root-relative path, size, mtime, partition
+  *    values), the paths it removes, an [[appendOnce]] tag and, when
+  *    it changes, the schema (Delta's `metaData.schemaString`). The TABLE
+  *    STATE at version N is the replay of actions 1..N, and it is the
+  *    file index: no data directory is listed, no footer read (a
+  *    commit without a schema still is; bare-path adds are stat'ed).
+  *  - Data files land under `root/data/<uuid>/` (partitioned ones in
+  *    the root's Hive dirs) BEFORE their commit references them — an
+  *    uncommitted (or crashed) write is plain unreferenced bytes,
+  *    invisible to every reader.
   *  - Commit = publish version R+1 by atomically CREATING the next
   *    log file: `Files.createLink(v{R+1}, tmp)` fails if the name
   *    exists, so of two racing writers exactly one wins the version
@@ -51,11 +51,20 @@ object VersionedTable {
 
   private val LogDir = "_graft_log"
 
-  /** The table at `version`: its live files and, where recorded, the
-    * schema JSON of the commit that added each. */
+  /** One data file as its `add` action records it; a legacy add is a
+    * bare path (size and mtime -1, stat'ed when read). */
+  final case class AddFile(path: String, size: Long = -1L, mtime: Long = -1L,
+      partitionValues: Seq[(String, String)] = Seq.empty)
+
+  /** The table at `version`: its live files, the schema JSON of the
+    * commit that added each (where recorded), their adds, the dirs a
+    * compaction covered ([[AppendSink.compactDay]]) and the last
+    * schema the log recorded. */
   final case class Snapshot(version: Long, files: Seq[String],
-      schemas: Map[String, String]) {
+      schemas: Map[String, String], entries: Map[String, AddFile] = Map.empty,
+      covered: Set[String] = Set.empty, schema: Option[String] = None) {
     def isEmpty: Boolean = files.isEmpty
+    def adds: Seq[AddFile] = files.map(f => entries.getOrElse(f, AddFile(f)))
   }
 
   private def logDir(root: String) = new java.io.File(root, LogDir)
@@ -65,12 +74,14 @@ object VersionedTable {
 
   private val VersionRe = "v(\\d{20})\\.json".r
 
-  /** One log entry (see the log format above). */
-  private final case class Commit(adds: Seq[String],
+  /** One log entry (see the log format above); `covers`/`uncovers`
+    * add and drop covered partition dirs. */
+  private[sinks] final case class Commit(adds: Seq[AddFile],
       removes: Seq[String] = Seq.empty, txn: Option[(String, Long)] = None,
-      schema: Option[String] = None) {
+      schema: Option[String] = None, covers: Seq[String] = Seq.empty,
+      uncovers: Seq[String] = Seq.empty) {
     def schemas: Map[String, String] =
-      schema.fold(Map.empty[String, String])(s => adds.map(_ -> s).toMap)
+      schema.fold(Map.empty[String, String])(s => adds.map(_.path -> s).toMap)
   }
 
   // stats sidecars written before this reader print NaN bare
@@ -80,8 +91,19 @@ object VersionedTable {
 
   private def writeCommit(f: java.io.File, c: Commit): Unit = {
     val o = Json.createObjectNode()
-    c.adds.foldLeft(o.putArray("adds"))(_.add(_))
-    c.removes.foldLeft(o.putArray("removes"))(_.add(_))
+    val adds = o.putArray("adds")
+    c.adds.foreach { a =>
+      val e = adds.addObject().put("path", a.path).put("size", a.size)
+        .put("modificationTime", a.mtime)
+      if (a.partitionValues.nonEmpty) {
+        val pv = e.putObject("partitionValues")
+        a.partitionValues.foreach { case (k, v) => pv.put(k, v) }
+      }
+    }
+    if (c.removes.nonEmpty) c.removes.foldLeft(o.putArray("removes"))(_.add(_))
+    if (c.covers.nonEmpty) c.covers.foldLeft(o.putArray("covers"))(_.add(_))
+    if (c.uncovers.nonEmpty)
+      c.uncovers.foldLeft(o.putArray("uncovers"))(_.add(_))
     c.txn.foreach { case (w, e) => o.put("writer", w).put("epoch", e) }
     c.schema.foreach(o.putObject("metaData").put("schemaString", _))
     java.nio.file.Files.write(f.toPath, Json.writeValueAsBytes(o))
@@ -91,9 +113,17 @@ object VersionedTable {
     import scala.jdk.CollectionConverters._
     val o = Json.readTree(versionFile(root, v))
     def strs(k: String) = o.path(k).elements().asScala.map(_.asText).toSeq
-    Commit(strs("adds"), strs("removes"),
+    Commit(o.path("adds").elements().asScala.map { a =>
+        if (a.isTextual) AddFile(a.asText)
+        else AddFile(a.get("path").asText, a.get("size").asLong,
+          a.get("modificationTime").asLong,
+          a.path("partitionValues").fields().asScala.map(e =>
+            e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText))
+            .toSeq)
+      }.toSeq, strs("removes"),
       Option(o.get("writer")).map(w => (w.asText, o.get("epoch").asLong)),
-      Option(o.path("metaData").get("schemaString")).map(_.asText))
+      Option(o.path("metaData").get("schemaString")).map(_.asText),
+      strs("covers"), strs("uncovers"))
   }
 
   /** Committed versions present in the log, ascending. */
@@ -114,34 +144,61 @@ object VersionedTable {
     * contiguous log prefix capped there. Old versions stay readable
     * until [[vacuum]] reclaims their files (the retention window IS
     * the time-travel horizon, as in Delta/Iceberg). */
-  def snapshotAt(root: String, asOf: Long): Snapshot = {
-    val live = collection.mutable.LinkedHashMap.empty[String, Option[String]]
-    var v = 0L
-    for (next <- versions(root) if next == v + 1 && next <= asOf) {
-      val c = readCommit(root, next)
-      c.removes.foreach(live -= _)
-      c.adds.foreach(live(_) = c.schema)
-      v = next
-    }
-    Snapshot(v, live.keys.toSeq,
-      live.collect { case (f, Some(s)) => f -> s }.toMap)
+  def snapshotAt(root: String, asOf: Long): Snapshot = state(replay(root, asOf))
+
+  /** The contiguous log prefix up to `asOf`, each commit with the
+    * schema in effect: a commit of sized adds without `metaData` has
+    * the last one recorded (as in Delta, a writer records the schema
+    * only when it changes). */
+  private def replay(root: String, asOf: Long): Seq[(Long, Commit)] = {
+    var schema = Option.empty[String]
+    versions(root).zipWithIndex
+      .takeWhile { case (v, i) => v == i + 1 && v <= asOf }.map { case (v, _) =>
+        val c = readCommit(root, v)
+        schema = c.schema.orElse(schema)
+        v -> (if (c.adds.exists(_.size < 0)) c else c.copy(schema = schema))
+      }
   }
 
-  /** The one parquet read of table files: `files` (root-relative) with
-    * the merge of their commits' schemas, in commit order (Spark's
-    * mergeSchema rule) — no footer is opened to build the frame. Files
-    * from a commit that recorded no schema fall back to mergeSchema
-    * inference over the footers. */
+  /** The table state a replayed log prefix leaves. */
+  private def state(log: Seq[(Long, Commit)]): Snapshot = {
+    val live = collection.mutable.LinkedHashMap.empty[String, (AddFile, Option[String])]
+    val covered = collection.mutable.Set.empty[String]
+    for ((_, c) <- log) {
+      c.removes.foreach(live -= _)
+      c.adds.foreach(a => live(a.path) = (a, c.schema))
+      covered --= c.uncovers
+      covered ++= c.covers
+    }
+    Snapshot(log.lastOption.fold(0L)(_._1), live.keys.toSeq,
+      live.collect { case (f, (_, Some(s))) => f -> s }.toMap,
+      live.map { case (f, (a, _)) => f -> a }.toMap, covered.toSet,
+      log.reverseIterator.flatMap(_._2.schema).nextOption())
+  }
+
+  /** The one parquet read of table files: `files` with the merge of
+    * their commits' schemas, in commit order (Spark's mergeSchema
+    * rule), over the log's file index — no directory is listed and no
+    * footer opened to build the frame. Files from a commit that
+    * recorded no schema fall back to mergeSchema inference over the
+    * footers. */
   private def readFiles(spark: SparkSession, root: String,
-      files: Seq[String], schemas: Map[String, String]): DataFrame = {
+      files: Seq[AddFile], schemas: Map[String, String]): DataFrame = {
     import org.apache.spark.sql.types.{DataType, StructType}
-    val paths = files.map(f => new java.io.File(root, f).getAbsolutePath)
-    if (files.forall(schemas.contains))
-      spark.read.schema(files.map(schemas).distinct
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .reduce(org.apache.spark.sql.GraftSqlBridge.mergeSchemas))
-        .parquet(paths: _*)
-    else spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    if (files.forall(f => schemas.contains(f.path)))
+      org.apache.spark.sql.GraftSqlBridge.logRelation(spark, root,
+        files.map(f => schemas(f.path)).distinct
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+          .reduce(org.apache.spark.sql.GraftSqlBridge.mergeSchemas),
+        files.map { a =>
+          val f = new java.io.File(root, a.path)
+          val (size, mtime) =
+            if (a.size >= 0) (a.size, a.mtime) else (f.length, f.lastModified)
+          (new org.apache.hadoop.fs.FileStatus(size, false, 1, 32L << 20, mtime,
+            new org.apache.hadoop.fs.Path(f.toURI)), a.partitionValues)
+        })
+    else spark.read.option("mergeSchema", "true")
+      .parquet(files.map(f => new java.io.File(root, f.path).getAbsolutePath): _*)
   }
 
   /** DataFrame over a pinned snapshot (the caller's `snap` keeps
@@ -154,7 +211,7 @@ object VersionedTable {
     * log records files, not casts. */
   def read(spark: SparkSession, root: String, snap: Snapshot): DataFrame = {
     require(!snap.isEmpty, s"version ${snap.version} of $root is empty")
-    readFiles(spark, root, snap.files, snap.schemas)
+    readFiles(spark, root, snap.adds, snap.schemas)
   }
 
   /** Read the latest committed snapshot. */
@@ -179,21 +236,48 @@ object VersionedTable {
     }
   }
 
-  /** Delete the staged files of a commit that lost. */
-  private def discard(root: String, c: Commit): Unit =
-    c.adds.foreach(f =>
-      java.nio.file.Files.deleteIfExists(new java.io.File(root, f).toPath))
+  /** Delete table files (root-relative), and each one's dir once it is
+    * empty. */
+  private[sinks] def purge(root: String, files: Seq[String]): Unit =
+    files.foreach { f =>
+      val file = new java.io.File(root, f)
+      java.nio.file.Files.deleteIfExists(file.toPath)
+      file.getParentFile.delete() // succeeds only once empty
+    }
 
-  /** Stage `df` as fresh uuid-named data files (NOT yet visible): the
-    * adds of a commit that records `df`'s schema. */
-  private def stage(df: DataFrame, root: String): Commit = {
+  /** Stage `df` as fresh data files (NOT yet visible): the adds of a
+    * commit that records `df`'s schema, with each file's size, mtime
+    * and partition values read on the driver, no job. Partitioned
+    * files move from a hidden staging dir into the root's Hive dirs
+    * (`c=v/…`, names unique per write). */
+  private[sinks] def stage(df: DataFrame, root: String,
+      partitionCols: Seq[String] = Seq.empty): Commit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import scala.jdk.CollectionConverters._
     val uuid = java.util.UUID.randomUUID().toString
-    val dir = new java.io.File(new java.io.File(root, "data"), uuid)
-    df.write.parquet(dir.getAbsolutePath)
-    Commit(Option(dir.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(f => s"data/$uuid/${f.getName}")
-      .sorted, schema = Some(df.schema.json))
+    val dir = new java.io.File(root,
+      if (partitionCols.isEmpty) s"data/$uuid" else s".staging/$uuid")
+    df.write.partitionBy(partitionCols: _*).parquet(dir.getAbsolutePath)
+    val adds = org.apache.commons.io.FileUtils
+      .listFiles(dir, Array("parquet"), true).asScala.toSeq.map { f =>
+        val rel = dir.toPath.relativize(f.toPath).toString
+        val (path, file) =
+          if (partitionCols.isEmpty) (s"data/$uuid/$rel", f)
+          else {
+            val to = new java.io.File(root, rel)
+            to.getParentFile.mkdirs()
+            java.nio.file.Files.move(f.toPath, to.toPath)
+            (rel, to)
+          }
+        AddFile(path, file.length, file.lastModified, rel.split('/').init.toSeq.map { kv =>
+          val Array(k, v) = kv.split("=", 2)
+          ExternalCatalogUtils.unescapePathName(k) ->
+            (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+             else ExternalCatalogUtils.unescapePathName(v))
+        })
+      }.sortBy(_.path)
+    if (partitionCols.nonEmpty) org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    Commit(adds, schema = Some(df.schema.json))
   }
 
   /** Transactional append: stage the batch, then claim the next
@@ -206,7 +290,7 @@ object VersionedTable {
       statsCols: Seq[String] = Seq.empty): Long = {
     val c = stage(df, root)
     if (statsCols.nonEmpty) writeStats(df.sparkSession, root, c, statsCols)
-    commit(root, snapshot(root), c).get // removes nothing: never stale
+    publish(root, c)(_ => Some(c)).get
   }
 
   /** Per-file [min,max] of `statsCols` (as doubles — exact for the
@@ -232,7 +316,7 @@ object VersionedTable {
       .map(c => c -> Seq(s"min_$c", s"max_$c").map(r.getAs[java.lang.Double])
         .asJava).toMap.asJava).toMap.asJava
     java.nio.file.Files.write(new java.io.File(
-      new java.io.File(root, staged.adds.head).getParentFile, "_stats.json")
+      new java.io.File(root, staged.adds.head.path).getParentFile, "_stats.json")
       .toPath, Json.writeValueAsBytes(body))
   }
 
@@ -271,7 +355,7 @@ object VersionedTable {
     val keep = statsCandidates(root, snap.files, Map(colName -> (lo, hi)))
     val df =
       if (keep.isEmpty) read(spark, root, snap).limit(0)
-      else readFiles(spark, root, keep, snap.schemas)
+      else readFiles(spark, root, keep.map(snap.entries), snap.schemas)
     df.filter(col(colName).cast("double") >= lo &&
       col(colName).cast("double") <= hi)
   }
@@ -328,19 +412,15 @@ object VersionedTable {
     * version (the original one on replay). */
   def appendOnce(df: DataFrame, root: String, writer: String,
       epoch: Long): Long = {
-    committedEpoch(root, writer, epoch) match {
-      case Some(v) => v
-      case None =>
-        val c = stage(df, root).copy(txn = Some((writer, epoch)))
-        var v = snapshot(root).version + 1
-        while (!tryCommit(root, v, c))
-          committedEpoch(root, writer, epoch) match {
-            case Some(prior) => // replayed concurrently-visible commit
-              discard(root, c)
-              return prior
-            case None => v = math.max(v + 1, snapshot(root).version + 1)
-          }
-        v
+    def prior = committedEpoch(root, writer, epoch)
+    prior.getOrElse {
+      val c = stage(df, root).copy(txn = Some((writer, epoch)))
+      var lost = false // re-check the log only after a lost race
+      publish(root, c) { _ =>
+        val go = !lost || prior.isEmpty
+        lost = true
+        Some(c).filter(_ => go)
+      }.getOrElse(prior.get)
     }
   }
 
@@ -357,10 +437,9 @@ object VersionedTable {
     * (correct schema) when nothing changed. */
   def changes(spark: SparkSession, root: String,
       sinceVersion: Long): DataFrame = {
-    val snap = snapshot(root)
-    val appends = versions(root)
-      .filter(v => v > sinceVersion && v <= snap.version)
-      .map(readCommit(root, _)).filter(_.removes.isEmpty)
+    val log = replay(root, Long.MaxValue)
+    val snap = state(log)
+    val appends = log.collect { case (v, c) if v > sinceVersion && c.removes.isEmpty => c }
     val added = appends.flatMap(_.adds)
     if (added.isEmpty) {
       require(!snap.isEmpty,
@@ -369,24 +448,47 @@ object VersionedTable {
     } else readFiles(spark, root, added, appends.flatMap(_.schemas).toMap)
   }
 
-  /** Commit `c` on top of `snap`, retrying past concurrent commits
-    * that leave its `removes` (files live at `snap`) live. If one
-    * removed any of them (a racing compaction or delete won), the
-    * rewrite no longer covers the table: its files are deleted and
-    * None tells the caller to restart from a fresh snapshot. */
-  private def commit(root: String, snap: Snapshot,
-      c: Commit): Option[Long] = {
-    var v = snap.version + 1
-    while (!tryCommit(root, v, c)) {
-      if (versions(root).filter(_ > snap.version).exists(nv =>
-          readCommit(root, nv).removes.exists(c.removes.contains))) {
-        discard(root, c)
-        return None
+  /** Publish the staged `c` as the next version: each attempt fits `c`
+    * to the latest snapshot by `on`, and a lost race retries on the
+    * new one. None from `on` means `c` no longer applies: its staged
+    * files are deleted and None is returned. */
+  private def publish(root: String, c: Commit)(
+      on: Snapshot => Option[Commit]): Option[Long] = {
+    while (true) {
+      val snap = snapshot(root)
+      on(snap) match {
+        case None =>
+          purge(root, c.adds.map(_.path))
+          return None
+        case Some(d) =>
+          val recorded = if (d.schema == snap.schema) d.copy(schema = None) else d
+          if (tryCommit(root, snap.version + 1, recorded)) return Some(snap.version + 1)
       }
-      v = math.max(v + 1, snapshot(root).version + 1)
     }
-    Some(v)
+    None
   }
+
+  /** Publish the staged `c` with the removes `replaced` picks from the
+    * snapshot it lands on and its adds in covered dirs dropped: a
+    * dynamic partition overwrite linearized at its commit. Then delete
+    * what it removed or dropped, so the footprint does not grow. */
+  private[sinks] def overwrite(root: String, c: Commit)(
+      replaced: Snapshot => Seq[String]): Unit = {
+    var d = c
+    publish(root, c) { snap =>
+      d = c.copy(removes = replaced(snap), adds =
+        c.adds.filterNot(a => snap.covered(a.path.take(a.path.lastIndexOf('/')))))
+      Some(d).filter(d => d.adds.nonEmpty || d.removes.nonEmpty)
+    }
+    purge(root, d.removes ++ c.adds.diff(d.adds).map(_.path))
+  }
+
+  /** Publish `c` while every file it removes is still live. If a
+    * racing compaction or delete removed one, the rewrite no longer
+    * covers the table: its files are deleted and None tells the
+    * caller to restart from a fresh snapshot. */
+  private[sinks] def commit(root: String, c: Commit): Option[Long] =
+    publish(root, c)(snap => Some(c).filter(_.removes.forall(snap.entries.contains)))
 
   /** Transactional compaction: rewrite the current snapshot into
     * ceil(bytes/target) right-sized files and commit
@@ -408,19 +510,30 @@ object VersionedTable {
     while (committed.isEmpty) {
       val snap = snapshot(root)
       if (snap.isEmpty) return -1L
-      val bytes = snap.files
-        .map(f => new java.io.File(root, f).length()).sum
-      val nFiles = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-      val content = read(spark, root, snap)
-      val shaped =
-        if (statsCols.isEmpty) content.coalesce(nFiles)
-        else content.repartitionByRange(nFiles,
+      committed = rewrite(spark, root, snap, snap.files, targetBytes,
+          statsCols = statsCols) { (content, n) =>
+        if (statsCols.isEmpty) content.coalesce(n)
+        else content.repartitionByRange(n,
           statsCols.map(org.apache.spark.sql.functions.col): _*)
-      val c = stage(shaped, root)
-      if (statsCols.nonEmpty) writeStats(spark, root, c, statsCols)
-      committed = commit(root, snap, c.copy(removes = snap.files))
+      }
     }
     committed.get
+  }
+
+  /** Rewrite `files` of `snap` into ceil(bytes/target) files — `shape`d
+    * with that count, staged in `partitionCols`, stats recorded on
+    * `statsCols` — as one commit that removes them (and covers
+    * `covers`); None if a racing commit removed one first. */
+  private[sinks] def rewrite(spark: SparkSession, root: String, snap: Snapshot,
+      files: Seq[String], targetBytes: Long, partitionCols: Seq[String] = Seq.empty,
+      statsCols: Seq[String] = Seq.empty, covers: Seq[String] = Seq.empty)(
+      shape: (DataFrame, Int) => DataFrame): Option[Long] = {
+    val bytes = files.map(f => new java.io.File(root, f).length()).sum
+    val nFiles = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
+    val c = stage(shape(read(spark, root, snap.copy(files = files)), nFiles),
+      root, partitionCols)
+    if (statsCols.nonEmpty) writeStats(spark, root, c, statsCols)
+    commit(root, c.copy(removes = files, covers = covers))
   }
 
   /** #105 driver-gate query: two day-batches committed as versions,
@@ -486,7 +599,7 @@ object VersionedTable {
         if (ranges.isEmpty) snap.files
         else statsCandidates(root, snap.files, ranges)
       if (candidates.isEmpty) return -1L
-      val pruned = readFiles(spark, root, candidates, snap.schemas)
+      val pruned = readFiles(spark, root, candidates.map(snap.entries), snap.schemas)
       // schema evolution guard: a predicate column carried only by
       // non-candidate files cannot resolve over the pruned read
       // (classic Datasets analyze eagerly, so the failure is here,
@@ -505,9 +618,9 @@ object VersionedTable {
       val touched = snap.files.filter(f =>
         touchedAbs.exists(_.endsWith("/" + f)))
       if (touched.isEmpty) return -1L
-      val kept = readFiles(spark, root, touched, snap.schemas)
+      val kept = readFiles(spark, root, touched.map(snap.entries), snap.schemas)
         .filter(coalesce(predicate, lit(false)) === false)
-      committed = commit(root, snap,
+      committed = commit(root,
         stage(kept, root).copy(removes = touched))
     }
     committed.get

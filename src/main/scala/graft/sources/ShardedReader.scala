@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Range-sharding + shard union (SURVEY.md §2 #2-3), re-expressing the
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * from partitions, not processes). Unioned back, the shards
   * [[rangeShards]] builds are ONE scan of their source filtered by the
   * covered range (disjoint ranges make that exact union-all), not N
-  * scans of it.
+  * scans of it, and none of them runs a job to find its bounds.
   */
 object ShardedReader {
 
@@ -34,17 +34,38 @@ object ShardedReader {
     (0 until n).map(i => (lo + i * width, lo + (i + 1) * width))
   }
 
-  /** One DataFrame per contiguous range shard of `key`. */
-  def rangeShards(df: DataFrame, key: String, n: Int): Seq[DataFrame] =
-    rangeBounds(df, key, n).map { case (lo, hi) =>
-      df.filter(col(key) >= lo && col(key) < hi)
-    }
+  /** One DataFrame per contiguous range shard of `key`: the ranges of
+    * [[rangeBounds]], their bounds one scalar subquery over the min and
+    * max of the key, so building the shards runs no job (a shard run
+    * alone pays that subquery once, reused for both its bounds). */
+  def rangeShards(df: DataFrame, key: String, n: Int): Seq[DataFrame] = {
+    val k = col(key).cast("long")
+    val b = df.agg(struct(min(k).as("lo"),
+      (call_function("div", max(k) - min(k), lit(n.toLong)) + 1).as("w"))).scalar()
+    val shards = (0 until n).map(i =>
+      df.filter(col(key) >= b("lo") + b("w") * i && col(key) < b("lo") + b("w") * (i + 1)))
+    val call = (new Object, n, df, key)
+    shards.foreach(issued.put(_, call))
+    shards
+  }
 
-  /** Union-all of shards: one scan of the source, in its own
-    * partitions, for [[rangeShards]]' disjoint ranges; else a
-    * `unionByName` (fails fast on schema drift instead of silently
-    * misaligning positions). */
+  /** The call each shard [[rangeShards]] returned belongs to: (id, n,
+    * source, key). Weak keys: an entry goes with its shard. */
+  private val issued = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, (Object, Int, DataFrame, String)])
+
+  /** Union-all of shards: the n shards of one [[rangeShards]] call are
+    * the source's non-null keys (their ranges cover [min, max] and a
+    * null key matches none), with no job; other disjoint literal-range
+    * shards over one plan are one scan of it filtered by the covered
+    * ranges; anything else is a `unionByName` (fails fast on schema
+    * drift instead of silently misaligning positions). */
   def unionShards(shards: Seq[DataFrame]): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.rangeShardUnion(shards)
-      .getOrElse(shards.reduce(_.unionByName(_)))
+    shards.map(issued.get).distinct match {
+      case Seq((_, n, src: DataFrame, key: String))
+          if n == shards.size && n == shards.distinct.size =>
+        src.filter(col(key).isNotNull)
+      case _ => GraftSqlBridge.rangeShardUnion(shards)
+        .getOrElse(shards.reduce(_.unionByName(_)))
+    }
 }

@@ -109,16 +109,17 @@ object EventStream {
   }
 
   /** Replay-safe micro-batch warehouse write (#64): every micro-batch
-    * lands in its own (batch_date, _batch_id) partition via dynamic
-    * partition overwrite, so a redelivered batch (foreachBatch is
-    * at-least-once) overwrites exactly itself — duplicates are
-    * structurally impossible rather than filtered. Downstream,
-    * `AppendSink.compactDay` collapses the day's per-batch partitions
-    * under the manifest commit protocol on the reference's daily
-    * cadence (the checkpoint must live as long as the table — see the
-    * protocol INVARIANT and `resetDayManifests` in AppendSink). This
-    * is the continuous version of the batch WRITE_APPEND +
-    * idempotent-replay contract (#4). */
+    * lands in its own (batch_date, _batch_id) partition as one commit
+    * of the table's log that replaces that partition's live files
+    * (`AppendSink.idempotentAppend`), so a redelivered batch
+    * (foreachBatch is at-least-once) replaces exactly itself —
+    * duplicates are structurally impossible rather than filtered.
+    * Downstream, `AppendSink.compactDay` collapses the day's per-batch
+    * partitions in one commit on the reference's daily cadence (the
+    * checkpoint must live as long as the table — see the compaction
+    * INVARIANT and `resetDayManifests` in AppendSink). This is the
+    * continuous version of the batch WRITE_APPEND + idempotent-replay
+    * contract (#4). */
   def writeToWarehouse(events: DataFrame, path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     events
@@ -148,8 +149,8 @@ object EventStream {
     * are always younger than it). A force vacuum (`retentionMs = 0`)
     * is NOT safe against a running writer — it can sweep files staged
     * for the in-flight commit; force mode is for quiesced tables
-    * only. The directory-level sink cannot offer even this (its
-    * compactor must own the layout).
+    * only. [[writeToWarehouse]] writes through the same log, but its
+    * day compaction must own the layout: it deletes what it replaces.
     * `writer` must be stable across restarts (it IS the replay
     * identity, like a checkpoint dir). */
   def writeToVersioned(events: DataFrame, root: String, writer: String,

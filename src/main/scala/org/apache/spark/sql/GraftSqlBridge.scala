@@ -116,6 +116,32 @@ object GraftSqlBridge {
       Filter(cond, child)))
   }
 
+  /** A parquet frame over exactly `files` read as `schema`, the
+    * columns the files' partition values name read from those values.
+    * Through [[LogFileIndex]] no directory is listed and no footer
+    * opened: building the frame runs no job at any file count. */
+  def logRelation(spark: SparkSession, root: String, schema: types.StructType,
+      files: Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])])
+      : DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.execution.datasources._
+    val partCols = files.flatMap(_._2.map(_._1)).distinct
+    val partSchema = types.StructType(partCols.map(c =>
+      schema.find(_.name == c).getOrElse(types.StructField(c, types.StringType))))
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val parts = files.groupBy(_._2.toMap).toSeq.map { case (values, fs) =>
+      PartitionDirectory(
+        catalyst.InternalRow.fromSeq(partSchema.map(f =>
+          Cast(Literal(values.getOrElse(f.name, null)), f.dataType, tz).eval())),
+        fs.map(f => FileStatusWithMetadata(f._1)))
+    }.sortBy(_.files.head.getPath.toString)
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      LogFileIndex(new org.apache.hadoop.fs.Path(root), partSchema.asNullable, parts),
+      partSchema.asNullable,
+      types.StructType(schema.filterNot(f => partCols.contains(f.name))).asNullable,
+      None, new execution.datasources.parquet.ParquetFileFormat, Map.empty)(spark))
+  }
+
   /** `a` widened by `b` by Spark's mergeSchema rule (new fields append,
     * incompatible types fail); `StructType.merge` is private[sql]. */
   def mergeSchemas(a: types.StructType, b: types.StructType): types.StructType =
@@ -135,4 +161,35 @@ object GraftSqlBridge {
         _.status != org.apache.spark.status.api.v1.StageStatus.SKIPPED)
     }
   }
+}
+
+/** A table's files as its commit log lists them (Delta's snapshot
+  * file index): the partitions are fixed when the frame is built, and
+  * `listFiles` prunes them by the partition filters alone. */
+final case class LogFileIndex(root: org.apache.hadoop.fs.Path,
+    partitionSchema: types.StructType,
+    partitions: Seq[execution.datasources.PartitionDirectory])
+    extends execution.datasources.FileIndex {
+  import org.apache.spark.sql.catalyst.expressions._
+
+  def rootPaths: Seq[org.apache.hadoop.fs.Path] = Seq(root)
+
+  def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[execution.datasources.PartitionDirectory] =
+    if (partitionFilters.isEmpty) partitions
+    else {
+      val keep = Predicate.createInterpreted(partitionFilters.reduce(And).transform {
+        case a: AttributeReference =>
+          val i = partitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
+          BoundReference(i, partitionSchema(i).dataType, nullable = true)
+      })
+      partitions.filter(p => keep.eval(p.values))
+    }
+
+  def inputFiles: Array[String] =
+    partitions.flatMap(_.files.map(_.getPath.toString)).toArray
+
+  def refresh(): Unit = ()
+
+  def sizeInBytes: Long = partitions.flatMap(_.files.map(_.getLen)).sum
 }

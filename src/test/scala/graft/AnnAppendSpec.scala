@@ -10,8 +10,7 @@ class AnnAppendSpec extends SparkTestBase {
   test("ann_append: base posting files survive the append untouched, " +
     "and the merged exhaustive probe equals brute force") {
     // replicate the build with a snapshot between the two commits
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_append_spec").toFile
+    val root = new java.io.File(tempDir("graft_append_spec"))
     val e = Similarity.emb(spark, SfDir)
     val base = e.filter(pmod(col("vec_id"), lit(Similarity.AppendMod)) =!= 0L)
     val batch = e.filter(pmod(col("vec_id"), lit(Similarity.AppendMod)) === 0L)

@@ -153,7 +153,7 @@ class ArtifactSpec extends SparkTestBase {
     import graft.operators.{ModelStore, Similarity}
     import java.nio.file.Files
     import java.nio.file.attribute.PosixFilePermissions
-    val shared = Files.createTempDirectory("graft_shared_store")
+    val shared = java.nio.file.Paths.get(tempDir("graft_shared_store"))
     val groupReadable = PosixFilePermissions.fromString("rwxr-xr-x")
     Files.setPosixFilePermissions(shared, groupReadable)
     sys.props("graft.modelstore") = "1"
@@ -193,7 +193,7 @@ class ArtifactSpec extends SparkTestBase {
     "refused loudly, never silently served (ADVICE r19 #3)") {
     import graft.operators.{ModelStore, Similarity}
     import java.nio.file.Files
-    val shared = Files.createTempDirectory("graft_foreign_store")
+    val shared = java.nio.file.Paths.get(tempDir("graft_foreign_store"))
     // simulate the hostile pre-created root: chown to a different
     // local user (works when the suite runs privileged — this
     // container — otherwise the setup itself fails and we skip)
@@ -342,7 +342,7 @@ class ArtifactSpec extends SparkTestBase {
       // corrupt pointer: a path-escape name must resolve to None
       // (never served from outside the store root) and the next table
       // call must retrain + republish over it
-      val escape = java.nio.file.Files.createTempDirectory("graft_escape")
+      val escape = java.nio.file.Paths.get(tempDir("graft_escape"))
       java.nio.file.Files.writeString(
         new java.io.File(root, s"_BUILT_$name").toPath,
         "../../" + escape.getFileName)

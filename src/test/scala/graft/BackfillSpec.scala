@@ -15,7 +15,7 @@ class BackfillSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("backfill").toString
+    tempDir("backfill")
 
   private val d0 = LocalDate.of(2024, 3, 1)
 

@@ -31,7 +31,7 @@ class CorpusCacheSpec extends SparkTestBase {
   }
 
   test("the cap clears only the full site; other sites keep their entries") {
-    val root = Files.createTempDirectory("graft_cap_spec")
+    val root = java.nio.file.Paths.get(tempDir("graft_cap_spec"))
     try {
       val dirs = (0 to CorpusCache.MaxEntries).map { i =>
         val d = root.resolve(s"c$i")

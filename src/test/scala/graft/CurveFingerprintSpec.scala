@@ -30,8 +30,7 @@ class CurveFingerprintSpec extends SparkTestBase {
         (r.getAs[Long]("n_rows"), r.getAs[Long]("checksum"))).toMap
     assert(base.keySet === Set("documents", "events", "orders"))
     // shuffled copy of documents → identical fingerprint
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fp").toString
+    val dir = tempDir("graft_fp")
     val docs = spark.read.parquet(s"$SfDir/documents.parquet")
     docs.orderBy(rand(7)).repartition(5)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -44,8 +43,7 @@ class CurveFingerprintSpec extends SparkTestBase {
         (r.getAs[Long]("n_rows"), r.getAs[Long]("checksum"))).toMap
     assert(shuffled("documents") === base("documents"))
     // corrupt ONE value → the table's checksum moves, others don't
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_fp2").toString
+    val dir2 = tempDir("graft_fp2")
     docs.withColumn("n_chars",
         when(col("doc_id") === 3L, col("n_chars") + 1L)
           .otherwise(col("n_chars")))

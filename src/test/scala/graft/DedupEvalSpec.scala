@@ -76,8 +76,7 @@ class DedupEvalSpec extends SparkTestBase {
   }
 
   test("containment flags a planted sub-document pair Jaccard misses") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_contain").toString
+    val dir = tempDir("graft_contain")
     // within the ±ContainBlkSpan length-block fan-out (Δchars ≤ ~100)
     val short = "market analysts watch quarterly earnings reports"
     val long = "the quick brown fox jumps over the lazy dog " +
@@ -106,8 +105,7 @@ class DedupEvalSpec extends SparkTestBase {
   test("containment block cap drops an oversized 90%-one-block " +
     "population from the length-banded screen, small blocks " +
     "unaffected (VERDICT r16 #3)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_contain_cap").toString
+    val dir = tempDir("graft_contain_cap")
     // 12 near-identical docs land in ONE (en, news, blk) block —
     // fixed-width suffixes keep every n_chars equal, and the shared
     // prefix keeps pairwise containment >= 0.8 (the quadratic shape
@@ -144,8 +142,7 @@ class DedupEvalSpec extends SparkTestBase {
 
   test("containment_content catches a quote inside a far longer " +
     "article the length-band form structurally misses") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_contain_content").toString
+    val dir = tempDir("graft_contain_content")
     val quote = "market analysts watch quarterly earnings reports " +
       "closely every single season"
     // filler of UNIQUE tokens so no filler bigram repeats anywhere

@@ -12,7 +12,7 @@ class EventStreamSpec extends SparkTestBase {
   import spark.implicits._
 
   private def stageEventsAsFiles(): String = {
-    val dir = Files.createTempDirectory("graft_stream_in").toString
+    val dir = tempDir("graft_stream_in")
     // Re-write the batch events table as the stream input (micros ts),
     // two files to simulate two micro-batch arrivals.
     Tables.load(spark, SfDir, "events").repartition(2)
@@ -66,7 +66,7 @@ class EventStreamSpec extends SparkTestBase {
     // two time-ordered chunks delivered as separate micro-batches:
     // per-key event order is preserved, so the streaming ring must
     // reproduce the batch frame exactly
-    val dir = Files.createTempDirectory("graft_zstream").toString
+    val dir = tempDir("graft_zstream")
     val ev = Tables.load(spark, SfDir, "events").orderBy("ts", "event_id")
     val cut = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
     ev.filter(col("ts") < cut).coalesce(1)
@@ -98,7 +98,7 @@ class EventStreamSpec extends SparkTestBase {
   }
 
   test("price alerts fire only on moves past the threshold") {
-    val dir = Files.createTempDirectory("graft_alerts").toString
+    val dir = tempDir("graft_alerts")
     import java.sql.Timestamp
     Seq(
       EventStream.Ev(1, Timestamp.valueOf("2024-01-01 00:00:00"), 7L, "t", 10.0, ""),
@@ -119,7 +119,7 @@ class EventStreamSpec extends SparkTestBase {
   }
 
   test("dedup within watermark drops replayed events across micro-batches") {
-    val dir = Files.createTempDirectory("graft_dedup_stream").toString
+    val dir = tempDir("graft_dedup_stream")
     import java.sql.Timestamp
     // two files -> two micro-batches; event 2 is re-delivered in the
     // second batch (same id, same payload), event 5 is new
@@ -200,7 +200,7 @@ class EventStreamSpec extends SparkTestBase {
 
   test("micro-batch warehouse writes are replay-safe and lossless") {
     val in = stageEventsAsFiles()
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = tempDir("graft_wh")
     val out = root + "/table"
     val q = EventStream.writeToWarehouse(
       EventStream.readEvents(spark, in), out, root + "/ckpt")
@@ -270,7 +270,7 @@ class EventStreamSpec extends SparkTestBase {
 
   test("compaction commit is atomic: readers never see a half-compacted day") {
     import graft.sinks.AppendSink
-    val root = Files.createTempDirectory("graft_wh_atomic").toString
+    val root = tempDir("graft_wh_atomic")
     val out = root + "/table"
     val day = "2024-01-01"
     def mkBatch(ids: Range): org.apache.spark.sql.DataFrame =
@@ -282,12 +282,19 @@ class EventStreamSpec extends SparkTestBase {
     EventStream.writeMicroBatch(mkBatch(3 to 4), 1L, out)
     def readIds(): Seq[Long] = AppendSink.readBack(spark, out)
       .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+    // the log's view of the day: its live batch dirs and covered ids
+    def liveBatchDirs(): Seq[String] = graft.sinks.VersionedTable.snapshot(out)
+      .files.filter(_.startsWith(s"batch_date=$day/_batch_id="))
+      .map(_.split('/')(1)).distinct.sorted
+    def coveredIds(): Set[Long] = graft.sinks.VersionedTable.snapshot(out)
+      .covered.filter(_.startsWith(s"batch_date=$day/"))
+      .map(_.stripPrefix(s"batch_date=$day/_batch_id=").toLong)
     val before = readIds()
     assert(before === Seq(0L, 1L, 2L, 3L, 4L))
 
     // crash window: compacted data dir fully written and renamed into
-    // place, but the run died BEFORE the manifest swap — a negative
-    // dir with no manifest naming it must be invisible to readers
+    // place, but the run died BEFORE its commit — a negative dir no
+    // commit names must be invisible to readers
     val dayDir = new java.io.File(s"$out/batch_date=$day")
     val staged = new java.io.File(dayDir, ".compact_staging_1")
     spark.read.parquet(out).filter(col("batch_date") === day)
@@ -302,15 +309,13 @@ class EventStreamSpec extends SparkTestBase {
     // then GCs both the covered batches and the stale crashed dir
     AppendSink.compactDay(spark, out, day)
     assert(readIds() === before)
-    val (gen, covers) = AppendSink.readManifest(dayDir)
-    assert(gen === 2L && covers === Set(0L, 1L))
-    assert(AppendSink.liveBatchDirs(dayDir).map(_.getName) ===
-      Seq("_batch_id=-2"))
+    assert(liveBatchDirs() === Seq("_batch_id=-2") &&
+      coveredIds() === Set(0L, 1L))
     assert(!new java.io.File(dayDir, "_batch_id=-1").exists(),
       "stale crashed generation not GC'd")
 
     // a replayed covered batch (at-least-once redelivery AFTER its
-    // data was compacted) re-creates its dir but stays excluded
+    // data was compacted) is dropped at its commit
     EventStream.writeMicroBatch(mkBatch(0 to 2), 0L, out)
     assert(readIds() === before, "replay of a compacted batch duplicated rows")
 
@@ -321,24 +326,21 @@ class EventStreamSpec extends SparkTestBase {
     // re-compaction folds compacted gen + new batches into gen 3
     AppendSink.compactDay(spark, out, day)
     assert(readIds() === (0L to 6L))
-    val (gen3, covers3) = AppendSink.readManifest(dayDir)
-    assert(gen3 === 3L && covers3 === Set(0L, 1L, 5L))
-    assert(AppendSink.liveBatchDirs(dayDir).map(_.getName) ===
-      Seq("_batch_id=-3"))
+    assert(liveBatchDirs() === Seq("_batch_id=-3") &&
+      coveredIds() === Set(0L, 1L, 5L))
 
     // compacting an already-compacted day with nothing new is a
     // structural no-op: same generation, no rewrite
     AppendSink.compactDay(spark, out, day)
-    assert(AppendSink.readManifest(dayDir)._1 === 3L)
+    assert(liveBatchDirs() === Seq("_batch_id=-3"))
     assert(readIds() === (0L to 6L))
 
     // a plain (non-batch-partitioned) day appended to the same table
     // reads alongside the batch-partitioned days with a null batch id
-    Seq((100L, java.sql.Timestamp.valueOf("2024-01-02 01:00:00"),
-        1L, "click", 1.0, "{}"))
+    AppendSink.append(Seq((100L,
+        java.sql.Timestamp.valueOf("2024-01-02 01:00:00"), 1L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .withColumn("batch_date", to_date(col("ts")))
-      .write.mode("append").partitionBy("batch_date").parquet(out)
+      .withColumn("batch_date", to_date(col("ts"))), out, Seq("batch_date"))
     val mixed = AppendSink.readBack(spark, out)
     assert(mixed.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
       === ((0L to 6L) :+ 100L))
@@ -349,7 +351,7 @@ class EventStreamSpec extends SparkTestBase {
     // data; resetDayManifests clears the covers (keeping the
     // compacted generation live) so the reused id is visible again
     AppendSink.resetDayManifests(spark, out)
-    assert(AppendSink.readManifest(dayDir) === ((3L, Set.empty[Long])))
+    assert(liveBatchDirs() === Seq("_batch_id=-3") && coveredIds().isEmpty)
     EventStream.writeMicroBatch(mkBatch(7 to 8), 0L, out)
     assert(readIds() === ((0L to 8L) :+ 100L),
       "restarted batch id invisible after manifest reset")
@@ -359,9 +361,7 @@ class EventStreamSpec extends SparkTestBase {
     // batch 0 would dynamic-partition-OVERWRITE the live _batch_id=0
     // dir and silently destroy rows 7-8
     AppendSink.resetDayManifests(spark, out)
-    assert(AppendSink.readManifest(dayDir) === ((4L, Set.empty[Long])))
-    assert(AppendSink.liveBatchDirs(dayDir).map(_.getName) ===
-      Seq("_batch_id=-4"))
+    assert(liveBatchDirs() === Seq("_batch_id=-4") && coveredIds().isEmpty)
     EventStream.writeMicroBatch(mkBatch(9 to 9), 0L, out)
     assert(readIds() === ((0L to 9L) :+ 100L),
       "reset with live positive ids lost rows to an id collision")
@@ -369,18 +369,17 @@ class EventStreamSpec extends SparkTestBase {
     // a backfill appended DIRECTLY into the batched day (loose
     // day-level files next to _batch_id dirs) must read alongside
     // the live batch dirs, not silently drop
-    Seq((300L, java.sql.Timestamp.valueOf(s"$day 09:30:00"),
-        2L, "click", 3.0, "{}"))
+    AppendSink.append(Seq((300L,
+        java.sql.Timestamp.valueOf(s"$day 09:30:00"), 2L, "click", 3.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .withColumn("batch_date", to_date(col("ts")))
-      .write.mode("append").partitionBy("batch_date").parquet(out)
+      .withColumn("batch_date", to_date(col("ts"))), out, Seq("batch_date"))
     assert(readIds() === ((0L to 9L) ++ Seq(100L, 300L)),
       "loose backfill files in a batched day were dropped")
   }
 
   test("streaming dedup vs static index admits only never-seen docs") {
     import java.sql.Timestamp
-    val dir = Files.createTempDirectory("graft_docstream").toString
+    val dir = tempDir("graft_docstream")
     val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
     // index knows "alpha"; the stream carries: a dup of the index
     // (drop), a fresh doc (keep), the same fresh doc again
@@ -410,7 +409,7 @@ class EventStreamSpec extends SparkTestBase {
 
   test("streaming drift monitor converges to the reference-impl PSI " +
     "over the full replay") {
-    val dir = Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift")
     val cut = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
     val ev = Tables.load(spark, SfDir, "events")
     def binsOf(df: org.apache.spark.sql.DataFrame)
@@ -455,7 +454,7 @@ class EventStreamSpec extends SparkTestBase {
   }
 
   test("streaming attribution replays to the batch channel ledger") {
-    val dir = Files.createTempDirectory("graft_attr").toString
+    val dir = tempDir("graft_attr")
     val ev = Tables.load(spark, SfDir, "events").orderBy("ts", "event_id")
     val cut = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
     ev.filter(col("ts") < cut).coalesce(1)
@@ -487,7 +486,7 @@ class EventStreamSpec extends SparkTestBase {
   }
 
   test("streaming transition feed replays to the batch matrix") {
-    val dir = Files.createTempDirectory("graft_trans").toString
+    val dir = tempDir("graft_trans")
     val ev = Tables.load(spark, SfDir, "events").orderBy("ts", "event_id")
     val cut = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
     ev.filter(col("ts") < cut).coalesce(1)
@@ -514,7 +513,7 @@ class EventStreamSpec extends SparkTestBase {
   }
 
   test("streaming first-seen feed emits each user once, equal to batch") {
-    val dir = Files.createTempDirectory("graft_growth").toString
+    val dir = tempDir("graft_growth")
     val ev = Tables.load(spark, SfDir, "events").orderBy("ts", "event_id")
     val cut = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
     ev.filter(col("ts") < cut).coalesce(1)
@@ -555,7 +554,7 @@ class EventStreamSpec extends SparkTestBase {
     val targets = perDay.map { case (u, ds) =>
       u -> (ds.length.toLong, ds.map(_._2).sum)
     }
-    val dir = Files.createTempDirectory("graft_cusum").toString
+    val dir = tempDir("graft_cusum")
     val ev = Tables.load(spark, SfDir, "events").orderBy("ts", "event_id")
     val cut = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
     ev.filter(col("ts") < cut).coalesce(1)
@@ -588,7 +587,7 @@ class EventStreamSpec extends SparkTestBase {
   }
 
   test("streaming fingerprint converges to the batch table fingerprint") {
-    val dir = Files.createTempDirectory("graft_fp_stream").toString
+    val dir = tempDir("graft_fp_stream")
     val ev = Tables.load(spark, SfDir, "events").orderBy("ts", "event_id")
     val cut = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
     ev.filter(col("ts") < cut).coalesce(1)
@@ -619,9 +618,9 @@ class EventStreamSpec extends SparkTestBase {
     val probesAll = Similarity.emb(spark, SfDir)
       .filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("vec").as("qvec"))
-    val inDir = Files.createTempDirectory("graft_annserve_in").toString
-    val outDir = Files.createTempDirectory("graft_annserve_out").toString
-    val chkDir = Files.createTempDirectory("graft_annserve_chk").toString
+    val inDir = tempDir("graft_annserve_in")
+    val outDir = tempDir("graft_annserve_out")
+    val chkDir = tempDir("graft_annserve_chk")
     probesAll.filter(col("q_id") < 4).coalesce(1)
       .write.mode("overwrite").parquet(inDir)
     val stream = spark.readStream.schema(probesAll.schema).parquet(inDir)

@@ -131,7 +131,7 @@ class ExtensionsSpec extends SparkTestBase {
   }
 
   test("json ingest quarantines corrupt lines instead of dropping silently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json_bad").toString
+    val dir = tempDir("graft_json_bad")
     val lines = Seq(
       """{"event_id": 1, "ts": "2024-01-01 00:00:00.000001", "user_id": 10, "event_type": "click", "value": 1.5}""",
       """this is not json at all""",
@@ -150,7 +150,7 @@ class ExtensionsSpec extends SparkTestBase {
     // a bad ts parses fine against the TEXT schema (no _corrupt), so
     // it must be caught by try_to_timestamp — under ANSI a plain
     // to_timestamp would fail the whole batch at materialization
-    val dir = java.nio.file.Files.createTempDirectory("graft_badts").toString
+    val dir = tempDir("graft_badts")
     val lines = Seq(
       """{"event_id": 1, "ts": "2024-01-01 00:00:00.000001", "user_id": 1, "event_type": "click", "value": 1.0}""",
       """{"event_id": 2, "ts": "not-a-timestamp", "user_id": 2, "event_type": "click", "value": 2.0}""")
@@ -162,8 +162,7 @@ class ExtensionsSpec extends SparkTestBase {
     assert(jb.quarantined.select("ts").collect()(0).getString(0)
       === "not-a-timestamp")
     jb.release()
-    val csvDir = java.nio.file.Files.createTempDirectory("graft_badts_csv")
-      .toString
+    val csvDir = tempDir("graft_badts_csv")
     java.nio.file.Files.write(java.nio.file.Paths.get(csvDir, "part.csv"),
       ("event_id,ts,user_id,event_type,value\n" +
         "1,2024-01-01 00:00:00.000001,1,click,1.0\n" +
@@ -176,8 +175,7 @@ class ExtensionsSpec extends SparkTestBase {
 
   test("compaction collapses micro-batch files and preserves the rows") {
     import graft.sinks.AppendSink
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString + "/t"
+    val out = tempDir("graft_compact") + "/t"
     val day = Tables.load(spark, SfDir, "events")
       .filter(col("ts") >= lit("2024-01-01 00:00:00") &&
         col("ts") < lit("2024-01-02 00:00:00"))
@@ -199,8 +197,7 @@ class ExtensionsSpec extends SparkTestBase {
 
   test("partitioned append write prunes partitions at read time") {
     import graft.sinks.AppendSink
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_prune").toString
+    val out = tempDir("graft_prune")
     val batch = Tables.load(spark, SfDir, "events")
       .withColumn("batch_date", to_date(col("ts")))
     AppendSink.idempotentAppend(batch, out, Seq("batch_date"))
@@ -241,7 +238,7 @@ class ExtensionsSpec extends SparkTestBase {
   }
 
   test("csv ingest quarantines corrupt rows instead of dropping silently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_bad").toString
+    val dir = tempDir("graft_csv_bad")
     val lines = Seq(
       "event_id,ts,user_id,event_type,value",
       "1,2024-01-01 00:00:00.000001,10,click,1.5",

@@ -70,7 +70,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("idempotent append: replay replaces, blind append duplicates") {
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val out = tempDir("graft_sink")
     val batch = Seq((1L, "2024-01-01", 5.0), (2L, "2024-01-02", 7.0))
       .toDF("id", "d", "v")
     AppendSink.idempotentAppend(batch, out, Seq("d"))

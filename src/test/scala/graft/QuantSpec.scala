@@ -61,7 +61,7 @@ class QuantSpec extends SparkTestBase {
   test("int8 codes store ~4x smaller than float32 embeddings on parquet") {
     val e = graft.sources.Tables.load(spark, SfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val tmp = java.nio.file.Files.createTempDirectory("quantstore").toString
+    val tmp = tempDir("quantstore")
     e.coalesce(1).write.mode("overwrite").parquet(s"$tmp/float32")
     e.select(col("vec_id"),
         quantizeI8(col("embedding").cast("array<double>")).as("codes"))

@@ -278,8 +278,7 @@ class RobustAnalyticsSpec extends SparkTestBase {
     // NULL — the one input where sum((coord>0)::long) and the SQL
     // CASE/ELSE-0 diverge (NULL vs 0); reachable since the RpCoords
     // all-null path (ADVICE r17 #3) emits 8 NULL coords
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rpnull").toFile
+    val dir = new java.io.File(tempDir("graft_rpnull"))
     try {
       Seq(
         (1L, Seq[Option[Float]](None, None, None), 0),

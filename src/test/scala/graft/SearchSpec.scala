@@ -53,7 +53,7 @@ class SearchSpec extends SparkTestBase {
     ).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("bm25spec").toString
+    val tmp = tempDir("bm25spec")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Search.bm25Search(spark, tmp)
       .as[(Long, Long, Double, Long)].collect()

@@ -11,7 +11,7 @@ class ShardedReaderSpec extends SparkTestBase {
 
   /** 0..199 with every 17th key NULL, in three parquet files. */
   private lazy val src: DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = tempDir("shards")
     spark.range(0, 200).repartition(3)
       .select(when(col("id") % 17 =!= 0, col("id")).as("k"),
         (col("id") * 3).as("v"))
@@ -22,8 +22,10 @@ class ShardedReaderSpec extends SparkTestBase {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
+  // the physical plan as planned: AQE wraps a plan with subqueries
+  // (the shard bounds) into one adaptive leaf
   private def leaves(df: DataFrame) =
-    df.queryExecution.executedPlan.collectLeaves()
+    df.queryExecution.sparkPlan.collectLeaves()
 
   private def isUnion(df: DataFrame): Boolean =
     df.queryExecution.analyzed.isInstanceOf[Union]
@@ -39,6 +41,36 @@ class ShardedReaderSpec extends SparkTestBase {
     // null keys fall outside every shard in both forms
     assert(one.filter(col("k").isNull).count() === 0L)
     assert(one.count() === src.filter(col("k").isNotNull).count())
+  }
+
+  test("range shards plan no job; their union runs none either") {
+    val cached = src.cache()
+    cached.count()
+    try {
+      var one: DataFrame = null
+      val jobs = jobDescriptions {
+        one = ShardedReader.unionShards(ShardedReader.rangeShards(cached, "k", 5))
+        one.queryExecution.executedPlan
+      }
+      assert(jobs.isEmpty, s"no bounds job, got $jobs")
+      assert(!planOf(one).contains("Subquery"), planOf(one))
+      assert(rows(one) === rows(cached.filter(col("k").isNotNull)))
+      // a shard run alone pays its bounds subquery: one job for both
+      val shards = ShardedReader.rangeShards(cached, "k", 5)
+      assert(shards.map(_.count()).sum === one.count())
+      assert(jobDescriptions(shards(2).collect()).size >= 1)
+      // a strict subset of the shards is no whole union
+      val three = ShardedReader.unionShards(shards.take(3))
+      assert(isUnion(three))
+      assert(rows(three) === rows(shards.take(3).reduce(_.unionByName(_))))
+    } finally cached.unpersist()
+  }
+
+  test("range shards of an empty frame select nothing") {
+    val empty = src.filter(lit(false))
+    val shards = ShardedReader.rangeShards(empty, "k", 3)
+    assert(shards.map(_.count()).sum === 0L)
+    assert(ShardedReader.unionShards(shards).count() === 0L)
   }
 
   test("disjoint hand-made shards: gaps, edges and order are exact") {

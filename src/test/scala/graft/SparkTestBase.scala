@@ -10,6 +10,19 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val SfDir = "/root/testdata/sf0.001"
 
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  /** A fresh dir under `java.io.tmpdir`, deleted after the suite. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.getPath
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
+
   /** Formatted physical plan of a DataFrame (for plan-shape asserts). */
   def planOf(df: org.apache.spark.sql.DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()

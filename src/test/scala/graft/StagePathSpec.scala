@@ -42,7 +42,7 @@ class StagePathSpec extends SparkTestBase {
   /** A corpus dir holding one table `t.parquet`, and a clean-up of
     * every copy derived from it. */
   private def withCorpus(body: String => Unit): Unit = {
-    val corpus = Files.createTempDirectory("stagepathspec")
+    val corpus = java.nio.file.Paths.get(tempDir("stagepathspec"))
     Files.createFile(corpus.resolve("t.parquet"))
     try body(corpus.toString)
     finally {

@@ -14,8 +14,7 @@ class SurvivalFeatureSpec extends SparkTestBase {
     // (event_id, day, user) → events.parquet rows at midday
     val base = java.time.Instant.parse("2024-01-01T12:00:00Z")
       .toEpochMilli * 1000L
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_surv").toString
+    val dir = tempDir("graft_surv")
     rows.toDF("event_id", "day", "user_id")
       .select(col("event_id"),
         timestamp_micros(col("day") * 86400000000L + base).as("ts"),

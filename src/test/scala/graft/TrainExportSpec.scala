@@ -51,7 +51,7 @@ class TrainExportSpec extends SparkTestBase {
     // export step writes them, come back in shuffle-key order WITHOUT
     // any sort on the read path, and pos is the contiguous 1..n rank
     // the closed form assigns
-    val root = java.nio.file.Files.createTempDirectory("shufflespec")
+    val root = java.nio.file.Paths.get(tempDir("shufflespec"))
     TrainExport.exportShards(spark, SfDir, s"$root/shards")
     val one = spark.read.parquet(s"$root/shards/shard=0")
       .select("skey", "pos").collect()

@@ -23,8 +23,7 @@ class TwoLevelWindowSpec extends SparkTestBase {
   private def eventsDir(rows: Seq[(Long, Long, Long, Double)]): String = {
     val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
       .toEpochMilli * 1000L
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_twolevel").toString
+    val dir = tempDir("graft_twolevel")
     rows.toDF("event_id", "off", "user_id", "value")
       .select(col("event_id"),
         timestamp_micros(col("off") + base).as("ts"),

@@ -10,7 +10,7 @@ class VersionedTableSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("vtable").toString
+    tempDir("vtable")
 
   private def batch(lo: Long, n: Long) =
     spark.range(lo, lo + n).select(col("id"),
@@ -355,6 +355,43 @@ class VersionedTableSpec extends SparkTestBase {
     assert(t.count() === 20L && feed.count() === 10L)
   }
 
+  test("the log is the file index: reads over 48 files run no job") {
+    val root = freshRoot()
+    (0 until 12).foreach(i =>
+      VersionedTable.append(batch(i * 10L, 10).repartition(4), root))
+    val snap = VersionedTable.snapshot(root)
+    assert(snap.files.size >= 40, s"${snap.files.size} files")
+    var t: org.apache.spark.sql.DataFrame = null
+    val jobs = jobDescriptions {
+      t = VersionedTable.read(spark, root)
+      VersionedTable.read(spark, root, VersionedTable.snapshotAt(root, 3L))
+      VersionedTable.changes(spark, root, 6L)
+      VersionedTable.readRange(spark, root, "id", 0, 50)
+      t.queryExecution.executedPlan
+    }
+    assert(jobs.isEmpty, s"no listing or footer job, got $jobs")
+    assert(t.count() === 120L && t.inputFiles.length === snap.files.size)
+    // each add records its file as the write left it
+    snap.adds.foreach { a =>
+      val f = new java.io.File(root, a.path)
+      assert(a.size === f.length && a.mtime === f.lastModified, a)
+    }
+  }
+
+  test("a commit records the schema only when it changes") {
+    val root = freshRoot()
+    VersionedTable.append(batch(0, 10), root)
+    VersionedTable.append(batch(10, 10), root)
+    VersionedTable.append(batch(20, 10).withColumn("lang", lit("en")), root)
+    def recorded(v: Int) = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$root/_graft_log/v${"0" * 19}$v.json"))
+      .has("metaData")
+    assert(recorded(1) && !recorded(2) && recorded(3))
+    assert(jobDescriptions(VersionedTable.read(spark, root)).isEmpty)
+    assert(VersionedTable.read(spark, root).filter(col("lang").isNull).count() === 20L)
+    assert(VersionedTable.changes(spark, root, 1L).count() === 20L)
+  }
+
   test("a legacy commit without a schema still reads through inference") {
     val root = freshRoot()
     val dir = new java.io.File(s"$root/data/legacy")
@@ -387,8 +424,8 @@ class VersionedTableSpec extends SparkTestBase {
 
   test("streaming writeToVersioned composes with concurrent compaction") {
     val root = freshRoot()
-    val ckpt = java.nio.file.Files.createTempDirectory("vt_ckpt").toString
-    val inDir = java.nio.file.Files.createTempDirectory("vt_in").toString
+    val ckpt = tempDir("vt_ckpt")
+    val inDir = tempDir("vt_in")
     batch(0, 10).write.mode("append").parquet(inDir)
     val stream = spark.readStream
       .schema(batch(0, 1).schema)

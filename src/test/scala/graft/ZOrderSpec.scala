@@ -24,7 +24,7 @@ class ZOrderSpec extends SparkTestBase {
     val zdir = ZOrderLayout.build(spark, SfDir, 8)
     // comparison layout: same data, same file count, single-column
     // time sort (what a naive streaming warehouse produces)
-    val tdir = Files.createTempDirectory("graft_tsort").toString
+    val tdir = tempDir("graft_tsort")
     Tables.load(spark, SfDir, "events")
       .repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(tdir)
